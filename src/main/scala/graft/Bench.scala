@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftx.GraftCacheBridge
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
@@ -111,21 +110,7 @@ object Bench {
         None
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single-digit-MB test parquet would otherwise scan as ONE input
-      // partition (default split 128 MB) — size the split to the SF so
-      // scan+map stages use the cores; at production SF the default holds
-      .config("spark.sql.files.maxPartitionBytes", 2097152L)
-      .config("spark.sql.files.openCostInBytes", 262144L)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.GraftSession.IcuCaseMappingsKey, "false") // JVM case mapping; see GraftSession scaladoc
-      .config(graft.sources.FastLocalFileSystem.confKey,
-        graft.sources.FastLocalFileSystem.confValue) // in-process chmod; see its scaladoc
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // attribution/scale-harness escape hatch: extra session confs as
     // `k=v;k2=v2` (e.g. the sf1 dim-broadcast flip run sets

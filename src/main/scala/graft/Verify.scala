@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,21 +10,7 @@ object Verify {
     val keep: String => Boolean =
       if (args.length > 2) args(2).split(",").toSet else (_ => true)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single-digit-MB test parquet would otherwise scan as ONE input
-      // partition (default split 128 MB) — size the split to the SF so
-      // scan+map stages use the cores; at production SF the default holds
-      .config("spark.sql.files.maxPartitionBytes", 2097152L)
-      .config("spark.sql.files.openCostInBytes", 262144L)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.GraftSession.IcuCaseMappingsKey, "false") // JVM case mapping; see GraftSession scaladoc
-      .config(graft.sources.FastLocalFileSystem.confKey,
-        graft.sources.FastLocalFileSystem.confValue) // in-process chmod; see its scaladoc
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // build the graph registry BEFORE the cache-hygiene baseline so the

@@ -19,10 +19,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class RQ(name: String, oracle: Option[String])(
     val build: (SparkSession, String) => DataFrame)
 
-/** Engine-wide session defaults, applied by every SparkSession builder in
-  * the repo (Bench, Verify, SparkSpec, Pipeline, tools).
+/** Engine-wide session defaults and the one session builder the mains
+  * and the test session share.
   */
 object GraftSession {
+
+  /** A `local[cpus]` session builder with the confs every caller shares:
+    * shuffle parallelism = cpus, input splits sized for test-scale
+    * parquet, UTC, JVM case mapping ([[IcuCaseMappingsKey]]), the
+    * in-process-chmod local filesystem, no UI, and the engine's
+    * extensions. Callers add only confs of their own.
+    */
+  def builder(cpus: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // single-digit-MB test parquet would otherwise scan as ONE input
+      // partition (default split 128 MB) — size the split to the SF so
+      // scan+map stages use the cores; at production SF the default holds
+      .config("spark.sql.files.maxPartitionBytes", 2097152L)
+      .config("spark.sql.files.openCostInBytes", 262144L)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config(IcuCaseMappingsKey, "false")
+      .config(graft.sources.FastLocalFileSystem.confKey,
+        graft.sources.FastLocalFileSystem.confValue) // in-process chmod; see its scaladoc
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.plans.GraftExtensions)
 
   /** Route `upper`/`lower`/`initcap` through the JVM instead of ICU.
     *

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphTables
@@ -667,16 +667,8 @@ object FlatFileExport {
 object Pipeline {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config(graft.GraftSession.IcuCaseMappingsKey, "false") // see GraftSession
-      .config(graft.sources.FastLocalFileSystem.confKey,
-        graft.sources.FastLocalFileSystem.confValue) // in-process chmod; see its scaladoc
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.GraftSession
+      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // cached(): the sink writes are separate actions over shared lineages
     // (boundEntities feeds several sinks) — persist once, not rebuild

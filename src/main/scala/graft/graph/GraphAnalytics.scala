@@ -72,10 +72,12 @@ private[graft] object DistVec {
   }
 }
 
-/** Whole-graph analytics on GraphX (BASELINE.json: "GraphX for analytics
-  * queries"). Interactive traversals stay DataFrame joins (bounded-depth
-  * patterns, §2.C); GraphX is reserved for genuinely global computations:
-  * connected components and degree distributions.
+/** Whole-graph analytics over the co-binding graph (BASELINE.json:
+  * "GraphX for analytics queries"). Interactive traversals stay DataFrame
+  * joins (bounded-depth patterns, §2.C). Global computations run on
+  * GraphX (components, triangles, BFS, closeness, HyperBall, degrees) or
+  * as DataFrame loops: the [[superstep]] kernel (x5 PageRank, x7 label
+  * propagation, x8 k-core peel) and DataFrameCC's star contraction (x6).
   */
 object GraphAnalytics {
 
@@ -514,14 +516,43 @@ object GraphAnalytics {
     }
   }
 
+  /** Both orientations `(a, b)` of canonical undirected edges `(ea, eb)`
+    * — the directed edge table every DataFrame superstep and wedge join
+    * probes by source.
+    */
+  private def directedEdges(canonEdges: DataFrame): DataFrame =
+    canonEdges.select(col("ea").as("a"), col("eb").as("b"))
+      .unionByName(canonEdges.select(col("eb").as("a"), col("ea").as("b")))
+
+  /** The DataFrame superstep kernel behind x5, x7 and x8 (Pregelix's
+    * join + group-by template): `rounds` applications of
+    * `step(round, state, edges)`, round numbers 1-based. The vertex state
+    * is dimension-sized, so a step broadcasts it and probes the edge
+    * table map-side; its only shuffle is the per-round aggregation.
+    *
+    * Lineage, in this one place: the static edge table, the initial state
+    * and every round's state are eagerly
+    * [[graft.operators.Checkpoints.truncate]]d, so a round's plan never
+    * grows with the rounds before it (a step that reads its state more
+    * than once would otherwise clone a rounds-deep tree per reference)
+    * and the returned frame is materialized. Nothing enters the
+    * CacheManager: truncating the edge table measured faster than
+    * persisting it on each of x5/x7/x8, and the checkpoint blocks are
+    * freed by the ContextCleaner once their frames are unreferenced.
+    */
+  private def superstep(init: DataFrame, edges: DataFrame, rounds: Int)(
+      step: (Int, DataFrame, DataFrame) => DataFrame): DataFrame = {
+    import graft.operators.Checkpoints.truncate
+    val ed = truncate(edges)
+    (1 to rounds).foldLeft(truncate(init))((st, r) => truncate(step(r, st, ed)))
+  }
+
   /** Integer-exact PageRank on the top-k co-binding graph: `iters` damped
     * iterations in scaled-1e6 fixed point. All arithmetic is BIGINT
     * (`r div deg` contributions, `150000 + 85·Σ div 100` update), so the
     * result is independent of partition/accumulation order — the property
     * that makes an iterative rank oracle-checkable at all (float PageRank
-    * is not). Each iteration is one dimension-sized join + keyed
-    * aggregation; the edge/degree/vertex tables are persisted across the
-    * unrolled loop and released before return (see pagerankIntOn).
+    * is not). Each iteration is one [[superstep]].
     */
   def pagerankInt(s: SparkSession, dir: String, k: Int = 3,
                   iters: Int = 5): DataFrame = {
@@ -532,57 +563,30 @@ object GraphAnalytics {
       .orderBy("suppkey")
   }
 
-  /** The fixed-point kernel behind pagerankInt: `nodes(sk)` and canonical
+  /** The fixed-point step behind pagerankInt: `nodes(sk)` and canonical
     * undirected edges `(ea, eb)` → `(sk, r)` after `iters` damped
     * iterations. Separated so a hand-computed graph can pin the
     * arithmetic in a spec.
-    *
-    * Cache lifecycle: the three iteration tables are persisted for the
-    * unrolled loop and released in a finally — the final ranks are
-    * materialized first via an eager localCheckpoint (dimension-sized),
-    * which truncates the returned frame's lineage off the caches so the
-    * unpersist is safe. The checkpoint blocks themselves are freed by the
-    * ContextCleaner once the returned frame is unreferenced — nothing
-    * outlives the call's consumers. (Checkpoints.truncate: localCheckpoint
-    * by default — lineage traded for speed — and RELIABLE checkpointing
-    * when `spark.graft.checkpoint.dir` is set, the cluster mode where
-    * executor loss must be survivable.) Note nodesDf is
-    * persisted AND unpersisted here — a caller holding its own cache of
-    * the same plan should pass a fresh frame.
     */
   private[graft] def pagerankIntOn(nodesDf: DataFrame, canonEdges: DataFrame,
                                    iters: Int): DataFrame = {
     // Degree is a property of the static edge set — join it into the
     // edge table ONCE, not inside the loop (the in-loop form cost one
     // extra shuffle join per iteration).
-    val ed = canonEdges.select(col("ea").as("a"), col("eb").as("b"))
-      .unionByName(canonEdges.select(col("eb").as("a"), col("ea").as("b")))
+    val ed = directedEdges(canonEdges)
     val deg = ed.groupBy(col("a").as("dsrc")).agg(count(lit(1)).as("deg"))
     val edDeg = ed.join(deg, col("a") === col("dsrc"))
-      .select(col("a"), col("b"), col("deg")).persist()
-    val nodes = nodesDf.persist()
-    try {
-      var pr = nodes.select(col("sk"), lit(1000000L).as("r"))
-      (1 to iters).foreach { _ =>
-        // The rank vector is VERTEX-dimension-sized — here the supplier
-        // dimension, the same bound every dim broadcast in this engine
-        // relies on — so broadcasting it turns the contribution join into
-        // a map-side probe of the one persisted edge table: the loop's
-        // only shuffle per iteration is the contribution aggregation.
-        // (A fact-sized vertex set is the OTHER graph regime — that path
-        // is GraphX pagerank / DataFrameCC, not this kernel.)
+      .select(col("a"), col("b"), col("deg"))
+    superstep(nodesDf.select(col("sk"), lit(1000000L).as("r")), edDeg, iters) {
+      (_, pr, edges) =>
         val contrib = broadcast(pr.select(col("sk").as("src"), col("r")))
-          .join(edDeg, col("src") === col("a"))
+          .join(edges, col("src") === col("a"))
           .select(col("b").as("sk"), expr("r div deg").as("c"))
           .groupBy("sk").agg(sum("c").as("contribs"))
-        pr = nodes.join(broadcast(contrib), Seq("sk"), "left")
+        pr.join(broadcast(contrib), Seq("sk"), "left")
           .select(col("sk"),
             expr("CAST(150000 + 85 * coalesce(contribs, 0) div 100 AS BIGINT)")
               .as("r"))
-      }
-      graft.operators.Checkpoints.truncate(pr)
-    } finally {
-      edDeg.unpersist(false); nodes.unpersist(false)
     }
   }
 
@@ -607,41 +611,28 @@ object GraphAnalytics {
       .orderBy("suppkey")
   }
 
-  /** The fixed-sweep kernel behind labelPropagation — separated (like
+  /** The vote step behind labelPropagation — separated (like
     * pagerankIntOn) so a hand-computed graph can pin the vote/tie
-    * arithmetic. Same loop shape and cache lifecycle as the pagerank
-    * kernel: the label vector is vertex-dimension-sized, so it
-    * broadcasts; per round the only shuffle is the vote aggregation.
-    * The (votes, label) argmax is one `max(struct(c, -lab))` partial
-    * aggregate — most votes first, then smallest label (largest -lab) —
-    * never a row_number window over the full message stream.
+    * arithmetic. The (votes, label) argmax is one `max(struct(c, -lab))`
+    * partial aggregate — most votes first, then smallest label (largest
+    * -lab) — never a row_number window over the full message stream.
     */
   private[graft] def labelPropagationOn(nodesDf: DataFrame,
                                         canonEdges: DataFrame,
-                                        iters: Int): DataFrame = {
-    val ed = canonEdges.select(col("ea").as("a"), col("eb").as("b"))
-      .unionByName(canonEdges.select(col("eb").as("a"), col("ea").as("b")))
-      .persist()
-    val nodes = nodesDf.persist()
-    try {
-      var lp = nodes.select(col("sk"), col("sk").as("lab"))
-      (1 to iters).foreach { _ =>
-        val votes = broadcast(lp.select(col("sk").as("src"), col("lab")))
-          .join(ed, col("src") === col("a"))
-          .groupBy(col("b").as("dst"), col("lab"))
-          .agg(count(lit(1)).as("c"))
-        val pick = votes
-          .groupBy(col("dst"))
-          .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
-          .select(col("dst"), (-col("m.nl")).as("plab"))
-        lp = lp.join(broadcast(pick), col("sk") === col("dst"), "left")
-          .select(col("sk"), coalesce(col("plab"), col("lab")).as("lab"))
-      }
-      graft.operators.Checkpoints.truncate(lp)
-    } finally {
-      ed.unpersist(false); nodes.unpersist(false)
+                                        iters: Int): DataFrame =
+    superstep(nodesDf.select(col("sk"), col("sk").as("lab")),
+        directedEdges(canonEdges), iters) { (_, lp, edges) =>
+      val votes = broadcast(lp.select(col("sk").as("src"), col("lab")))
+        .join(edges, col("src") === col("a"))
+        .groupBy(col("b").as("dst"), col("lab"))
+        .agg(count(lit(1)).as("c"))
+      val pick = votes
+        .groupBy(col("dst"))
+        .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
+        .select(col("dst"), (-col("m.nl")).as("plab"))
+      lp.join(broadcast(pick), col("sk") === col("dst"), "left")
+        .select(col("sk"), coalesce(col("plab"), col("lab")).as("lab"))
     }
-  }
 
   /** x8's peel constants, interpolated into the SQL oracle (same
     * can't-silently-diverge discipline as CoBindCap).
@@ -668,54 +659,33 @@ object GraphAnalytics {
       .orderBy("suppkey")
   }
 
-  /** The fixed-round kernel behind kcorePeel — separated (like
-    * pagerankIntOn / labelPropagationOn) so a hand-computed graph can pin
-    * the peel semantics. Vertex tables here are dimension-sized, so the
-    * per-round degree table and survivor set broadcast (map-side probe of
-    * the edge table); the only shuffle per round is the degree
-    * aggregation. A fact-sized vertex set is the other regime — run the
-    * same sweep with shuffle joins (drop the broadcast hints), the round
-    * structure is unchanged.
-    *
-    * Lineage hygiene: each round's vertex and edge tables are eagerly
-    * [[graft.operators.Checkpoints.truncate]]d (the DataFrameCC loop
-    * discipline, NOT the pagerank persist-only one) because a round
-    * references the previous round's plan THREE times (the edge table
-    * plus both survivor semi-join sides) — lazy caches leave a 3^rounds
-    * logical tree for the analyzer to clone, which is an OOM at analysis
-    * time before a single row moves.
+  /** The peel step behind kcorePeel — separated (like pagerankIntOn /
+    * labelPropagationOn) so a hand-computed graph can pin the peel
+    * semantics. The vertex state is `(sk, peel_round, core_deg)`, -1 =
+    * alive: a round counts every vertex's edges to alive neighbours and
+    * stamps the round on each alive vertex below `k` (no alive neighbour
+    * is degree 0, still peel-eligible); `core_deg` is that degree for a
+    * vertex still alive after the round, else 0. The kernel runs one
+    * round more than `rounds`, which peels nothing: it measures the
+    * survivors' degrees over the edges left after the last peel.
     */
   private[graft] def kcorePeelOn(nodesDf: DataFrame, canonEdges: DataFrame,
                                  k: Int, rounds: Int): DataFrame = {
-    import graft.operators.Checkpoints.truncate
-    var edges = truncate(canonEdges
-      .select(col("ea").as("src"), col("eb").as("dst"))
-      .unionByName(canonEdges.select(col("eb").as("src"), col("ea").as("dst"))))
-    var vs = nodesDf.select(col("sk"))
-    val removed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    (1 to rounds).foreach { r =>
-      val deg = edges.groupBy(col("src").as("sk")).agg(count(lit(1)).as("d"))
-      // left join: a vertex with no surviving incident edge has degree 0
-      // and must still be peel-eligible this round
-      val vd = truncate(vs.join(broadcast(deg), Seq("sk"), "left")
-        .select(col("sk"), coalesce(col("d"), lit(0L)).as("d")))
-      removed += vd.filter(col("d") < k)
-        .select(col("sk"), lit(r.toLong).as("peel_round"))
-      vs = vd.filter(col("d") >= k).select("sk")
-      val vSrc = broadcast(vs.select(col("sk").as("vsk_s")))
-      val vDst = broadcast(vs.select(col("sk").as("vsk_d")))
-      edges = truncate(edges
-        .join(vSrc, col("src") === col("vsk_s"), "left_semi")
-        .join(vDst, col("dst") === col("vsk_d"), "left_semi"))
-    }
-    val fdeg = edges.groupBy(col("src").as("sk")).agg(count(lit(1)).as("fd"))
-    val surv = vs.join(broadcast(fdeg), Seq("sk"), "left")
-      .select(col("sk"), lit(-1L).as("peel_round"),
-        coalesce(col("fd"), lit(0L)).as("core_deg"))
-    val rem = removed.reduce(_ unionByName _)
-      .withColumn("core_deg", lit(0L))
-    rem.unionByName(surv).select(col("sk").as("suppkey"),
-      col("peel_round"), col("core_deg"))
+    val init = nodesDf.select(col("sk"), lit(-1L).as("peel_round"),
+      lit(0L).as("core_deg"))
+    superstep(init, directedEdges(canonEdges), rounds + 1) { (r, st, edges) =>
+      val alive = st.filter(col("peel_round") === -1L).select(col("sk").as("nb"))
+      val deg = edges.join(broadcast(alive), col("b") === col("nb"), "left_semi")
+        .groupBy(col("a").as("sk")).agg(count(lit(1)).as("d"))
+      val d = coalesce(col("d"), lit(0L))
+      val peel =
+        if (r > rounds) col("peel_round")
+        else when(col("peel_round") === -1L && d < k, lit(r.toLong))
+          .otherwise(col("peel_round"))
+      st.join(broadcast(deg), Seq("sk"), "left")
+        .select(col("sk"), peel.as("peel_round"),
+          when(peel === -1L, d).otherwise(lit(0L)).as("core_deg"))
+    }.select(col("sk").as("suppkey"), col("peel_round"), col("core_deg"))
   }
 
   /** Per-vertex GraphX triangle counts. `verticesDf` is one `id:long`
@@ -735,10 +705,6 @@ object GraphAnalytics {
       .toDF("id", "n_triangles")
   }
 
-  /** Degree statistics — ligand promiscuity: for each part (ligand), the
-    * number of distinct suppliers (domains) binding it, computed from
-    * GraphX degrees on the bipartite contact graph.
-    */
   /** Neighborhood Jaccard similarity over the top-k co-binding graph:
     * for every supplier pair sharing at least one common neighbor,
     * |N(a)∩N(b)| / |N(a)∪N(b)| on open neighborhoods. The classic
@@ -759,10 +725,8 @@ object GraphAnalytics {
     // the directed edge table feeds FOUR plan branches (both wedge-join
     // sides + both degree joins); un-materialized, each branch re-runs
     // the top-k window + distinct — measured 4× the query's real work.
-    // Dimension-sized, so the truncate is cheap (x8's loop discipline).
-    val ed = graft.operators.Checkpoints.truncate(
-      e.select(col("ea").as("a"), col("eb").as("b"))
-        .union(e.select(col("eb").as("a"), col("ea").as("b"))))
+    // Dimension-sized, so the truncate is cheap.
+    val ed = graft.operators.Checkpoints.truncate(directedEdges(e))
     val deg = ed.groupBy("a").agg(count(lit(1)).as("n"))
     val wedge = ed.as("e1")
       .join(ed.as("e2"),
@@ -779,6 +743,10 @@ object GraphAnalytics {
       .orderBy("sa", "sb")
   }
 
+  /** Degree statistics — ligand promiscuity: for each part (ligand), the
+    * number of distinct suppliers (domains) binding it, computed from
+    * GraphX degrees on the bipartite contact graph.
+    */
   def ligandPromiscuity(s: SparkSession, dir: String): DataFrame = {
     val pairs = coBindingPairs(s, dir)
     // bipartite ids: parts in positive space, suppliers offset negative

@@ -132,7 +132,8 @@ object GraphQueryDefs {
     // construction. The iteration count is fixed (unrolled in both
     // engines: recursive-CTE aggregation is illegal in SQL, and a fixed
     // small iteration budget is how production PageRank runs anyway).
-    // Each Spark iteration is one dim-sized join + keyed aggregation.
+    // Each Spark iteration is one dim-sized join + keyed aggregation
+    // (one round of GraphAnalytics' superstep kernel).
     RQ("x5_pagerank_int", Some {
       val iters = (1 to 5).map { i =>
         s"""pr$i AS (SELECT nodes.sk, 150000 + 85 * coalesce(c.s, 0) // 100
@@ -158,8 +159,8 @@ object GraphQueryDefs {
     // Votes are counts and labels are ids, so the result is integer-
     // exact; the tie-break (most votes, then minimum label) unrolls in
     // SQL as a row_number pick — the Spark side computes the identical
-    // argmax as one max(struct(c, -lab)) partial aggregate (see
-    // GraphAnalytics.labelPropagationOn).
+    // argmax as one max(struct(c, -lab)) partial aggregate, one round
+    // of GraphAnalytics' superstep kernel per sweep.
     RQ("x7_label_propagation", Some {
       val sweeps = (1 to 3).map { i =>
         s"""v$i AS (SELECT ed.b AS sk, p.lab, count(*) AS c
@@ -187,16 +188,17 @@ object GraphQueryDefs {
     // the oracle-checkable form (a sequential peel is vertex-order-
     // dependent; recursive-CTE aggregation is illegal anyway) and the
     // distributed form: one degree aggregation + membership semi-join
-    // per round (GraphAnalytics.kcorePeelOn). The constants interpolate
+    // per round (one round of GraphAnalytics' superstep kernel over a
+    // (sk, peel_round, core_deg) vertex state). The constants interpolate
     // from GraphAnalytics so the engines cannot silently diverge.
     RQ("x8_kcore_peel", Some {
       val k = GraphAnalytics.KCoreK
       val rounds = GraphAnalytics.KCoreRounds
       // every per-round CTE is referenced by the NEXT round more than
       // once — inlined (DuckDB's default) that's a 3^rounds expansion of
-      // the co-bind subtree, the SQL twin of the analyzer blowup
-      // kcorePeelOn truncates away; MATERIALIZED caps each round at one
-      // evaluation
+      // the co-bind subtree, the SQL twin of the analyzer blowup the
+      // superstep kernel's per-round truncation prevents; MATERIALIZED
+      // caps each round at one evaluation
       val sweeps = (1 to rounds).map { r =>
         s"""deg$r AS (SELECT src, count(*) AS d FROM ed$r GROUP BY 1),
            vd$r AS MATERIALIZED (SELECT v.sk, coalesce(g.d, 0) AS d

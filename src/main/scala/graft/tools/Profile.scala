@@ -15,21 +15,7 @@ object Profile {
     val explain = args.contains("--explain")
     val names = args.drop(2).filterNot(_ == "--explain")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single-digit-MB test parquet would otherwise scan as ONE input
-      // partition (default split 128 MB) — size the split to the SF so
-      // scan+map stages use the cores; at production SF the default holds
-      .config("spark.sql.files.maxPartitionBytes", 2097152L)
-      .config("spark.sql.files.openCostInBytes", 262144L)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.GraftSession.IcuCaseMappingsKey, "false") // JVM case mapping; see GraftSession scaladoc
-      .config(graft.sources.FastLocalFileSystem.confKey,
-        graft.sources.FastLocalFileSystem.confValue) // in-process chmod; see its scaladoc
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").queryExecution.toRdd.count()
     // bare-operator probes for SCALING.md rows (x11 is now registered

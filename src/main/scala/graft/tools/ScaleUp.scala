@@ -37,6 +37,8 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val (src, out, n) = (args(0), args(1), args(2).toInt)
+    // its own builder, not GraftSession.builder: the shared input-split
+    // confs change how many parquet files each copied table is written as
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev decomposition probe for the has_similarity_rels sink (the etl3
@@ -21,18 +20,7 @@ object SinkProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", 2097152L)
-      .config("spark.sql.files.openCostInBytes", 262144L)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.GraftSession.IcuCaseMappingsKey, "false")
-      .config(graft.sources.FastLocalFileSystem.confKey,
-        graft.sources.FastLocalFileSystem.confValue) // in-process chmod; see its scaladoc
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val g = graft.graph.GraphTables.cached(spark, sfDir)
     // materialize the inputs untimed (the bench warms these)

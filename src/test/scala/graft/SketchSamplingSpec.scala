@@ -235,6 +235,15 @@ class SketchSamplingSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       assert(got(3L) === 150000L)
     }
+    it("0 iterations return the initial ranks") {
+      import spark.implicits._
+      val nodes = Seq(1L, 2L, 3L).toDF("sk")
+      val edges = Seq((1L, 2L), (2L, 3L)).toDF("ea", "eb")
+      val got = graft.graph.GraphAnalytics
+        .pagerankIntOn(nodes, edges, iters = 0)
+        .as[(Long, Long)].collect().toMap
+      assert(got === Map(1L -> 1000000L, 2L -> 1000000L, 3L -> 1000000L))
+    }
   }
 
   describe("x7 label propagation kernel") {
@@ -263,6 +272,15 @@ class SketchSamplingSpec extends SparkSpec {
         .labelPropagationOn(nodes, edges, iters = 2)
         .as[(Long, Long)].collect().toMap
       assert(got === Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 2L))
+    }
+    it("0 sweeps leave every vertex with its own label") {
+      import spark.implicits._
+      val nodes = Seq(1L, 2L, 3L, 4L).toDF("sk")
+      val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("ea", "eb")
+      val got = graft.graph.GraphAnalytics
+        .labelPropagationOn(nodes, edges, iters = 0)
+        .as[(Long, Long)].collect().toMap
+      assert(got === Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
     }
   }
 
@@ -297,6 +315,43 @@ class SketchSamplingSpec extends SparkSpec {
         .as[(Long, Long, Long)].collect()
         .map(r => r._1 -> r._2).toMap
       assert(got === Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 1L))
+    }
+    it("0 rounds peel nothing: every vertex survives with its full degree") {
+      import spark.implicits._
+      val nodes = Seq(1L, 2L, 3L, 4L, 5L).toDF("sk")
+      val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("ea", "eb")
+      val got = graft.graph.GraphAnalytics
+        .kcorePeelOn(nodes, edges, k = 2, rounds = 0)
+        .as[(Long, Long, Long)].collect()
+        .map(r => r._1 -> ((r._2, r._3))).toMap
+      assert(got === Map(1L -> ((-1L, 1L)), 2L -> ((-1L, 2L)),
+        3L -> ((-1L, 2L)), 4L -> ((-1L, 1L)), 5L -> ((-1L, 0L))))
+    }
+  }
+
+  describe("superstep kernel cache lifecycle") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.graftx.GraftCacheBridge
+    import graft.graph.GraphAnalytics
+    // triangle {1,2,3} + tail 3-4 + isolated 5, ids shifted per kernel:
+    // an entry one kernel leaked must not satisfy (and hide) the next
+    // kernel's identical-plan persist
+    def nodes(o: Long): DataFrame = Seq(1L, 2L, 3L, 4L, 5L).map(_ + o).toDF("sk")
+    def edges(o: Long): DataFrame = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L))
+      .map { case (a, b) => (a + o, b + o) }.toDF("ea", "eb")
+    Seq[(String, (DataFrame, DataFrame) => DataFrame)](
+      "x5 pagerankIntOn" -> (GraphAnalytics.pagerankIntOn(_, _, iters = 2)),
+      "x7 labelPropagationOn" -> (GraphAnalytics.labelPropagationOn(_, _, iters = 2)),
+      "x8 kcorePeelOn" -> (GraphAnalytics.kcorePeelOn(_, _, k = 2, rounds = 2))
+    ).zipWithIndex.foreach { case ((kernel, run), i) =>
+      it(s"$kernel returns with no CacheManager entry of its own left behind") {
+        val before = GraftCacheBridge.entries(spark).map(_._1)
+        val out = run(nodes(100L * i), edges(100L * i))
+        val added = GraftCacheBridge.entries(spark).map(_._1)
+          .filterNot(p => before.exists(_ eq p))
+        assert(added.isEmpty, s"$kernel left ${added.size} cache entries")
+        assert(out.count() === 5L)
+      }
     }
   }
 

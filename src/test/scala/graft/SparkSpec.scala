@@ -6,19 +6,11 @@ import org.scalatest.funspec.AnyFunSpec
 /** Shared local SparkSession for all suites (one JVM — Test/fork). */
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(GraftSession.IcuCaseMappingsKey, "false") // see GraftSession
-      .config(graft.sources.FastLocalFileSystem.confKey,
-        graft.sources.FastLocalFileSystem.confValue) // in-process chmod; see its scaladoc
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(s)
     s
   }
 }
