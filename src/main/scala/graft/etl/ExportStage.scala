@@ -60,12 +60,12 @@ object ExportStage {
   def ecLevel(code: Column, n: Int): Column =
     concat_ws(".", (1 to n).map(i => element_at(split(code, "\\."), i)): _*)
 
-  /** Concurrent write slots: the fact-derived sink writes are independent
-    * Spark jobs over shared (persisted) lineages — submitting them
-    * serially pays per-job scheduling latency in wall-clock. Eight in
-    * flight keeps the scheduler busy without starving any single job of
-    * cores. (The ~40 dimension-bounded tables no longer occupy slots at
-    * all — they ride ONE batched job, see `writeSmall`.)
+  /** Concurrent write slots: every sink write — fact-derived and
+    * dimension-bounded alike — is an independent task over shared
+    * (persisted) lineages, and submitting them serially pays per-job
+    * scheduling latency in wall-clock. Eight in flight keeps the
+    * scheduler busy without starving any single job of cores. The
+    * residency gate's probes run on the same slots.
     */
   private val WriteSlots = 8
 
@@ -82,14 +82,7 @@ object ExportStage {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       WriteSlots,
       (r: Runnable) => { val t = new Thread(r, "export-write"); t.setDaemon(true); t })
-    // shutdownNow on the failure path: plain shutdown() lets the ~60
-    // still-queued write jobs keep launching Spark jobs on daemon threads
-    // AFTER run() has rethrown — polluting whatever the session does next
-    // (in etl3 that's the following bench queries) and littering partial
-    // output dirs. shutdownNow drains the queue; the in-flight writes are
-    // additionally gated by the failed flag in runWithPool.
     try runWithPool(g, outDir, pool)
-    catch { case e: Throwable => pool.shutdownNow(); throw e }
     finally pool.shutdown()
   }
 
@@ -98,60 +91,67 @@ object ExportStage {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val spark = g.entries.sparkSession
     val pending = scala.collection.mutable.ArrayBuffer[Future[Unit]]()
     val written = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    // first-failure latch: once any sink write fails, queued jobs that
-    // haven't started their Spark job yet become no-ops (paired with
-    // run()'s shutdownNow, which stops them being dequeued at all)
-    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def write(name: String, df: DataFrame,
-              hdr: (String, String)*): Unit = {
+    // first-failure latch: the first task to fail records its error here;
+    // queued tasks that haven't started yet become no-ops, and the error
+    // is rethrown on the caller thread once every task has settled
+    val firstFailure =
+      new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    // every task catches its own error, fatal ones too, so its Future
+    // always completes and `settle` cannot hang on it
+    def task(body: => Unit): Unit =
       pending += Future {
-        if (!failed.get())
-          try {
-            val t0 = System.nanoTime()
-            // per-sink job group: StorageTelemetry accumulates executor
-            // run/cpu/input stats under sink:<name>, so the bench artifact
-            // carries each sink's input provenance — a sink whose in_rows
-            // is fact-sized recomputed its registry input's lineage
-            // (VERDICT r11 item 2). Job groups are thread-local; each
-            // pool thread sets and clears its own.
-            val sc = df.sparkSession.sparkContext
-            sc.setJobGroup(s"sink:$name", s"export sink: $name",
-              interruptOnCancel = false)
-            try Sinks.neo4jTsv(df, s"$outDir/$name", hdr.toMap)
-            finally sc.clearJobGroup()
-            ExportTelemetry.record(name, (System.nanoTime() - t0) / 1e9)
-          }
-          catch { case e: Throwable => failed.set(true); throw e }
+        if (firstFailure.get() == null)
+          try body
+          catch { case e: Throwable => firstFailure.compareAndSet(null, e) }
+      }
+    // waits for every submitted task, then surfaces the first failure
+    def settle(): Unit = {
+      pending.foreach(Await.ready(_, Duration.Inf))
+      Option(firstFailure.get()).foreach(e => throw e)
+    }
+    // one sink write: its own sink:<name> job group (StorageTelemetry
+    // accumulates executor run/cpu/input stats under it, so a sink whose
+    // in_rows is fact-sized shows it recomputed its registry input's
+    // lineage — VERDICT r11 item 2; job groups are thread-local, each
+    // pool thread sets and clears its own) and its own telemetry entry
+    def sink(name: String, hdr: Seq[(String, String)])(
+        writer: (String, Map[String, String]) => Unit): Unit = {
+      task {
+        val t0 = System.nanoTime()
+        val sc = spark.sparkContext
+        sc.setJobGroup(s"sink:$name", s"export sink: $name",
+          interruptOnCancel = false)
+        try writer(s"$outDir/$name", hdr.toMap)
+        finally sc.clearJobGroup()
+        ExportTelemetry.record(name, (System.nanoTime() - t0) / 1e9)
       }
       written += name -> s"$outDir/$name"
     }
-    // DIMENSION-bounded tables (suppliers, hierarchy levels, distinct EC
-    // codes, the stats row): cardinality bounded by a dimension, one data
-    // file per table (what the reference's import consumes). They are
-    // COLLECTED here and written by ONE batched Spark job at the end
-    // (Sinks.neo4jTsvBatch) — per-table coalesce(1) writes were ~40
-    // trivial-bytes jobs whose sequentially-planned driver setup was
-    // etl3's measured floor (VERDICT r10 item 1: job-count, not bytes).
-    // Fact-derived tables keep their natural partitioning and their own
-    // write jobs above.
-    val smalls =
-      scala.collection.mutable.ArrayBuffer[(String, DataFrame, Map[String, String])]()
-    def writeSmall(name: String, df: DataFrame,
-                   hdr: (String, String)*): Unit = {
-      smalls += ((name, df, hdr.toMap))
-      written += name -> s"$outDir/$name"
-    }
+    // fact-derived tables keep their natural partitioning: one Spark
+    // write job each
+    def write(name: String, df: DataFrame, hdr: (String, String)*): Unit =
+      sink(name, hdr)(Sinks.neo4jTsv(df, _, _))
+    // DIMENSION-bounded tables (hierarchy levels, distinct EC codes,
+    // per-DB domain views, the stats row): cardinality bounded by a
+    // dimension, so the task collects the lines and writes the one data
+    // file the reference's import consumes from the driver: a collect
+    // job, no write job
+    def writeSmall(name: String, df: DataFrame, hdr: (String, String)*): Unit =
+      sink(name, hdr)(Sinks.neo4jTsvDimension(df, _, _))
 
     // shared(df): persist + eagerly materialize an intermediate that
     // several write jobs consume. Registered so the finally below
     // releases it on EVERY exit path — including a construction or
-    // materialization failure mid-body — not just after a clean Await.
-    val sharedPersists = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    // materialization failure mid-body — not just after a clean settle.
+    // Concurrent: the residency probes append from pool threads.
+    val sharedPersists =
+      new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     def shared(df: DataFrame, name: String = ""): DataFrame = {
       val p = df.persist()
-      sharedPersists += p
+      sharedPersists.add(p)
       val t0 = System.nanoTime()
       p.queryExecution.toRdd.count()
       if (name.nonEmpty)
@@ -169,41 +169,48 @@ object ExportStage {
     // get-or-compute fills exactly the holes, same RDD id, so the bench's
     // baseline snapshot still covers the table); a table with no cache
     // entry at all (a non-`cached()` caller) is persisted for the stage
-    // and released in the finally. Outcomes land in ExportTelemetry as
-    // rewarm:<table>/persist:<table> walls — per-sink input provenance is
-    // the sink:<name> job-group stats recorded around each write.
+    // and released in the finally. The three tables are GraphTables'
+    // independent phase-1 registry tables, so they are probed
+    // concurrently on the pool, and all three settle before the first
+    // write is submitted. Outcomes land in ExportTelemetry as
+    // rewarm:/materialize:/persist:<table> walls — per-sink input
+    // provenance is the sink:<name> job-group stats recorded around
+    // each write.
     try {
-      val spark = g.entries.sparkSession
       Seq("boundEntities" -> g.boundEntities, "interacts" -> g.interacts,
           "similarity" -> g.similarity).foreach { case (name, df) =>
-        org.apache.spark.sql.graftx.GraftCacheBridge
-          .residency(spark, df) match {
-          case Some(frac) if frac < 1.0 =>
-            val t0 = System.nanoTime()
-            df.queryExecution.toRdd.count()
-            ExportTelemetry.record(s"rewarm:$name",
-              (System.nanoTime() - t0) / 1e9)
-          case Some(_) => () // fully resident — every sink reads blocks
-          case None if org.apache.spark.sql.graftx.GraftCacheBridge
-              .hasCacheEntry(spark, df) =>
-            // the CALLER persisted this table but its buffers never
-            // materialized (warmup skipped or failed) — count() fills the
-            // caller's OWN entry; persisting here and releasing in the
-            // finally would instead remove the caller's cache so every
-            // later consumer silently recomputes full lineage (ADVICE r12)
-            val t0 = System.nanoTime()
-            df.queryExecution.toRdd.count()
-            ExportTelemetry.record(s"materialize:$name",
-              (System.nanoTime() - t0) / 1e9)
-          case None =>
-            val t0 = System.nanoTime()
-            val p = df.persist()
-            sharedPersists += p
-            p.queryExecution.toRdd.count()
-            ExportTelemetry.record(s"persist:$name",
-              (System.nanoTime() - t0) / 1e9)
+        task {
+          org.apache.spark.sql.graftx.GraftCacheBridge
+            .residency(spark, df) match {
+            case Some(frac) if frac < 1.0 =>
+              val t0 = System.nanoTime()
+              df.queryExecution.toRdd.count()
+              ExportTelemetry.record(s"rewarm:$name",
+                (System.nanoTime() - t0) / 1e9)
+            case Some(_) => () // fully resident — every sink reads blocks
+            case None if org.apache.spark.sql.graftx.GraftCacheBridge
+                .hasCacheEntry(spark, df) =>
+              // the CALLER persisted this table but its buffers never
+              // materialized (warmup skipped or failed) — count() fills
+              // the caller's OWN entry; persisting here and releasing in
+              // the finally would instead remove the caller's cache so
+              // every later consumer silently recomputes full lineage
+              // (ADVICE r12)
+              val t0 = System.nanoTime()
+              df.queryExecution.toRdd.count()
+              ExportTelemetry.record(s"materialize:$name",
+                (System.nanoTime() - t0) / 1e9)
+            case None =>
+              val t0 = System.nanoTime()
+              val p = df.persist()
+              sharedPersists.add(p)
+              p.queryExecution.toRdd.count()
+              ExportTelemetry.record(s"persist:$name",
+                (System.nanoTime() - t0) / 1e9)
+          }
         }
       }
+      settle()
 
       // ---- core graph (the round-1 seven) ------------------------------
       write("entry_nodes", g.entries.select("pdbEntry"),
@@ -591,32 +598,16 @@ object ExportStage {
             col("num_bound_descriptors"), col("num_cognate_ligands")),
         "procoggraph" -> "procoggraph:ID(procoggraph-id)")
 
-      // the batched small-table job, submitted once every writeSmall has
-      // registered its table: one Spark job for the whole dimension-
-      // bounded inventory (none of them reads a shared persist, so the
-      // batch doesn't gate on the fact-join materializations above)
-      val smallList = smalls.toSeq
-      pending += Future {
-        if (!failed.get())
-          try {
-            val t0 = System.nanoTime()
-            val sc = g.entries.sparkSession.sparkContext
-            sc.setJobGroup("sink:small_batch", "export batch sink",
-              interruptOnCancel = false)
-            try Sinks.neo4jTsvBatch(outDir, smallList)
-            finally sc.clearJobGroup()
-            ExportTelemetry.record(s"small_batch(${smallList.size})",
-              (System.nanoTime() - t0) / 1e9)
-          }
-          catch { case e: Throwable => failed.set(true); throw e }
-      }
-
-      // surface the FIRST write failure (Future.sequence reports one
-      // deterministic error instead of whichever lands last); the finally
-      // releases every shared persist on any exit path, and the pool
-      // itself is released by run()'s finally
-      Await.result(Future.sequence(pending.toSeq), Duration.Inf)
-    } finally sharedPersists.foreach(_.unpersist(blocking = false))
+      settle()
+    } catch {
+      case e: Throwable =>
+        // a failure in the body itself (plan construction, a shared
+        // materialization): stop the queued writes and let the in-flight
+        // ones finish, so no sink job outlives run()
+        firstFailure.compareAndSet(null, e)
+        pending.foreach(Await.ready(_, Duration.Inf))
+        throw e
+    } finally sharedPersists.forEach(_.unpersist(blocking = false))
     written.toSeq
   }
 }

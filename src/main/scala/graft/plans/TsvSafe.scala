@@ -2,13 +2,17 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Identity-on-valid-input guard for the Neo4j TSV sinks (ADVICE r13,
   * medium): passes the string through unchanged, throws on \t / \n / \r —
   * the three bytes that would silently corrupt an unquoted TSV row at the
-  * neo4j-admin import boundary.
+  * neo4j-admin import boundary. On an `array<string>` it checks every
+  * element and also rejects `|`, the import's array delimiter: an element
+  * `a|b` would silently come back as two elements (ADVICE r14). Null
+  * elements pass (the `|` join skips them).
   *
   * A native expression instead of `contains(\t) || contains(\n) ||
   * contains(\r) → raise_error` because the sinks evaluate it per string
@@ -22,21 +26,26 @@ case class TsvSafe(child: Expression)
   override def checkInputDataTypes():
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
-      case StringType =>
+      case StringType | ArrayType(StringType, _) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"TsvSafe requires string input, got ${other.catalogString}")
+          s"TsvSafe requires string or array<string> input, got ${other.catalogString}")
     }
 
-  override def dataType: DataType = StringType
+  override def dataType: DataType = child.dataType
   override def nullable: Boolean = child.nullable
 
+  private def isArray: Boolean = child.dataType.isInstanceOf[ArrayType]
+
   override protected def nullSafeEval(input: Any): Any =
-    TsvSafeUtil.check(input.asInstanceOf[UTF8String])
+    if (isArray) TsvSafeUtil.checkElements(input.asInstanceOf[ArrayData])
+    else TsvSafeUtil.check(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TsvSafeUtil.check($c)")
+    defineCodeGen(ctx, ev, c =>
+      if (isArray) s"graft.plans.TsvSafeUtil.checkElements($c)"
+      else s"graft.plans.TsvSafeUtil.check($c)")
 
   override protected def withNewChildInternal(newChild: Expression): TsvSafe =
     copy(child = newChild)
@@ -45,15 +54,33 @@ case class TsvSafe(child: Expression)
 /** Codegen-reachable helper (plain object → JVM static forwarder). */
 object TsvSafeUtil {
   def check(s: UTF8String): UTF8String = {
+    if (hasBad(s, pipe = false))
+      throw new IllegalArgumentException(
+        s"Sinks TSV domain violation (tab/newline in value): $s")
+    s
+  }
+
+  def checkElements(a: ArrayData): ArrayData = {
+    var i = 0
+    while (i < a.numElements()) {
+      if (!a.isNullAt(i) && hasBad(a.getUTF8String(i), pipe = true))
+        throw new IllegalArgumentException(
+          s"Sinks TSV domain violation (tab/newline/'|' in array element): " +
+            a.getUTF8String(i))
+      i += 1
+    }
+    a
+  }
+
+  /** Whether `s` holds a \t / \n / \r (or a `|`, when `pipe`). */
+  private def hasBad(s: UTF8String, pipe: Boolean): Boolean = {
     val n = s.numBytes()
     var i = 0
     while (i < n) {
       val b = s.getByte(i)
-      if (b == '\t' || b == '\n' || b == '\r')
-        throw new IllegalArgumentException(
-          s"Sinks TSV domain violation (tab/newline in value): $s")
+      if (b == '\t' || b == '\n' || b == '\r' || (pipe && b == '|')) return true
       i += 1
     }
-    s
+    false
   }
 }

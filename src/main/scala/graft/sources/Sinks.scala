@@ -47,8 +47,8 @@ object Sinks {
     spark.sparkContext.hadoopConfiguration
       .set("zlib.compress.level", "BEST_SPEED")
 
-  /** Typed Neo4j header line for a schema (shared by the per-table and
-    * batched writers — ONE definition of the name:TYPE derivation).
+  /** Typed Neo4j header line for a schema (shared by the fact and
+    * dimension writers — ONE definition of the name:TYPE derivation).
     */
   private def neo4jHeaders(schema: StructType,
                            headerFor: Map[String, String]): Seq[String] =
@@ -81,15 +81,17 @@ object Sinks {
     * so quoting never fires; doubles print via Java Double.toString on
     * both paths — SinksSpec pins byte equality against a reference
     * `.csv()` write over the full value-type domain). Shared by the
-    * per-table and batched writers so the two line formats cannot drift.
+    * fact and dimension writers so the two line formats cannot drift.
     *
     * The no-tab/newline domain is ENFORCED, not assumed (ADVICE r13): a
     * string value carrying \t/\n/\r — where the old CSV writer would have
     * quoted — would silently corrupt the row at the neo4j-admin import
-    * boundary. String-typed and array-joined values get a SINGLE-SCAN
+    * boundary. String values and array elements get a SINGLE-SCAN
     * codegen'd guard (plans/TsvSafe — the three-Contains Column form
     * measured ~20 executor-CPU-s on the 78M-row similarity sink) that
-    * fails the write loudly; numeric casts cannot produce control
+    * fails the write loudly. Array elements are guarded BEFORE the `|`
+    * join and also may not contain `|`, which would split the element
+    * into two at import. Numeric casts cannot produce control
     * characters and stay unguarded (zero cost on the score/count columns
     * that dominate the big sinks).
     */
@@ -102,7 +104,7 @@ object Sinks {
     concat_ws("\t", schema.fields.toSeq.map { f =>
       f.dataType match {
         case ArrayType(_, _) =>
-          coalesce(guarded(concat_ws("|", col(f.name))), lit(""))
+          coalesce(concat_ws("|", guarded(col(f.name))), lit(""))
         case StringType =>
           coalesce(guarded(col(f.name)), lit(""))
         case _ => coalesce(col(f.name).cast("string"), lit(""))
@@ -132,123 +134,36 @@ object Sinks {
     writeHeader(fs, dir, neo4jHeaders(df.schema, headerFor))
   }
 
-  /** Minimal serializable Hadoop-Configuration carrier for task-side
-    * filesystem access (Spark's own SerializableConfiguration is
-    * private[spark]; Configuration itself is not Serializable).
+  /** `neo4jTsv` for DIMENSION-bounded tables (hierarchy levels, distinct
+    * code sets, per-DB domain views, the stats row): the table's lines
+    * are collected to the driver, sorted, and written as ONE
+    * `data/part-00000.csv.gz` through [[FastGzipCodec]], next to the same
+    * `header.tsv`. A few thousand short lines need no write job of their
+    * own, and the in-memory sort makes a re-run byte-identical. A
+    * zero-row table still gets an empty part (csv readers fail on an
+    * empty `data/`), and the lines carry the same `TsvSafe` guard as
+    * `neo4jTsv`. Fact-sized tables must use `neo4jTsv`: the whole
+    * table passes through driver memory here.
     */
-  private final class SerConf(
-      @transient var value: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
-  /** Batched `neo4jTsv` for DIMENSION-bounded tables: ONE Spark job writes
-    * every table's single gzip data part, instead of one write job per
-    * table. The Neo4j export inventory has ~40 such tables (hierarchy
-    * levels, distinct code sets, the stats row) whose coalesce(1) writes
-    * are each a trivial amount of data but a full Spark job — and ~65
-    * sequentially-planned jobs × per-job driver setup was etl3's measured
-    * floor on the r10 driver record (57.7 s wall against a 31.8 s
-    * serial-deflate equivalent; VERDICT r10 item 1). Job-count is a
-    * DRIVER cost, so it doesn't shrink with executors — collapsing it is
-    * the 1000-executor fix, not a local-mode hack.
-    *
-    * Mechanics: each table's rows are formatted to their final TSV line
-    * (array → `|`-joined, null → empty — the same bytes the per-table CSV
-    * writer emits for this inventory's value domain: engine-synthesized
-    * ids/codes with no tab/quote/newline, so univocity quoting never
-    * fires), tagged with the table name, union-ed, and identity-
-    * partitioned on the table's list index so EXACTLY one task produces
-    * each table's `data/part-00000.csv.gz` through [[FastGzipCodec]]
-    * (BEST_SPEED, and the bytes land in the same telemetry counters). An
-    * in-memory per-table sort (dimension-bounded rows by the writeSmall
-    * contract) makes re-runs byte-deterministic. Headers and overwrite-cleanup are
-    * driver-side filesystem metadata (no jobs); a table that yields zero
-    * rows still gets an empty part so readers of `data/` never see an
-    * empty directory (the coalesce(1) writer's behavior).
-    *
-    * Task-retry note: a retried task re-creates its files with
-    * `overwrite = true` over deterministic content; like any
-    * foreachPartition sink this assumes no concurrent speculative
-    * attempt on a filesystem without atomic create-overwrite (Spark
-    * local/HDFS defaults are fine; enable speculation ⇒ use a job-commit
-    * sink instead).
-    */
-  def neo4jTsvBatch(root: String,
-      tables: Seq[(String, DataFrame, Map[String, String])]): Unit = {
-    require(tables.nonEmpty, "neo4jTsvBatch: empty table list")
-    val spark = tables.head._2.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    tables.foreach { case (name, df, headerFor) =>
-      val dir = new org.apache.hadoop.fs.Path(s"$root/$name")
-      val fs = dir.getFileSystem(hconf)
-      fs.delete(dir, true)
-      if (!fs.mkdirs(new org.apache.hadoop.fs.Path(dir, "data")))
-        throw new java.io.IOException(s"cannot create $dir/data")
-      writeHeader(fs, dir, neo4jHeaders(df.schema, headerFor))
-    }
-    val tagged = tables.map { case (name, df, _) =>
-      df.select(lit(name).as("t"), tsvLine(df.schema).as("line"))
-    }.reduce(_ unionByName _)
-    val sc = new SerConf(hconf)
-    // one table per task, EXACTLY: an identity partitioner on the table's
-    // list index (VERDICT r11 item 8 — `repartition(n, col("t"))` hash-
-    // partitions, so colliding names serialized several tables' gzip
-    // streams through one task). Rows are sorted in memory per partition
-    // for byte-deterministic re-runs: every table here is dimension-
-    // bounded by the writeSmall contract (the reason it is in the batch
-    // at all), so a per-table in-memory sort is a few thousand short
-    // strings, not a fact-table sort.
-    val names = tables.map(_._1)
-    require(names.distinct.size == names.size,
-      s"neo4jTsvBatch: duplicate table names in ${names.mkString(",")}")
-    val nameIdx = names.zipWithIndex.toMap
-    tagged.rdd
-      .map(r => (nameIdx(r.getString(0)), r.getString(1)))
-      .partitionBy(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = names.size
-        override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-      })
-      .foreachPartition { (rows: Iterator[(Int, String)]) =>
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        var idx = -1
-        rows.foreach { case (i, line) => idx = i; buf += line }
-        if (idx >= 0) {
-          val sorted = buf.sorted
-          val p = new org.apache.hadoop.fs.Path(
-            s"$root/${names(idx)}/data/part-00000.csv.gz")
-          val codec = new FastGzipCodec
-          codec.setConf(sc.value)
-          val out = codec.createOutputStream(
-            p.getFileSystem(sc.value).create(p, true))
-          // static field access, not a closure capture — Charset objects
-          // are not serializable
-          try sorted.foreach { line =>
-            out.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            out.write('\n')
-          } finally out.close()
-        }
-      }
-    // zero-row tables: materialize an empty part (csv readers fail on an
-    // empty data dir; the per-table coalesce(1) writer always left one)
-    tables.foreach { case (name, _, _) =>
-      val dataDir = new org.apache.hadoop.fs.Path(s"$root/$name/data")
-      val fs = dataDir.getFileSystem(hconf)
-      if (fs.listStatus(dataDir).isEmpty) {
-        val codec = new FastGzipCodec
-        codec.setConf(hconf)
-        codec.createOutputStream(fs.create(
-          new org.apache.hadoop.fs.Path(dataDir, "part-00000.csv.gz"),
-          true)).close()
-      }
-    }
+  def neo4jTsvDimension(df: DataFrame, path: String,
+                        headerFor: Map[String, String] = Map.empty): Unit = {
+    val lines = df.select(tsvLine(df.schema)).collect().map(_.getString(0)).sorted
+    val hconf = df.sparkSession.sparkContext.hadoopConfiguration
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(hconf)
+    fs.delete(dir, true)
+    val dataDir = new org.apache.hadoop.fs.Path(dir, "data")
+    if (!fs.mkdirs(dataDir))
+      throw new java.io.IOException(s"cannot create $dataDir")
+    writeHeader(fs, dir, neo4jHeaders(df.schema, headerFor))
+    val codec = new FastGzipCodec
+    codec.setConf(hconf)
+    val out = codec.createOutputStream(fs.create(
+      new org.apache.hadoop.fs.Path(dataDir, "part-00000.csv.gz"), true))
+    try lines.foreach { line =>
+      out.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      out.write('\n')
+    } finally out.close()
   }
 
   /** Read back a `neo4jTsv` table (tests / the a10 roundtrip query). */

@@ -119,7 +119,7 @@ final class IncrementalMinHashIndex(
     // (guide §2.6: overlap independent jobs) so the second isn't gated
     // on the first's commit; both must land before the high-water mark
     // advances, so failures keep the redelivery semantics below
-    inParallel(
+    IncrementalMinHashIndex.inParallel(
       () => bandNew.write.mode("append").parquet(bandsDir),
       () => shNew.write.mode("append").parquet(shDir))
     storesEmpty = false
@@ -147,33 +147,13 @@ final class IncrementalMinHashIndex(
     val next = version + 1
     val (nb, ns, nd) =
       (s"$root/bands_v$next", s"$root/sh_v$next", s"$root/dups_v$next")
-    inParallel(
+    IncrementalMinHashIndex.inParallel(
       () => s.read.parquet(bandsDir).coalesce(compactParts).write.parquet(nb),
       () => s.read.parquet(shDir).coalesce(compactParts).write.parquet(ns),
       () => s.read.parquet(dupDir).coalesce(compactParts).write.parquet(nd))
     val (ob, os, od) = (bandsDir, shDir, dupDir)
     version = next
     Seq(ob, os, od).foreach(d => rmTree(new java.io.File(d)))
-  }
-
-  /** Run independent Spark write jobs concurrently; propagate the FIRST
-    * failure after all threads settle (a half-parallel abort would leave
-    * jobs racing the caller's next step).
-    */
-  private def inParallel(jobs: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val fs = jobs.map(j => Future(j()))
-      // await each (not firstCompletedOf): all jobs settle before return
-      val errs = fs.flatMap { f =>
-        try { Await.result(f, Duration.Inf); None }
-        catch { case e: Throwable => Some(e) }
-      }
-      errs.headOption.foreach(throw _)
-    } finally pool.shutdown()
   }
 
   /** Parquet part-file counts of the current (bands, shingles, dups)
@@ -189,5 +169,35 @@ final class IncrementalMinHashIndex(
   private def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles).getOrElse(Array.empty).foreach(rmTree)
     f.delete()
+  }
+}
+
+object IncrementalMinHashIndex {
+
+  /** Run independent Spark write jobs concurrently. A non-fatal failure
+    * is held until every job settles, then the first one in argument
+    * order is thrown (a half-parallel abort would leave jobs racing the
+    * caller's next step). A fatal error (`OutOfMemoryError`, an
+    * interrupt, anything `NonFatal` rejects) is rethrown as soon as its
+    * job ends, without waiting for the others.
+    */
+  private[streaming] def inParallel(jobs: (() => Unit)*): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.size)
+    val errs = new Array[Throwable](jobs.size)
+    // each job posts its index when it ends; the queue hand-off also
+    // publishes its errs slot to this thread
+    val done = new java.util.concurrent.LinkedBlockingQueue[Integer]()
+    try {
+      jobs.zipWithIndex.foreach { case (j, i) =>
+        pool.execute(() =>
+          try j() catch { case e: Throwable => errs(i) = e }
+          finally done.put(i))
+      }
+      jobs.indices.foreach { _ =>
+        val e = errs(done.take())
+        if (e != null && !scala.util.control.NonFatal(e)) throw e
+      }
+      errs.find(_ != null).foreach(e => throw e)
+    } finally pool.shutdown()
   }
 }

@@ -181,5 +181,49 @@ class ExportStageSpec extends SparkSpec {
           ExportStage.run(g, blocker.toString + "/nested"))
       finally Files.delete(blocker)
     }
+
+    it("fails a dimension table's TSV domain violation with no sink job or export persist left behind") {
+      import org.apache.spark.sql.functions.{col, concat, lit}
+      import org.apache.spark.sql.graftx.GraftCacheBridge
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+      // superfamily reaches only dimension tables (domain_nodes, the
+      // per-DB domain nodes, the CATH/SCOP superfamily levels), so the
+      // failure comes from a driver-collected sink while fact sinks and
+      // the residency gate's persists are in flight around it
+      val g0 = GraphTables.build(spark, "/root/testdata/sf0.001")
+      val g = g0.copy(domains = g0.domains
+        .withColumn("superfamily", concat(col("superfamily"), lit("\t"))))
+      val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .filter(_.startsWith("sink:")).foreach(groups.add)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val before = GraftCacheBridge.entries(spark).map(_._1)
+      try {
+        val ex = intercept[Exception](ExportStage.run(g,
+          Files.createTempDirectory("neo4j_export_bad").toString))
+        val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+          .takeWhile(_ != null).take(6)
+          .flatMap(t => Option(t.getMessage)).mkString(" | ")
+        assert(msgs.contains("TSV domain violation"), s"wrong failure: $msgs")
+        GraftCacheBridge.drainListenerBus(spark)
+        val tracker = spark.sparkContext.statusTracker
+        import scala.jdk.CollectionConverters._
+        assert(!groups.isEmpty, "no sink job ran")
+        val active = groups.asScala.toSeq.flatMap { gr =>
+          tracker.getJobIdsForGroup(gr).toSeq.filter(id =>
+            tracker.getJobInfo(id).exists(
+              _.status == org.apache.spark.JobExecutionStatus.RUNNING))
+            .map(id => s"$gr#$id")
+        }
+        assert(active.isEmpty, s"sink jobs still running: $active")
+        val added = GraftCacheBridge.entries(spark).map(_._1)
+          .filterNot(p => before.exists(_ eq p))
+        assert(added.isEmpty, s"export left ${added.size} cache entries")
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 }

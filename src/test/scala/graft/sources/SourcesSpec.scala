@@ -66,7 +66,7 @@ class SourcesSpec extends SparkSpec {
         // ids/codes are synthesized), asserted separately below
         (5L, "internal  spaces  kept", Seq("x", "y", "z"),
           123456789.123456789),
-        (Long.MaxValue, "max", Seq("|notsep"), -0.25))
+        (Long.MaxValue, "max", Seq("notsep"), -0.25))
         .toDF("id", "name", "tags", "score")
       Sinks.neo4jTsv(df, s"$dir/fast", Map("id" -> "id:ID(b)"))
       // reference: the pre-r13 writer pipeline, verbatim
@@ -121,38 +121,71 @@ class SourcesSpec extends SparkSpec {
       violates(Sinks.neo4jTsv(Seq((1L, Seq("ok", "bad\telem")))
         .toDF("id", "tags"), dirA))
     }
+
+    it("rejects '|' inside an array element, which the import would split in two") {
+      def violation(body: => Unit): String = {
+        val ex = intercept[Exception](body)
+        Iterator.iterate[Throwable](ex)(_.getCause)
+          .takeWhile(_ != null).take(6)
+          .flatMap(t => Option(t.getMessage)).mkString(" | ")
+      }
+      val dir = Files.createTempDirectory("neo4j_guard_pipe").toString
+      val msgs = violation(Sinks.neo4jTsv(Seq((1L, Seq("a|b")))
+        .toDF("id", "tags"), dir))
+      assert(msgs.contains("TSV domain violation"), s"wrong failure: $msgs")
+      // a plain string column may still carry '|': only arrays are split
+      Sinks.neo4jTsv(Seq((1L, "a|b", Seq("a", "b"))).toDF("id", "v", "tags"), dir)
+      assert(Sinks.readNeo4jTsv(spark, dir).as[(String, String, String)]
+        .collect().toSeq === Seq(("1", "a|b", "a|b")))
+    }
   }
 
-  describe("Neo4j batch sink (A10 batch form)") {
-    it("one part file per table via the identity partitioner, byte-deterministic, empty tables materialized") {
-      // VERDICT r11 item 8: hash-partitioning by name could collide
-      // several tables into one task; the identity partitioner pins
-      // table i to partition i — exactly one task, one gzip stream each
-      val root = Files.createTempDirectory("neo4j_batch").toString
+  describe("Neo4j dimension sink (A10 dimension form)") {
+    it("one part file per table, read back, byte-deterministic, empty tables materialized, tabs rejected") {
+      // neo4jTsvDimension writes a dimension-bounded table's sorted lines
+      // from the driver as exactly one data part next to its header
+      val root = Files.createTempDirectory("neo4j_dim").toString
       val tbls = Seq(
         ("t_a", Seq((2L, "y"), (1L, "x")).toDF("id", "v"),
           Map("id" -> "id:ID(a)")),
         ("t_b", Seq((9L, "z")).toDF("id", "v"), Map("id" -> "id:ID(b)")),
         ("t_empty", Seq.empty[(Long, String)].toDF("id", "v"),
           Map("id" -> "id:ID(e)")))
-      Sinks.neo4jTsvBatch(root, tbls)
-      tbls.foreach { case (name, _, _) =>
-        val parts = new java.io.File(s"$root/$name/data").listFiles
-          .filter(_.getName.endsWith(".csv.gz"))
-        assert(parts.length === 1, s"$name: exactly one part file")
+      def writeAll(): Unit = tbls.foreach { case (name, df, hdr) =>
+        Sinks.neo4jTsvDimension(df, s"$root/$name", hdr)
       }
+      def parts(name: String): Seq[java.io.File] =
+        new java.io.File(s"$root/$name/data").listFiles
+          .filter(_.getName.endsWith(".csv.gz")).toSeq
+      writeAll()
+      tbls.foreach { case (name, _, _) =>
+        assert(parts(name).map(_.getName) === Seq("part-00000.csv.gz"),
+          s"$name: exactly one part file")
+      }
+      assert(Sinks.readNeo4jTsv(spark, s"$root/t_a").columns.toSeq ===
+        Seq("id:ID(a)", "v"))
       assert(Sinks.readNeo4jTsv(spark, s"$root/t_a")
         .as[(String, String)].collect().toSet === Set(("1", "x"), ("2", "y")))
       assert(Sinks.readNeo4jTsv(spark, s"$root/t_b")
         .as[(String, String)].collect().toSet === Set(("9", "z")))
+      // zero rows: a valid, empty gzip part, so readers of data/ see a file
+      val in = new java.util.zip.GZIPInputStream(
+        new java.io.FileInputStream(parts("t_empty").head))
+      try assert(in.read() === -1) finally in.close()
       // byte-determinism: a re-run writes identical part bytes
-      val bytes1 = Files.readAllBytes(new java.io.File(s"$root/t_a/data")
-        .listFiles.head.toPath)
-      Sinks.neo4jTsvBatch(root, tbls)
-      val bytes2 = Files.readAllBytes(new java.io.File(s"$root/t_a/data")
-        .listFiles.head.toPath)
-      assert(java.util.Arrays.equals(bytes1, bytes2),
-        "batch re-run not byte-deterministic")
+      def bytes(): Seq[Seq[Byte]] = tbls.map { case (name, _, _) =>
+        Files.readAllBytes(parts(name).head.toPath).toSeq
+      }
+      val before = bytes()
+      writeAll()
+      assert(bytes() === before, "dimension sink re-run not byte-deterministic")
+      // the TsvSafe guard stays in the projection: a tab fails the write
+      val ex = intercept[Exception](Sinks.neo4jTsvDimension(
+        Seq((1L, "bad\tvalue")).toDF("id", "v"), s"$root/t_bad"))
+      val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+        .takeWhile(_ != null).take(6)
+        .flatMap(t => Option(t.getMessage)).mkString(" | ")
+      assert(msgs.contains("TSV domain violation"), s"wrong failure: $msgs")
     }
   }
 

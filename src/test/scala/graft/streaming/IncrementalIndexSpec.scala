@@ -63,4 +63,28 @@ class IncrementalIndexSpec extends SparkSpec {
           .sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
     }
   }
+
+  describe("inParallel") {
+    it("waits for every job before throwing the first non-fatal failure") {
+      val finished = new java.util.concurrent.atomic.AtomicInteger()
+      val ex = intercept[IllegalStateException](IncrementalMinHashIndex.inParallel(
+        () => { Thread.sleep(200); finished.incrementAndGet(); () },
+        () => throw new IllegalStateException("first"),
+        () => throw new IllegalArgumentException("second")))
+      assert(ex.getMessage === "first")
+      assert(finished.get === 1, "returned before the slow job settled")
+    }
+
+    it("rethrows a fatal error without waiting for the other jobs") {
+      val release = new java.util.concurrent.CountDownLatch(1)
+      try {
+        val t0 = System.nanoTime()
+        intercept[StackOverflowError](IncrementalMinHashIndex.inParallel(
+          () => { release.await(); () },
+          () => throw new StackOverflowError("fatal")))
+        assert(release.getCount === 1L, "waited for the blocked job")
+        assert((System.nanoTime() - t0) / 1e9 < 30.0)
+      } finally release.countDown()
+    }
+  }
 }
