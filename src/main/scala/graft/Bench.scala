@@ -87,6 +87,40 @@ private[graft] object HostStat {
 }
 
 object Bench {
+
+  /** The canonical `metric:"total"` line, printed as the last line of
+    * stdout and built from parts. `walls` come slowest-first and
+    * are written at 2dp (the fast tail is sub-second jitter; full 3dp
+    * walls are on line 1 and in `queriesFile`) for as many queries as
+    * fit a fixed 800-char map budget (~32 entries: every query the 32c/8c
+    * scaling comparison can read above noise); the rest are counted in
+    * `queries_omitted`. String values are JSON-escaped, so no path can
+    * corrupt the line.
+    */
+  private[graft] def totalLine(total: Double, n: Int, failedN: Int,
+                               queriesFile: String, sf: String,
+                               walls: Seq[(String, Double)]): String = {
+    def str(v: String): String = "\"" + v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u%04x".format(c.toInt)
+      case c => c.toString
+    } + "\""
+    def num(v: Double, dp: Int): String = s"%.${dp}f".formatLocal(java.util.Locale.ROOT, v)
+    val fitted = scala.collection.mutable.ArrayBuffer[String]()
+    var used = 0
+    for ((q, sec) <- walls) {
+      val entry = str(q) + ":" + num(sec, 2)
+      if (used + entry.length + 1 <= 800) { fitted += entry; used += entry.length + 1 }
+    }
+    Seq("metric" -> str("total"), "value" -> num(total, 3), "unit" -> str("sec"),
+      "n" -> n.toString, "failed_n" -> failedN.toString,
+      "queries_file" -> str(queriesFile),
+      "queries_omitted" -> (walls.size - fitted.size).toString,
+      "queries" -> fitted.mkString("{", ",", "}"), "sf" -> str(sf))
+      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -824,11 +858,11 @@ object Bench {
     // window with sbt's trailing "[success] Total time: ..." framing:
     //   exec_tail  (diagnostics — may be cut at the window's leading
     //               edge; its fields are repeated on lines 1-2)
-    //   total      (the CANONICAL driver-contract line: metric/value/
-    //               unit/queries/sf — per-query walls slowest-first,
-    //               as many as the budget fits, full map on line 1 +
-    //               in the bench_out file it points to)
-    //   total_final (fixed-size headline — survives ANY capture)
+    //   total_final (fixed-size headline)
+    //   total      (the CANONICAL line, LAST so a reader of the last
+    //               stdout line gets the per-query map: see
+    //               [[totalLine]]; full map on line 1 and in the
+    //               bench_out file it points to)
     val execTailJson = jmap(slowest.take(2).map(r => execEntry(r, compact = true)))
     val wallsJson = jmap(slowest.take(4).map(r => r.name -> f(r.sec)))
     // p2's per-stage split rides the TAIL line only when p2 is a top-4
@@ -848,29 +882,10 @@ object Bench {
     val failedHead = failed.take(3).map("\"" + _ + "\"")
       .mkString("[", ",", "]")
     val finalLine = s"""{"metric":"total_final","total_sec":${f(total)},"n":${ok.size},"failed_n":${failed.size},"failed_head":$failedHead,"warmup_sec":${f(warmupSec)},"build_sec":${f(buildSecTotal)},"plan_sec":${f(planSecTotal)}}"""
-    // canonical line: a FIXED 800-char map budget of slowest-first
-    // per-query walls (2dp — the fast tail of the distribution is
-    // sub-second jitter anyway; full 3dp walls are on line 1 and in the
-    // queries_file). ~32 entries: covers every query the 32c/8c scaling
-    // comparison can read above noise, and canonical+final together stay
-    // ≈1.25k so both always sit complete inside a ~2000-char tail window.
-    val canonFixed = s"""{"metric":"total","value":${f(total)},"unit":"sec","n":${ok.size},"failed_n":${failed.size},"queries_file":"$outPath","queries_omitted":OMIT,"queries":QMAP,"sf":"$sfDir"}"""
-    val qBudget = 800
-    def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    val fitted = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    var used = 0
-    slowest.foreach { r =>
-      val entry = "\"" + r.name + "\":" + f2(r.sec)
-      if (used + entry.length + 1 <= qBudget) {
-        fitted += (r.name -> f2(r.sec)); used += entry.length + 1
-      }
-    }
-    val canonLine = canonFixed
-      .replace("OMIT", (ok.size - fitted.size).toString)
-      .replace("QMAP", jmap(fitted.toSeq))
     println(execTailLine)
-    println(canonLine)
     println(finalLine)
+    println(totalLine(total, ok.size, failed.size, outPath, sfDir,
+      slowest.map(r => r.name -> r.sec)))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -75,9 +75,11 @@ private[graft] object DistVec {
 /** Whole-graph analytics over the co-binding graph (BASELINE.json:
   * "GraphX for analytics queries"). Interactive traversals stay DataFrame
   * joins (bounded-depth patterns, §2.C). Global computations run on
-  * GraphX (components, triangles, BFS, closeness, HyperBall, degrees) or
-  * as DataFrame loops: the [[superstep]] kernel (x5 PageRank, x7 label
-  * propagation, x8 k-core peel) and DataFrameCC's star contraction (x6).
+  * GraphX (components, triangles, BFS, closeness, HyperBall, degrees), on
+  * the [[DenseGraph.run]] superstep kernel (x5 PageRank, x7 label
+  * propagation, x8 k-core peel: one Spark job per round over a resident
+  * edge RDD, vertex state on the driver) or as DataFrameCC's star
+  * contraction loop (x6).
   */
 object GraphAnalytics {
 
@@ -128,6 +130,13 @@ object GraphAnalytics {
     * engines.
     */
   val CoBindCap = 16
+
+  /** Width of the kNN co-binding similarity graph: each supplier keeps
+    * its `Knn` strongest partners. The default of every top-k kernel,
+    * interpolated into the oracles' edge CTE (same can't-silently-diverge
+    * discipline as CoBindCap).
+    */
+  val Knn = 3
 
   /** Distinct (part, supplier) incidence pairs — the single definition of
     * the co-binding relation for VERTEX sets and degree queries (x2).
@@ -184,7 +193,8 @@ object GraphAnalytics {
 
   /** Supplier pairs sharing at least one part — served from the
     * registry's materialized counts (weights dropped where only the
-    * relation matters).
+    * relation matters). The counts are grouped by `(s1, s2)`, so every
+    * pair appears once.
     */
   private def coBindingPartners(s: SparkSession, dir: String): DataFrame =
     GraphTables.cached(s, dir).coBindCounts.select("s1", "s2")
@@ -196,8 +206,6 @@ object GraphAnalytics {
     */
   def coBindingComponents(s: SparkSession, dir: String): DataFrame = {
     val edgesDf = coBindingPartners(s, dir).filter(col("s1") < col("s2"))
-      .select("s1", "s2").distinct()
-
     val vertices = coBindingPairs(s, dir).select(col("sk")).distinct()
       .repartition(GraphParts).rdd.map(r => (r.getLong(0), ()))
     val edges = edgesDf.repartition(GraphParts).rdd
@@ -219,7 +227,7 @@ object GraphAnalytics {
     */
   def coBindingComponentsDF(s: SparkSession, dir: String): DataFrame = {
     val edges = coBindingPartners(s, dir).filter(col("s1") < col("s2"))
-      .select(col("s1").as("a"), col("s2").as("b")).distinct()
+      .select(col("s1").as("a"), col("s2").as("b"))
     val vertices = coBindingPairs(s, dir).select(col("sk").as("id")).distinct()
     graft.operators.DataFrameCC.components(s, vertices, edges)
       .withColumnRenamed("node", "suppkey")
@@ -238,7 +246,7 @@ object GraphAnalytics {
     * co-occurrence graph.
     */
   def topCoBindingTriangles(s: SparkSession, dir: String,
-                            k: Int = 3): DataFrame = {
+                            k: Int = Knn): DataFrame = {
     val verts = coBindingPairs(s, dir).select(col("sk").as("id")).distinct()
     triangleCountDf(s, verts, topKCanonEdges(s, dir, k))
       .withColumnRenamed("id", "suppkey")
@@ -271,7 +279,7 @@ object GraphAnalytics {
     * Pregel itself stops when no distance improves (≤ diameter
     * supersteps, each one join-shaped and distributed).
     */
-  def bfsHops(s: SparkSession, dir: String, k: Int = 3,
+  def bfsHops(s: SparkSession, dir: String, k: Int = Knn,
               cap: Int = 40): DataFrame = {
     import org.apache.spark.graphx.EdgeTriplet
     val verts = coBindingPairs(s, dir).select(col("sk")).distinct()
@@ -315,7 +323,7 @@ object GraphAnalytics {
     * closeness becomes the sketch estimate; the superstep structure is
     * unchanged.
     */
-  def closenessCentrality(s: SparkSession, dir: String, k: Int = 3,
+  def closenessCentrality(s: SparkSession, dir: String, k: Int = Knn,
                           cap: Int = 15): DataFrame = {
     import org.apache.spark.graphx.EdgeTriplet
     import DistVec.{improved, merge}
@@ -373,7 +381,7 @@ object GraphAnalytics {
     * against exact x10 on equal terms (the v5/v19/d16/t41 sketch-gate
     * discipline: the sketch ships WITH its accuracy audit).
     */
-  def hyperBallCloseness(s: SparkSession, dir: String, k: Int = 3,
+  def hyperBallCloseness(s: SparkSession, dir: String, k: Int = Knn,
                          cap: Int = 15): DataFrame = {
     import HyperBall._
     val verts = coBindingPairs(s, dir).select(col("sk")).distinct()
@@ -516,45 +524,14 @@ object GraphAnalytics {
     }
   }
 
-  /** Both orientations `(a, b)` of canonical undirected edges `(ea, eb)`
-    * — the directed edge table every DataFrame superstep and wedge join
-    * probes by source.
-    */
-  private def directedEdges(canonEdges: DataFrame): DataFrame =
-    canonEdges.select(col("ea").as("a"), col("eb").as("b"))
-      .unionByName(canonEdges.select(col("eb").as("a"), col("ea").as("b")))
-
-  /** The DataFrame superstep kernel behind x5, x7 and x8 (Pregelix's
-    * join + group-by template): `rounds` applications of
-    * `step(round, state, edges)`, round numbers 1-based. The vertex state
-    * is dimension-sized, so a step broadcasts it and probes the edge
-    * table map-side; its only shuffle is the per-round aggregation.
-    *
-    * Lineage, in this one place: the static edge table, the initial state
-    * and every round's state are eagerly
-    * [[graft.operators.Checkpoints.truncate]]d, so a round's plan never
-    * grows with the rounds before it (a step that reads its state more
-    * than once would otherwise clone a rounds-deep tree per reference)
-    * and the returned frame is materialized. Nothing enters the
-    * CacheManager: truncating the edge table measured faster than
-    * persisting it on each of x5/x7/x8, and the checkpoint blocks are
-    * freed by the ContextCleaner once their frames are unreferenced.
-    */
-  private def superstep(init: DataFrame, edges: DataFrame, rounds: Int)(
-      step: (Int, DataFrame, DataFrame) => DataFrame): DataFrame = {
-    import graft.operators.Checkpoints.truncate
-    val ed = truncate(edges)
-    (1 to rounds).foldLeft(truncate(init))((st, r) => truncate(step(r, st, ed)))
-  }
-
   /** Integer-exact PageRank on the top-k co-binding graph: `iters` damped
     * iterations in scaled-1e6 fixed point. All arithmetic is BIGINT
     * (`r div deg` contributions, `150000 + 85·Σ div 100` update), so the
     * result is independent of partition/accumulation order — the property
     * that makes an iterative rank oracle-checkable at all (float PageRank
-    * is not). Each iteration is one [[superstep]].
+    * is not). Each iteration is one [[DenseGraph.run]] superstep.
     */
-  def pagerankInt(s: SparkSession, dir: String, k: Int = 3,
+  def pagerankInt(s: SparkSession, dir: String, k: Int = Knn,
                   iters: Int = 5): DataFrame = {
     val e = topKCanonEdges(s, dir, k)
     val nodes = coBindingPairs(s, dir).select(col("sk")).distinct()
@@ -566,28 +543,48 @@ object GraphAnalytics {
   /** The fixed-point step behind pagerankInt: `nodes(sk)` and canonical
     * undirected edges `(ea, eb)` → `(sk, r)` after `iters` damped
     * iterations. Separated so a hand-computed graph can pin the
-    * arithmetic in a spec.
+    * arithmetic in a spec. Degree is a property of the static edge set,
+    * counted once per call; a round broadcasts each vertex's `r div deg`
+    * and sums it per destination.
     */
   private[graft] def pagerankIntOn(nodesDf: DataFrame, canonEdges: DataFrame,
-                                   iters: Int): DataFrame = {
-    // Degree is a property of the static edge set — join it into the
-    // edge table ONCE, not inside the loop (the in-loop form cost one
-    // extra shuffle join per iteration).
-    val ed = directedEdges(canonEdges)
-    val deg = ed.groupBy(col("a").as("dsrc")).agg(count(lit(1)).as("deg"))
-    val edDeg = ed.join(deg, col("a") === col("dsrc"))
-      .select(col("a"), col("b"), col("deg"))
-    superstep(nodesDf.select(col("sk"), lit(1000000L).as("r")), edDeg, iters) {
-      (_, pr, edges) =>
-        val contrib = broadcast(pr.select(col("sk").as("src"), col("r")))
-          .join(edges, col("src") === col("a"))
-          .select(col("b").as("sk"), expr("r div deg").as("c"))
-          .groupBy("sk").agg(sum("c").as("contribs"))
-        pr.join(broadcast(contrib), Seq("sk"), "left")
-          .select(col("sk"),
-            expr("CAST(150000 + 85 * coalesce(contribs, 0) div 100 AS BIGINT)")
-              .as("r"))
+                                   iters: Int): DataFrame =
+    DenseGraph.resident(nodesDf, canonEdges) { g =>
+      val n = g.n
+      val deg = sumParts(n, g.edges.map(b => perSource(n, b)(_ => true)).collect())
+      val r = g.run("x5", Array.fill(n)(1000000L), iters)(r =>
+        Array.tabulate(n)(v => if (deg(v) > 0) r(v) / deg(v) else 0L)) {
+        (share, b) =>
+          val c = new Array[Long](n)
+          var i = 0
+          while (i < b.src.length) {
+            if (b.dst(i) >= 0) c(b.dst(i)) += share(b.src(i))
+            i += 1
+          }
+          c
+      } ((_, _, parts) => sumParts(n, parts).map(150000L + 85L * _ / 100L))
+      g.frame("sk", "r" -> r)
     }
+
+  /** Per-source count of the block's edges whose destination passes
+    * `keep`: the degree fold of x5 (every edge) and x8 (alive
+    * neighbours).
+    */
+  private def perSource(n: Int, b: EdgeBlock)(keep: Int => Boolean): Array[Long] = {
+    val d = new Array[Long](n)
+    var i = 0
+    while (i < b.src.length) {
+      if (keep(b.dst(i))) d(b.src(i)) += 1
+      i += 1
+    }
+    d
+  }
+
+  /** Element-wise sum of per-partition partials over `n` vertices. */
+  private def sumParts(n: Int, parts: Array[Array[Long]]): Array[Long] = {
+    val t = new Array[Long](n)
+    for (p <- parts; v <- 0 until n) t(v) += p(v)
+    t
   }
 
   /** X7 — synchronous label propagation (community detection) on the
@@ -602,7 +599,7 @@ object GraphAnalytics {
     * Distinct from connected components (x1/x6): CC merges everything
     * reachable; LPA finds densely-voting regions inside one component.
     */
-  def labelPropagation(s: SparkSession, dir: String, k: Int = 3,
+  def labelPropagation(s: SparkSession, dir: String, k: Int = Knn,
                        iters: Int = 3): DataFrame = {
     val e = topKCanonEdges(s, dir, k)
     val nodes = coBindingPairs(s, dir).select(col("sk")).distinct()
@@ -613,25 +610,40 @@ object GraphAnalytics {
 
   /** The vote step behind labelPropagation — separated (like
     * pagerankIntOn) so a hand-computed graph can pin the vote/tie
-    * arithmetic. The (votes, label) argmax is one `max(struct(c, -lab))`
-    * partial aggregate — most votes first, then smallest label (largest
-    * -lab) — never a row_number window over the full message stream.
+    * arithmetic. A label is always some vertex's id, so the state holds
+    * it as that vertex's dense index: index order is id order, and the
+    * (votes, label) argmax — most votes first, then smallest label — is
+    * one scan over the merged (destination, label) counts.
     */
   private[graft] def labelPropagationOn(nodesDf: DataFrame,
                                         canonEdges: DataFrame,
                                         iters: Int): DataFrame =
-    superstep(nodesDf.select(col("sk"), col("sk").as("lab")),
-        directedEdges(canonEdges), iters) { (_, lp, edges) =>
-      val votes = broadcast(lp.select(col("sk").as("src"), col("lab")))
-        .join(edges, col("src") === col("a"))
-        .groupBy(col("b").as("dst"), col("lab"))
-        .agg(count(lit(1)).as("c"))
-      val pick = votes
-        .groupBy(col("dst"))
-        .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
-        .select(col("dst"), (-col("m.nl")).as("plab"))
-      lp.join(broadcast(pick), col("sk") === col("dst"), "left")
-        .select(col("sk"), coalesce(col("plab"), col("lab")).as("lab"))
+    DenseGraph.resident(nodesDf, canonEdges) { g =>
+      val lab = g.run("x7", Array.range(0, g.n), iters)(identity) { (lab, b) =>
+        val keys = new Array[Long](b.src.length)
+        var o = 0
+        var i = 0
+        while (i < b.src.length) {
+          if (b.dst(i) >= 0) { keys(o) = b.dst(i).toLong << 32 | lab(b.src(i)); o += 1 }
+          i += 1
+        }
+        Votes.count(java.util.Arrays.copyOf(keys, o))
+      } { (_, lab, parts) =>
+        val v = parts.foldLeft(Votes.count(Array.emptyLongArray))(Votes.merge)
+        val next = lab.clone()
+        var i = 0
+        while (i < v.keys.length) {
+          val dst = (v.keys(i) >>> 32).toInt
+          var best = i
+          while (i < v.keys.length && (v.keys(i) >>> 32).toInt == dst) {
+            if (v.counts(i) > v.counts(best)) best = i
+            i += 1
+          }
+          next(dst) = v.keys(best).toInt
+        }
+        next
+      }
+      g.frame("sk", "lab" -> lab.map(g.ids(_)))
     }
 
   /** x8's peel constants, interpolated into the SQL oracle (same
@@ -650,10 +662,10 @@ object GraphAnalytics {
     * makes the answer oracle-checkable (the SQL mirror unrolls the same
     * rounds — sequential-vertex peeling would be order-dependent) and
     * how a distributed peel actually runs: each round is one degree
-    * aggregation plus a membership semi-join, no per-vertex ordering.
+    * aggregation against the alive set, no per-vertex ordering.
     */
   def kcorePeel(s: SparkSession, dir: String, k: Int = KCoreK,
-                knn: Int = 3, rounds: Int = KCoreRounds): DataFrame = {
+                knn: Int = Knn, rounds: Int = KCoreRounds): DataFrame = {
     val nodes = coBindingPairs(s, dir).select(col("sk")).distinct()
     kcorePeelOn(nodes, topKCanonEdges(s, dir, knn), k, rounds)
       .orderBy("suppkey")
@@ -661,7 +673,7 @@ object GraphAnalytics {
 
   /** The peel step behind kcorePeel — separated (like pagerankIntOn /
     * labelPropagationOn) so a hand-computed graph can pin the peel
-    * semantics. The vertex state is `(sk, peel_round, core_deg)`, -1 =
+    * semantics. The vertex state is `(peel_round, core_deg)`, -1 =
     * alive: a round counts every vertex's edges to alive neighbours and
     * stamps the round on each alive vertex below `k` (no alive neighbour
     * is degree 0, still peel-eligible); `core_deg` is that degree for a
@@ -670,23 +682,27 @@ object GraphAnalytics {
     * survivors' degrees over the edges left after the last peel.
     */
   private[graft] def kcorePeelOn(nodesDf: DataFrame, canonEdges: DataFrame,
-                                 k: Int, rounds: Int): DataFrame = {
-    val init = nodesDf.select(col("sk"), lit(-1L).as("peel_round"),
-      lit(0L).as("core_deg"))
-    superstep(init, directedEdges(canonEdges), rounds + 1) { (r, st, edges) =>
-      val alive = st.filter(col("peel_round") === -1L).select(col("sk").as("nb"))
-      val deg = edges.join(broadcast(alive), col("b") === col("nb"), "left_semi")
-        .groupBy(col("a").as("sk")).agg(count(lit(1)).as("d"))
-      val d = coalesce(col("d"), lit(0L))
-      val peel =
-        if (r > rounds) col("peel_round")
-        else when(col("peel_round") === -1L && d < k, lit(r.toLong))
-          .otherwise(col("peel_round"))
-      st.join(broadcast(deg), Seq("sk"), "left")
-        .select(col("sk"), peel.as("peel_round"),
-          when(peel === -1L, d).otherwise(lit(0L)).as("core_deg"))
-    }.select(col("sk").as("suppkey"), col("peel_round"), col("core_deg"))
-  }
+                                 k: Int, rounds: Int): DataFrame =
+    DenseGraph.resident(nodesDf, canonEdges) { g =>
+      val n = g.n
+      val (peel, core) = g.run("x8", (Array.fill(n)(-1L), new Array[Long](n)),
+          rounds + 1)(_._1.map(_ == -1L)) { (alive, b) =>
+        perSource(n, b)(d => d >= 0 && alive(d))
+      } { case (r, (peel, _), parts) =>
+        val d = sumParts(n, parts)
+        val next = Array.tabulate(n)(v =>
+          if (r <= rounds && peel(v) == -1L && d(v) < k) r.toLong else peel(v))
+        (next, Array.tabulate(n)(v => if (next(v) == -1L) d(v) else 0L))
+      }
+      g.frame("suppkey", "peel_round" -> peel, "core_deg" -> core)
+    }
+
+  /** Both orientations `(a, b)` of canonical undirected edges `(ea, eb)`
+    * — the directed edge table x9's wedge join probes by source.
+    */
+  private def directedEdges(canonEdges: DataFrame): DataFrame =
+    canonEdges.select(col("ea").as("a"), col("eb").as("b"))
+      .unionByName(canonEdges.select(col("eb").as("a"), col("ea").as("b")))
 
   /** Per-vertex GraphX triangle counts. `verticesDf` is one `id:long`
     * column; `edgesDf` is canonical (`ea < eb`) distinct `long` pairs —
@@ -720,7 +736,7 @@ object GraphAnalytics {
     * The ratio is ONE division of exact longs — bit-identical.
     */
   def neighborhoodJaccard(s: SparkSession, dir: String,
-                          knn: Int = 3): DataFrame = {
+                          knn: Int = Knn): DataFrame = {
     val e = topKCanonEdges(s, dir, knn)
     // the directed edge table feeds FOUR plan branches (both wedge-join
     // sides + both degree joins); un-materialized, each branch re-runs

@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
-/** Lineage truncation for iterative DataFrame loops (DataFrameCC and
-  * the GraphAnalytics superstep kernel behind x5/x7/x8) — the deployment
+/** Lineage truncation for iterative DataFrame loops (DataFrameCC's x6
+  * star contraction) and multi-branch graph plans (x9's directed edge
+  * table) — the deployment
   * switch the r9 scaladoc comments promised, as a conf (VERDICT r9
   * item 5).
   *

@@ -55,8 +55,7 @@ object DataFrameCC {
     * shrinks toward one row per non-root node. Lineage is truncated
     * between rounds via [[Checkpoints.truncate]]: localCheckpoint by
     * default, reliable checkpointing when `spark.graft.checkpoint.dir`
-    * is set (the cluster deployment mode — same contract as the
-    * GraphAnalytics superstep kernel).
+    * is set (the cluster deployment mode).
     */
   def components(spark: SparkSession, vertices: DataFrame,
                  edges: DataFrame): DataFrame = {

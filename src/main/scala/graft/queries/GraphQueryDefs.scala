@@ -25,7 +25,7 @@ object GraphQueryDefs {
                FROM lineitem GROUP BY 1, 2)
              WHERE rn <= ${GraphAnalytics.CoBindCap})"""
 
-  /** DuckDB mirror of GraphAnalytics.topKCanonEdges (k = 3): CTE chain
+  /** DuckDB mirror of GraphAnalytics.topKCanonEdges (k = Knn): CTE chain
     * inc → sh → top3 → e(a, b) + the vertex set — ONE definition shared
     * by the x3/x4/x5 oracles, exactly as topKCanonEdges is the one Spark
     * edge definition (a k, cap, or tie-break change cannot diverge them).
@@ -39,7 +39,7 @@ object GraphQueryDefs {
              GROUP BY 1, 2),
       top3 AS (SELECT s1, s2 FROM (
          SELECT s1, s2, row_number() OVER (PARTITION BY s1
-           ORDER BY n DESC, s2) rn FROM sh) WHERE rn <= 3),
+           ORDER BY n DESC, s2) rn FROM sh) WHERE rn <= ${GraphAnalytics.Knn}),
       e AS (SELECT DISTINCT least(s1, s2) a, greatest(s1, s2) b FROM top3),
       nodes AS (SELECT DISTINCT l_suppkey sk FROM lineitem)"""
 
@@ -132,8 +132,9 @@ object GraphQueryDefs {
     // construction. The iteration count is fixed (unrolled in both
     // engines: recursive-CTE aggregation is illegal in SQL, and a fixed
     // small iteration budget is how production PageRank runs anyway).
-    // Each Spark iteration is one dim-sized join + keyed aggregation
-    // (one round of GraphAnalytics' superstep kernel).
+    // Each Spark iteration is one round of GraphAnalytics' superstep
+    // kernel: one job summing `r div deg` per destination over the
+    // resident edge partitions.
     RQ("x5_pagerank_int", Some {
       val iters = (1 to 5).map { i =>
         s"""pr$i AS (SELECT nodes.sk, 150000 + 85 * coalesce(c.s, 0) // 100
@@ -158,9 +159,9 @@ object GraphQueryDefs {
     // kNN graph: communities inside the components x1/x6 merge whole.
     // Votes are counts and labels are ids, so the result is integer-
     // exact; the tie-break (most votes, then minimum label) unrolls in
-    // SQL as a row_number pick — the Spark side computes the identical
-    // argmax as one max(struct(c, -lab)) partial aggregate, one round
-    // of GraphAnalytics' superstep kernel per sweep.
+    // SQL as a row_number pick — the Spark side counts votes per
+    // (destination, label) in one round of GraphAnalytics' superstep
+    // kernel per sweep and takes the identical argmax on the driver.
     RQ("x7_label_propagation", Some {
       val sweeps = (1 to 3).map { i =>
         s"""v$i AS (SELECT ed.b AS sk, p.lab, count(*) AS c
@@ -187,18 +188,17 @@ object GraphQueryDefs {
     // tendrils before clustering. Synchronous fixed-round sweeps are
     // the oracle-checkable form (a sequential peel is vertex-order-
     // dependent; recursive-CTE aggregation is illegal anyway) and the
-    // distributed form: one degree aggregation + membership semi-join
-    // per round (one round of GraphAnalytics' superstep kernel over a
-    // (sk, peel_round, core_deg) vertex state). The constants interpolate
+    // distributed form: one alive-neighbour degree count per round (one
+    // round of GraphAnalytics' superstep kernel over a (peel_round,
+    // core_deg) vertex state). The constants interpolate
     // from GraphAnalytics so the engines cannot silently diverge.
     RQ("x8_kcore_peel", Some {
       val k = GraphAnalytics.KCoreK
       val rounds = GraphAnalytics.KCoreRounds
       // every per-round CTE is referenced by the NEXT round more than
       // once — inlined (DuckDB's default) that's a 3^rounds expansion of
-      // the co-bind subtree, the SQL twin of the analyzer blowup the
-      // superstep kernel's per-round truncation prevents; MATERIALIZED
-      // caps each round at one evaluation
+      // the co-bind subtree; MATERIALIZED caps each round at one
+      // evaluation
       val sweeps = (1 to rounds).map { r =>
         s"""deg$r AS (SELECT src, count(*) AS d FROM ed$r GROUP BY 1),
            vd$r AS MATERIALIZED (SELECT v.sk, coalesce(g.d, 0) AS d

@@ -346,11 +346,59 @@ class SketchSamplingSpec extends SparkSpec {
     ).zipWithIndex.foreach { case ((kernel, run), i) =>
       it(s"$kernel returns with no CacheManager entry of its own left behind") {
         val before = GraftCacheBridge.entries(spark).map(_._1)
+        val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
         val out = run(nodes(100L * i), edges(100L * i))
         val added = GraftCacheBridge.entries(spark).map(_._1)
           .filterNot(p => before.exists(_ eq p))
         assert(added.isEmpty, s"$kernel left ${added.size} cache entries")
+        val rddsAdded = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+        assert(rddsAdded.isEmpty, s"$kernel left persisted RDDs $rddsAdded")
         assert(out.count() === 5L)
+      }
+    }
+  }
+
+  describe("superstep kernel rounds") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.graftx.GraftCacheBridge
+    import graft.graph.GraphAnalytics
+    // triangle {1,2,3} + tail 3-4-5 + pair 6-7 + isolated 8 + star
+    // 9-{10,11,12} hung off 4: ties, majorities and a 3-round peel
+    val nodes = (1L to 12L).toDF("sk")
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L), (6L, 7L),
+      (4L, 9L), (9L, 10L), (9L, 11L), (9L, 12L)).toDF("ea", "eb")
+    val kernels = Seq[(String, Int, (DataFrame, DataFrame) => DataFrame)](
+      ("x5", 3, GraphAnalytics.pagerankIntOn(_, _, iters = 3)),
+      ("x7", 2, GraphAnalytics.labelPropagationOn(_, _, iters = 2)),
+      ("x8", 3 + 1, GraphAnalytics.kcorePeelOn(_, _, k = 2, rounds = 3)))
+    kernels.foreach { case (kernel, jobs, run) =>
+      it(s"$kernel runs exactly one job per round, described superstep:$kernel r/n") {
+        val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        val listener = new SparkListener {
+          override def onJobStart(e: SparkListenerJobStart): Unit =
+            Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+              .filter(_.startsWith(s"superstep:$kernel ")).foreach(seen.add)
+        }
+        val sc = spark.sparkContext
+        sc.setJobDescription("caller")
+        sc.addSparkListener(listener)
+        try {
+          run(nodes, edges)
+          assert(GraftCacheBridge.drainListenerBus(spark))
+        } finally sc.removeSparkListener(listener)
+        import scala.jdk.CollectionConverters._
+        assert(seen.asScala.toSeq.sorted ===
+          (1 to jobs).map(r => s"superstep:$kernel $r/$jobs"))
+        assert(sc.getLocalProperty("spark.job.description") === "caller")
+        sc.setJobDescription(null)
+      }
+      it(s"$kernel rows do not depend on the edge frame's partitioning") {
+        def rows(parts: Int) = run(nodes, edges.repartition(parts))
+          .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+        val one = rows(1)
+        assert(one.length === 12)
+        assert(rows(7) === one)
       }
     }
   }

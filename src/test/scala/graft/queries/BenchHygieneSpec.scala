@@ -203,4 +203,31 @@ class BenchHygieneSpec extends SparkSpec {
       assert(new java.io.File(s"$p/_SUCCESS").exists())
     }
   }
+
+  describe("Bench's canonical total line") {
+    it("is built from parts: placeholder tokens in a path are data, not holes") {
+      val sf = "/data/QMAP_OMIT/sf0.1"
+      val file = "/tmp/QMAP \"quoted\"/bench_out_c8.json"
+      val walls = Seq("x5_pagerank_int" -> 2.345, "a1_tsv_scan" -> 0.5)
+      val line = graft.Bench.totalLine(12.3456, 2, 1, file, sf, walls)
+      val j = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+      assert(j.get("metric").asText === "total")
+      assert(j.get("value").asDouble === 12.346)
+      assert(j.get("n").asInt === 2 && j.get("failed_n").asInt === 1)
+      assert(j.get("sf").asText === sf)
+      assert(j.get("queries_file").asText === file)
+      assert(j.get("queries_omitted").asInt === 0)
+      assert(j.get("queries").get("x5_pagerank_int").asDouble === 2.35)
+      assert(j.get("queries").get("a1_tsv_scan").asDouble === 0.5)
+    }
+    it("keeps slowest-first walls within its map budget and counts the rest") {
+      val walls = (1 to 100).map(i => f"q$i%03d_some_query_name" -> (200.0 - i))
+      val j = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(graft.Bench.totalLine(1.0, 100, 0, "f", "sf", walls))
+      val kept = j.get("queries").size
+      assert(kept > 0 && kept < 100)
+      assert(j.get("queries_omitted").asInt === 100 - kept)
+      assert(j.get("queries").has("q001_some_query_name"))
+    }
+  }
 }
