@@ -427,7 +427,7 @@ object Bench {
     // timing map, so cross-round per-query comparisons always see real
     // durations — is excluded from the total, and fails the exit code.
     // Between query families the session is swept (untimed but RECORDED):
-    // GraphX's internal caches, operator persists whose consuming action
+    // operator persists whose consuming action
     // has run, their CacheManager entries, and GC-gated shuffle cleanup
     // must not accumulate across 161 queries (the round-6 late-run
     // regressions). If the sweep's checkpoint finds the REGISTRY lost

@@ -6,13 +6,11 @@ import org.apache.spark.sql.graftx.GraftCacheBridge
 
 /** Session cache hygiene for the two all-queries mains (Bench, Verify).
   *
-  * A 152-query session accumulates persisted blocks three ways: GraphX
-  * leaves its internal vertex/edge caches persisted after
-  * connectedComponents/Pregel/TriangleCount (cleanup is ContextCleaner's
-  * job, which only runs on driver GC — rare under a 128 GiB heap);
+  * A 152-query session accumulates persisted blocks two ways:
   * operator-owned persists (operators/Ann, operators/MinHashDedup)
   * document cleanup as the caller's job; and shuffle files wait on the
-  * same GC-driven cleaner. Blocks are LRU-evictable, but CacheManager
+  * ContextCleaner, which only runs on driver GC — rare under a 128 GiB
+  * heap. Blocks are LRU-evictable, but CacheManager
   * entries and eviction churn grow monotonically through the run — the
   * round-6 bench recorded 3-22× slowdowns clustered late in run order on
   * code no commit had touched.

@@ -41,7 +41,7 @@ final case class GroupStats(runMs: Long, cpuMs: Long, gcMs: Long,
   * explain its own number"): a SparkListener over block updates tracking
   *
   *  - current / high-water storage-memory bytes (sum of in-memory block
-  *    sizes — cached columnar buffers, GraphX caches, broadcasts),
+  *    sizes — cached columnar buffers, persisted RDDs, broadcasts),
   *  - memory-residency losses ("evictions"): blocks that previously held
   *    memory and now hold none, which covers both LRU drops and
   *    MEMORY_AND_DISK demotions to disk (a demoted block is never

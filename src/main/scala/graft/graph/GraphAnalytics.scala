@@ -1,6 +1,5 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -8,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Per-vertex (source → min-distance) state for the exact-closeness
-  * Pregel loop, as two PARALLEL SORTED primitive arrays instead of an
+  * superstep loop, as two PARALLEL SORTED primitive arrays instead of an
   * immutable Map[Long, Long] (r14, guide §1.2 per-task work): at sf0.1
   * every one of ~1000 vertices carries a map growing toward ~1000
   * entries, merged per neighbor per superstep — the immutable-Map
@@ -20,8 +19,8 @@ import graft.Tables
   * and GraphSpec pin it.
   *
   * Invariant: `keys` strictly ascending; `ds(i)` is the min distance to
-  * `keys(i)`. Instances are never mutated after construction (GraphX
-  * may alias attributes across superstep RDDs).
+  * `keys(i)`. Instances are never mutated after construction: a
+  * broadcast state is shared by reference among local tasks.
   */
 private[graft] final case class DistVec(keys: Array[Long], ds: Array[Long])
 
@@ -72,52 +71,16 @@ private[graft] object DistVec {
   }
 }
 
-/** Whole-graph analytics over the co-binding graph (BASELINE.json:
-  * "GraphX for analytics queries"). Interactive traversals stay DataFrame
-  * joins (bounded-depth patterns, §2.C). Global computations run on
-  * GraphX (components, triangles, BFS, closeness, HyperBall, degrees), on
-  * the [[DenseGraph.run]] superstep kernel (x5 PageRank, x7 label
-  * propagation, x8 k-core peel: one Spark job per round over a resident
-  * edge RDD, vertex state on the driver) or as DataFrameCC's star
-  * contraction loop (x6).
+/** Whole-graph analytics over the co-binding graph. Interactive
+  * traversals stay DataFrame joins (bounded-depth patterns, §2.C).
+  * Global computations run on the [[DenseGraph]] superstep kernel — one
+  * Spark job per round over a resident edge RDD, vertex state on the
+  * driver: x1 components, x3 triangles, x4 BFS, x5 PageRank, x7 label
+  * propagation, x8 k-core peel, x10 closeness and x11 HyperBall. x2's
+  * degrees are one grouped count, and x6 is DataFrameCC's star
+  * contraction loop, the path for edges that do not fit the driver.
   */
 object GraphAnalytics {
-
-  /** Partition count for the graph RDDs. The co-binding graph is
-    * DIMENSION-sized (suppliers/domains), not fact-sized — the
-    * DataFrames it derives from carry the fact side's shuffle
-    * parallelism (32+), which makes every GraphX superstep pay
-    * 32-partition task overhead to move a few hundred vertices.
-    * Repartitioning (NOT coalesce — a narrow coalesce would drag the
-    * upstream joins/windows down to this parallelism too) cuts the
-    * per-iteration floor ~linearly; at a truly large graph this would
-    * scale with vertex count instead (partitions ≈ |V| / a few million).
-    *
-    * r13 MEASURED both directions before keeping 4: an adaptive
-    * GraphParts (= shuffle.partitions/2, i.e. 16 on the 32-core bench)
-    * cut the one CPU-BOUND superstep loop (x10's exact closeness,
-    * ~26 executor-CPU-s of per-vertex map merging: 9.2 → 7.8 s) but
-    * cost MORE on every light-superstep analytic (x11 3.1 → 6.4,
-    * x1 2.7 → 4.2, x4/x3/x7 +0.6-0.9 s — 4× the tasks per superstep
-    * with sub-overhead work in each). 4 stays the family default;
-    * [[closenessCentrality]] alone sizes to [[cpuBoundGraphParts]].
-    */
-  private val GraphParts = 4
-
-  /** Parallelism for the CPU-bound superstep loops (x10's per-vertex
-    * distance-map merging): half the session's shuffle parallelism,
-    * floored at [[GraphParts]], capped at 16 — scale-adaptive (guide
-    * §2), so the driver's low-core bench run derives a proportionally
-    * lower count from its own spark.sql.shuffle.partitions. Values are
-    * partitioning-independent (oracle-hash-checked). Reads the CALLER'S
-    * session (ADVICE r13: SparkSession.active is thread-local and can
-    * differ from — or be unset relative to — the session the query
-    * actually runs on).
-    */
-  private def cpuBoundGraphParts(s: SparkSession): Int = {
-    val p = s.sessionState.conf.numShufflePartitions
-    math.max(GraphParts, math.min(p / 2, 16))
-  }
 
   /** Per-part contributor cap applied BEFORE the pair self-join. The
     * uncapped join fans out |suppliers-of-part|² rows per part — at 100 TB
@@ -146,6 +109,10 @@ object GraphAnalytics {
     Tables(s, dir, "lineitem")
       .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
       .distinct()
+
+  /** The supplier vertex set `(sk)` of every co-binding graph kernel. */
+  private def suppliers(s: SparkSession, dir: String): DataFrame =
+    coBindingPairs(s, dir).select(col("sk")).distinct()
 
   /** Incidence capped to each part's top-`CoBindCap` contributors by
     * summed quantity (contact strength), ties by suppkey — the bounded
@@ -201,29 +168,31 @@ object GraphAnalytics {
 
   /** Connected components of the supplier co-binding graph: suppliers are
     * linked when they supply the same part (≈ domains co-binding the same
-    * ligand). GraphX labels every component with its minimum vertex id —
+    * ligand). Every component is labelled with its minimum vertex id —
     * deterministic, so oracle-checkable via a recursive min-label CTE.
     */
-  def coBindingComponents(s: SparkSession, dir: String): DataFrame = {
-    val edgesDf = coBindingPartners(s, dir).filter(col("s1") < col("s2"))
-    val vertices = coBindingPairs(s, dir).select(col("sk")).distinct()
-      .repartition(GraphParts).rdd.map(r => (r.getLong(0), ()))
-    val edges = edgesDf.repartition(GraphParts).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val graph = Graph(vertices, edges)
-    val cc = graph.connectedComponents().vertices
-
-    s.createDataFrame(cc.map { case (id, comp) => (id, comp) })
-      .toDF("suppkey", "component")
+  def coBindingComponents(s: SparkSession, dir: String): DataFrame =
+    coBindingComponentsOn(suppliers(s, dir),
+      coBindingPartners(s, dir).filter(col("s1") < col("s2"))
+        .select(col("s1").as("ea"), col("s2").as("eb")))
       .orderBy("suppkey")
-  }
+
+  /** The components step behind coBindingComponents: `nodes(sk)` and
+    * undirected edges `(ea, eb)` in any orientation → `(suppkey,
+    * component)`, one [[DenseGraph.components]] job.
+    */
+  private[graft] def coBindingComponentsOn(nodesDf: DataFrame,
+                                           edges: DataFrame): DataFrame =
+    DenseGraph.resident(nodesDf, edges) { g =>
+      g.frame("suppkey", "component" -> g.components("x1").map(g.ids(_)))
+    }
 
   /** Same components as `coBindingComponents`, computed by the pure
     * DataFrame large-star/small-star loop (operators/DataFrameCC) instead
-    * of GraphX — the fact-sized-edge-list path (see DataFrameCC's scaladoc
-    * for when each applies). Identical output by construction: both label
-    * with the component's minimum id, so x1's recursive-CTE oracle checks
-    * this one too.
+    * of a driver-indexed union-find — the fact-sized-edge-list path (see
+    * DataFrameCC's scaladoc for when each applies). Identical output by
+    * construction: both label with the component's minimum id, so x1's
+    * recursive-CTE oracle checks this one too.
     */
   def coBindingComponentsDF(s: SparkSession, dir: String): DataFrame = {
     val edges = coBindingPartners(s, dir).filter(col("s1") < col("s2"))
@@ -236,8 +205,8 @@ object GraphAnalytics {
 
   /** Per-vertex triangle counts on the top-k co-binding graph: each
     * supplier keeps edges to its k strongest partners (most shared
-    * parts, ties by id), edges are canonicalized, and GraphX
-    * TriangleCount runs on the result. The kNN sparsification is the
+    * parts, ties by id), edges are canonicalized, and
+    * [[triangleCountDf]] runs on the result. The kNN sparsification is the
     * point, not a shortcut: the raw co-binding graph is COMPLETE at
     * bench SF (every supplier pair shares some part), where per-vertex
     * triangle counting is O(n³) and meaningless — the kNN similarity
@@ -246,12 +215,10 @@ object GraphAnalytics {
     * co-occurrence graph.
     */
   def topCoBindingTriangles(s: SparkSession, dir: String,
-                            k: Int = Knn): DataFrame = {
-    val verts = coBindingPairs(s, dir).select(col("sk").as("id")).distinct()
-    triangleCountDf(s, verts, topKCanonEdges(s, dir, k))
+                            k: Int = Knn): DataFrame =
+    triangleCountDf(s, suppliers(s, dir), topKCanonEdges(s, dir, k))
       .withColumnRenamed("id", "suppkey")
       .orderBy("suppkey")
-  }
 
   /** Canonical (`ea < eb`, distinct) edge list of the top-k co-binding
     * similarity graph — each supplier keeps its k strongest partners
@@ -271,47 +238,47 @@ object GraphAnalytics {
   }
 
   /** BFS hop distance from the minimum supplier id over the top-k
-    * co-binding graph, via GraphX Pregel (min-plus message passing, the
-    * canonical Pregel shape). Distances beyond `cap` — and unreachable
-    * vertices — report -1, which is what makes the answer
-    * oracle-checkable: the recursive-CTE mirror can only enumerate
-    * bounded-depth paths, so both engines agree to cut at `cap`.
-    * Pregel itself stops when no distance improves (≤ diameter
-    * supersteps, each one join-shaped and distributed).
+    * co-binding graph (min-plus message passing, the canonical Pregel
+    * shape). Distances beyond `cap` — and unreachable vertices — report
+    * -1, which is what makes the answer oracle-checkable: the
+    * recursive-CTE mirror can only enumerate bounded-depth paths, so both
+    * engines agree to cut at `cap`.
     */
   def bfsHops(s: SparkSession, dir: String, k: Int = Knn,
-              cap: Int = 40): DataFrame = {
-    import org.apache.spark.graphx.EdgeTriplet
-    val verts = coBindingPairs(s, dir).select(col("sk")).distinct()
-    val src = verts.agg(min("sk")).head().getLong(0)
-    val Unreached = Long.MaxValue / 4 // sentinel; +1 never overflows
-    val vertices = verts.repartition(GraphParts).rdd.map(r =>
-      (r.getLong(0), if (r.getLong(0) == src) 0L else Unreached))
-    val edges = topKCanonEdges(s, dir, k).repartition(GraphParts).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val g = Graph(vertices, edges)
-    val res = g.pregel(Unreached, maxIterations = cap)(
-      (_, d, msg) => math.min(d, msg),
-      (t: EdgeTriplet[Long, Unit]) => {
-        val out = Iterator.newBuilder[(org.apache.spark.graphx.VertexId, Long)]
-        if (t.srcAttr + 1 < t.dstAttr) out += ((t.dstId, t.srcAttr + 1))
-        if (t.dstAttr + 1 < t.srcAttr) out += ((t.srcId, t.dstAttr + 1))
-        out.result()
-      },
-      math.min)
-    s.createDataFrame(res.vertices.map { case (id, d) =>
-        (id, if (d > cap) -1L else d)
-      })
-      .toDF("suppkey", "hops")
-      .orderBy("suppkey")
-  }
+              cap: Int = 40): DataFrame =
+    bfsHopsOn(suppliers(s, dir), topKCanonEdges(s, dir, k), cap).orderBy("suppkey")
+
+  /** The BFS step behind bfsHops: `nodes(sk)` and canonical edges
+    * `(ea, eb)` → `(suppkey, hops)` from the minimum id (dense index 0).
+    * The state is each vertex's distance; a round takes min(d(src) + 1)
+    * per destination, and stops the loop (≤ diameter + 1 rounds, at most
+    * `cap`) once no distance improves.
+    */
+  private[graft] def bfsHopsOn(nodesDf: DataFrame, canonEdges: DataFrame,
+                               cap: Int): DataFrame =
+    DenseGraph.resident(nodesDf, canonEdges) { g =>
+      val n = g.n
+      val d = g.run("x4", Array.tabulate(n)(v => if (v == 0) 0L else Unreached),
+          cap)(identity) { (d, b) =>
+        val m = Array.fill(n)(Unreached)
+        for (i <- b.src.indices; t = b.dst(i) if t >= 0) m(t) = math.min(m(t), d(b.src(i)) + 1)
+        m
+      } { (_, d, parts) =>
+        val next = Array.tabulate(n)(v => parts.foldLeft(d(v))((x, p) => math.min(x, p(v))))
+        if (next.sameElements(d)) d else next
+      }
+      g.frame("suppkey", "hops" -> d.map(x => if (x > cap) -1L else x))
+    }
+
+  /** x4's distance of a vertex not reached yet; `+ 1` never overflows. */
+  private val Unreached = Long.MaxValue / 4
 
   /** Bounded-radius closeness centrality on the top-k co-binding graph:
     * every vertex's count of and total hop-distance to the vertices
-    * within `cap` hops, via ONE multi-source BFS — Pregel with a
-    * per-vertex (source → distance) map merged by min, the all-sources
+    * within `cap` hops, via ONE multi-source BFS — a per-vertex
+    * (source → distance) vector merged by min, the all-sources
     * generalization of [[bfsHops]]. Distance d needs exactly d rounds to
-    * propagate, so `maxIterations = cap` IS the radius bound — the same
+    * propagate, so `cap` rounds IS the radius bound — the same
     * bounded-recursion trick that makes x4's answer oracle-checkable
     * makes this one: both engines agree to cut at `cap`.
     *
@@ -319,59 +286,55 @@ object GraphAnalytics {
     * (0 when nothing is reached). Scale regime: per-vertex state is
     * O(reached set) — fine on a dimension-sized graph (this one), the
     * wrong tool on a fact-sized graph, where the production form swaps
-    * the exact map for a per-vertex HLL register set (HyperBall) and
+    * the exact vector for a per-vertex HLL register set (HyperBall) and
     * closeness becomes the sketch estimate; the superstep structure is
     * unchanged.
     */
   def closenessCentrality(s: SparkSession, dir: String, k: Int = Knn,
-                          cap: Int = 15): DataFrame = {
-    import org.apache.spark.graphx.EdgeTriplet
-    import DistVec.{improved, merge}
-    val verts = coBindingPairs(s, dir).select(col("sk")).distinct()
-    // cpuBoundGraphParts, not GraphParts: this is the one superstep loop
-    // whose per-partition work (distance-vector merging across every
-    // frontier) dwarfs task overhead — see the GraphParts scaladoc for
-    // the measured A/B
-    val parts = cpuBoundGraphParts(s)
-    val vertices = verts.repartition(parts).rdd
-      .map(r => (r.getLong(0), DistVec.single(r.getLong(0))))
-    val edges = topKCanonEdges(s, dir, k).repartition(parts).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val g = Graph(vertices, edges)
-    val res = g.pregel(DistVec.empty, maxIterations = cap)(
-      (_, m, msg) => merge(m, msg),
-      (t: EdgeTriplet[DistVec, Unit]) => {
-        val out = Iterator.newBuilder[(org.apache.spark.graphx.VertexId,
-          DistVec)]
-        val toDst = improved(t.srcAttr, t.dstAttr)
-        val toSrc = improved(t.dstAttr, t.srcAttr)
-        if (toDst.keys.length > 0) out += ((t.dstId, toDst))
-        if (toSrc.keys.length > 0) out += ((t.srcId, toSrc))
-        out.result()
-      },
-      merge)
-    s.createDataFrame(res.vertices.map { case (id, m) =>
-        val reached = m.keys.length - 1L
-        val tot = m.ds.sum // self contributes 0
-        (id, reached, tot,
-          if (tot > 0) reached.toDouble / tot.toDouble else 0.0)
-      })
-      .toDF("suppkey", "n_reached", "total_dist", "closeness")
+                          cap: Int = 15): DataFrame =
+    closenessCentralityOn(suppliers(s, dir), topKCanonEdges(s, dir, k), cap)
       .orderBy("suppkey")
-  }
+
+  /** The multi-source BFS behind closenessCentrality: `nodes(sk)` and
+    * canonical edges `(ea, eb)` → `(suppkey, n_reached, total_dist,
+    * closeness)`. The state is one [[DistVec]] per vertex, keyed by dense
+    * index; a round merges `DistVec.improved(state(src), state(dst))`
+    * per destination and stops the loop once nothing improves.
+    */
+  private[graft] def closenessCentralityOn(nodesDf: DataFrame,
+                                           canonEdges: DataFrame,
+                                           cap: Int): DataFrame =
+    DenseGraph.resident(nodesDf, canonEdges) { g =>
+      import DistVec.{improved, merge}
+      val n = g.n
+      val st = g.run("x10", Array.tabulate(n)(v => DistVec.single(v)), cap)(
+          identity) { (st, b) =>
+        val m = Array.fill(n)(DistVec.empty)
+        for (i <- b.src.indices; t = b.dst(i) if t >= 0)
+          m(t) = merge(m(t), improved(st(b.src(i)), st(t)))
+        m
+      } { (_, st, parts) =>
+        if (parts.forall(_.forall(_.keys.isEmpty))) st
+        else Array.tabulate(n)(v => parts.foldLeft(st(v))((x, p) => merge(x, p(v))))
+      }
+      val reached = st.map(_.keys.length - 1L)
+      val tot = st.map(_.ds.sum) // self contributes 0
+      g.frame("suppkey", "n_reached" -> reached, "total_dist" -> tot,
+        "closeness" -> Array.tabulate(n)(v =>
+          if (tot(v) > 0) reached(v).toDouble / tot(v).toDouble else 0.0))
+    }
 
   /** HyperBall closeness centrality — the FACT-SCALE form of
     * [[closenessCentrality]] (VERDICT r11 item 4: the exact per-vertex
-    * (source → distance) map is O(V) state per vertex, O(V²) aggregate;
-    * prose on the exact operator promised this sketch successor). Each
-    * vertex carries ONE fixed-size HyperLogLog register array (m = 512
-    * bytes) estimating its reached set; a superstep merges neighbor
-    * sketches by element-wise register max — associative, commutative,
-    * and O(m) regardless of ball size, so per-vertex state and message
-    * volume are CONSTANT where the exact form's grow with the graph.
-    * Ball(v, t) needs exactly t rounds to propagate, so `cap` rounds
-    * bound the radius exactly as x10's recursive-CTE cut does; the loop
-    * also stops early when no sketch changes (the improves() guard).
+    * (source → distance) vector is O(V) state per vertex, O(V²)
+    * aggregate). Each vertex carries ONE fixed-size HyperLogLog register
+    * array (m = 512 bytes) estimating its reached set; a superstep merges
+    * neighbor sketches by element-wise register max — associative,
+    * commutative, and O(m) regardless of ball size, so per-vertex state
+    * and message volume are CONSTANT where the exact form's grow with the
+    * graph. Ball(v, t) needs exactly t rounds to propagate, so `cap`
+    * rounds bound the radius exactly as x10's recursive-CTE cut does; the
+    * loop also stops early when no sketch changes (the improves() guard).
     *
     * Estimates: n_reached_est = est(ball_cap) − est(ball_0) and
     * total_dist_est = Σ_t t · max(0, est_t − est_{t−1}) (Boldi–Vigna's
@@ -382,79 +345,54 @@ object GraphAnalytics {
     * discipline: the sketch ships WITH its accuracy audit).
     */
   def hyperBallCloseness(s: SparkSession, dir: String, k: Int = Knn,
-                         cap: Int = 15): DataFrame = {
-    import HyperBall._
-    val verts = coBindingPairs(s, dir).select(col("sk")).distinct()
-    val vertices = verts.repartition(GraphParts).rdd.map { r =>
-      val id = r.getLong(0)
-      val regs = emptyRegs()
-      addId(regs, id)
-      val e0 = estimate(regs)
-      (id, VState(regs, e0, e0, 0.0))
-    }
-    val edges = topKCanonEdges(s, dir, k).repartition(GraphParts).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    var g = Graph(vertices, edges).cache()
-    // Pregel's unpersist pattern (ADVICE r12): `g.outerJoinVertices`
-    // derives the new graph's edge partitions INCREMENTALLY from the
-    // previous round's (shipping only changed vertex attrs), so
-    // Graph.unpersist on the input inside the loop drops edge partitions
-    // the new graph still reads — every later superstep then recomputes
-    // them from lineage. Instead: superseded VERTICES unpersist as soon
-    // as the new ones materialize, superseded EDGES only after the NEXT
-    // round's aggregateMessages has materialized the new edge partitions
-    // (a full count on the dimension-sized message aggregate forces all
-    // of them — isEmpty() would stop at the first non-empty partition).
-    var prevEdges: org.apache.spark.graphx.EdgeRDD[Unit] = null
-    var t = 1
-    var converged = false
-    while (t <= cap && !converged) {
-      // send a neighbor's sketch only when it would improve the receiver:
-      // convergence = an empty message round, checked with one count on a
-      // dimension-sized aggregate (at fact scale this is the same
-      // "active set drains" termination every Pregel loop uses)
-      val msgs = g.aggregateMessages[Array[Byte]](
-        ctx => {
-          if (improves(ctx.srcAttr.regs, ctx.dstAttr.regs))
-            ctx.sendToDst(ctx.srcAttr.regs)
-          if (improves(ctx.dstAttr.regs, ctx.srcAttr.regs))
-            ctx.sendToSrc(ctx.dstAttr.regs)
-        },
-        mergeRegs)
-      val empty = msgs.count() == 0L // materializes g's edges in full
-      if (prevEdges != null) {
-        prevEdges.unpersist(blocking = false)
-        prevEdges = null
-      }
-      if (empty) converged = true
-      else {
-        val round = t // stable capture for the closure
-        val next = g.outerJoinVertices(msgs) {
-          case (_, st, Some(m)) =>
-            val merged = mergeRegs(st.regs, m)
-            val e = estimate(merged)
-            VState(merged, st.est0, e,
-              st.distEst + round * math.max(0.0, e - st.prevEst))
-          case (_, st, None) => st
-        }.cache()
-        next.vertices.count() // materialize before unpersisting the input
-        g.unpersistVertices(blocking = false)
-        prevEdges = g.edges
-        g = next
-      }
-      t += 1
-    }
-    // the output reads only g.vertices (cached + materialized above), so
-    // the last superseded edge RDD can go regardless of exit path
-    if (prevEdges != null) prevEdges.unpersist(blocking = false)
-    val out = s.createDataFrame(g.vertices.map { case (id, st) =>
-      val reached = math.max(0.0, st.prevEst - st.est0)
-      (id, reached, st.distEst,
-        if (st.distEst > 0.0) reached / st.distEst else 0.0)
-    }).toDF("suppkey", "n_reached_est", "total_dist_est", "closeness_est")
+                         cap: Int = 15): DataFrame =
+    hyperBallClosenessOn(suppliers(s, dir), topKCanonEdges(s, dir, k), cap)
       .orderBy("suppkey")
-    out
-  }
+
+  /** The sketch loop behind hyperBallCloseness: `nodes(sk)` and canonical
+    * edges `(ea, eb)` → `(suppkey, n_reached_est, total_dist_est,
+    * closeness_est)`. The state is one [[HyperBall.VState]] per vertex;
+    * a round max-merges every neighbour's registers that would raise the
+    * receiver's, adds `round · max(0, e − prevEst)` to its distance sum,
+    * and the round that raises no register ends the loop.
+    */
+  private[graft] def hyperBallClosenessOn(nodesDf: DataFrame,
+                                          canonEdges: DataFrame,
+                                          cap: Int): DataFrame =
+    DenseGraph.resident(nodesDf, canonEdges) { g =>
+      import HyperBall._
+      val n = g.n
+      val init = g.ids.map { id =>
+        val regs = emptyRegs()
+        addId(regs, id)
+        val e0 = estimate(regs)
+        VState(regs, e0, e0, 0.0)
+      }
+      val st = g.run("x11", init, cap)(_.map(_.regs)) { (regs, b) =>
+        val m = new Array[Array[Byte]](n)
+        for (i <- b.src.indices; (f, t) = (b.src(i), b.dst(i))
+             if t >= 0 && improves(regs(f), regs(t)))
+          m(t) = if (m(t) == null) regs(f) else mergeRegs(m(t), regs(f))
+        m
+      } { (round, st, parts) =>
+        val msgs = Array.tabulate(n)(v =>
+          parts.iterator.map(_(v)).filter(_ != null).reduceOption(mergeRegs))
+        if (msgs.forall(_.isEmpty)) st
+        else Array.tabulate(n) { v =>
+          msgs(v).fold(st(v)) { m =>
+            val merged = mergeRegs(st(v).regs, m)
+            val e = estimate(merged)
+            VState(merged, st(v).est0, e,
+              st(v).distEst + round * math.max(0.0, e - st(v).prevEst))
+          }
+        }
+      }
+      val reached = st.map(v => math.max(0.0, v.prevEst - v.est0))
+      val dist = st.map(_.distEst)
+      g.frame("suppkey", "n_reached_est" -> reached, "total_dist_est" -> dist,
+        "closeness_est" -> Array.tabulate(n)(v =>
+          if (dist(v) > 0.0) reached(v) / dist(v) else 0.0))
+    }
 
   /** HyperBall's sketch kernel: byte registers, splitmix64 hashing,
     * element-wise max merge, the HLL estimator with the small-range
@@ -533,9 +471,7 @@ object GraphAnalytics {
     */
   def pagerankInt(s: SparkSession, dir: String, k: Int = Knn,
                   iters: Int = 5): DataFrame = {
-    val e = topKCanonEdges(s, dir, k)
-    val nodes = coBindingPairs(s, dir).select(col("sk")).distinct()
-    pagerankIntOn(nodes, e, iters)
+    pagerankIntOn(suppliers(s, dir), topKCanonEdges(s, dir, k), iters)
       .select(col("sk").as("suppkey"), col("r").as("rank_ppm"))
       .orderBy("suppkey")
   }
@@ -601,9 +537,7 @@ object GraphAnalytics {
     */
   def labelPropagation(s: SparkSession, dir: String, k: Int = Knn,
                        iters: Int = 3): DataFrame = {
-    val e = topKCanonEdges(s, dir, k)
-    val nodes = coBindingPairs(s, dir).select(col("sk")).distinct()
-    labelPropagationOn(nodes, e, iters)
+    labelPropagationOn(suppliers(s, dir), topKCanonEdges(s, dir, k), iters)
       .select(col("sk").as("suppkey"), col("lab").as("community"))
       .orderBy("suppkey")
   }
@@ -666,8 +600,7 @@ object GraphAnalytics {
     */
   def kcorePeel(s: SparkSession, dir: String, k: Int = KCoreK,
                 knn: Int = Knn, rounds: Int = KCoreRounds): DataFrame = {
-    val nodes = coBindingPairs(s, dir).select(col("sk")).distinct()
-    kcorePeelOn(nodes, topKCanonEdges(s, dir, knn), k, rounds)
+    kcorePeelOn(suppliers(s, dir), topKCanonEdges(s, dir, knn), k, rounds)
       .orderBy("suppkey")
   }
 
@@ -704,22 +637,33 @@ object GraphAnalytics {
     canonEdges.select(col("ea").as("a"), col("eb").as("b"))
       .unionByName(canonEdges.select(col("eb").as("a"), col("ea").as("b")))
 
-  /** Per-vertex GraphX triangle counts. `verticesDf` is one `id:long`
-    * column; `edgesDf` is canonical (`ea < eb`) distinct `long` pairs —
-    * canonical + distinct is what makes TriangleCount's answer exact.
+  /** Per-vertex triangle counts — x3's kernel. `verticesDf` is one
+    * `long` id column; `edgesDf` is canonical (`ea < eb`) distinct `long`
+    * pairs — canonical + distinct is what makes the count exact. One prep
+    * job collects the edges into sorted adjacency lists on the driver;
+    * one round broadcasts them, and each task counts, for its edges
+    * `u < v`, the common neighbours `w > v` (a binary search of `v`'s
+    * list per neighbour of `u`), crediting `u`, `v` and `w`: every
+    * triangle is found once, from its two smallest corners.
     */
   private[graft] def triangleCountDf(s: SparkSession, verticesDf: DataFrame,
-                                     edgesDf: DataFrame): DataFrame = {
-    val vertices = verticesDf.repartition(GraphParts).rdd
-      .map(r => (r.getLong(0), ()))
-    val edges = edgesDf.repartition(GraphParts).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val graph = Graph(vertices, edges)
-      .partitionBy(PartitionStrategy.RandomVertexCut)
-    val tc = graph.triangleCount().vertices
-    s.createDataFrame(tc.map { case (id, n) => (id, n.toLong) })
-      .toDF("id", "n_triangles")
-  }
+                                     edgesDf: DataFrame): DataFrame =
+    DenseGraph.resident(verticesDf.toDF("sk"), edgesDf) { g =>
+      val n = g.n
+      val nbrs = g.edges.collect().flatMap(b => b.src.indices
+        .filter(i => b.dst(i) >= 0 && b.dst(i) != b.src(i)).map(i => (b.src(i), b.dst(i))))
+        .groupMap(_._1)(_._2)
+      val adj = Array.tabulate(n)(v => nbrs.getOrElse(v, Array.emptyIntArray).distinct.sorted)
+      val t = g.run("x3", new Array[Long](n), 1)(_ => adj) { (adj, b) =>
+        val c = new Array[Long](n)
+        for (i <- b.src.indices; (u, v) = (b.src(i), b.dst(i)) if v > u; w <- adj(u)
+             if w > v && java.util.Arrays.binarySearch(adj(v), w) >= 0) {
+          c(u) += 1; c(v) += 1; c(w) += 1
+        }
+        c
+      } ((_, _, parts) => sumParts(n, parts))
+      g.frame("id", "n_triangles" -> t)
+    }
 
   /** Neighborhood Jaccard similarity over the top-k co-binding graph:
     * for every supplier pair sharing at least one common neighbor,
@@ -760,18 +704,11 @@ object GraphAnalytics {
   }
 
   /** Degree statistics — ligand promiscuity: for each part (ligand), the
-    * number of distinct suppliers (domains) binding it, computed from
-    * GraphX degrees on the bipartite contact graph.
+    * number of distinct suppliers (domains) binding it — the part-side
+    * degrees of the bipartite contact graph, one grouped count.
     */
-  def ligandPromiscuity(s: SparkSession, dir: String): DataFrame = {
-    val pairs = coBindingPairs(s, dir)
-    // bipartite ids: parts in positive space, suppliers offset negative
-    val edges = pairs.repartition(GraphParts).rdd
-      .map(r => Edge(r.getLong(0), -1L - r.getLong(1), ()))
-    val graph = Graph.fromEdges(edges, ())
-    val degs = graph.degrees.filter(_._1 >= 0) // part side only
-    s.createDataFrame(degs.map { case (id, d) => (id, d.toLong) })
-      .toDF("p_partkey", "n_domains")
+  def ligandPromiscuity(s: SparkSession, dir: String): DataFrame =
+    coBindingPairs(s, dir).groupBy(col("pk").as("p_partkey"))
+      .agg(count(lit(1)).as("n_domains"))
       .orderBy("p_partkey")
-  }
 }

@@ -8,18 +8,18 @@ import org.apache.spark.sql.functions._
   * in MapReduce and Beyond", SoCC '14), which converges in O(log² n)
   * rounds independent of graph diameter.
   *
-  * Why this exists next to GraphX's `connectedComponents`
-  * (GraphAnalytics.coBindingComponents): GraphX materializes vertex/edge
-  * RDDs outside Tungsten — every superstep pays row serialization and its
-  * own caching protocol — and its Pregel CC needs O(diameter) supersteps.
-  * At 100 TB the edge list of a dedup-cluster graph is fact-sized; the
-  * DataFrame form keeps each round inside whole-stage codegen, lets AQE
-  * coalesce/skew-split the per-round shuffles, and bounds the round count
-  * by log² of the largest component, not its diameter. This is the CC you
-  * run when the edges do NOT fit the driver's idea of a "graph", just a
-  * table.
+  * Why this exists next to x1's one-job union-find
+  * (GraphAnalytics.coBindingComponents on graph.DenseGraph): that kernel
+  * indexes every vertex on the driver and merges one label array per
+  * edge partition there, which caps it at graphs whose vertex set fits
+  * the driver. At 100 TB the edge list of a dedup-cluster graph is
+  * fact-sized; the DataFrame form keeps each round inside whole-stage
+  * codegen, lets AQE coalesce/skew-split the per-round shuffles, and
+  * bounds the round count by log² of the largest component, not its
+  * diameter. This is the CC you run when the edges do NOT fit the
+  * driver's idea of a "graph", just a table.
   *
-  * Semantics match GraphX exactly: every node is labeled with the minimum
+  * Semantics match x1 exactly: every node is labeled with the minimum
   * node id reachable from it, so the two implementations (and the
   * recursive-CTE oracle) are interchangeable.
   *

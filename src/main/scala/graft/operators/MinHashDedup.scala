@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.shingles
+import graft.graph.DenseGraph
 
 /** MinHash-LSH near-duplicate detection as a reusable operator: shingle →
   * k-seed signature → banded buckets → candidate pairs within buckets only
@@ -70,7 +70,6 @@ object MinHashDedup {
         col("cont_a"), col("cont_b"))
   }
 
-  /** Stage 2.5 — banded (da, db) candidate pairs, da < db, deduped. */
   /** ExactSubstr-style duplicated-span detection: every maximal verbatim
     * word span of ≥ `minSpan` words shared between two distinct
     * documents, with both start offsets. This is the "remove ≥N-token
@@ -181,6 +180,7 @@ object MinHashDedup {
           .as("clean_md5"))
   }
 
+  /** Stage 2.5 — banded (da, db) candidate pairs, da < db, deduped. */
   def candidatePairs(sh: DataFrame, seeds: Int = 8,
                      rowsPerBand: Int = 2): DataFrame = {
     val band = bandRows(sh, seeds, rowsPerBand)
@@ -264,24 +264,27 @@ object MinHashDedup {
   }
 
   /** Collapse near-duplicate pairs into clusters and pick a canonical
-    * representative per cluster (the minimum doc id — GraphX
-    * connectedComponents' label), returning (doc_id, canonical) for every
+    * representative per cluster (the minimum doc id, the label of
+    * [[DenseGraph.components]]), returning (doc_id, canonical) for every
     * doc that appears in a pair. Dropping rows where doc_id != canonical
     * is the final dedup action.
     */
   def canonicalize(pairs: DataFrame): DataFrame = {
-    // GraphX vertex ids are Long — enforce the contract loudly instead of
-    // an ANSI cast error (string doc ids must be mapped to longs first)
+    // the dense vertex index is over longs — enforce the contract loudly
+    // instead of an ANSI cast error
     import org.apache.spark.sql.types.{IntegerType, LongType}
     require(Seq("doc_a", "doc_b").forall(c =>
       Seq(LongType, IntegerType).contains(pairs.schema(c).dataType)),
-      "canonicalize requires integral doc ids (GraphX vertex ids); " +
-        "map string ids to longs first")
-    val s = pairs.sparkSession
-    val edges = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val cc = Graph.fromEdges(edges, ()).connectedComponents().vertices
-    s.createDataFrame(cc.map { case (id, comp) => (id, comp) })
-      .toDF("doc_id", "canonical")
+      "canonicalize requires integral doc ids; map string ids to longs first")
+    // read twice (vertex ids, then edges): persisted for the call so the
+    // pair pipeline runs once
+    val e = pairs.select(col("doc_a").cast("long").as("ea"),
+      col("doc_b").cast("long").as("eb")).persist()
+    try {
+      val docs = e.select(col("ea").as("sk")).union(e.select(col("eb").as("sk")))
+      DenseGraph.resident(docs, e) { g =>
+        g.frame("doc_id", "canonical" -> g.components("dedup").map(g.ids(_)))
+      }
+    } finally e.unpersist()
   }
 }

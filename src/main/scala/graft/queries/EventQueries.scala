@@ -566,9 +566,9 @@ object EventQueries {
     // The final cache holds exactly the distinct pair set however the
     // stream was batched — which is what the oracle checks (per-domain
     // cached-pair counts). The cache is a parquet table keyed by pair,
-    // so at scale the anti-join shards by key like any equi-join; the
-    // read's eagerly-built file index pins the snapshot (j13's
-    // convention), so the append never sees its own output files.
+    // so at scale the anti-join shards by key like any equi-join; each
+    // batch probes a StreamingOps.parquetSnapshot of the cache (as j13
+    // does), so the append never sees its own output files.
     RQ("j5_stream_cache_probe", Some("""
       SELECT l_suppkey AS suppkey,
              CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_cached
@@ -596,15 +596,14 @@ object EventQueries {
           .writeStream.foreachBatch {
             (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
              _: Long) =>
-              // snapshot-by-listing, NOT localCheckpoint (r14): the
-              // previous eager localCheckpoint re-materialized the WHOLE
-              // accumulated cache every batch (an extra full-store copy
-              // per micro-batch — the dominant j5 cost at 3 batches);
-              // s.read.parquet lists files eagerly, append only ADDS
-              // part files, so the anti-join's scan is already pinned to
-              // the pre-append file set (the j13 seen-store relies on
-              // exactly this)
-              val cache = s.read.parquet(cacheDir)
+              // a file-set snapshot, NOT localCheckpoint (r14): an eager
+              // localCheckpoint re-materialized the WHOLE accumulated
+              // cache every batch (an extra full-store copy per
+              // micro-batch — the dominant j5 cost at 3 batches); append
+              // only ADDS part files, so the pre-append file set is the
+              // cache this batch probes
+              val cache = graft.streaming.StreamingOps
+                .parquetSnapshot(s, cacheDir)
               graft.streaming.StreamingOps
                 .newPairsAgainstCache(batch.dropDuplicates("pair_key"), cache)
                 .write.mode("append").parquet(cacheDir)

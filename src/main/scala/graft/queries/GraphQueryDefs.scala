@@ -3,8 +3,8 @@ package graft.queries
 import graft.RQ
 import graft.graph.GraphAnalytics
 
-/** GraphX whole-graph analytics under the oracle gate. GraphX's
-  * connectedComponents labels every component with its minimum vertex id,
+/** Whole-graph analytics under the oracle gate. Every kernel is
+  * deterministic — x1 labels every component with its minimum vertex id,
   * which a recursive min-label-propagation CTE reproduces exactly in
   * DuckDB (dimension-sized graph: suppliers).
   */
@@ -44,7 +44,7 @@ object GraphQueryDefs {
       nodes AS (SELECT DISTINCT l_suppkey sk FROM lineitem)"""
 
   /** Min-label-propagation recursive CTE over the capped co-binding
-    * edges — ONE oracle text shared by x1 (GraphX CC) and x6 (DataFrame
+    * edges — ONE oracle text shared by x1 (union-find CC) and x6 (DataFrame
     * large-star/small-star CC): both label every node with its
     * component's minimum id, so a single SQL mirror checks both
     * implementations and they cannot silently diverge from each other.
@@ -70,10 +70,11 @@ object GraphQueryDefs {
       GraphAnalytics.coBindingComponents(s, dir)),
 
     // X6 — the SAME components as x1, computed by the pure-DataFrame
-    // large-star/small-star loop (operators/DataFrameCC) instead of
-    // GraphX: the path for fact-sized edge lists (dedup-cluster graphs at
-    // 100 TB), O(log² n) rounds independent of diameter, every round
-    // inside whole-stage codegen. Shares x1's oracle verbatim.
+    // large-star/small-star loop (operators/DataFrameCC) instead of x1's
+    // driver-indexed union-find: the path for fact-sized edge lists
+    // (dedup-cluster graphs at 100 TB), O(log² n) rounds independent of
+    // diameter, every round inside whole-stage codegen. Shares x1's
+    // oracle verbatim.
     RQ("x6_dataframe_cc", Some(componentsOracleSql))((s, dir) =>
       GraphAnalytics.coBindingComponentsDF(s, dir)),
 
@@ -104,7 +105,7 @@ object GraphQueryDefs {
 
     // X4 — BFS hop distance from the minimum supplier over the SAME
     // top-3 kNN graph as x3 (GraphAnalytics.topKCanonEdges is the single
-    // edge definition), via GraphX Pregel min-plus message passing.
+    // edge definition), via min-plus supersteps on graph.DenseGraph.
     // Oracle: recursive CTE enumerating (node, depth) pairs to the same
     // 40-hop cap — both engines report beyond-cap/unreachable as -1, so
     // the bounded recursion is exact, not approximate.
@@ -251,8 +252,8 @@ object GraphQueryDefs {
 
     // X10 — bounded-radius closeness centrality: per vertex, the count
     // of and total hop-distance to every vertex within 15 hops on the
-    // SAME top-3 graph, via one multi-source Pregel BFS (x4's min-plus
-    // generalized to a per-vertex source→distance map). Both engines cut
+    // SAME top-3 graph, via one multi-source BFS (x4's min-plus
+    // generalized to a per-vertex source→distance vector). Both engines cut
     // at radius 15 — x4's bounded-recursion trick — so the recursive-CTE
     // mirror is exact, not approximate. closeness = n_reached /
     // total_dist, one exact-longs division. The 100 TB regime note
@@ -277,27 +278,13 @@ object GraphQueryDefs {
       FROM cl ORDER BY suppkey"""))((s, dir) =>
       GraphAnalytics.closenessCentrality(s, dir)),
 
-    // X11 — HyperBall closeness under the sketch GATE (VERDICT r11 item
-    // 4): the fact-scale successor of x10 — per-vertex HLL registers
-    // merged by max over the same top-3 graph, constant state/message
-    // size where x10's exact maps grow O(V) per vertex. The sketch value
-    // itself is register-layout-specific (never hash-matchable), so the
-    // d16/v5 gate shape applies: the output carries the EXACT x10
-    // values (oracle-checkable via the same recursive CTE) plus
-    // deterministic booleans asserting the estimate landed inside the
-    // sketch's error budget — n_reached within max(2, 15%) (512
-    // registers ⇒ rsd ≈ 4.6%; small counts ride linear counting), the
-    // HyperBall distance sum within max(6, 20%) (it accumulates
-    // per-round estimate DELTAS, so its variance is larger). An
-    // operator sizing a 100 TB closeness job reads this table to decide
-    // whether 512 registers suffice before paying the exact-map cost.
-    // X11 — the HyperBall sketch under the ORACLE GATE (VERDICT r13 item
-    // 1: the r12→r13 swap to a sketch-only, oracle-less registration
-    // shrank the driver's oracle surface to 229/230 — "no_oracle" is a
-    // dropped query per the correctness gate, whatever the bench gains).
-    // The registered query runs the production sketch (constant 512-byte
-    // registers, max-merge supersteps) AND the exact x10 pass, and emits
-    // a deterministic, hash-stable audit: the EXACT per-vertex values
+    // X11 — the HyperBall sketch under the ORACLE GATE: the fact-scale
+    // successor of x10 — per-vertex HLL registers merged by max over the
+    // same top-3 graph, constant state/message size where x10's exact
+    // vectors grow O(V) per vertex. The sketch value itself is
+    // register-layout-specific (never hash-matchable), so the registered
+    // query runs the sketch AND the exact x10 pass and emits a
+    // deterministic, hash-stable audit: the EXACT per-vertex values
     // (which DuckDB reproduces via the same bounded recursive CTE as
     // x10's oracle) plus booleans asserting the sketch landed inside its
     // error budget — n_reached within max(2, 15%) (512 registers ⇒
@@ -305,9 +292,10 @@ object GraphQueryDefs {
     // distance sum within max(6, 20%) (it accumulates per-round estimate
     // DELTAS, so its variance is larger). The oracle emits literal 1s
     // for the booleans, so a sketch drifting out of budget is a HASH
-    // MISMATCH, not a silent pass. HyperBallGateSpec keeps the
-    // finer-grained CI audit; the name keeps r13's registration (the
-    // driver diffs query names across rounds — renames read as drops).
+    // MISMATCH, not a silent pass (an oracle-less registration would
+    // read as a dropped query). HyperBallGateSpec keeps the
+    // finer-grained CI audit; an operator sizing a 100 TB closeness job
+    // reads this table to decide whether 512 registers suffice.
     RQ("x11_hyperball_sketch", Some(s"""
       WITH RECURSIVE $top3CanonSqlCtes,
       ed AS (SELECT a, b FROM e UNION SELECT b, a FROM e),

@@ -16,8 +16,8 @@ private[graft] object Replay {
     * A keyed-state stream allocates one state-store instance per shuffle
     * partition PER MICRO-BATCH; with ~20 distinct keys (sources/users)
     * the session's fact-sized 32 is pure overhead — sizing state
-    * partitions to key cardinality is the same dimension-vs-fact decision
-    * as GraphAnalytics.GraphParts. The session's setting is restored
+    * partitions to key cardinality is the usual dimension-vs-fact
+    * decision. The session's setting is restored
     * after the replay.
     *
     * The override is SESSION-GLOBAL while it holds: a query planned

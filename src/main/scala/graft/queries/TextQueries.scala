@@ -406,7 +406,7 @@ object TextQueries {
     // T13 — the COMPOSED training-data prep pipeline, end-to-end under one
     // oracle: quality filter (t10's shared rules) → MinHash-LSH near-dup
     // detection among the kept docs (t6's shared chain) → connected-
-    // component canonical keep (t9's shared CTEs vs GraphX CC) →
+    // component canonical keep (t9's shared CTEs vs union-find CC) →
     // per-source accounting. This is the "switch your pipeline to this
     // library" query: every stage is the registered operator, chained.
     RQ("t13_dedup_pipeline", Some(s"""
@@ -1311,9 +1311,10 @@ object TextQueries {
           .writeStream.foreachBatch {
             (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
              batchId: Long) =>
-              // file-listing snapshot at read time: the appends below
-              // cannot leak into this batch's own probe
-              val seen = s.read.parquet(seenDir)
+              // file-set snapshot: the appends below cannot leak into
+              // this batch's own probe
+              val seen = graft.streaming.StreamingOps
+                .parquetSnapshot(s, seenDir)
               val bsh = MinHashDedup
                 .shingleRows(batch.toDF(), "doc_id", "text", 3).persist()
               val novel = bsh.groupBy("s").agg(min("doc_id").as("fd"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -36,6 +36,16 @@ object StreamingOps {
     */
   def newPairsAgainstCache(batch: DataFrame, cache: DataFrame): DataFrame =
     batch.join(cache, Seq("pair_key"), "left_anti")
+
+  /** The parquet files `dir` holds now, read with the directory's schema:
+    * a fixed snapshot. A micro-batch that probes a store and then appends
+    * to the same directory reads the snapshot, so it can never see its
+    * own appends, however the reader lists files.
+    */
+  def parquetSnapshot(s: SparkSession, dir: String): DataFrame = {
+    val live = s.read.parquet(dir)
+    s.read.schema(live.schema).parquet(live.inputFiles.toIndexedSeq: _*)
+  }
 
   /** Per-user session state for sessionizeByGap. */
   final case class SessionState(lastUs: Long, nSessions: Long, nEvents: Long)

@@ -342,7 +342,12 @@ class SketchSamplingSpec extends SparkSpec {
     Seq[(String, (DataFrame, DataFrame) => DataFrame)](
       "x5 pagerankIntOn" -> (GraphAnalytics.pagerankIntOn(_, _, iters = 2)),
       "x7 labelPropagationOn" -> (GraphAnalytics.labelPropagationOn(_, _, iters = 2)),
-      "x8 kcorePeelOn" -> (GraphAnalytics.kcorePeelOn(_, _, k = 2, rounds = 2))
+      "x8 kcorePeelOn" -> (GraphAnalytics.kcorePeelOn(_, _, k = 2, rounds = 2)),
+      "x1 coBindingComponentsOn" -> (GraphAnalytics.coBindingComponentsOn(_, _)),
+      "x3 triangleCountDf" -> (GraphAnalytics.triangleCountDf(spark, _, _)),
+      "x4 bfsHopsOn" -> (GraphAnalytics.bfsHopsOn(_, _, cap = 40)),
+      "x10 closenessCentralityOn" -> (GraphAnalytics.closenessCentralityOn(_, _, cap = 15)),
+      "x11 hyperBallClosenessOn" -> (GraphAnalytics.hyperBallClosenessOn(_, _, cap = 15))
     ).zipWithIndex.foreach { case ((kernel, run), i) =>
       it(s"$kernel returns with no CacheManager entry of its own left behind") {
         val before = GraftCacheBridge.entries(spark).map(_._1)
@@ -355,6 +360,23 @@ class SketchSamplingSpec extends SparkSpec {
         assert(rddsAdded.isEmpty, s"$kernel left persisted RDDs $rddsAdded")
         assert(out.count() === 5L)
       }
+    }
+    it("x2 and MinHashDedup.canonicalize on the sf data leave no entry of their own") {
+      import graft.operators.MinHashDedup
+      // the pair pipeline persists its shingle rows for its caller, so it
+      // runs before the snapshot: only canonicalize is under test
+      val pairs = MinHashDedup.nearDuplicatePairs(
+        Tables(spark, sf, "documents"), "doc_id", "text")
+      assert(pairs.count() > 0L)
+      val before = GraftCacheBridge.entries(spark).map(_._1)
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      assert(q("x2_promiscuity_degrees").count() > 0L)
+      assert(MinHashDedup.canonicalize(pairs).count() > 0L)
+      val added = GraftCacheBridge.entries(spark).map(_._1)
+        .filterNot(p => before.exists(_ eq p))
+      assert(added.isEmpty, s"left ${added.size} cache entries")
+      val rddsAdded = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+      assert(rddsAdded.isEmpty, s"left persisted RDDs $rddsAdded")
     }
   }
 
@@ -372,27 +394,63 @@ class SketchSamplingSpec extends SparkSpec {
       ("x5", 3, GraphAnalytics.pagerankIntOn(_, _, iters = 3)),
       ("x7", 2, GraphAnalytics.labelPropagationOn(_, _, iters = 2)),
       ("x8", 3 + 1, GraphAnalytics.kcorePeelOn(_, _, k = 2, rounds = 3)))
+    // the superstep:<kernel> job descriptions one call of `run` started,
+    // sorted; the caller's description must survive the call
+    def roundJobs(kernel: String)(run: => DataFrame): Seq[String] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .filter(_.startsWith(s"superstep:$kernel ")).foreach(seen.add)
+      }
+      val sc = spark.sparkContext
+      sc.setJobDescription("caller")
+      sc.addSparkListener(listener)
+      try {
+        run
+        assert(GraftCacheBridge.drainListenerBus(spark))
+      } finally sc.removeSparkListener(listener)
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      sc.setJobDescription(null)
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq.sorted
+    }
     kernels.foreach { case (kernel, jobs, run) =>
       it(s"$kernel runs exactly one job per round, described superstep:$kernel r/n") {
-        val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-        val listener = new SparkListener {
-          override def onJobStart(e: SparkListenerJobStart): Unit =
-            Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-              .filter(_.startsWith(s"superstep:$kernel ")).foreach(seen.add)
-        }
-        val sc = spark.sparkContext
-        sc.setJobDescription("caller")
-        sc.addSparkListener(listener)
-        try {
-          run(nodes, edges)
-          assert(GraftCacheBridge.drainListenerBus(spark))
-        } finally sc.removeSparkListener(listener)
-        import scala.jdk.CollectionConverters._
-        assert(seen.asScala.toSeq.sorted ===
+        assert(roundJobs(kernel)(run(nodes, edges)) ===
           (1 to jobs).map(r => s"superstep:$kernel $r/$jobs"))
-        assert(sc.getLocalProperty("spark.job.description") === "caller")
-        sc.setJobDescription(null)
       }
+    }
+    // path 1-2-3-4-5 at the public default caps: the eccentricity of the
+    // source is 4, so x4 and x10 improve for 4 rounds and the 5th, which
+    // improves nothing, ends the loop well before the cap
+    val pathNodes = (1L to 5L).toDF("sk")
+    val pathEdges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("ea", "eb")
+    it("x1 runs exactly one job, described superstep:x1 1/1") {
+      assert(roundJobs("x1")(GraphAnalytics.coBindingComponentsOn(pathNodes, pathEdges)) ===
+        Seq("superstep:x1 1/1"))
+    }
+    it("x4 and x10 stop after the round that improves nothing, not at cap") {
+      assert(roundJobs("x4")(GraphAnalytics.bfsHopsOn(pathNodes, pathEdges, cap = 40)) ===
+        (1 to 5).map(r => s"superstep:x4 $r/40"))
+      assert(roundJobs("x10")(
+        GraphAnalytics.closenessCentralityOn(pathNodes, pathEdges, cap = 15)) ===
+        (1 to 5).map(r => s"superstep:x10 $r/15"))
+    }
+    it("x11 stops at the latest after the round that raises no register") {
+      val seen = roundJobs("x11")(
+        GraphAnalytics.hyperBallClosenessOn(pathNodes, pathEdges, cap = 15))
+      assert(seen.nonEmpty && seen.length <= 5)
+      assert(seen === (1 to seen.length).map(r => s"superstep:x11 $r/15"))
+    }
+    (kernels.map { case (k, _, run) => (k, run) } ++
+      Seq[(String, (DataFrame, DataFrame) => DataFrame)](
+        ("x1", GraphAnalytics.coBindingComponentsOn(_, _)),
+        ("x3", GraphAnalytics.triangleCountDf(spark, _, _)),
+        ("x4", GraphAnalytics.bfsHopsOn(_, _, cap = 40)),
+        ("x10", GraphAnalytics.closenessCentralityOn(_, _, cap = 15)),
+        ("x11", GraphAnalytics.hyperBallClosenessOn(_, _, cap = 15))
+      )).foreach { case (kernel, run) =>
       it(s"$kernel rows do not depend on the edge frame's partitioning") {
         def rows(parts: Int) = run(nodes, edges.repartition(parts))
           .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq

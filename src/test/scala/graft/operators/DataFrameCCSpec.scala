@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** DataFrameCC: the large-star/small-star loop must agree with GraphX on
-  * the registered graph and handle the structural edge cases (chains —
+/** DataFrameCC: the large-star/small-star loop must agree with x1's
+  * union-find on the registered graph and handle the structural edge cases (chains —
   * the diameter killer, stars, isolated vertices, duplicate/reversed/
   * self-loop input edges) exactly.
   */
@@ -48,13 +48,13 @@ class DataFrameCCSpec extends SparkSpec {
       assert(got == Map(1L -> 1L, 5L -> 1L, 9L -> 1L))
     }
 
-    it("matches GraphX connectedComponents on the co-binding graph") {
+    it("matches x1's union-find components on the co-binding graph") {
       val dir = "/root/testdata/sf0.001"
-      val gx = graft.graph.GraphAnalytics.coBindingComponents(spark, dir)
+      val uf = graft.graph.GraphAnalytics.coBindingComponents(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       val df = graft.graph.GraphAnalytics.coBindingComponentsDF(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(df == gx)
+      assert(df == uf)
       assert(df.nonEmpty)
     }
 
@@ -83,6 +83,10 @@ class DataFrameCCSpec extends SparkSpec {
         // path-compress to min-id labels
         val expected = vs.map(v => v -> find(v)).toMap
         assert(cc(vs, es) == expected, s"trial $trial (n=$n) diverged")
+        val x1 = graft.graph.GraphAnalytics
+          .coBindingComponentsOn(vs.toDF("sk"), es.toDF("ea", "eb"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(x1 == expected, s"x1 trial $trial (n=$n) diverged")
       }
     }
 

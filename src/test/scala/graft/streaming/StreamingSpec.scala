@@ -23,6 +23,20 @@ class StreamingSpec extends SparkSpec {
     (ts("2024-01-01 10:20:00"), "view", 1.25),
     (ts("2024-01-01 12:01:00"), "click", -3.0))
 
+  describe("parquetSnapshot") {
+    it("a snapshot taken before an append to its own directory keeps its rows") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_snapshot").resolve("store").toString
+      try {
+        (1L to 5L).toDF("k").write.parquet(dir)
+        val snap = StreamingOps.parquetSnapshot(spark, dir)
+        (6L to 8L).toDF("k").write.mode("append").parquet(dir)
+        assert(snap.count() === 5L)
+        assert(snap.agg(max("k")).head().getLong(0) === 5L)
+        assert(spark.read.parquet(dir).count() === 8L)
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir).getParentFile)
+    }
+  }
+
   describe("hourlyCounts") {
     it("streaming result equals the batch result on the same data") {
       val batch = StreamingOps
