@@ -1,13 +1,17 @@
 package graft
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.graftx.GraftCacheBridge
 
+import graft.sources.FastGzipCodec
+
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. Evaluation is forced through
-  * `queryExecution.toRdd.count()` — the physical plan runs in full
+  * prints the run's record (see [[Bench.lines]]). Evaluation is forced
+  * through `queryExecution.toRdd.count()` — the physical plan runs in full
   * (projections included) with no driver-side collect, so Catalyst cannot
   * prune the measured work down to a count(*).
   *
-  * The JSON carries its own attribution telemetry (VERDICT r7: the
+  * The record carries its own attribution telemetry (VERDICT r7: the
   * driver-recorded 492.5 s had a 4-12× spike cluster no artifact field
   * could explain): warmup success/duration as FIELDS (not stderr),
   * per-family sweep durations, storage-memory high-water + eviction
@@ -24,6 +28,21 @@ private[graft] final case class QRes(name: String, sec: Double, ok: Boolean,
     ev: Long, bev: Long, tm: TaskMetricsSnapshot,
     buildMs: Long, planMs: Long, gzipMb: Double, gzipStreams: Long,
     host: HostStat.Delta)
+
+/** What one bench run measured besides [[StorageTelemetry]]'s counters:
+  * the input of [[Bench.record]]. `warmupSteps` are wall seconds per
+  * warmup step; `residencyLow` the registry tables the canary found below
+  * full residency; `sweeps` the sweep seconds per query family;
+  * `speedProbes` the fixed-work probe ms per family boundary.
+  */
+private[graft] final case class BenchRun(sfDir: String, results: Seq[QRes],
+    warmupSec: Double, warmupFailed: Seq[String],
+    warmupSteps: Map[String, Double], graphOk: Boolean,
+    residencyLow: Seq[(String, Double)], rewarmed: Seq[String],
+    sweeps: Seq[(String, Double)], refreshSec: Double, refreshes: Int,
+    speedProbes: Seq[(String, Double)], deflateMbps: Double,
+    nativeZlib: Boolean, icu: String,
+    chemClass: String, chemPure: Boolean, chemPath: String)
 
 /** Host-window attribution (VERDICT r13 item 3: a 10-30× CPU inflation
   * on identical inputs roamed from p2 to domainCognate/p15/p6/t41 across
@@ -89,76 +108,194 @@ private[graft] object HostStat {
 object Bench {
 
   /** The canonical `metric:"total"` line, printed as the last line of
-    * stdout and built from parts. `walls` come slowest-first and
-    * are written at 2dp (the fast tail is sub-second jitter; full 3dp
-    * walls are on line 1 and in `queriesFile`) for as many queries as
-    * fit a fixed 800-char map budget (~32 entries: every query the 32c/8c
-    * scaling comparison can read above noise); the rest are counted in
-    * `queries_omitted`. String values are JSON-escaped, so no path can
-    * corrupt the line.
+    * stdout. `walls` come slowest-first and are written at 2dp (the fast
+    * tail is sub-second jitter; full 3dp walls are in the record and in
+    * `queriesFile`) for as many queries as fit a fixed 800-char map budget
+    * (~32 entries: every query the 32c/8c scaling comparison can read
+    * above noise); the rest are counted in `queries_omitted`.
     */
   private[graft] def totalLine(total: Double, n: Int, failedN: Int,
                                queriesFile: String, sf: String,
                                walls: Seq[(String, Double)]): String = {
-    def str(v: String): String = "\"" + v.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    } + "\""
-    def num(v: Double, dp: Int): String = s"%.${dp}f".formatLocal(java.util.Locale.ROOT, v)
-    val fitted = scala.collection.mutable.ArrayBuffer[String]()
-    var used = 0
-    for ((q, sec) <- walls) {
-      val entry = str(q) + ":" + num(sec, 2)
-      if (used + entry.length + 1 <= 800) { fitted += entry; used += entry.length + 1 }
+    val fitted = fit(Json.obj(),
+      walls.map { case (q, sec) => q -> Json.num(sec, 2) }, 800)
+    Json(Json.obj("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "n" -> n, "failed_n" -> failedN, "queries_file" -> queriesFile,
+      "queries_omitted" -> (walls.size - fitted.size), "queries" -> fitted,
+      "sf" -> sf))
+  }
+
+  /** Adds each field to `into` in order, dropping any that would take
+    * `into`'s JSON past `budget` chars. */
+  private def fit(into: ObjectNode, kv: Seq[(String, JsonNode)],
+                  budget: Int): ObjectNode = {
+    kv.foreach { case (k, v) =>
+      into.set[ObjectNode](k, v)
+      if (Json(into).length > budget) into.remove(k)
     }
-    Seq("metric" -> str("total"), "value" -> num(total, 3), "unit" -> str("sec"),
-      "n" -> n.toString, "failed_n" -> failedN.toString,
-      "queries_file" -> str(queriesFile),
-      "queries_omitted" -> (walls.size - fitted.size).toString,
-      "queries" -> fitted.mkString("{", ",", "}"), "sf" -> str(sf))
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    into
+  }
+
+  /** The driver keeps a 2000-char stdout tail; sbt's closing
+    * `[success] Total time: …` line takes 72 of them (BENCH_r14), 80 with
+    * a four-digit total time. */
+  private val TailWindow = 2000
+  private val SbtFraming = 80
+
+  /** The record nodes the tail line repeats, as JSON pointers, in order of
+    * what decides a reading of the run: the headline numbers, the warmup
+    * and residency flags, the host class, then the attribution maps.
+    */
+  private val TailNodes = Seq("/value", "/n", "/failed_n", "/failed_head",
+    "/build_sec", "/plan_sec", "/telemetry/warmup_sec",
+    "/telemetry/warmup_ok", "/telemetry/graph_warmup_ok",
+    "/telemetry/evicted_blocks", "/telemetry/baseline_evicted_blocks",
+    "/telemetry/refreshes", "/telemetry/rewarmed_n",
+    "/telemetry/deflate_mbps", "/telemetry/chem_path", "/telemetry/jvm",
+    "/telemetry/icu", "/telemetry/heap_gb", "/telemetry/procs",
+    "/telemetry/probe_max_ms", "/warmup_run", "/etl3_sinks", "/build",
+    "/plan", "/evictions", "/baseline_evictions", "/registry_residency",
+    "/speed_probe_ms", "/warmup_failed", "/failed")
+
+  /** Bench's stdout, exactly three lines:
+    *  1. the record itself (also the file `queriesFile` names);
+    *  2. `metric:"tail"`: whole record nodes picked by [[TailNodes]], any
+    *     node that no longer fits dropped, so that it, the canonical line
+    *     and sbt's framing line fit the driver's [[TailWindow]];
+    *  3. the canonical [[totalLine]], built from the record's walls.
+    */
+  private[graft] def lines(rec: ObjectNode, queriesFile: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val walls = rec.get("queries").properties.asScala.toSeq
+      .map(e => e.getKey -> e.getValue.asDouble).sortBy(-_._2)
+    val canonical = totalLine(rec.get("value").asDouble, rec.get("n").asInt,
+      rec.get("failed_n").asInt, queriesFile, rec.get("sf").asText, walls)
+    val tail = fit(Json.obj("metric" -> "tail"),
+      TailNodes.map(p => p.substring(p.lastIndexOf('/') + 1) -> rec.at(p))
+        .filterNot(_._2.isMissingNode),
+      TailWindow - canonical.length - SbtFraming - 3)
+    Seq(Json(rec), Json(tail), canonical)
+  }
+
+  /** The run's one record. Every fact appears once, durations and sizes
+    * at 3dp; the tail and canonical lines only select from it.
+    */
+  private[graft] def record(r: BenchRun, t: StorageTelemetry): ObjectNode = {
+    import Json.obj
+    val ok = r.results.filter(_.ok)
+    val failed = r.results.filterNot(_.ok).map(_.name)
+    val mb = 1024.0 * 1024.0
+    // executor STATS per job group (VERDICT r11 item 1a — run-ms alone saw
+    // the 3,055-vs-124 domainCognate gap but could not decompose it).
+    // in_rows/in_mb include cached-block reads: fact-sized in_rows under a
+    // table whose inputs are registry-sized caches = lineage recompute;
+    // matching in_rows with inflated run/cpu = slower arithmetic on the
+    // same reads; run ≫ cpu = host stall.
+    def stats(s: GroupStats) = obj("run" -> s.runMs / 1e3,
+      "cpu" -> s.cpuMs / 1e3, "gc" -> s.gcMs / 1e3,
+      "in_mb" -> s.inputBytes / mb, "in_rows" -> s.inputRecords,
+      "tasks" -> s.tasks)
+    // per-query executor profile (VERDICT r8 item 2): run_ms ≈ wall ×
+    // cores ⇒ real compute; run_ms ≪ wall × cores ⇒ the host stalled
+    // under the query, not a plan defect. in_mb/in_rows include cached-
+    // block reads; tasks × per-task overhead with low cpu_ms marks a
+    // scheduling-floor query; gzip_* split the run-global codec counters
+    // per sink query; host_* is the whole host during the query
+    // (host_busy ≫ cpu_ms = foreign load; steal > 0 = hypervisor).
+    def exec(q: QRes) = obj("run_ms" -> q.tm.runMs, "cpu_ms" -> q.tm.cpuMs,
+      "gc_ms" -> q.tm.gcMs, "build_ms" -> q.buildMs, "plan_ms" -> q.planMs,
+      "in_mb" -> q.tm.inputBytes / mb, "in_rows" -> q.tm.inputRecords,
+      "tasks" -> q.tm.tasks, "shuf_rd_mb" -> q.tm.shufReadBytes / mb,
+      "shuf_wr_mb" -> q.tm.shufWriteBytes / mb,
+      "spill_mb" -> q.tm.spillBytes / mb, "gzip_mb" -> q.gzipMb,
+      "gzip_streams" -> q.gzipStreams, "host_busy_ms" -> q.host.busyMs,
+      "host_sys_ms" -> q.host.sysMs, "host_steal_ms" -> q.host.stealMs,
+      "host_iowait_ms" -> q.host.iowaitMs)
+    val sinkStats = t.sinkGroupStats
+    obj("metric" -> "total_full", "value" -> ok.map(_.sec).sum,
+      "unit" -> "sec", "n" -> ok.size, "failed_n" -> failed.size,
+      "failed_head" -> failed.take(3),
+      // driver-side cost split (VERDICT r10 item 2): build = the rq.build
+      // calls — DataFrame construction incl. eager analysis AND, for the
+      // etl/source/stream queries, the measured writes/replays that run
+      // inside build by design; plan = Catalyst optimization + physical
+      // planning of the final QueryExecution only
+      "build_sec" -> ok.map(_.buildMs).sum / 1e3,
+      "plan_sec" -> ok.map(_.planMs).sum / 1e3,
+      // a failed query appears ONLY in "failed", never in "queries"
+      "queries" -> obj(ok.map(q => q.name -> q.sec): _*),
+      "failed" -> failed,
+      "telemetry" -> obj(
+        "warmup_sec" -> r.warmupSec,
+        "warmup_ok" -> (r.warmupFailed.isEmpty && r.graphOk),
+        "graph_warmup_ok" -> r.graphOk,
+        "sweep_sec" -> r.sweeps.map(_._2).sum,
+        "refresh_sec" -> r.refreshSec, "refreshes" -> r.refreshes,
+        "storage_hw_mb" -> t.highWaterBytes / mb,
+        "storage_final_mb" -> t.currentBytes / mb,
+        "evicted_blocks" -> t.evicted,
+        "baseline_evicted_blocks" -> t.baselineEvicted,
+        // false: the zlib.compress.level conf key is a no-op and gzip sinks
+        // go through FastGzipCodec's JDK-Deflater BEST_SPEED branch
+        "native_zlib" -> r.nativeZlib,
+        // expected gzip deflate wall ≈ gzip_raw_mb ÷ (deflate_mbps ×
+        // concurrent sink slots); counters are in-JVM (local-mode exact)
+        "deflate_mbps" -> r.deflateMbps,
+        "gzip_jdk_streams" -> FastGzipCodec.jdkStreams.get,
+        "gzip_native_streams" -> FastGzipCodec.nativeStreams.get,
+        "gzip_raw_mb" -> FastGzipCodec.jdkRawBytes.get / mb,
+        // host/JVM class (VERDICT r11 item 1, r12 item 4): the VM version,
+        // the effective ICU case-mapping conf, the heap the bench actually
+        // got and the processor count the JVM sees
+        "jvm" -> System.getProperty("java.vm.version"), "icu" -> r.icu,
+        "heap_gb" -> Runtime.getRuntime.maxMemory / (1024.0 * mb),
+        "procs" -> Runtime.getRuntime.availableProcessors,
+        // the registry's chemistry configuration + chosen domainCognate path
+        "chem_class" -> r.chemClass, "chem_pure" -> r.chemPure,
+        "chem_path" -> r.chemPath,
+        // > 0: the registry was NOT fully resident when warmup finished
+        "rewarmed_n" -> r.rewarmed.size,
+        // worst family-boundary probe: > ~2x the "start" value means the
+        // host itself degraded mid-run
+        "probe_max_ms" -> r.speedProbes.map(_._2).max),
+      "warmup_failed" -> r.warmupFailed,
+      // only the interesting steps: per-table touches under 1 s are noise.
+      // WALL seconds (graph:* walls overlap under concurrency; graphwait:*
+      // is pool-queue delay), except graphrun:* = executor run seconds
+      "warmup_steps" -> obj(r.warmupSteps.toSeq.filter(_._2 >= 1.0)
+        .sortBy(-_._2): _*),
+      // executor seconds per registry table: these sum coherently, so
+      // "which table to attack" reads directly
+      "warmup_run" -> obj(t.warmGroupStats.toSeq.sortBy(-_._2.runMs).take(5)
+        .map { case (k, s) => k -> stats(s) }: _*),
+      "registry_residency" -> obj(r.residencyLow: _*),
+      "rewarmed" -> r.rewarmed,
+      "sweeps" -> obj(r.sweeps: _*),
+      // per-query memory-residency losses, nonzero only: which query was
+      // running while blocks were evicted (sweeps run outside these deltas)
+      "evictions" -> obj(r.results.collect {
+        case q if q.ev > 0 => q.name -> q.ev }: _*),
+      "baseline_evictions" -> obj(r.results.collect {
+        case q if q.bev > 0 => q.name -> q.bev }: _*),
+      "build" -> obj(ok.map(q => q.name -> q.buildMs).sortBy(-_._2).take(8): _*),
+      "plan" -> obj(ok.map(q => q.name -> q.planMs).sortBy(-_._2).take(8): _*),
+      "exec" -> obj(ok.sortBy(-_.sec).take(12).map(q => q.name -> exec(q)): _*),
+      // the etl3 export's per-sink pool-concurrent wall (ExportTelemetry)
+      // with the sink:<name> job group's executor stats; fact-sized
+      // in_rows = lineage recompute
+      "etl3_sinks" -> obj(graft.etl.ExportTelemetry.snapshot.take(6).map {
+        case (k, wall) => k -> obj("wall" -> wall)
+          .setAll[ObjectNode](sinkStats.get(k).fold(obj())(stats))
+      }: _*),
+      "speed_probe_ms" -> obj(r.speedProbes: _*),
+      "sf" -> r.sfDir)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // JFR-on-env-var (VERDICT r13 item 3): SPARK_GRAFT_JFR=/path.jfr
-    // records the whole bench with the profile settings — the in-place
-    // profiling hook for a degraded host window, no sbt option juggling.
-    // Never set by the driver.
-    val jfr = sys.env.get("SPARK_GRAFT_JFR").flatMap { path =>
-      try {
-        val c = Class.forName("jdk.jfr.Recording")
-        val cfgC = Class.forName("jdk.jfr.Configuration")
-        val cfg = cfgC.getMethod("getConfiguration", classOf[String])
-          .invoke(null, "profile")
-        val r = c.getConstructor(cfgC).newInstance(cfg)
-        c.getMethod("setDestination", classOf[java.nio.file.Path])
-          .invoke(r, java.nio.file.Paths.get(path))
-        c.getMethod("start").invoke(r)
-        Some((r, c))
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] JFR start failed: ${e.getMessage}")
-        None
-      }
-    }
     val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // attribution/scale-harness escape hatch: extra session confs as
-    // `k=v;k2=v2` (e.g. the sf1 dim-broadcast flip run sets
-    // spark.graft.dims.broadcast=false;spark.sql.autoBroadcastJoinThreshold=-1).
-    // Never set by the driver — the recorded run is always defaults.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        // a clear failure beats a post-session-startup MatchError on a
-        // segment without '=' (ADVICE r10)
-        require(kv.contains("="),
-          s"bad SPARK_GRAFT_CONF segment (want key=value): '$kv'")
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
     val telemetry = new StorageTelemetry
     spark.sparkContext.addSparkListener(telemetry)
 
@@ -170,9 +307,7 @@ object Bench {
     // fields are unchanged — only the wall time shrinks.
     val tWarm0 = System.nanoTime()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val warmupFailed =
-      java.util.Collections.synchronizedList(
-        new java.util.ArrayList[String]())
+    val warmupFailed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     // per-step wall durations (concurrent, so they overlap — the map
     // attributes WHERE warmup time went, warmup_sec stays the wall total)
     val warmupSteps = new java.util.concurrent.ConcurrentHashMap[
@@ -188,7 +323,6 @@ object Bench {
     val graphPool = java.util.concurrent.Executors.newFixedThreadPool(3)
     val graphEc: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(graphPool)
-    @volatile var deflateMbps = 0.0
     def step(name: String)(body: => Unit): scala.concurrent.Future[Unit] =
       scala.concurrent.Future {
         val t0 = System.nanoTime()
@@ -213,7 +347,7 @@ object Bench {
     // and systematically understated real per-core throughput — the
     // exact quantity the attribution formula divides by. ~0.15 s on an
     // idle host; the wall cost is negligible next to the bias it removes.
-    locally {
+    val deflateMbps = {
       val tp0 = System.nanoTime()
       val rnd = new java.util.Random(42)
       val sb = new java.lang.StringBuilder(11 << 20)
@@ -230,9 +364,9 @@ object Bench {
       d.setInput(in); d.finish()
       while (!d.finished()) d.deflate(buf)
       d.end()
-      deflateMbps = in.length / (1024.0 * 1024.0) /
-        ((System.nanoTime() - t0) / 1e9)
+      val mbps = in.length / (1024.0 * 1024.0) / ((System.nanoTime() - t0) / 1e9)
       warmupSteps.put("deflate_probe", (System.nanoTime() - tp0) / 1e9)
+      mbps
     }
 
     // JIT + codegen + parquet footer caches, so the first measured query
@@ -276,9 +410,9 @@ object Bench {
       // host) with every concurrent case-mapping task BLOCKED on the
       // class-init lock (the r11 driver's p2 = 659 exec-s signature).
       // The engine runs with ICU off, so this is normally ~0 cost; it
-      // exists so an ICU-enabled run (SPARK_GRAFT_CONF) still measures
-      // queries, not JVM class init. Non-ASCII literal: the ASCII fast
-      // path would not touch the class.
+      // exists so an ICU-enabled run still measures queries, not JVM
+      // class init. Non-ASCII literal: the ASCII fast path would not
+      // touch the class.
       spark.range(1).select(upper(lit("straße")), lower(lit("İĄß")),
         initcap(lit("ätest"))).queryExecution.toRdd.count()
     }
@@ -320,11 +454,6 @@ object Bench {
     // first registry-served query paid the full build (exactly the
     // hypothesis the r7 record could not check for p2=64 s).
     var graphOpt: Option[graft.graph.GraphTables] = None
-    // ONE registry inventory (GraphTables.registryTables): a locally
-    // maintained list here drifted from Verify's when domainCognate was
-    // added — the table was then built lazily inside the first promiscuity
-    // query, after the baseline snapshot, and swept at the next boundary
-    def registryTables(g: graft.graph.GraphTables) = g.registryTables
     // one retry: a transient build failure here would otherwise charge
     // the full registry build to the first registry-served query (the
     // only mechanism that fits r7's p2 = 64 s — registry queries spike
@@ -450,17 +579,11 @@ object Bench {
     var refreshSec = 0.0
     var refreshes = 0
     var baselineEvictMark = 0L
-    // attribution-run escape hatch (STATUS round-8 repro): with the
-    // refresh disabled, a constrained heap (SPARK_DRIVER_MEM=4g) must
-    // reproduce the r7 p-family spike profile — the first registry-served
-    // query after the heavy families pays the rebuild. Never set by the
-    // driver; exists so the with/without comparison is one env var.
-    val noRefresh = sys.env.contains("SPARK_GRAFT_NO_REFRESH")
     def maybeRefreshRegistry(): Unit =
-      if (!noRefresh && telemetry.baselineEvicted > baselineEvictMark) {
+      if (telemetry.baselineEvicted > baselineEvictMark) {
         graphOpt.foreach { g =>
           val t0 = System.nanoTime()
-          registryTables(g).foreach { df =>
+          g.registryTables.foreach { df =>
             df.unpersist(blocking = true)
             df.persist()
             df.queryExecution.toRdd.count()
@@ -508,9 +631,8 @@ object Bench {
       // gzip-codec counters snapshotted PER QUERY (VERDICT r10 item 2:
       // the run-global totals could not split etl3's wall into its own
       // bytes ÷ MB/s) — the deltas land in the exec entries
-      val gz0raw = graft.sources.FastGzipCodec.jdkRawBytes.get
-      val gz0n = graft.sources.FastGzipCodec.jdkStreams.get +
-        graft.sources.FastGzipCodec.nativeStreams.get
+      val gz0raw = FastGzipCodec.jdkRawBytes.get
+      val gz0n = FastGzipCodec.jdkStreams.get + FastGzipCodec.nativeStreams.get
       val hs0 = HostStat.read() // outside the timed window
       val t0 = System.nanoTime()
       // per-query driver-side cost split (VERDICT r9 item 3: the r9
@@ -552,341 +674,40 @@ object Bench {
       QRes(rq.name, sec, ok, telemetry.evicted - ev0,
         telemetry.baselineEvicted - bev0, telemetry.taskSnapshot - tm0,
         buildMs, planMs,
-        (graft.sources.FastGzipCodec.jdkRawBytes.get - gz0raw) /
-          (1024.0 * 1024.0),
-        graft.sources.FastGzipCodec.jdkStreams.get +
-          graft.sources.FastGzipCodec.nativeStreams.get - gz0n,
+        (FastGzipCodec.jdkRawBytes.get - gz0raw) / (1024.0 * 1024.0),
+        FastGzipCodec.jdkStreams.get + FastGzipCodec.nativeStreams.get - gz0n,
         HostStat.delta(hs0, HostStat.read()))
     }
-    jfr.foreach { case (r, c) =>
-      try c.getMethod("stop").invoke(r)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-
-    // ---- p2 per-stage attribution (VERDICT r12 item 1), UNTIMED --------
-    // The r12 driver host burned 369 executor-CPU-s inside
-    // p2_search_entries on 0.3 MB of shuffle and the artifact had no
-    // field to say WHERE. Replay searchEntries' component aggregates
-    // (same args as the registered query) under diag:p2_<stage> job
-    // groups after the timed loop — the artifact then carries a
-    // per-stage run/cpu/gc/in_rows split for p2 on every host class.
-    val p2Measured = results.exists(r =>
-      r.ok && r.name == "p2_search_entries")
-    val p2Stages: Map[String, GroupStats] =
-      if (graphOpt.nonEmpty && p2Measured) {
-        try {
-          val g = graft.graph.GraphTables.cached(spark, sfDir)
-          graft.query.ProCogQueries
-            .searchEntriesStages(g, "42", 0.9, graft.query.ProCogQueries.Best)
-            .foreach { case (st, df) =>
-              spark.sparkContext.setJobGroup(s"diag:p2_$st",
-                s"p2 stage attribution: $st", interruptOnCancel = false)
-              try df.queryExecution.toRdd.count()
-              finally spark.sparkContext.clearJobGroup()
-            }
-          GraftCacheBridge.drainListenerBus(spark)
-          telemetry.diagGroupStats
-            .collect { case (k, v) if k.startsWith("p2_") =>
-              k.stripPrefix("p2_") -> v }
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] p2 stage attribution failed: " +
-              e.getMessage)
-            Map.empty[String, GroupStats]
-        }
-      } else Map.empty
+    speedProbes("end") = HostStat.speedProbeMs()
 
     // ---- output ---------------------------------------------------------
-    def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def jmap(kv: Seq[(String, String)]): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val ok = results.filter(_.ok)
-    val qs = jmap(ok.map(r => r.name -> f(r.sec)))
-    val failed = results.filterNot(_.ok).map(_.name)
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = ok.map(_.sec).sum
-    val mb = 1024.0 * 1024.0
-    val buildSecTotal = ok.map(_.buildMs).sum / 1e3
-    val planSecTotal = ok.map(_.planMs).sum / 1e3
-    // compact telemetry object: repeated on the mid and tail lines, so a
-    // tail-window consumer always sees it next to the headline number
-    val telem = jmap(Seq(
-      "warmup_sec" -> f(warmupSec),
-      "warmup_ok" -> (warmupFailed.isEmpty && graphOpt.nonEmpty).toString,
-      "graph_warmup_ok" -> graphOpt.nonEmpty.toString,
-      "sweep_sec" -> f(sweepSecs.values.sum),
-      "refresh_sec" -> f(refreshSec),
-      "refreshes" -> refreshes.toString,
-      "storage_hw_mb" -> f(telemetry.highWaterBytes / mb),
-      "storage_final_mb" -> f(telemetry.currentBytes / mb),
-      "evicted_blocks" -> telemetry.evicted.toString,
-      "baseline_evicted_blocks" -> telemetry.baselineEvicted.toString,
-      // gzip-codec-path visibility (VERDICT r8 item 1): false means the
-      // zlib.compress.level conf key is a no-op and gzip sinks go through
-      // FastGzipCodec's JDK-Deflater BEST_SPEED branch
-      "native_zlib" -> org.apache.hadoop.io.compress.zlib.ZlibFactory
-        .isNativeZlibLoaded(spark.sparkContext.hadoopConfiguration)
-        .toString,
-      // host deflate throughput (idle-host probe, pre-warmup) + what the
-      // gzip sinks ACTUALLY did this run: expected gzip deflate wall ≈
-      // gzip_raw_mb ÷ (deflate_mbps × concurrent sink slots); per-query
-      // splits are in the exec entries ("gzip_mb"/"gzip_streams").
-      // Counters are in-JVM (local-mode exact; on a cluster they'd be
-      // per-executor).
-      "deflate_mbps" -> f(deflateMbps),
-      "gzip_jdk_streams" ->
-        graft.sources.FastGzipCodec.jdkStreams.get.toString,
-      "gzip_native_streams" ->
-        graft.sources.FastGzipCodec.nativeStreams.get.toString,
-      "gzip_raw_mb" ->
-        f(graft.sources.FastGzipCodec.jdkRawBytes.get / mb),
-      // driver-side cost split (VERDICT r10 item 2: the combined
-      // "plan_sec_total" read as 41% Catalyst time when most of it was
-      // eager-build EXECUTION — sink writes, stream replays — landing in
-      // build by design). plan_only_sec is true Catalyst optimization +
-      // physical planning; driver_sec_total adds the rq.build phase.
-      "driver_sec_total" -> f(buildSecTotal + planSecTotal),
-      "plan_only_sec" -> f(planSecTotal),
-      // host/JVM class (VERDICT r11 item 1: a selective 25× exec-s blowup
-      // on one expression family fits a codegen/JIT behavior difference —
-      // the VM version must be readable from the artifact, not assumed)
-      "jvm" -> ("\"" + System.getProperty("java.vm.version") + "\""),
-      "heap_gb" -> f(Runtime.getRuntime.maxMemory / (1024.0 * mb)),
-      // the registry's chemistry configuration + chosen domainCognate
-      // path (VERDICT r11 item 1b)
-      "chem_class" -> ("\"" + graphOpt.map(_.chem.getClass.getSimpleName)
-        .getOrElse("none") + "\""),
-      "chem_pure" -> graphOpt.exists(_.chem.columnPure).toString,
-      "chem_path" -> ("\"" + graphOpt.map(_.domainCognatePath)
-        .getOrElse("none") + "\""),
-      // the canary's outcome: rewarmed_n > 0 means the registry was NOT
-      // fully resident when warmup finished (fractions + per-table rewarm
-      // walls are on line 1: registry_residency / rewarm:<table>)
-      "rewarmed_n" -> rewarmed.size.toString))
-    val rewarmedJson = rewarmed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val residencyJson = jmap(residencyLow.toSeq
-      .map { case (k, v) => k -> f(v) })
-    val warmupFailedJson = {
-      import scala.jdk.CollectionConverters._
-      warmupFailed.asScala.map("\"" + _ + "\"").mkString("[", ",", "]")
-    }
-    // only the interesting steps: per-table touches under 1 s are noise
-    val warmupStepsJson = {
-      import scala.jdk.CollectionConverters._
-      jmap(warmupSteps.asScala.toSeq.filter(_._2 >= 1.0)
-        .sortBy(-_._2).map { case (k, v) => k -> f(v) })
-    }
-    // top warmup steps for the TAIL line (VERDICT r9 item 7: the driver's
-    // warmup number needs attribution FROM THE ARTIFACT, and the full
-    // warmup_steps map lives on the big line). Two maps because the units
-    // differ and mixing them misreads (a 124 exec-sec table inside an
-    // 18 s warmup): warmup_top is WALL seconds (graph:* walls overlap
-    // under concurrency; graphwait:* is pool-queue delay), warmup_run is
-    // executor run-SECONDS per registry table (job-group keyed — these
-    // sum coherently, so "which table to attack" is readable directly).
-    val warmupTopJson = {
-      import scala.jdk.CollectionConverters._
-      jmap(warmupSteps.asScala.toSeq
-        .filterNot(_._1.startsWith("graphrun:")).sortBy(-_._2).take(5)
-        .map { case (k, v) => k -> f(v) })
-    }
-    // warmup_run: per-registry-table executor STATS objects (VERDICT r11
-    // item 1a — run-ms alone saw the 3,055-vs-124 domainCognate gap but
-    // could not decompose it). in_rows/in_mb include cached-block reads:
-    // fact-sized in_rows under a table whose inputs are registry-sized
-    // caches = lineage recompute; matching in_rows with inflated run/cpu
-    // = slower arithmetic on the same reads; run ≫ cpu = host stall.
-    def groupStatsJson(stats: Map[String, GroupStats], n: Int): String =
-      jmap(stats.toSeq.sortBy(-_._2.runMs).take(n).map { case (k, v) =>
-        k -> jmap(Seq(
-          "run" -> f(v.runMs / 1e3), "cpu" -> f(v.cpuMs / 1e3),
-          "gc" -> f(v.gcMs / 1e3),
-          "in_mb" -> f(v.inputBytes / mb), "in_rows" -> v.inputRecords.toString,
-          "tasks" -> v.tasks.toString))
-      })
-    val warmStats = telemetry.warmGroupStats
-    val warmupRunJson = groupStatsJson(warmStats, 5)
-    val sweepsJson = jmap(sweepSecs.toSeq.map { case (k, v) => k -> f(v) })
-    // per-query memory-residency losses, nonzero only: "which query was
-    // running while blocks were being evicted" — the attribution the r7
-    // artifact lacked (sweep-driven drops are excluded: sweeps run
-    // between queries, outside these deltas)
-    val evJson = jmap(results.collect {
-      case r if r.ev > 0 => r.name -> r.ev.toString })
-    val bevJson = jmap(results.collect {
-      case r if r.bev > 0 => r.name -> r.bev.toString })
-    // per-query driver cost, top offenders, SPLIT into the two layers
-    // (VERDICT r10 item 2): "build" = the rq.build call — DataFrame
-    // construction incl. eager analysis AND, for the etl/source/stream
-    // queries, the measured writes/replays that run inside build by
-    // design; "plan" = the final QueryExecution's optimization+planning
-    // phases only. etl3 showing 57 s under a map named "planning" invited
-    // optimizing the wrong layer.
-    val buildJson = jmap(ok.map(r => (r.name, r.buildMs))
-      .sortBy(-_._2).take(8).map { case (k, v) => k -> v.toString })
-    val planJson = jmap(ok.map(r => (r.name, r.planMs))
-      .sortBy(-_._2).take(8).map { case (k, v) => k -> v.toString })
-    // per-query executor profile (VERDICT r8 item 2): run_ms ≈ wall ×
-    // cores ⇒ real compute; run_ms ≪ wall × cores ⇒ the host stalled
-    // under the query, not a plan defect. gc_ms and spill_mb separate the
-    // memory story; gzip_mb/gzip_streams (nonzero only) split a sink
-    // query's bytes out of the run-global counters.
-    // compact=true (the tail line) drops zero-valued optional fields —
-    // the full entries live on line 1; the tail's job is to carry the
-    // DECIDING numbers inside the ~2000-char window
-    def execEntry(r: QRes, compact: Boolean = false): (String, String) = {
-      def keep(v: Long) = !compact || v > 0
-      r.name -> jmap(Seq(
-        "run_ms" -> r.tm.runMs.toString,
-        "cpu_ms" -> r.tm.cpuMs.toString) ++
-        (if (keep(r.tm.gcMs)) Seq("gc_ms" -> r.tm.gcMs.toString) else Nil) ++
-        Seq("build_ms" -> r.buildMs.toString) ++
-        (if (keep(r.planMs)) Seq("plan_ms" -> r.planMs.toString) else Nil) ++
-        // input bytes/rows INCLUDE cached-block reads (VERDICT r11 item
-        // 1a): a registry-served query whose in_rows is fact-sized
-        // recomputed lineage; registry-sized in_rows with a huge run_ms
-        // is host-side
-        Seq("in_mb" -> f(r.tm.inputBytes / mb),
-          "in_rows" -> r.tm.inputRecords.toString,
-          // task count: wall ≈ tasks × per-task overhead with low cpu_ms
-          // marks a scheduling-floor query (j-family replays), distinct
-          // from both recompute and host stall
-          "tasks" -> r.tm.tasks.toString,
-          "shuf_rd_mb" -> f(r.tm.shufReadBytes / mb),
-          "shuf_wr_mb" -> f(r.tm.shufWriteBytes / mb)) ++
-        (if (keep(r.tm.spillBytes))
-           Seq("spill_mb" -> f(r.tm.spillBytes / mb)) else Nil) ++
-        (if (r.gzipMb > 0.01 || r.gzipStreams > 0)
-           Seq("gzip_mb" -> f(r.gzipMb),
-             "gzip_streams" -> r.gzipStreams.toString)
-         else Nil) ++
-        // host-window attribution (VERDICT r13 item 3): whole-host busy/
-        // sys/steal during the query. host_busy ≫ cpu_ms + overhead =
-        // foreign load in the window; steal > 0 = hypervisor contention
-        (if (r.host.busyMs > 0)
-           Seq("host_busy_ms" -> r.host.busyMs.toString) else Nil) ++
-        (if (keep(r.host.sysMs))
-           Seq("host_sys_ms" -> r.host.sysMs.toString) else Nil) ++
-        (if (r.host.stealMs > 0)
-           Seq("host_steal_ms" -> r.host.stealMs.toString) else Nil) ++
-        (if (keep(r.host.iowaitMs))
-           Seq("host_iowait_ms" -> r.host.iowaitMs.toString) else Nil))
-    }
-    val slowest = ok.sortBy(-_.sec)
-    val execJson = jmap(slowest.take(12).map(r => execEntry(r)))
-    // per-sink records of the etl3 export run: pool-concurrent wall from
-    // ExportTelemetry (VERDICT r10 item 1) + executor run/input stats
-    // from the sink:<name> job groups (VERDICT r11 item 2 — in_rows is
-    // the per-sink input provenance: a sink reading registry-sized caches
-    // shows registry-sized rows; fact-sized rows = lineage recompute)
-    val sinkStats = telemetry.sinkGroupStats
-    def sinksJsonN(n: Int): String =
-      jmap(graft.etl.ExportTelemetry.snapshot.take(n).map { case (k, v) =>
-        k -> jmap(Seq("wall" -> f(v)) ++ sinkStats.get(k).toSeq.flatMap(s =>
-          Seq("run" -> f(s.runMs / 1e3), "cpu" -> f(s.cpuMs / 1e3),
-            "in_rows" -> s.inputRecords.toString)))
-      })
-    val sinksJson = sinksJsonN(6)
-    val p2StagesJson = groupStatsJson(p2Stages, 4)
-    speedProbes("end") = HostStat.speedProbeMs()
-    // host-speed timeline (family-boundary fixed-work probes, untimed):
-    // full map on line 1, worst value in the tail telem
-    val speedProbeJson = jmap(speedProbes.toSeq
-      .map { case (k, v) => k -> f(v) })
-    val probeMax = speedProbes.values.max
-    // Line 1 of 5 — the FULL record (every per-query wall + all
-    // telemetry). Metric renamed "total" → "total_full" in r14: the
-    // canonical "total" line now lives at the TAIL (below) where the
-    // driver's bounded stdout window can actually see it (VERDICT r13
-    // item 2: the per-query map lived only here, ~6 KB into a ~2000-char
-    // tail — parsed=null since BENCH_r10), and keeping exactly one
-    // metric="total" line per run preserves the grep contract.
-    val fullLine = s"""{"metric":"total_full","value":${f(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"telemetry":$telem,"warmup_failed":$warmupFailedJson,"warmup_steps":$warmupStepsJson,"registry_residency":$residencyJson,"rewarmed":$rewarmedJson,"sweeps":$sweepsJson,"evictions":$evJson,"baseline_evictions":$bevJson,"build":$buildJson,"plan":$planJson,"exec":$execJson,"etl3_sinks":$sinksJson,"p2_stages":$p2StagesJson,"speed_probe_ms":$speedProbeJson,"sf":"$sfDir"}"""
-    println(fullLine)
-    // ...and the same record as a FILE, so a tail-bounded consumer can
-    // follow the pointer (the canonical tail line carries the path).
-    // CWD-relative (sfDir-independent), one file per core count so the
-    // driver's 32c and 8c runs don't clobber each other.
+    import scala.jdk.CollectionConverters._
+    val rec = record(BenchRun(sfDir, results, warmupSec,
+      warmupFailed.asScala.toSeq, warmupSteps.asScala.toMap, graphOpt.nonEmpty,
+      residencyLow.toSeq, rewarmed.toSeq, sweepSecs.toSeq, refreshSec,
+      refreshes, speedProbes.toSeq, deflateMbps,
+      nativeZlib = org.apache.hadoop.io.compress.zlib.ZlibFactory
+        .isNativeZlibLoaded(spark.sparkContext.hadoopConfiguration),
+      icu = spark.conf.getOption(GraftSession.IcuCaseMappingsKey)
+        .getOrElse("default"),
+      chemClass = graphOpt.map(_.chem.getClass.getSimpleName).getOrElse("none"),
+      chemPure = graphOpt.exists(_.chem.columnPure),
+      chemPath = graphOpt.map(_.domainCognatePath).getOrElse("none")),
+      telemetry)
+    // the record as a FILE too, so a tail-bounded consumer can follow the
+    // pointer the canonical line carries. CWD-relative (sfDir-independent),
+    // one file per core count so the driver's 32c and 8c runs don't
+    // clobber each other.
     val outPath = try {
       val p = java.nio.file.Paths.get(s"bench_out_c$cpus.json").toAbsolutePath
-      java.nio.file.Files.write(p, (fullLine + "\n").getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Files.writeString(p, Json(rec) + "\n")
       p.toString
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] bench_out write failed: ${e.getMessage}")
       "unwritten"
     }
-    // Line 2 of 4: same-schema repeat with only the slowest queries, for
-    // mid-stdout parsers (the full line above exceeds any tail window).
-    val slow = jmap(slowest.take(12).map(r => r.name -> f(r.sec)))
-    // "total_tail" (NOT "total") + "note"/"queries_total" mark this as
-    // the 12-slowest SUBSET repeat: a line-oriented consumer summing or
-    // grepping metric=total sees exactly one canonical line per run
-    println(s"""{"metric":"total_tail","value":${f(total)},"unit":"sec","note":"tail_summary_of_line_above","queries_total":${ok.size},"queries":$slow,"failed":$failedJson,"telemetry":$telem,"build":$buildJson,"plan":$planJson,"warmup_top":$warmupTopJson,"warmup_run":$warmupRunJson,"sf":"$sfDir"}""")
-    // Line 3 of 4 — the attribution line, REPACKED for the ~2000-char
-    // tail window (VERDICT r11 item 1c: r11's tail kept 6 exec entries
-    // but lost the telemetry fields that would have DECIDED the driver
-    // blowup — graph_warmup_ok, evictions, refreshes, deflate_mbps, the
-    // per-query wall map). Budget: telem_mini (the verdict-deciding
-    // flags) + 4 exec entries (compact) + top-8 wall map + 4 warmup_run
-    // stats + 3 sink records.
-    val telemMini = jmap(Seq(
-      "graph_warmup_ok" -> graphOpt.nonEmpty.toString,
-      "evicted" -> telemetry.evicted.toString,
-      "bev" -> telemetry.baselineEvicted.toString,
-      "refreshes" -> refreshes.toString,
-      "rewarmed" -> rewarmedJson,
-      "deflate_mbps" -> f(deflateMbps),
-      "chem_path" -> ("\"" + graphOpt.map(_.domainCognatePath)
-        .getOrElse("none") + "\""),
-      "jvm" -> ("\"" + System.getProperty("java.vm.version") + "\""),
-      // host-class diagnostics in the TAIL window (VERDICT r12 item 4):
-      // a future host anomaly must be attributable from the artifact
-      // alone — effective ICU case-mapping conf, the JVM heap the bench
-      // ACTUALLY got (r12's 75 GC-s question = "8 g or 16 g?"), and the
-      // processor count the JVM sees
-      "icu" -> ("\"" + spark.conf
-        .getOption(graft.GraftSession.IcuCaseMappingsKey)
-        .getOrElse("default") + "\""),
-      "heap_gb" -> f(Runtime.getRuntime.maxMemory / (1024.0 * mb)),
-      "procs" -> Runtime.getRuntime.availableProcessors.toString,
-      // worst family-boundary fixed-work probe: > ~2x the "start" value
-      // means the host itself degraded mid-run (full timeline on line 1)
-      "probe_max_ms" -> f(probeMax)))
-    // ---- tail ensemble, budgeted to the driver's ~2000-char window ----
-    // (VERDICT r13 item 2). The LAST three lines must together fit the
-    // window with sbt's trailing "[success] Total time: ..." framing:
-    //   exec_tail  (diagnostics — may be cut at the window's leading
-    //               edge; its fields are repeated on lines 1-2)
-    //   total_final (fixed-size headline)
-    //   total      (the CANONICAL line, LAST so a reader of the last
-    //               stdout line gets the per-query map: see
-    //               [[totalLine]]; full map on line 1 and in the
-    //               bench_out file it points to)
-    val execTailJson = jmap(slowest.take(2).map(r => execEntry(r, compact = true)))
-    val wallsJson = jmap(slowest.take(4).map(r => r.name -> f(r.sec)))
-    // p2's per-stage split rides the TAIL line only when p2 is a top-4
-    // wall — exactly the run where the verdict needs it, and the budget
-    // stays safe on runs where p2 is cheap
-    val p2Tail =
-      if (slowest.take(4).exists(_.name == "p2_search_entries"))
-        s""","p2_stages":$p2StagesJson"""
-      else ""
-    // telem LAST within the line: exec_tail is the one tail line allowed
-    // to be cut at the window's LEADING edge (the canonical + final lines
-    // below get the guaranteed budget), and a head-cut line keeps its
-    // tail — so the verdict-deciding flags sit at the end
-    val execTailLine = s"""{"metric":"exec_tail","value":${f(total)},"exec":$execTailJson,"walls":$wallsJson,"warmup_run":${groupStatsJson(warmStats, 2)},"etl3_sinks":${sinksJsonN(2)}$p2Tail,"telem":$telemMini,"sf":"$sfDir"}"""
-    // fixed-size final line (≤ ~200 chars; VERDICT r9 item 1). Failed
-    // names are capped at 3; the full list is on the lines above.
-    val failedHead = failed.take(3).map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    val finalLine = s"""{"metric":"total_final","total_sec":${f(total)},"n":${ok.size},"failed_n":${failed.size},"failed_head":$failedHead,"warmup_sec":${f(warmupSec)},"build_sec":${f(buildSecTotal)},"plan_sec":${f(planSecTotal)}}"""
-    println(execTailLine)
-    println(finalLine)
-    println(totalLine(total, ok.size, failed.size, outPath, sfDir,
-      slowest.map(r => r.name -> r.sec)))
+    lines(rec, outPath).foreach(println)
     spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    if (results.exists(!_.ok)) sys.exit(1)
   }
 }

@@ -185,8 +185,7 @@ final class StorageTelemetry extends SparkListener {
     val g =
       if (j.properties == null) null
       else j.properties.getProperty("spark.jobGroup.id")
-    if (g != null && (g.startsWith("warm:") || g.startsWith("sink:") ||
-        g.startsWith("diag:"))) {
+    if (g != null && (g.startsWith("warm:") || g.startsWith("sink:"))) {
       j.stageIds.foreach(sid => stageGroup.put(sid, g))
       ()
     }
@@ -208,9 +207,4 @@ final class StorageTelemetry extends SparkListener {
 
   /** Full executor stats per `sink:` group (ExportStage writes). */
   def sinkGroupStats: Map[String, GroupStats] = groupStats("sink:")
-
-  /** Full executor stats per `diag:` group (Bench's untimed post-run
-    * attribution replays — VERDICT r12 item 1: p2's per-stage split).
-    */
-  def diagGroupStats: Map[String, GroupStats] = groupStats("diag:")
 }

@@ -166,8 +166,7 @@ object EtlQueries {
              score AS parityScore
       FROM best WHERE score = mx
       ORDER BY ligandUniqueID, cogId"""))((s, dir) => {
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"/tmp/graft_fixtures/$safe/etl2_flat"
+      val path = Fixtures.scratchDir("etl2_flat")
       FlatFileExport.write(GraphTables.cached(s, dir), path)
       s.read.option("header", "true")
         .schema("ligandUniqueID LONG, cogId LONG, cogName STRING, parityScore DOUBLE")
@@ -242,8 +241,7 @@ object EtlQueries {
              UNION ALL SELECT 'procoggraph_node', 1)
       SELECT file, CAST(n AS BIGINT) AS n FROM rows ORDER BY file"""))(
       (s, dir) => {
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val out = s"/tmp/graft_fixtures/$safe/etl3_export"
+      val out = Fixtures.scratchDir("etl3_export")
       val written = ExportStage.run(GraphTables.cached(s, dir), out).toMap
       val subset = Seq("ec_id_nodes", "ec_nodes_class",
         "ec_class_subclass_rel", "cognate_ligands_ec",

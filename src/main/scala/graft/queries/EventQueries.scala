@@ -574,14 +574,7 @@ object EventQueries {
              CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_cached
       FROM lineitem GROUP BY 1 ORDER BY suppkey"""))((s, dir) => {
       import s.implicits._
-      // sweep dead processes' caches; ours is pid+nanotime-unique
-      Option(new java.io.File("/tmp/graft_fixtures").listFiles)
-        .getOrElse(Array.empty)
-        .filter(f => f.getName.matches("j5_cache_\\d+_\\d+") &&
-          Fixtures.sweepable(f.getName.split("_")(2).toLong))
-        .foreach(Fixtures.rm)
-      val cacheDir = s"/tmp/graft_fixtures/j5_cache_" +
-        s"${ProcessHandle.current.pid}_${System.nanoTime}"
+      val cacheDir = Fixtures.scratchDir("j5_cache")
       // no ordering needed: the final cache is batching-invariant by
       // construction, so the feed can arrive in any partition order
       val data = Tables(s, dir, "lineitem")

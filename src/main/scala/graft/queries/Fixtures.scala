@@ -1,9 +1,9 @@
 package graft.queries
 
 /** Shared /tmp fixture lifecycle helpers for queries that materialize
-  * side tables (s4 partitioned copy, s5 bucketed tables, j5 stream
-  * cache). ONE definition of the sweep-safety policy so a fix cannot
-  * silently miss a copy.
+  * side tables (s4 partitioned copy, s5 bucketed tables, the j-family
+  * stream stores, the etl2/etl3 export files). ONE definition of the
+  * sweep-safety policy so a fix cannot silently miss a copy.
   */
 private[queries] object Fixtures {
 
@@ -23,6 +23,25 @@ private[queries] object Fixtures {
     */
   def sweepable(pid: Long): Boolean =
     !java.lang.ProcessHandle.of(pid).isPresent
+
+  /** A fresh directory path `/tmp/graft_fixtures/<prefix>_<pid>_<nanotime>`
+    * for a fixture a query rebuilds on every run (stream caches and
+    * indexes, export file sets), so two processes on the same data never
+    * write into each other's copy. Siblings owned by dead processes are
+    * swept first; a live owner's, this process's included, are kept —
+    * a lazily evaluated result may still read them.
+    */
+  def scratchDir(prefix: String): String = {
+    val root = new java.io.File("/tmp/graft_fixtures")
+    val owned = (java.util.regex.Pattern.quote(prefix) + "_(\\d+)_\\d+").r
+    Option(root.listFiles).getOrElse(Array.empty).foreach { f =>
+      f.getName match {
+        case owned(pid) if sweepable(pid.toLong) => rm(f)
+        case _                                    =>
+      }
+    }
+    s"$root/${prefix}_${ProcessHandle.current.pid}_${System.nanoTime}"
+  }
 
   /** Resolved install paths, memoized per JVM: a fixture resolved once
     * (installed final, or this process's own temp after losing a race to

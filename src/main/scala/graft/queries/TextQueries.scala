@@ -1237,13 +1237,7 @@ object TextQueries {
       SELECT da AS doc_a, db AS doc_b, jacc
       FROM dup ORDER BY doc_a, doc_b"""))((s, dir) => {
       import s.implicits._
-      Option(new java.io.File("/tmp/graft_fixtures").listFiles)
-        .getOrElse(Array.empty)
-        .filter(f => f.getName.matches("j6_idx_\\d+_\\d+") &&
-          Fixtures.sweepable(f.getName.split("_")(2).toLong))
-        .foreach(Fixtures.rm)
-      val root = s"/tmp/graft_fixtures/j6_idx_" +
-        s"${ProcessHandle.current.pid}_${System.nanoTime}"
+      val root = Fixtures.scratchDir("j6_idx")
       // probe → verify → append → periodic versioned compaction lives in
       // streaming/IncrementalMinHashIndex (file count stays bounded
       // across batches — IncrementalIndexSpec asserts it)
@@ -1293,13 +1287,7 @@ object TextQueries {
       FROM agg ORDER BY doc_id"""))((s, dir) => {
       import s.implicits._
       import graft.operators.MinHashDedup
-      Option(new java.io.File("/tmp/graft_fixtures").listFiles)
-        .getOrElse(Array.empty)
-        .filter(f => f.getName.matches("j13_idx_\\d+_\\d+") &&
-          Fixtures.sweepable(f.getName.split("_")(2).toLong))
-        .foreach(Fixtures.rm)
-      val root = s"/tmp/graft_fixtures/j13_idx_" +
-        s"${ProcessHandle.current.pid}_${System.nanoTime}"
+      val root = Fixtures.scratchDir("j13_idx")
       val seenDir = s"$root/seen"; val outDir = s"$root/out"
       Seq.empty[(String, Long)].toDF("s", "fd").write.parquet(seenDir)
       // doc_id-ORDERED replay: first-seen attribution needs arrival

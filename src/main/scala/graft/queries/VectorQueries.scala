@@ -963,13 +963,7 @@ object VectorQueries {
     // production).
     RQ("j10_stream_ivf_index", Some(ivfAnnSql))((s, dir) => {
       import s.implicits._
-      Option(new java.io.File("/tmp/graft_fixtures").listFiles)
-        .getOrElse(Array.empty)
-        .filter(f => f.getName.matches("j10_idx_\\d+_\\d+") &&
-          Fixtures.sweepable(f.getName.split("_")(2).toLong))
-        .foreach(Fixtures.rm)
-      val root = s"/tmp/graft_fixtures/j10_idx_" +
-        s"${ProcessHandle.current.pid}_${System.nanoTime}"
+      val root = Fixtures.scratchDir("j10_idx")
       val e = emb(s, dir)
       val cents = ivfCents(e)
       val data = e.select(col("vec_id"), col("embedding"))

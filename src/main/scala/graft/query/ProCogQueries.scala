@@ -47,19 +47,7 @@ object ProCogQueries {
     * null-preserving counts).
     */
   def searchEntries(g: GraphTables, substr: String,
-                    cutoff: Double, mode: CognateMode): DataFrame =
-    searchEntriesStages(g, substr, cutoff, mode).last._2
-
-  /** [[searchEntries]] decomposed into its labeled component aggregates
-    * (VERDICT r12 item 1): the bench replays each stage under a
-    * `diag:p2_<stage>` job group after the timed run, so the artifact
-    * can NAME where p2's executor cost lands on any host class —
-    * matched-filter scan, be-count aggregate, cognate-count join, or
-    * the final assembly — instead of one opaque per-query number.
-    * The last element IS the full query (searchEntries returns it).
-    */
-  def searchEntriesStages(g: GraphTables, substr: String,
-      cutoff: Double, mode: CognateMode): Seq[(String, DataFrame)] = {
+                    cutoff: Double, mode: CognateMode): DataFrame = {
     val simsDf = sims(g, cutoff, mode)
     val matched =
       g.entries.filter(upper(col("pdbEntry")).contains(substr.toUpperCase))
@@ -85,14 +73,12 @@ object ProCogQueries {
     val cogCounts = be.select("ok", "ligandUniqueID")
       .join(simsDf.select("ligandUniqueID", "cogId"), "ligandUniqueID")
       .groupBy("ok").agg(countDistinct(col("cogId")).as("cog_count"))
-    val assembled = matched
+    matched
       .join(beCounts, Seq("ok"), "left")
       .join(cogCounts, Seq("ok"), "left")
       .select(col("pdbEntry"),
         coalesce(col("be_count"), lit(0L)).as("be_count"),
         coalesce(col("cog_count"), lit(0L)).as("cog_count"))
-    Seq("matched" -> matched, "be_counts" -> beCounts,
-      "cog_counts" -> cogCounts, "assemble" -> assembled)
   }
 
   /** Domain Interactions table (yaml:67-71): the 5-hop pattern

@@ -204,6 +204,77 @@ class BenchHygieneSpec extends SparkSpec {
     }
   }
 
+  describe("Fixtures.scratchDir") {
+
+    it("gives every call its own dir, sweeps dead owners' siblings and keeps a live owner's") {
+      val prefix = s"scratchspec_${System.nanoTime()}"
+      val root = "/tmp/graft_fixtures"
+      val child = new ProcessBuilder("true").start()
+      child.waitFor()
+      val dead = new java.io.File(root, s"${prefix}_${child.pid}_1")
+      val own = new java.io.File(root,
+        s"${prefix}_${ProcessHandle.current.pid}_2")
+      dead.mkdirs(); own.mkdirs()
+      val a = Fixtures.scratchDir(prefix)
+      val b = Fixtures.scratchDir(prefix)
+      assert(a !== b, "two calls share a dir — concurrent writers collide")
+      assert(a.startsWith(s"$root/${prefix}_${ProcessHandle.current.pid}_"))
+      assert(!dead.exists(), "a dead process's sibling was not swept")
+      assert(own.exists(), "a live process's dir was swept from under it")
+      Fixtures.rm(own)
+    }
+  }
+
+  describe("Bench's output") {
+
+    it("is three JSON lines: the record, a tail that fits the driver's window with the canonical line, the canonical line last") {
+      import graft.{Bench, BenchRun, HostStat, QRes, TaskMetricsSnapshot}
+      val results = (1 to 230).map { i =>
+        QRes(f"q$i%03d_synthetic_query_name_pad", i * 0.125,
+          ok = i != 7 && i != 100, ev = i % 3, bev = 0L,
+          TaskMetricsSnapshot(i * 10L, i * 8L, 1L, 2048L, 2048L, 0L,
+            1 << 20, 1000L, 8L),
+          buildMs = i, planMs = i / 2, gzipMb = 0.0, gzipStreams = 0L,
+          HostStat.Delta(i * 20L, 5L, 0L, 0L))
+      }
+      val sf = "/data/sf \"quoted\" \\back\\slash"
+      val run = BenchRun(sf, results, warmupSec = 12.5,
+        warmupFailed = Seq("lineitem"),
+        warmupSteps = Map("graph_registry" -> 9.0, "nation" -> 0.2),
+        graphOk = true, residencyLow = Seq("entries" -> 0.5),
+        rewarmed = Seq("entries"), sweeps = Seq("a" -> 0.25),
+        refreshSec = 0.0, refreshes = 0,
+        speedProbes = Seq("start" -> 10.0, "end" -> 11.5), deflateMbps = 80.0,
+        nativeZlib = false, icu = "false", chemClass = "Chem\"Kit\\",
+        chemPure = true, chemPath = "factorized")
+      val out = Bench.lines(Bench.record(run, new StorageTelemetry),
+        "/tmp/bench_out_c4.json")
+      assert(out.size === 3)
+      val strict = new com.fasterxml.jackson.databind.ObjectMapper()
+        .enable(com.fasterxml.jackson.databind.DeserializationFeature
+          .FAIL_ON_TRAILING_TOKENS)
+      val Seq(rec, tail, canonical) = out.map(strict.readTree)
+      val ok = results.filter(_.ok)
+      assert(out.last === Bench.totalLine(ok.map(_.sec).sum, 228, 2,
+        "/tmp/bench_out_c4.json", sf,
+        ok.map(r => r.name -> r.sec).sortBy(-_._2)))
+      assert(out(1).length + out(2).length + 72 + 3 <= 2000,
+        "tail + canonical + sbt's [success] line overflow the 2000-char window")
+      assert(tail.get("metric").asText === "tail")
+      assert(tail.get("value").asDouble === rec.get("value").asDouble)
+      assert(canonical.get("metric").asText === "total")
+      assert(rec.get("sf").asText === sf && canonical.get("sf").asText === sf)
+      assert(rec.get("n").asInt === 228 && rec.get("failed_n").asInt === 2)
+      assert(rec.get("queries").size === 228)
+      for (p <- Seq("/warmup_run", "/telemetry/icu", "/telemetry/procs",
+             "/telemetry/probe_max_ms", "/failed_head", "/build_sec",
+             "/plan_sec"))
+        assert(!rec.at(p).isMissingNode, s"record lacks $p")
+      assert(rec.at("/telemetry/chem_class").asText === "Chem\"Kit\\")
+      assert(rec.at("/failed_head/1").asText === "q100_synthetic_query_name_pad")
+    }
+  }
+
   describe("Bench's canonical total line") {
     it("is built from parts: placeholder tokens in a path are data, not holes") {
       val sf = "/data/QMAP_OMIT/sf0.1"
