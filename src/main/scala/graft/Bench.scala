@@ -260,8 +260,8 @@ object Bench {
         "probe_max_ms" -> r.speedProbes.map(_._2).max),
       "warmup_failed" -> r.warmupFailed,
       // only the interesting steps: per-table touches under 1 s are noise.
-      // WALL seconds (graph:* walls overlap under concurrency; graphwait:*
-      // is pool-queue delay), except graphrun:* = executor run seconds
+      // WALL seconds (graph:* walls overlap under concurrency; executor
+      // seconds per registry table are warmup_run's)
       "warmup_steps" -> obj(r.warmupSteps.toSeq.filter(_._2 >= 1.0)
         .sortBy(-_._2): _*),
       // executor seconds per registry table: these sum coherently, so
@@ -315,14 +315,6 @@ object Bench {
     val warmPool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val warmEc: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(warmPool)
-    // the graph step blocks in Await on its inner per-phase futures — it
-    // gets a DEDICATED pool so those inner futures can never be starved
-    // by (or starve) the warmPool's other steps (ADVICE r9: the previous
-    // same-pool nesting was deadlock-free only while fGraph was the
-    // single blocking task)
-    val graphPool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    val graphEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(graphPool)
     def step(name: String)(body: => Unit): scala.concurrent.Future[Unit] =
       scala.concurrent.Future {
         val t0 = System.nanoTime()
@@ -448,102 +440,41 @@ object Bench {
     // timed (import_neo4j_data.sh runs once; neodash queries assume a live
     // DB). The build cost itself is not hidden from the bench — the ETL
     // path is measured by etl1_contacts_stage/etl2_flat_export.
-    // A warmup failure must not kill the whole bench — the p-queries will
-    // report the build error themselves via the per-query try below — but
-    // it MUST be a visible artifact field: graph_warmup_ok=false means the
-    // first registry-served query paid the full build (exactly the
-    // hypothesis the r7 record could not check for p2=64 s).
-    var graphOpt: Option[graft.graph.GraphTables] = None
-    // one retry: a transient build failure here would otherwise charge
-    // the full registry build to the first registry-served query (the
-    // only mechanism that fits r7's p2 = 64 s — registry queries spike
-    // neither under 2× heap pressure nor under 3-writer dsync disk
-    // stress once the registry is resident; see STATUS round-8 repro).
-    // Materialization is PHASE-parallel (registryTablePhases): tables in
-    // a phase are independent and count() concurrently; phases respect
-    // build dependencies so no table is computed twice.
-    val fGraph = scala.concurrent.Future {
-      val t0 = System.nanoTime()
-      var graphAttempts = 0
-      while (graphOpt.isEmpty && graphAttempts < 2) {
-        graphAttempts += 1
-        try {
-          val g = graft.graph.GraphTables.cached(spark, sfDir)
-          g.registryTablePhasesNamed.foreach { phase =>
-            val counts = phase.map { case (name, df) =>
-              val tSubmit = System.nanoTime()
-              scala.concurrent.Future {
-                val t1 = System.nanoTime()
-                // queue→start delay: a table that waited on a pool slot
-                // shows its wait separately instead of inflating its wall
-                // (VERDICT r10 item 3: concurrent per-table walls measured
-                // scheduler interference, not table cost)
-                val waitSec = (t1 - tSubmit) / 1e9
-                if (waitSec >= 0.5)
-                  warmupSteps.put(s"graphwait:$name", waitSec)
-                // job-group tag: StorageTelemetry accumulates executor
-                // run-time per warm:<table> group — run-time is
-                // partitioned by task, so the graphrun:* entries below SUM
-                // coherently across concurrently-built tables, unlike the
-                // overlapping walls
-                spark.sparkContext.setJobGroup(s"warm:$name",
-                  s"registry warmup: $name", interruptOnCancel = false)
-                try df.queryExecution.toRdd.count()
-                finally spark.sparkContext.clearJobGroup()
-                warmupSteps.put(s"graph:$name",
-                  (System.nanoTime() - t1) / 1e9)
-              }(graphEc) }
-            counts.foreach(f => scala.concurrent.Await.result(
-              f, scala.concurrent.duration.Duration.Inf))
-          }
-          graphOpt = Some(g)
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[bench] graph warmup attempt $graphAttempts failed: ${e.getMessage}")
-        }
-      }
-      warmupSteps.put("graph_registry", (System.nanoTime() - t0) / 1e9)
+    // GraphTables.warm materializes phase by phase, the tables of a phase
+    // concurrently, each under its warm:<table> job group (warmup_run).
+    val fGraph = step("graph_registry") {
+      graft.graph.GraphTables.cached(spark, sfDir).warm()
+        .foreach(w => warmupSteps.put(s"graph:${w.table}", w.sec))
     }
     (fTables ++ Seq(fSynth, fEtl1, fS5, fGraph)).foreach(f =>
       scala.concurrent.Await.result(f,
         scala.concurrent.duration.Duration.Inf))
     warmPool.shutdown()
-    graphPool.shutdown()
-    // true per-table executor cost (sums coherently — see the job-group
-    // comment above); the bus may still hold a few task-end events but
-    // warmup attribution is a floor, not accounting
-    GraftCacheBridge.drainListenerBus(spark)
-    telemetry.warmGroupRunMs.foreach { case (name, ms) =>
-      warmupSteps.put(s"graphrun:$name", ms / 1e3)
-    }
     // ---- registry-residency CANARY (VERDICT r11 item 3) ----------------
-    // Before anything is timed: every registry table must be storage-
-    // resident, partition by partition. A table that reports < 1.0 here
+    // Before anything is timed, a second warm(): every registry table must
+    // be storage-resident, partition by partition. A table below 1.0 here
     // would silently recompute its full lineage inside whichever measured
     // query touches it first (the only mechanism that fits r11's
-    // p2 = 659 exec-s over 0.3 MB of shuffle). Non-resident tables are
-    // re-materialized UNTIMED via count() — block-level get-or-compute
-    // fills exactly the missing partitions without a new RDD id, so the
-    // baseline snapshot below still covers them — and both the observed
-    // fractions and the rewarm list are artifact fields.
-    val rewarmed = scala.collection.mutable.ArrayBuffer[String]()
-    val residencyLow = scala.collection.mutable.LinkedHashMap[String, Double]()
-    graphOpt.foreach { g =>
-      g.registryTablePhasesNamed.flatten.foreach { case (name, df) =>
-        val frac = GraftCacheBridge.residency(spark, df).getOrElse(0.0)
-        if (frac < 1.0) {
-          residencyLow(name) = frac
-          val t0 = System.nanoTime()
-          spark.sparkContext.setJobGroup(s"warm:rewarm_$name",
-            s"registry rewarm: $name", interruptOnCancel = false)
-          try df.queryExecution.toRdd.count()
-          finally spark.sparkContext.clearJobGroup()
-          warmupSteps.put(s"rewarm:$name", (System.nanoTime() - t0) / 1e9)
-          rewarmed += name
-        }
-      }
+    // p2 = 659 exec-s over 0.3 MB of shuffle), so warm() refills it
+    // untimed under the same RDD id — the baseline snapshot below still
+    // covers it — and the residency it found and the rewarm list are
+    // artifact fields. The same call is the warm-up's retry: after a
+    // failed first attempt (recorded in warmup_failed) it builds what is
+    // missing. A failure here must not kill the whole bench — the
+    // p-queries report the build error themselves — but it MUST be a
+    // visible field: graph_warmup_ok=false means the first registry-served
+    // query paid the full build (the hypothesis the r7 record could not
+    // check for p2 = 64 s).
+    val canary = try {
+      val g = graft.graph.GraphTables.cached(spark, sfDir)
+      Some(g -> g.warm())
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] graph warmup failed: ${e.getMessage}")
+      None
     }
-    if (rewarmed.nonEmpty) GraftCacheBridge.drainListenerBus(spark)
+    val graphOpt = canary.map(_._1)
+    val rewarmed = canary.toSeq.flatMap(_._2)
+    GraftCacheBridge.drainListenerBus(spark)
     val warmupSec = (System.nanoTime() - tWarm0) / 1e9
     // keep-set for the between-family sweeps: everything persisted so far
     // (graph registry, warmup caches) survives the whole run, exactly as
@@ -583,11 +514,11 @@ object Bench {
       if (telemetry.baselineEvicted > baselineEvictMark) {
         graphOpt.foreach { g =>
           val t0 = System.nanoTime()
-          g.registryTables.foreach { df =>
+          g.registryTablePhasesNamed.flatten.foreach { case (_, df) =>
             df.unpersist(blocking = true)
             df.persist()
-            df.queryExecution.toRdd.count()
           }
+          g.warm()
           refreshSec += (System.nanoTime() - t0) / 1e9
           refreshes += 1
           // re-persist assigns new RDD ids — re-snapshot the keep-set
@@ -684,7 +615,8 @@ object Bench {
     import scala.jdk.CollectionConverters._
     val rec = record(BenchRun(sfDir, results, warmupSec,
       warmupFailed.asScala.toSeq, warmupSteps.asScala.toMap, graphOpt.nonEmpty,
-      residencyLow.toSeq, rewarmed.toSeq, sweepSecs.toSeq, refreshSec,
+      rewarmed.map(w => w.table -> w.residency), rewarmed.map(_.table),
+      sweepSecs.toSeq, refreshSec,
       refreshes, speedProbes.toSeq, deflateMbps,
       nativeZlib = org.apache.hadoop.io.compress.zlib.ZlibFactory
         .isNativeZlibLoaded(spark.sparkContext.hadoopConfiguration),

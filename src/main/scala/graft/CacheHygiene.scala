@@ -28,48 +28,36 @@ object CacheHygiene {
   /** Ids of currently persisted RDDs — the keep-set for later sweeps. */
   def snapshot(sc: SparkContext): Set[Int] = sc.getPersistentRDDs.keySet.toSet
 
-  /** Unpersist every RDD persisted since `baseline` and drive one GC so
-    * the ContextCleaner's weak-ref queues (shuffles, broadcasts, the
-    * localCheckpoint blocks of already-consumed results) drain too.
-    */
-  def sweep(sc: SparkContext, baseline: Set[Int]): Unit =
-    sweep(sc, baseline, blocking = false)
-
-  /** `blocking = true` waits for each block removal to complete before
+  /** Drops everything persisted since `baseline` — CacheManager ENTRIES
+    * (`Dataset.persist` registrations) and persisted RDDs — then drives
+    * one GC so the ContextCleaner's weak-ref queues (shuffles,
+    * broadcasts, the localCheckpoint blocks of already-consumed results)
+    * drain too. Dropping only the RDDs would leave the entry behind, with
+    * two costs: the entry list grows monotonically across a 158-query run
+    * (every plan substitution walks it), and any LATER query whose plan
+    * matches a swept entry silently recomputes through the dead
+    * InMemoryRelation on every action without re-caching — columnar
+    * encode each time, strictly slower than no cache. Baseline membership
+    * is decided by the entry's column-buffer RDD id; an entry that never
+    * materialized has no blocks and is dropped too (re-persisting is one
+    * call away for any plan that actually returns).
+    *
+    * `blocking = true` waits for each removal to complete before
     * returning — the bench uses it so the removals' listener events are
     * POSTED by the time it drains the bus and samples its telemetry
     * counters (an async sweep's in-flight removals would be charged to
-    * the next query's eviction delta). Verify keeps the async default.
+    * the next query's eviction delta). Verify sweeps asynchronously.
     */
-  def sweep(sc: SparkContext, baseline: Set[Int], blocking: Boolean): Unit = {
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!baseline.contains(id)) rdd.unpersist(blocking = blocking)
-    }
-    System.gc()
-  }
-
-  /** Session-aware sweep: additionally drops non-baseline CacheManager
-    * ENTRIES (`Dataset.persist` registrations), not just their blocks.
-    * An RDD-only sweep leaves the entry behind, with two costs: the
-    * entry list grows monotonically across a 158-query run (every plan
-    * substitution walks it), and any LATER query whose plan matches a
-    * swept entry silently recomputes through the dead InMemoryRelation
-    * on every action without re-caching — columnar encode each time,
-    * strictly slower than no cache. Baseline membership is decided by
-    * the entry's column-buffer RDD id; an entry that never materialized
-    * has no blocks and is dropped too (re-persisting is one call away
-    * for any plan that actually returns).
-    */
-  def sweep(spark: SparkSession, baseline: Set[Int]): Unit =
-    sweep(spark, baseline, blocking = false)
-
   def sweep(spark: SparkSession, baseline: Set[Int],
             blocking: Boolean): Unit = {
     GraftCacheBridge.entries(spark).foreach { case (plan, rddId) =>
       if (!rddId.exists(baseline.contains))
         GraftCacheBridge.uncache(spark, plan, blocking = blocking)
     }
-    sweep(spark.sparkContext, baseline, blocking = blocking)
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!baseline.contains(id)) rdd.unpersist(blocking = blocking)
+    }
+    System.gc()
   }
 
   /** Query family of a registered-query name: the letter prefix before

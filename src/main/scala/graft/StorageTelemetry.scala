@@ -155,17 +155,17 @@ final class StorageTelemetry extends SparkListener {
     inBytes.get(), inRecords.get(), taskCnt.get())
 
   // ---- job-group executor-time attribution (VERDICT r10 item 3) --------
-  // The warmup materializes registry tables CONCURRENTLY, so per-table
+  // The warm-up materializes registry tables CONCURRENTLY, so per-table
   // WALL clocks overlap — each includes the others' CPU contention and
   // the walls don't sum to anything meaningful. Executor task run-time is
   // partitioned by task, so run-time keyed by the submitting job group
-  // sums coherently across concurrent tables: the warmup sets a
+  // sums coherently across concurrent tables: GraphTables.warm sets a
   // `warm:<table>` job group around each materialization and the artifact
   // reports true per-table executor cost next to the overlapping walls.
   // Tagged at job START (stage ids are known there; TaskEnd only carries
   // stageId). A shuffle stage reused by a later job keeps its first tag —
   // fine for attribution: the work ran once, under the first group.
-  // Two tracked prefixes: `warm:` (Bench's registry warmup, one group per
+  // Two tracked prefixes: `warm:` (GraphTables.warm, one group per
   // registry table) and `sink:` (ExportStage's per-sink write jobs —
   // VERDICT r11 item 2: has_similarity_rels' 100.6 s driver wall needed
   // per-sink input rows to decide recompute vs host).
@@ -198,11 +198,7 @@ final class StorageTelemetry extends SparkListener {
     }.toMap
   }
 
-  /** Executor run-ms per `warm:`-prefixed job group (prefix stripped). */
-  def warmGroupRunMs: Map[String, Long] =
-    groupStats("warm:").map { case (k, v) => k -> v.runMs }
-
-  /** Full executor stats per `warm:` group — the decomposition fields. */
+  /** Executor stats per `warm:` group (GraphTables.warm), prefix stripped. */
   def warmGroupStats: Map[String, GroupStats] = groupStats("warm:")
 
   /** Full executor stats per `sink:` group (ExportStage writes). */

@@ -13,16 +13,14 @@ object Verify {
     val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // build the graph registry BEFORE the cache-hygiene baseline so the
+    // warm the graph registry BEFORE the cache-hygiene baseline so the
     // between-family sweeps never evict it (Bench does the same; the
     // dashboard families query it like the bulk-imported reference DB).
     // Skipped for filtered dev runs: iterating on one non-graph query
     // must not pay the full registry build — a kept query that does need
     // it builds it lazily through GraphTables.cached
-    if (args.length <= 2) try {
-      graft.graph.GraphTables.cached(spark, sfDir)
-        .registryTables.foreach(_.queryExecution.toRdd.count())
-    } catch { case scala.util.control.NonFatal(e) =>
+    if (args.length <= 2) try graft.graph.GraphTables.cached(spark, sfDir).warm()
+    catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[verify] graph warmup failed: ${e.getMessage}")
     }
     val baseline = CacheHygiene.snapshot(spark.sparkContext)
@@ -40,7 +38,7 @@ object Verify {
       .filter(rq => keep(rq.name)).foreach { rq =>
       val fam = CacheHygiene.family(rq.name)
       if (sweeping && prevFamily.nonEmpty && fam != prevFamily)
-        CacheHygiene.sweep(spark.sparkContext, baseline)
+        CacheHygiene.sweep(spark, baseline, blocking = false)
       prevFamily = fam
       try rq.build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/${rq.name}")

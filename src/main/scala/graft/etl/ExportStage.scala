@@ -64,17 +64,12 @@ object ExportStage {
     * dimension-bounded alike — is an independent task over shared
     * (persisted) lineages, and submitting them serially pays per-job
     * scheduling latency in wall-clock. Eight in flight keeps the
-    * scheduler busy without starving any single job of cores. The
-    * residency gate's probes run on the same slots.
+    * scheduler busy without starving any single job of cores.
     */
   private val WriteSlots = 8
 
   def run(g: GraphTables, outDir: String): Seq[(String, String)] = {
     ExportTelemetry.reset()
-    // fast deflate for the ~70 gzip sink writes, set ONCE here while
-    // single-threaded — mutating the shared hadoopConfiguration from the
-    // pool's sink threads would race per-job Configuration cloning
-    Sinks.ensureFastDeflate(g.entries.sparkSession)
     // the pool's lifecycle lives HERE so a failure anywhere in the body —
     // plan construction included, not just the writes — still shuts it
     // down; daemon threads are the second line of defense against
@@ -146,71 +141,27 @@ object ExportStage {
     // several write jobs consume. Registered so the finally below
     // releases it on EVERY exit path — including a construction or
     // materialization failure mid-body — not just after a clean settle.
-    // Concurrent: the residency probes append from pool threads.
-    val sharedPersists =
-      new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    val sharedPersists = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def shared(df: DataFrame, name: String = ""): DataFrame = {
       val p = df.persist()
-      sharedPersists.add(p)
+      sharedPersists += p
       val t0 = System.nanoTime()
       p.queryExecution.toRdd.count()
       if (name.nonEmpty)
         ExportTelemetry.record(s"shared:$name", (System.nanoTime() - t0) / 1e9)
       p
     }
-    // ---- input-residency gate (VERDICT r11 item 2) ---------------------
-    // The expensive fact sinks read the registry's persisted tables
-    // (has_similarity_rels: similarity + boundEntities; the per-DB splits:
-    // interacts). A partition that lost storage residency recomputes its
-    // FULL lineage inside every sink that touches it — r11's driver run
-    // paid 100.6 + 66.7 s on two similarity-family sinks this way. Gate:
-    // probe each consumed registry table at stage entry; missing
-    // partitions are re-materialized ONCE via count() (block-level
-    // get-or-compute fills exactly the holes, same RDD id, so the bench's
-    // baseline snapshot still covers the table); a table with no cache
-    // entry at all (a non-`cached()` caller) is persisted for the stage
-    // and released in the finally. The three tables are GraphTables'
-    // independent phase-1 registry tables, so they are probed
-    // concurrently on the pool, and all three settle before the first
-    // write is submitted. Outcomes land in ExportTelemetry as
-    // rewarm:/materialize:/persist:<table> walls — per-sink input
-    // provenance is the sink:<name> job-group stats recorded around
-    // each write.
     try {
-      Seq("boundEntities" -> g.boundEntities, "interacts" -> g.interacts,
-          "similarity" -> g.similarity).foreach { case (name, df) =>
-        task {
-          org.apache.spark.sql.graftx.GraftCacheBridge
-            .residency(spark, df) match {
-            case Some(frac) if frac < 1.0 =>
-              val t0 = System.nanoTime()
-              df.queryExecution.toRdd.count()
-              ExportTelemetry.record(s"rewarm:$name",
-                (System.nanoTime() - t0) / 1e9)
-            case Some(_) => () // fully resident — every sink reads blocks
-            case None if org.apache.spark.sql.graftx.GraftCacheBridge
-                .hasCacheEntry(spark, df) =>
-              // the CALLER persisted this table but its buffers never
-              // materialized (warmup skipped or failed) — count() fills
-              // the caller's OWN entry; persisting here and releasing in
-              // the finally would instead remove the caller's cache so
-              // every later consumer silently recomputes full lineage
-              // (ADVICE r12)
-              val t0 = System.nanoTime()
-              df.queryExecution.toRdd.count()
-              ExportTelemetry.record(s"materialize:$name",
-                (System.nanoTime() - t0) / 1e9)
-            case None =>
-              val t0 = System.nanoTime()
-              val p = df.persist()
-              sharedPersists.add(p)
-              p.queryExecution.toRdd.count()
-              ExportTelemetry.record(s"persist:$name",
-                (System.nanoTime() - t0) / 1e9)
-          }
-        }
-      }
-      settle()
+      // The expensive fact sinks read the registry's phase-1 tables
+      // (has_similarity_rels: similarity + boundEntities; the per-DB
+      // splits: interacts). A partition that lost storage residency would
+      // recompute its FULL lineage inside every sink that touches it —
+      // r11's driver run paid 100.6 + 66.7 s on two similarity-family
+      // sinks this way — so the registry's own warm-up refills them once,
+      // before the first write is submitted. A table the caller never
+      // persisted (a `GraphTables.build` registry) stays unpersisted.
+      g.warm(Seq(g.corePhase)).foreach(w =>
+        ExportTelemetry.record(s"warm:${w.table}", w.sec))
 
       // ---- core graph (the round-1 seven) ------------------------------
       write("entry_nodes", g.entries.select("pdbEntry"),
@@ -607,7 +558,7 @@ object ExportStage {
         firstFailure.compareAndSet(null, e)
         pending.foreach(Await.ready(_, Duration.Inf))
         throw e
-    } finally sharedPersists.forEach(_.unpersist(blocking = false))
+    } finally sharedPersists.foreach(_.unpersist(blocking = false))
     written.toSeq
   }
 }

@@ -153,7 +153,6 @@ object SourceQueries {
         .join(t(s, dir, "customer"), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_nationkey").cast("long").as("key"), col("n_name").as("name"))
         .agg(array_sort(collect_set(col("c_mktsegment"))).as("segments"))
-      Sinks.ensureFastDeflate(s)
       Sinks.neo4jTsv(nodes, path, Map("key" -> "key:ID(nation)"))
       Sinks.readNeo4jTsv(s, path)
         .select(col("key:ID(nation)").cast("long").as("key"), col("name"),

@@ -18,8 +18,8 @@ import org.apache.hadoop.io.compress.zlib.ZlibFactory
   *     `Deflater.DEFAULT_COMPRESSION`, which IGNORES the conf key
   *     entirely.
   *
-  * Setting only the conf key (the previous `Sinks.ensureFastDeflate`
-  * approach) is therefore a silent no-op on any host without native
+  * Setting only the session-wide conf key (the approach this codec
+  * replaced) is therefore a silent no-op on any host without native
   * Hadoop libs — exactly the sandbox sbt runs in, where the round-7/8
   * bench records measured the Neo4j export inventory (65 gzip sinks) at
   * ~74 s unchanged across the "fix". This codec covers both paths: the

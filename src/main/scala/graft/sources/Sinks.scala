@@ -8,45 +8,6 @@ import org.apache.spark.sql.types._
   */
 object Sinks {
 
-  /** A10 — Neo4j bulk-import TSV+gzip sink (produce_neo4j_files.py:83-562;
-    * header contract consumed by import_neo4j_data.sh:3-78).
-    *
-    * Array columns stay `ArrayType` until this boundary and are serialized
-    * with the `|` delimiter here (`--array-delimiter="|"`); headers are
-    * rewritten to the `name:TYPE` / `:ID(space)` / `:START_ID` forms.
-    *
-    * `headerFor` maps plain column names to Neo4j header names, e.g.
-    * `Map("uniqueID" -> "uniqueID:ID(be-id)", "score" -> "score:float")`;
-    * unmapped columns derive a typed header from their Spark type.
-    */
-  /** neo4j-admin honors a header only in the FIRST file of a group, so a
-    * multi-partition write with per-part headers would feed later files'
-    * header lines in as data. The layout here is the tool's own contract
-    * for that: one driver-written `header.tsv` plus headerless gzip data
-    * parts under `data/` — imported as `--nodes=header.tsv,data/part-.*`.
-    */
-  /** BEST_SPEED deflate for this session's gzip sinks: the Neo4j export
-    * writes ~70 gzip files and default-level deflate made the full
-    * inventory the most CPU/IO-bound query in the bench (etl3 73.9 s on
-    * the round-7 driver record). Level 1 keeps the .gz import contract
-    * (neo4j-admin only needs a valid gzip stream) at a fraction of the
-    * compression CPU.
-    *
-    * Two mechanisms, because Hadoop's GzipCodec has two codec paths:
-    * the conf key below configures the NATIVE zlib compressor (when
-    * `NativeCodeLoader.isNativeCodeLoaded`), and [[FastGzipCodec]] —
-    * which `neo4jTsv` now passes as the writer's compression codec —
-    * pins BEST_SPEED on the JDK `GZIPOutputStream` fallback too, where
-    * the conf key is silently ignored (the round-7/8 driver records
-    * measured etl3 at ~74 s unchanged because of exactly that gap).
-    * SESSION-SCOPED and idempotent; call from a single-threaded setup
-    * point, never from concurrent sink threads: per-job Configuration
-    * cloning races with a mid-flight mutation.
-    */
-  def ensureFastDeflate(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sparkContext.hadoopConfiguration
-      .set("zlib.compress.level", "BEST_SPEED")
-
   /** Typed Neo4j header line for a schema (shared by the fact and
     * dimension writers — ONE definition of the name:TYPE derivation).
     */
@@ -111,6 +72,23 @@ object Sinks {
       }
     }: _*)
 
+  /** A10 — Neo4j bulk-import TSV+gzip sink (produce_neo4j_files.py:83-562;
+    * header contract consumed by import_neo4j_data.sh:3-78).
+    *
+    * Array columns stay `ArrayType` until this boundary and are serialized
+    * with the `|` delimiter here (`--array-delimiter="|"`); headers are
+    * rewritten to the `name:TYPE` / `:ID(space)` / `:START_ID` forms.
+    *
+    * `headerFor` maps plain column names to Neo4j header names, e.g.
+    * `Map("uniqueID" -> "uniqueID:ID(be-id)", "score" -> "score:float")`;
+    * unmapped columns derive a typed header from their Spark type.
+    *
+    * neo4j-admin honors a header only in the FIRST file of a group, so a
+    * multi-partition write with per-part headers would feed later files'
+    * header lines in as data. The layout here is the tool's own contract
+    * for that: one driver-written `header.tsv` plus headerless gzip data
+    * parts under `data/` — imported as `--nodes=header.tsv,data/part-.*`.
+    */
   def neo4jTsv(df: DataFrame, path: String,
                headerFor: Map[String, String] = Map.empty): Unit = {
     // ONE codegen'd projection → the text writer, not the CSV writer:

@@ -46,7 +46,6 @@ object SinkProbe {
       joined.select(line.as("value")).write.format("noop")
         .mode("overwrite").save()
     }
-    graft.sources.Sinks.ensureFastDeflate(spark)
     time("text_gz") {
       joined.select(line.as("value")).write.mode("overwrite")
         .option("compression", graft.sources.FastGzipCodec.name)

@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.CachedData
+import org.apache.spark.storage.{BlockId, RDDBlockId}
 
-/** Access to the session CacheManager's entry list for cache hygiene
-  * (graft.CacheHygiene): `Dataset.persist` registers a (logical plan →
+/** Access to the session CacheManager for cache hygiene
+  * (graft.CacheHygiene) and the registry warm-up (graft.graph.GraphTables
+  * .warm): `Dataset.persist` registers a (logical plan →
   * InMemoryRelation) entry there, and unpersisting only the underlying
   * RDD (all a `SparkContext.getPersistentRDDs` sweep can reach) leaves
   * the entry behind — the catalog grows monotonically across a long
@@ -56,52 +58,33 @@ object GraftCacheBridge {
       .uncacheQuery(cs, plan, cascade = false, blocking = blocking)
   }
 
-  /** Storage residency of a persisted DataFrame: Some(cached partitions /
-    * total partitions) of its column-buffer RDD, None when the plan has no
-    * CacheManager entry or the buffers never materialized. 1.0 = every
-    * partition is storage-resident (memory or disk — either serves reads
-    * without recomputing the lineage); < 1.0 = the missing partitions
-    * recompute through the full lineage on the next action, silently.
-    * This is the registry-residency CANARY the r11 bench lacked: the
-    * driver's domainCognate/p2/etl3 blowups all fit "a registry input
-    * lost residency and every consumer recomputed", but no artifact field
-    * could confirm residency at the moment the timed section started.
+  /** Storage residency of a persisted DataFrame, the one test
+    * `GraphTables.warm` decides with: None when the plan has no
+    * CacheManager entry (nobody persisted it); Some(0.0) when it has an
+    * entry whose column buffers have not loaded; otherwise Some(cached
+    * partitions / total partitions) of its column-buffer RDD, read from
+    * the block manager master (synchronous — the status store behind
+    * `getRDDStorageInfo` lags the async listener bus). 1.0 = every
+    * partition is storage-resident (memory or disk); < 1.0 = the missing
+    * partitions would recompute through the full lineage on the next
+    * action, silently.
     */
   def residency(s: SparkSession, df: org.apache.spark.sql.DataFrame)
       : Option[Double] = {
     val cs = s.asInstanceOf[classic.SparkSession]
     val ds = df.asInstanceOf[classic.Dataset[_]]
-    cs.sharedState.cacheManager.lookupCachedData(ds).flatMap { cd =>
+    cs.sharedState.cacheManager.lookupCachedData(ds).map { cd =>
       val b = cd.cachedRepresentation.cacheBuilder
-      if (!b.isCachedColumnBuffersLoaded) None
+      if (!b.isCachedColumnBuffersLoaded) 0.0
       else {
-        val id = b.cachedColumnBuffers.id
-        // getRDDStorageInfo omits RDDs with zero cached blocks — loaded
-        // buffers absent from it mean "every partition dropped", not
-        // "never cached": report 0.0, the strongest canary signal
-        Some(s.sparkContext.getRDDStorageInfo.find(_.id == id).map { info =>
-          if (info.numPartitions == 0) 1.0
-          else info.numCachedPartitions.toDouble / info.numPartitions
-        }.getOrElse(0.0))
+        val rdd = b.cachedColumnBuffers
+        val n = rdd.partitions.length
+        if (n == 0) 1.0
+        else s.sparkContext.env.blockManager.master
+          .getLocations(Array.tabulate[BlockId](n)(RDDBlockId(rdd.id, _)))
+          .count(_.nonEmpty).toDouble / n
       }
     }
-  }
-
-  /** Whether the plan has a CacheManager entry at all — materialized or
-    * not. Distinguishes the two cases [[residency]] collapses to None:
-    * "caller persisted but buffers never loaded" (entry present — a
-    * count() materializes INTO the caller's entry) vs "never persisted"
-    * (no entry — the consumer must persist for itself). ExportStage's
-    * input-residency gate needs the distinction (ADVICE r12): treating a
-    * cached-but-unmaterialized registry table as uncached would persist
-    * AND RELEASE it in the stage's finally, silently removing the
-    * caller's cache entry so every later consumer recomputes lineage.
-    */
-  def hasCacheEntry(s: SparkSession, df: org.apache.spark.sql.DataFrame)
-      : Boolean = {
-    val cs = s.asInstanceOf[classic.SparkSession]
-    cs.sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[classic.Dataset[_]]).isDefined
   }
 
   /** Wait until the async listener bus has delivered every posted event

@@ -85,7 +85,7 @@ class BenchHygieneSpec extends SparkSpec {
         spark.range(1000).selectExpr("sum(id)")
           .queryExecution.toRdd.count() // untagged — must not register
         drain()
-        val g = t.warmGroupRunMs
+        val g = t.warmGroupStats.map { case (k, s) => k -> s.runMs }
         assert(g.keySet === Set("tblA", "tblB"),
           s"expected exactly the two warm groups, got ${g.keySet}")
         assert(g.values.forall(_ >= 0L))
