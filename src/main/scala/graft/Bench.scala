@@ -300,11 +300,11 @@ object Bench {
     spark.sparkContext.addSparkListener(telemetry)
 
     // ---- untimed warmup (telemetry-visible: duration + ok flags) -------
-    // The steps are mutually independent small jobs; run them CONCURRENTLY
-    // (VERDICT r8 item 7: 68.9 s of sequential warmup left 32 cores mostly
-    // idle). Spark's scheduler interleaves jobs submitted from separate
-    // threads; each step keeps its own failure recording, so the artifact
-    // fields are unchanged — only the wall time shrinks.
+    // The steps are mutually independent small jobs; they run as the
+    // tasks of one ActionPool scope (VERDICT r8 item 7: 68.9 s of
+    // sequential warmup left 32 cores mostly idle). Each step keeps its
+    // own non-fatal failure recording, so one failed step is a
+    // warmup_failed entry, not a failed run; a fatal error ends the run.
     val tWarm0 = System.nanoTime()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val warmupFailed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -312,18 +312,6 @@ object Bench {
     // attributes WHERE warmup time went, warmup_sec stays the wall total)
     val warmupSteps = new java.util.concurrent.ConcurrentHashMap[
       String, Double]()
-    val warmPool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val warmEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(warmPool)
-    def step(name: String)(body: => Unit): scala.concurrent.Future[Unit] =
-      scala.concurrent.Future {
-        val t0 = System.nanoTime()
-        try body
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
-          warmupFailed.add(name)
-        } finally warmupSteps.put(name, (System.nanoTime() - t0) / 1e9)
-      }
 
     // ~10 MB in-process BEST_SPEED deflate throughput probe (VERDICT r9
     // item 2): the r9 driver record charged etl3 ≈79 s of executor CPU
@@ -361,95 +349,100 @@ object Bench {
       mbps
     }
 
-    // JIT + codegen + parquet footer caches, so the first measured query
-    // doesn't carry session start-up cost. The synthetic plans exercise
-    // the operator classes most queries go through (hash agg + distinct
-    // expand, window sort, shuffle + broadcast join) so their JVM/janino
-    // warm-up cost isn't charged to whichever real query runs one first.
-    val fSynth = step("synthetic_plans") {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      spark.range(1000).selectExpr("sum(id)").queryExecution.toRdd.count()
-      val w = spark.range(100000).select(col("id"),
-        (col("id") % 100).as("k"), (col("id") % 7).as("v"))
-      w.groupBy("k").agg(countDistinct(col("v")), sum(col("id")))
-        .queryExecution.toRdd.count()
-      w.withColumn("r",
-          row_number().over(Window.partitionBy("k").orderBy("id")))
-        .filter(col("r") === 1).queryExecution.toRdd.count()
-      w.join(broadcast(spark.range(100).select(col("id").as("k"))), "k")
-        .groupBy("v").count().queryExecution.toRdd.count()
-      // global orderBy (RangePartitioner sampling + range exchange) and
-      // broadcast anti-join: the first measured queries paid these
-      // shapes' JIT/codegen inside their timed region (b2's plain
-      // filter+sort measured 2.6-3.4 s on both r13 baseline runs vs
-      // ~0.5 s warm-repeated; b7's anti-join similarly) — every shape
-      // here is one the b/c-family opens the run with
-      w.orderBy("k", "id").queryExecution.toRdd.count()
-      w.join(broadcast(spark.range(10).select(col("id").as("k"))),
-        Seq("k"), "left_anti").queryExecution.toRdd.count()
-      // text/codegen kernels the first t/h-family queries hit: regex,
-      // split+explode generate, md5/concat, case mapping
-      w.select(regexp_replace(concat_ws(" ", col("k"), col("v")),
-            "[0-9]+", "n").as("t"))
-        .select(explode(split(col("t"), " ")).as("tok"))
-        .select(md5(col("tok").cast("binary"))).queryExecution.toRdd.count()
-      // force the case-mapping slow path's one-time class initialization
-      // UNTIMED (GraftSession scaladoc): with ICU case mappings enabled,
-      // the first case expression an executor thread evaluates pays
-      // CollationAwareUTF8String.<clinit> — an ICU titlecase pass over
-      // all 1.1M Unicode code points (~10 s single-threaded on a slow
-      // host) with every concurrent case-mapping task BLOCKED on the
-      // class-init lock (the r11 driver's p2 = 659 exec-s signature).
-      // The engine runs with ICU off, so this is normally ~0 cost; it
-      // exists so an ICU-enabled run still measures queries, not JVM
-      // class init. Non-ASCII literal: the ASCII fast path would not
-      // touch the class.
-      spark.range(1).select(upper(lit("straße")), lower(lit("İĄß")),
-        initcap(lit("ätest"))).queryExecution.toRdd.count()
-    }
-    // touch every benched table once (footer + OS page cache): a query's
-    // measured time should be its plan, not whichever table it happens to
-    // fault in first — the 20 s-vs-1.4 s t6 outlier in round 5 was cold
-    // input I/O, not the MinHash plan. A missing table must fail only the
-    // queries that read it — recorded in warmup_failed, not fatal.
-    // Per-table steps so two tables fault in concurrently and one missing
-    // table is one warmup_failed entry, as before.
-    val fTables = Tables.names.map { t =>
-      step(t) {
-        spark.read.parquet(s"$sfDir/$t.parquet")
-          .queryExecution.toRdd.count()
+    ActionPool.run(spark) { pool =>
+      def step(name: String)(body: => Unit): Unit = pool.submit(name) {
+        try body
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
+          warmupFailed.add(name)
+        }
       }
-    }
-    // the etl1 JSON-lines fixture, pre-generated so the measured etl1
-    // region is the contacts stage (scan → filter → aggregate), not a
-    // full-table text write (28.3 s charged to etl1 on the r7 record)
-    val fEtl1 = step("etl1_fixture") {
-      graft.queries.EtlQueries.contactsFixture(spark, sfDir); ()
-    }
-    // s5's pid-keyed bucketed tables: the catalog is session-scoped, so a
-    // fresh JVM (every driver bench run) would otherwise pay both bucketed
-    // writes inside s5's timed region — install them untimed here so the
-    // measured s5 is the bucket-to-bucket join, not the fixture write
-    val fS5 = step("s5_fixture") {
-      graft.queries.ScaleQueries.installBucketedFixture(spark, sfDir); ()
-    }
-    // ...and the graph registry's persisted tables, untimed: the dashboard
-    // queries (p1-p11) serve against an already-built database, exactly as
-    // the reference's Neo4j is bulk-imported BEFORE any dashboard query is
-    // timed (import_neo4j_data.sh runs once; neodash queries assume a live
-    // DB). The build cost itself is not hidden from the bench — the ETL
-    // path is measured by etl1_contacts_stage/etl2_flat_export.
-    // GraphTables.warm materializes phase by phase, the tables of a phase
-    // concurrently, each under its warm:<table> job group (warmup_run).
-    val fGraph = step("graph_registry") {
-      graft.graph.GraphTables.cached(spark, sfDir).warm()
-        .foreach(w => warmupSteps.put(s"graph:${w.table}", w.sec))
-    }
-    (fTables ++ Seq(fSynth, fEtl1, fS5, fGraph)).foreach(f =>
-      scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf))
-    warmPool.shutdown()
+      // JIT + codegen + parquet footer caches, so the first measured query
+      // doesn't carry session start-up cost. The synthetic plans exercise
+      // the operator classes most queries go through (hash agg + distinct
+      // expand, window sort, shuffle + broadcast join) so their JVM/janino
+      // warm-up cost isn't charged to whichever real query runs one first.
+      step("synthetic_plans") {
+        import org.apache.spark.sql.expressions.Window
+        import org.apache.spark.sql.functions._
+        spark.range(1000).selectExpr("sum(id)").queryExecution.toRdd.count()
+        val w = spark.range(100000).select(col("id"),
+          (col("id") % 100).as("k"), (col("id") % 7).as("v"))
+        w.groupBy("k").agg(countDistinct(col("v")), sum(col("id")))
+          .queryExecution.toRdd.count()
+        w.withColumn("r",
+            row_number().over(Window.partitionBy("k").orderBy("id")))
+          .filter(col("r") === 1).queryExecution.toRdd.count()
+        w.join(broadcast(spark.range(100).select(col("id").as("k"))), "k")
+          .groupBy("v").count().queryExecution.toRdd.count()
+        // global orderBy (RangePartitioner sampling + range exchange) and
+        // broadcast anti-join: the first measured queries paid these
+        // shapes' JIT/codegen inside their timed region (b2's plain
+        // filter+sort measured 2.6-3.4 s on both r13 baseline runs vs
+        // ~0.5 s warm-repeated; b7's anti-join similarly) — every shape
+        // here is one the b/c-family opens the run with
+        w.orderBy("k", "id").queryExecution.toRdd.count()
+        w.join(broadcast(spark.range(10).select(col("id").as("k"))),
+          Seq("k"), "left_anti").queryExecution.toRdd.count()
+        // text/codegen kernels the first t/h-family queries hit: regex,
+        // split+explode generate, md5/concat, case mapping
+        w.select(regexp_replace(concat_ws(" ", col("k"), col("v")),
+              "[0-9]+", "n").as("t"))
+          .select(explode(split(col("t"), " ")).as("tok"))
+          .select(md5(col("tok").cast("binary"))).queryExecution.toRdd.count()
+        // force the case-mapping slow path's one-time class initialization
+        // UNTIMED (GraftSession scaladoc): with ICU case mappings enabled,
+        // the first case expression an executor thread evaluates pays
+        // CollationAwareUTF8String.<clinit> — an ICU titlecase pass over
+        // all 1.1M Unicode code points (~10 s single-threaded on a slow
+        // host) with every concurrent case-mapping task BLOCKED on the
+        // class-init lock (the r11 driver's p2 = 659 exec-s signature).
+        // The engine runs with ICU off, so this is normally ~0 cost; it
+        // exists so an ICU-enabled run still measures queries, not JVM
+        // class init. Non-ASCII literal: the ASCII fast path would not
+        // touch the class.
+        spark.range(1).select(upper(lit("straße")), lower(lit("İĄß")),
+          initcap(lit("ätest"))).queryExecution.toRdd.count()
+      }
+      // touch every benched table once (footer + OS page cache): a query's
+      // measured time should be its plan, not whichever table it happens to
+      // fault in first — the 20 s-vs-1.4 s t6 outlier in round 5 was cold
+      // input I/O, not the MinHash plan. A missing table must fail only the
+      // queries that read it — recorded in warmup_failed, not fatal.
+      // Per-table steps so two tables fault in concurrently and one missing
+      // table is one warmup_failed entry, as before.
+      Tables.names.foreach { t =>
+        step(t) {
+          spark.read.parquet(s"$sfDir/$t.parquet")
+            .queryExecution.toRdd.count()
+        }
+      }
+      // the etl1 JSON-lines fixture, pre-generated so the measured etl1
+      // region is the contacts stage (scan → filter → aggregate), not a
+      // full-table text write (28.3 s charged to etl1 on the r7 record)
+      step("etl1_fixture") {
+        graft.queries.EtlQueries.contactsFixture(spark, sfDir); ()
+      }
+      // s5's pid-keyed bucketed tables: the catalog is session-scoped, so a
+      // fresh JVM (every driver bench run) would otherwise pay both bucketed
+      // writes inside s5's timed region — install them untimed here so the
+      // measured s5 is the bucket-to-bucket join, not the fixture write
+      step("s5_fixture") {
+        graft.queries.ScaleQueries.installBucketedFixture(spark, sfDir); ()
+      }
+      // ...and the graph registry's persisted tables, untimed: the dashboard
+      // queries (p1-p11) serve against an already-built database, exactly as
+      // the reference's Neo4j is bulk-imported BEFORE any dashboard query is
+      // timed (import_neo4j_data.sh runs once; neodash queries assume a live
+      // DB). The build cost itself is not hidden from the bench — the ETL
+      // path is measured by etl1_contacts_stage/etl2_flat_export.
+      // GraphTables.warm materializes phase by phase, the tables of a phase
+      // concurrently, each under its warm:<table> job group (warmup_run).
+      step("graph_registry") {
+        graft.graph.GraphTables.cached(spark, sfDir).warm()
+          .foreach(w => warmupSteps.put(s"graph:${w.table}", w.sec))
+      }
+    }.foreach { case (name, sec) => warmupSteps.put(name, sec) }
     // ---- registry-residency CANARY (VERDICT r11 item 3) ----------------
     // Before anything is timed, a second warm(): every registry table must
     // be storage-resident, partition by partition. A table below 1.0 here

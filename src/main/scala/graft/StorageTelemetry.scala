@@ -165,10 +165,10 @@ final class StorageTelemetry extends SparkListener {
   // Tagged at job START (stage ids are known there; TaskEnd only carries
   // stageId). A shuffle stage reused by a later job keeps its first tag —
   // fine for attribution: the work ran once, under the first group.
-  // Two tracked prefixes: `warm:` (GraphTables.warm, one group per
-  // registry table) and `sink:` (ExportStage's per-sink write jobs —
-  // VERDICT r11 item 2: has_similarity_rels' 100.6 s driver wall needed
-  // per-sink input rows to decide recompute vs host).
+  // Every job group is tracked: each ActionPool task runs under its own
+  // (`warm:<table>` from GraphTables.warm, `sink:<name>` from
+  // ExportStage — VERDICT r11 item 2: has_similarity_rels' 100.6 s driver
+  // wall needed per-sink input rows to decide recompute vs host).
   private val stageGroup = new ConcurrentHashMap[Int, String]()
   private val groupAgg = new ConcurrentHashMap[String, GroupAgg]()
 
@@ -185,10 +185,7 @@ final class StorageTelemetry extends SparkListener {
     val g =
       if (j.properties == null) null
       else j.properties.getProperty("spark.jobGroup.id")
-    if (g != null && (g.startsWith("warm:") || g.startsWith("sink:"))) {
-      j.stageIds.foreach(sid => stageGroup.put(sid, g))
-      ()
-    }
+    if (g != null) j.stageIds.foreach(sid => stageGroup.put(sid, g))
   }
 
   private def groupStats(prefix: String): Map[String, GroupStats] = {

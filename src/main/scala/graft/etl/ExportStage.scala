@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ActionPool
 import graft.graph.GraphTables
 import graft.sources.Sinks
 
@@ -60,87 +61,14 @@ object ExportStage {
   def ecLevel(code: Column, n: Int): Column =
     concat_ws(".", (1 to n).map(i => element_at(split(code, "\\."), i)): _*)
 
-  /** Concurrent write slots: every sink write — fact-derived and
-    * dimension-bounded alike — is an independent task over shared
-    * (persisted) lineages, and submitting them serially pays per-job
-    * scheduling latency in wall-clock. Eight in flight keeps the
-    * scheduler busy without starving any single job of cores.
-    */
-  private val WriteSlots = 8
-
   def run(g: GraphTables, outDir: String): Seq[(String, String)] = {
     ExportTelemetry.reset()
-    // the pool's lifecycle lives HERE so a failure anywhere in the body —
-    // plan construction included, not just the writes — still shuts it
-    // down; daemon threads are the second line of defense against
-    // pinning the JVM open
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      WriteSlots,
-      (r: Runnable) => { val t = new Thread(r, "export-write"); t.setDaemon(true); t })
-    try runWithPool(g, outDir, pool)
-    finally pool.shutdown()
-  }
-
-  private def runWithPool(g: GraphTables, outDir: String,
-      pool: java.util.concurrent.ExecutorService): Seq[(String, String)] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val spark = g.entries.sparkSession
-    val pending = scala.collection.mutable.ArrayBuffer[Future[Unit]]()
     val written = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    // first-failure latch: the first task to fail records its error here;
-    // queued tasks that haven't started yet become no-ops, and the error
-    // is rethrown on the caller thread once every task has settled
-    val firstFailure =
-      new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    // every task catches its own error, fatal ones too, so its Future
-    // always completes and `settle` cannot hang on it
-    def task(body: => Unit): Unit =
-      pending += Future {
-        if (firstFailure.get() == null)
-          try body
-          catch { case e: Throwable => firstFailure.compareAndSet(null, e) }
-      }
-    // waits for every submitted task, then surfaces the first failure
-    def settle(): Unit = {
-      pending.foreach(Await.ready(_, Duration.Inf))
-      Option(firstFailure.get()).foreach(e => throw e)
-    }
-    // one sink write: its own sink:<name> job group (StorageTelemetry
-    // accumulates executor run/cpu/input stats under it, so a sink whose
-    // in_rows is fact-sized shows it recomputed its registry input's
-    // lineage — VERDICT r11 item 2; job groups are thread-local, each
-    // pool thread sets and clears its own) and its own telemetry entry
-    def sink(name: String, hdr: Seq[(String, String)])(
-        writer: (String, Map[String, String]) => Unit): Unit = {
-      task {
-        val t0 = System.nanoTime()
-        val sc = spark.sparkContext
-        sc.setJobGroup(s"sink:$name", s"export sink: $name",
-          interruptOnCancel = false)
-        try writer(s"$outDir/$name", hdr.toMap)
-        finally sc.clearJobGroup()
-        ExportTelemetry.record(name, (System.nanoTime() - t0) / 1e9)
-      }
-      written += name -> s"$outDir/$name"
-    }
-    // fact-derived tables keep their natural partitioning: one Spark
-    // write job each
-    def write(name: String, df: DataFrame, hdr: (String, String)*): Unit =
-      sink(name, hdr)(Sinks.neo4jTsv(df, _, _))
-    // DIMENSION-bounded tables (hierarchy levels, distinct EC codes,
-    // per-DB domain views, the stats row): cardinality bounded by a
-    // dimension, so the task collects the lines and writes the one data
-    // file the reference's import consumes from the driver: a collect
-    // job, no write job
-    def writeSmall(name: String, df: DataFrame, hdr: (String, String)*): Unit =
-      sink(name, hdr)(Sinks.neo4jTsvDimension(df, _, _))
-
     // shared(df): persist + eagerly materialize an intermediate that
     // several write jobs consume. Registered so the finally below
     // releases it on EVERY exit path — including a construction or
-    // materialization failure mid-body — not just after a clean settle.
+    // materialization failure mid-body — not just after a clean export.
     val sharedPersists = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def shared(df: DataFrame, name: String = ""): DataFrame = {
       val p = df.persist()
@@ -151,7 +79,13 @@ object ExportStage {
         ExportTelemetry.record(s"shared:$name", (System.nanoTime() - t0) / 1e9)
       p
     }
-    try {
+    // every sink write is an independent action over shared (persisted)
+    // lineages, so the writes run as ActionPool tasks, each under its own
+    // sink:<name> job group (StorageTelemetry accumulates executor
+    // run/cpu/input stats under it, so a sink whose in_rows is fact-sized
+    // shows it recomputed its registry input's lineage — VERDICT r11
+    // item 2)
+    try ActionPool.run(spark) { pool =>
       // The expensive fact sinks read the registry's phase-1 tables
       // (has_similarity_rels: similarity + boundEntities; the per-DB
       // splits: interacts). A partition that lost storage residency would
@@ -162,6 +96,22 @@ object ExportStage {
       // persisted (a `GraphTables.build` registry) stays unpersisted.
       g.warm(Seq(g.corePhase)).foreach(w =>
         ExportTelemetry.record(s"warm:${w.table}", w.sec))
+      def sink(name: String, hdr: Seq[(String, String)])(
+          writer: (String, Map[String, String]) => Unit): Unit = {
+        pool.submit(s"sink:$name")(writer(s"$outDir/$name", hdr.toMap))
+        written += name -> s"$outDir/$name"
+      }
+      // fact-derived tables keep their natural partitioning: one Spark
+      // write job each
+      def write(name: String, df: DataFrame, hdr: (String, String)*): Unit =
+        sink(name, hdr)(Sinks.neo4jTsv(df, _, _))
+      // DIMENSION-bounded tables (hierarchy levels, distinct EC codes,
+      // per-DB domain views, the stats row): cardinality bounded by a
+      // dimension, so the task collects the lines and writes the one data
+      // file the reference's import consumes from the driver: a collect
+      // job, no write job
+      def writeSmall(name: String, df: DataFrame, hdr: (String, String)*): Unit =
+        sink(name, hdr)(Sinks.neo4jTsvDimension(df, _, _))
 
       // ---- core graph (the round-1 seven) ------------------------------
       write("entry_nodes", g.entries.select("pdbEntry"),
@@ -548,16 +498,8 @@ object ExportStage {
             col("num_entries"), col("num_bound_molecules"),
             col("num_bound_descriptors"), col("num_cognate_ligands")),
         "procoggraph" -> "procoggraph:ID(procoggraph-id)")
-
-      settle()
-    } catch {
-      case e: Throwable =>
-        // a failure in the body itself (plan construction, a shared
-        // materialization): stop the queued writes and let the in-flight
-        // ones finish, so no sink job outlives run()
-        firstFailure.compareAndSet(null, e)
-        pending.foreach(Await.ready(_, Duration.Inf))
-        throw e
+    }.foreach { case (group, sec) =>
+      ExportTelemetry.record(group.stripPrefix("sink:"), sec)
     } finally sharedPersists.foreach(_.unpersist(blocking = false))
     written.toSeq
   }
@@ -566,12 +508,12 @@ object ExportStage {
 /** Per-sink wall clocks of the most recent `ExportStage.run` (VERDICT r10
   * item 1: etl3's 57.7 s driver wall could not be decomposed — the gzip
   * counters are run-global, and the ~65 write jobs' individual costs were
-  * invisible). `run` resets this, each sink write records its wall, and
-  * the bench emits the top entries next to etl3's gzip byte/stream deltas
-  * so the artifact splits the wall into per-sink work vs scheduling.
-  * In-JVM static — walls are pool-concurrent (8 slots), so entries
-  * overlap; they attribute WHERE the time went, the query wall stays the
-  * total.
+  * invisible). `run` resets this and records each sink's wall as its
+  * ActionPool scope returns it, and the bench emits the top entries next
+  * to etl3's gzip byte/stream deltas so the artifact splits the wall into
+  * per-sink work vs scheduling. In-JVM static — sinks run
+  * `ActionPool.Width` at a time, so entries overlap; they attribute
+  * WHERE the time went, the query wall stays the total.
   */
 object ExportTelemetry {
   private val walls =

@@ -268,45 +268,38 @@ final case class GraphTables(
 
   /** Makes the registry storage-resident, the analogue of the reference
     * bulk-importing its Neo4j database before any dashboard query runs
-    * (import_neo4j_data.sh:3-78). Phases run in order; the tables of one
-    * phase are counted concurrently on a small daemon pool of this call's
-    * own. A table is counted only when it has a CacheManager entry and is
-    * not fully resident: a table nobody persisted stays unpersisted, and
-    * a partly resident one is refilled by `count()` under its own RDD id,
-    * so a cache-hygiene baseline taken before still covers it. Each count
-    * runs under the job group `warm:<table>` (StorageTelemetry's per-table
-    * executor stats). Returns each counted table with the residency it
-    * found and the count's wall seconds; the first failure is rethrown
-    * once its phase has settled.
+    * (import_neo4j_data.sh:3-78). Phases run in order, each as one
+    * [[graft.ActionPool]] scope that counts the phase's tables
+    * concurrently and fails by its rule. A table is counted only when it
+    * has a CacheManager entry and is not fully resident: a table nobody
+    * persisted stays unpersisted, and a partly resident one is refilled
+    * by `count()` under its own RDD id, so a cache-hygiene baseline taken
+    * before still covers it. Each count runs under the job group
+    * `warm:<table>` (StorageTelemetry's per-table executor stats).
+    * Returns each counted table with the residency it found and the
+    * count's wall seconds.
     */
   def warm(phases: Seq[Seq[(String, DataFrame)]] = registryTablePhasesNamed)
       : Seq[GraphTables.Warmed] = {
-    import java.util.concurrent.{Callable, ExecutionException, Executors}
-    import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.graftx.GraftCacheBridge
-    def count(name: String, df: DataFrame, frac: Double): GraphTables.Warmed = {
-      val sc = df.sparkSession.sparkContext
-      val t0 = System.nanoTime()
-      sc.setJobGroup(s"warm:$name", s"registry warm-up: $name",
-        interruptOnCancel = false)
-      // through a fresh plan: `df`'s own QueryExecution is fixed at first
-      // use, so after an unpersist + persist (Bench's registry refresh) it
-      // would still scan the dropped entry and never fill the new one
-      try df.select("*").queryExecution.toRdd.count()
-      finally sc.clearJobGroup()
-      GraphTables.Warmed(name, frac, (System.nanoTime() - t0) / 1e9)
-    }
-    val pool = Executors.newFixedThreadPool((1 +: phases.map(_.size)).max,
-      (r: Runnable) => { val t = new Thread(r, "registry-warm"); t.setDaemon(true); t })
-    try phases.flatMap { phase =>
-      val counts = for {
+    phases.flatMap { phase =>
+      val found = for {
         (name, df) <- phase
         frac <- GraftCacheBridge.residency(df.sparkSession, df) if frac < 1.0
-      } yield (() => count(name, df, frac)): Callable[GraphTables.Warmed]
-      pool.invokeAll(counts.asJava).asScala.map { f =>
-        try f.get() catch { case e: ExecutionException => throw e.getCause }
+      } yield (name, df, frac)
+      val walls = graft.ActionPool.run(entries.sparkSession) { pool =>
+        // through a fresh plan: `df`'s own QueryExecution is fixed at
+        // first use, so after an unpersist + persist (Bench's registry
+        // refresh) it would still scan the dropped entry and never fill
+        // the new one
+        found.foreach { case (name, df, _) =>
+          pool.submit(s"warm:$name")(df.select("*").queryExecution.toRdd.count())
+        }
       }
-    } finally pool.shutdown()
+      found.zip(walls).map { case ((name, _, frac), (_, sec)) =>
+        GraphTables.Warmed(name, frac, sec)
+      }
+    }
   }
 
   /** Typed stage-boundary views (model/Model.scala) — compile-time field

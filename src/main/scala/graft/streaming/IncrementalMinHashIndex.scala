@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ActionPool
 import graft.operators.MinHashDedup
 
 /** Incremental MinHash-LSH band index over an append-only parquet store
@@ -115,13 +116,15 @@ final class IncrementalMinHashIndex(
         .write.mode("append").parquet(dupDir)
     } finally shAll.unpersist()
     // the two store appends are INDEPENDENT write jobs over
-    // already-materialized localCheckpoints — submit them concurrently
-    // (guide §2.6: overlap independent jobs) so the second isn't gated
-    // on the first's commit; both must land before the high-water mark
-    // advances, so failures keep the redelivery semantics below
-    IncrementalMinHashIndex.inParallel(
-      () => bandNew.write.mode("append").parquet(bandsDir),
-      () => shNew.write.mode("append").parquet(shDir))
+    // already-materialized localCheckpoints — one ActionPool scope runs
+    // them concurrently (guide §2.6: overlap independent jobs) so the
+    // second isn't gated on the first's commit; the scope returns only
+    // when both have landed or rethrows the first failure, so the
+    // high-water mark below keeps its redelivery semantics
+    ActionPool.run(s) { pool =>
+      pool.submit("index:bands")(bandNew.write.mode("append").parquet(bandsDir))
+      pool.submit("index:shingles")(shNew.write.mode("append").parquet(shDir))
+    }
     storesEmpty = false
     // the high-water mark advances only AFTER the last append succeeds:
     // marking first would make a mid-batch failure permanently skip the
@@ -140,17 +143,22 @@ final class IncrementalMinHashIndex(
     * pointer, delete the old version. Sequential with ingest (foreachBatch
     * batches arrive one at a time), so no reader races the delete. The
     * three rewrites are independent read→coalesce→write jobs over
-    * disjoint dirs — run concurrently (guide §2.6), the pointer bump
-    * stays a single-threaded step after all three land.
+    * disjoint dirs — one ActionPool scope runs them concurrently (guide
+    * §2.6), and the pointer bump stays a single-threaded step after all
+    * three land.
     */
   private def compact(): Unit = {
     val next = version + 1
     val (nb, ns, nd) =
       (s"$root/bands_v$next", s"$root/sh_v$next", s"$root/dups_v$next")
-    IncrementalMinHashIndex.inParallel(
-      () => s.read.parquet(bandsDir).coalesce(compactParts).write.parquet(nb),
-      () => s.read.parquet(shDir).coalesce(compactParts).write.parquet(ns),
-      () => s.read.parquet(dupDir).coalesce(compactParts).write.parquet(nd))
+    ActionPool.run(s) { pool =>
+      def rewrite(store: String, from: String, to: String): Unit =
+        pool.submit(s"compact:$store")(
+          s.read.parquet(from).coalesce(compactParts).write.parquet(to))
+      rewrite("bands", bandsDir, nb)
+      rewrite("shingles", shDir, ns)
+      rewrite("dups", dupDir, nd)
+    }
     val (ob, os, od) = (bandsDir, shDir, dupDir)
     version = next
     Seq(ob, os, od).foreach(d => rmTree(new java.io.File(d)))
@@ -172,32 +180,3 @@ final class IncrementalMinHashIndex(
   }
 }
 
-object IncrementalMinHashIndex {
-
-  /** Run independent Spark write jobs concurrently. A non-fatal failure
-    * is held until every job settles, then the first one in argument
-    * order is thrown (a half-parallel abort would leave jobs racing the
-    * caller's next step). A fatal error (`OutOfMemoryError`, an
-    * interrupt, anything `NonFatal` rejects) is rethrown as soon as its
-    * job ends, without waiting for the others.
-    */
-  private[streaming] def inParallel(jobs: (() => Unit)*): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.size)
-    val errs = new Array[Throwable](jobs.size)
-    // each job posts its index when it ends; the queue hand-off also
-    // publishes its errs slot to this thread
-    val done = new java.util.concurrent.LinkedBlockingQueue[Integer]()
-    try {
-      jobs.zipWithIndex.foreach { case (j, i) =>
-        pool.execute(() =>
-          try j() catch { case e: Throwable => errs(i) = e }
-          finally done.put(i))
-      }
-      jobs.indices.foreach { _ =>
-        val e = errs(done.take())
-        if (e != null && !scala.util.control.NonFatal(e)) throw e
-      }
-      errs.find(_ != null).foreach(e => throw e)
-    } finally pool.shutdown()
-  }
-}

@@ -171,7 +171,7 @@ class ExportStageSpec extends SparkSpec {
 
     it("surfaces a sink failure from the concurrent write pool") {
       // outDir nested under a regular FILE: every csv write fails to
-      // mkdir. run() must rethrow (first failure, via the Await) rather
+      // mkdir. run() must rethrow (ActionPool's first failure) rather
       // than return a "written" list for files that don't exist — and
       // must return promptly, not leave the suite hanging on pool threads
       val g = GraphTables.build(spark, "/root/testdata/sf0.001")
@@ -189,7 +189,7 @@ class ExportStageSpec extends SparkSpec {
       // superfamily reaches only dimension tables (domain_nodes, the
       // per-DB domain nodes, the CATH/SCOP superfamily levels), so the
       // failure comes from a driver-collected sink while fact sinks and
-      // the residency gate's persists are in flight around it
+      // the shared(...) persists are in flight around it
       val g0 = GraphTables.build(spark, "/root/testdata/sf0.001")
       val g = g0.copy(domains = g0.domains
         .withColumn("superfamily", concat(col("superfamily"), lit("\t"))))
