@@ -423,7 +423,7 @@ object Bench {
       step("etl1_fixture") {
         graft.queries.EtlQueries.contactsFixture(spark, sfDir); ()
       }
-      // s5's pid-keyed bucketed tables: the catalog is session-scoped, so a
+      // s5's bucketed tables: the catalog is session-scoped, so a
       // fresh JVM (every driver bench run) would otherwise pay both bucketed
       // writes inside s5's timed region — install them untimed here so the
       // measured s5 is the bucket-to-bucket join, not the fixture write

@@ -4,6 +4,8 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftx.GraftCacheBridge
 
+import graft.queries.Fixtures
+
 /** Session cache hygiene for the two all-queries mains (Bench, Verify).
   *
   * A 152-query session accumulates persisted blocks two ways:
@@ -21,7 +23,8 @@ import org.apache.spark.sql.graftx.GraftCacheBridge
   * unpersist everything newer than the snapshot and nudge a GC so the
   * ContextCleaner reclaims dead shuffles/broadcasts. Family boundaries,
   * not per-query: within a family, consecutive queries legitimately
-  * reuse a cached plan (t6's shingle table feeds t9).
+  * reuse a cached plan (t6's shingle table feeds t9). The same boundary
+  * releases the scratch files the finished family's queries wrote.
   */
 object CacheHygiene {
 
@@ -40,7 +43,9 @@ object CacheHygiene {
     * encode each time, strictly slower than no cache. Baseline membership
     * is decided by the entry's column-buffer RDD id; an entry that never
     * materialized has no blocks and is dropped too (re-persisting is one
-    * call away for any plan that actually returns).
+    * call away for any plan that actually returns). Last, it deletes
+    * every `Fixtures.scratchDir` path made before the call: the caller
+    * has consumed every result that reads one.
     *
     * `blocking = true` waits for each removal to complete before
     * returning — the bench uses it so the removals' listener events are
@@ -57,6 +62,7 @@ object CacheHygiene {
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!baseline.contains(id)) rdd.unpersist(blocking = blocking)
     }
+    Fixtures.release()
     System.gc()
   }
 

@@ -15,8 +15,6 @@ import graft.sources.Sinks
   */
 object EtlQueries {
 
-  import Fixtures.rm
-
   /** The etl1 JSON-lines contacts fixture, generated ONCE per (data dir,
     * lineitem fingerprint) and installed by atomic rename (the s4
     * pattern: process-unique temp, exactly one rename wins, stale
@@ -31,15 +29,11 @@ object EtlQueries {
                       dir: String): String = {
     val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
     val src = new java.io.File(s"$dir/lineitem.parquet")
-    // legacySweep: the retired fixed-path layout ("etl1_contacts", no
-    // fingerprint) and its temp naming, swept once cold
     // fp "v2": the fixture gained status-stamped records + envelope rows
     // (run_arpeggio.sh:15-22) — the bump regenerates memoized v1 dirs,
     // which then age out via the standard name-prefix sweep
     Fixtures.installDir(safe, "etl1_contacts",
-      s"v2_${src.length}_${src.lastModified}",
-      legacySweep = n => n == "etl1_contacts" ||
-        n.matches("\\.etl1_tmp_\\d+_.*")) { tmp =>
+      s"v2_${src.length}_${src.lastModified}") { tmp =>
       val records = Tables(s, dir, "lineitem")
         .select(to_json(struct(
           concat(lit("pdb"), col("l_orderkey") % 50).as("pdb_id"),

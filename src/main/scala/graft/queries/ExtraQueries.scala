@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,8 +24,7 @@ object ExtraQueries {
     RQ("a3_checkpoint_roundtrip", Some("""
       SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n
       FROM lineitem GROUP BY 1 ORDER BY l_returnflag"""))((s, dir) => {
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val ckpt = s"/tmp/graft_fixtures/$safe/a3_ckpt"
+      val ckpt = Fixtures.scratchDir("a3_ckpt")
       t(s, dir, "lineitem").groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(ckpt)
@@ -41,8 +38,7 @@ object ExtraQueries {
              CAST(min(l_partkey) AS BIGINT) AS reactant,
              CAST(max(l_partkey) AS BIGINT) AS product
       FROM lineitem GROUP BY 1 ORDER BY rxn"""))((s, dir) => {
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"/tmp/graft_fixtures/$safe/a8_rxn"
+      val path = Fixtures.scratchDir("a8_rxn")
       t(s, dir, "lineitem").groupBy(col("l_orderkey"))
         .agg(min("l_partkey").as("rct"), max("l_partkey").as("prd"))
         .select(concat(lit("$RXN  "), col("l_orderkey"), lit("\nRCT  "),

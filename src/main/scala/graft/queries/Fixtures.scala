@@ -1,11 +1,25 @@
 package graft.queries
 
-/** Shared /tmp fixture lifecycle helpers for queries that materialize
-  * side tables (s4 partitioned copy, s5 bucketed tables, the j-family
-  * stream stores, the etl2/etl3 export files). ONE definition of the
-  * sweep-safety policy so a fix cannot silently miss a copy.
+/** The one place a query names a `/tmp` path. Two rules:
+  *
+  *  - `installDir`: content-keyed and shared across processes
+  *    (`/tmp/graft_fixtures/<safe>/<name>_<fp>`), for a fixture that is
+  *    expensive and identical for every reader of the same data (s4's
+  *    partitioned orders, etl1's contacts file).
+  *  - `scratchDir(prefix)`: a new path on every call, under this
+  *    process's own root `/tmp/graft_fixtures/run_<pid>_<nanos>`, so two
+  *    processes on the same data never write into each other's files.
+  *
+  * The root is created on first use; that first use also removes the
+  * roots of dead processes. A file that must outlive every sweep (s5's
+  * bucketed catalog tables) lives directly in `root`. Scratch paths are
+  * released by `release()`, which `graft.CacheHygiene.sweep` calls between
+  * query families — the one point where Bench and Verify have consumed
+  * every earlier result.
   */
-private[queries] object Fixtures {
+private[graft] object Fixtures {
+
+  private val base = new java.io.File("/tmp/graft_fixtures")
 
   /** Recursive delete. */
   def rm(f: java.io.File): Unit = {
@@ -13,7 +27,7 @@ private[queries] object Fixtures {
     f.delete()
   }
 
-  /** True when a fixture dir owned by `pid` is safe to sweep: ONLY when
+  /** True when a fixture owned by `pid` is safe to sweep: ONLY when
     * the owning process is gone. No age-based escape hatch — a long-lived
     * JVM legitimately owns day-old fixtures (its catalog still points at
     * them), and deleting them under it trades a bounded leak for a live
@@ -21,26 +35,47 @@ private[queries] object Fixtures {
     * process's fixture alive until the impostor pid also exits — bounded
     * by /tmp's own lifecycle, accepted.
     */
-  def sweepable(pid: Long): Boolean =
+  private def sweepable(pid: Long): Boolean =
     !java.lang.ProcessHandle.of(pid).isPresent
 
-  /** A fresh directory path `/tmp/graft_fixtures/<prefix>_<pid>_<nanotime>`
-    * for a fixture a query rebuilds on every run (stream caches and
-    * indexes, export file sets), so two processes on the same data never
-    * write into each other's copy. Siblings owned by dead processes are
-    * swept first; a live owner's, this process's included, are kept —
-    * a lazily evaluated result may still read them.
-    */
-  def scratchDir(prefix: String): String = {
-    val root = new java.io.File("/tmp/graft_fixtures")
-    val owned = (java.util.regex.Pattern.quote(prefix) + "_(\\d+)_\\d+").r
-    Option(root.listFiles).getOrElse(Array.empty).foreach { f =>
+  private val runRoot = "run_(\\d+)_\\d+".r
+
+  /** Removes every process root whose owner has exited. */
+  def sweepDeadRoots(): Unit =
+    Option(base.listFiles).getOrElse(Array.empty).foreach { f =>
       f.getName match {
-        case owned(pid) if sweepable(pid.toLong) => rm(f)
-        case _                                    =>
+        case runRoot(pid) if sweepable(pid.toLong) => rm(f)
+        case _                                      =>
       }
     }
-    s"$root/${prefix}_${ProcessHandle.current.pid}_${System.nanoTime}"
+
+  /** This process's root, created once. */
+  lazy val root: String = {
+    sweepDeadRoots()
+    val r = new java.io.File(base,
+      s"run_${ProcessHandle.current.pid}_${System.nanoTime}")
+    r.mkdirs()
+    r.getPath
+  }
+
+  private val seq = new java.util.concurrent.atomic.AtomicLong
+  private var made = List.empty[String]
+
+  /** A new path `<root>/<prefix>_<n>` for a fixture a query rebuilds on
+    * every run (source-format files, stream caches and indexes, export
+    * file sets). Not created: the caller writes a file or a directory
+    * there. Kept until the next `release()`.
+    */
+  def scratchDir(prefix: String): String = {
+    val p = s"$root/${prefix}_${seq.incrementAndGet()}"
+    synchronized { made ::= p }
+    p
+  }
+
+  /** Deletes every scratch path handed out before this call. */
+  def release(): Unit = {
+    val done = synchronized { val d = made; made = Nil; d }
+    done.foreach(p => rm(new java.io.File(p)))
   }
 
   /** Resolved install paths, memoized per JVM: a fixture resolved once
@@ -59,9 +94,7 @@ private[queries] object Fixtures {
 
   /** Install-once fixture directory: the ONE copy of the
     * fingerprint → temp-write → atomic-rename-install → heal → sweep
-    * policy (s4 and etl1 each used to carry their own; the s5 bucketed
-    * CATALOG tables stay separate — saveAsTable installs through the
-    * metastore, not a dir rename, and its finals are pid-owned).
+    * policy (s4 and etl1).
     *
     *  - `safe`/`name`/`fp`: fixture dir is
     *    /tmp/graft_fixtures/<safe>/<name>_<fp>; key the fingerprint to
@@ -73,15 +106,13 @@ private[queries] object Fixtures {
     *    a COLD (>10 min) no-`_SUCCESS` final is a wreck and is healed;
     *    a YOUNG one might be a concurrent healer's just-finished install
     *    mid-visibility, so we read our own temp instead of rm-ing it.
-    *  - sweep: stale-fingerprint finals (and `legacySweep`-matched names
-    *    from retired layouts) once cold (>1 h — a live JVM may still
-    *    execute plans over the previous testdata generation's copy);
-    *    orphaned current-layout temps by owner-pid liveness.
+    *  - sweep: stale-fingerprint finals once cold (>1 h — a live JVM may
+    *    still execute plans over the previous testdata generation's
+    *    copy); orphaned temps by owner-pid liveness.
     */
-  def installDir(safe: String, name: String, fp: String,
-                 legacySweep: String => Boolean = _ => false)
+  def installDir(safe: String, name: String, fp: String)
                 (write: String => Unit): String = {
-    val rootPath = s"/tmp/graft_fixtures/$safe"
+    val rootPath = s"$base/$safe"
     val path = s"$rootPath/${name}_$fp"
     resolved.computeIfAbsent(path, { _ =>
       var readPath = path
@@ -103,7 +134,7 @@ private[queries] object Fixtures {
           .getOrElse(Array.empty)
           .filter { f =>
             val n = f.getName
-            ((n.startsWith(name + "_") || legacySweep(n)) &&
+            (n.startsWith(name + "_") &&
               f.getPath != path && f.getPath != readPath &&
               System.currentTimeMillis - f.lastModified > 3600000L) ||
               (n match {

@@ -13,22 +13,16 @@ import graft.sources.{Readers, Sinks}
   *
   * The driver's tables are parquet-only, so each query derives a
   * format-faithful fixture file from a *dimension-sized* table (written
-  * once per run under /tmp — driver-side by design, like the reference's
-  * fixture snapshots, A9), reads it back through the production reader,
-  * and is compared against a DuckDB oracle over the original parquet.
+  * on every call to a new `Fixtures.scratchDir` path — driver-side by
+  * design, like the reference's fixture snapshots, A9), reads it back
+  * through the production reader, and is compared against a DuckDB
+  * oracle over the original parquet.
   * The readers themselves are distributed text/CSV scans.
   */
 object SourceQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
-
-  private def fixDir(dir: String, name: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val p = Paths.get(s"/tmp/graft_fixtures/$safe/$name")
-    Files.createDirectories(p.getParent)
-    p.toString
-  }
 
   val defs: Seq[RQ] = Seq(
 
@@ -37,7 +31,7 @@ object SourceQueries {
       SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
              CAST(n_regionkey AS BIGINT) AS n_regionkey
       FROM nation ORDER BY n_nationkey"""))((s, dir) => {
-      val path = fixDir(dir, "a1_nation.tsv")
+      val path = Fixtures.scratchDir("a1_tsv")
       val rows = t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
         .orderBy("n_nationkey").collect()
       val body = rows.map(r => s"${r.get(0)}\t${r.getString(1)}\t${r.get(2)}")
@@ -57,7 +51,7 @@ object SourceQueries {
                   WHEN c_custkey % 89 = 0 THEN 'NA'
                   ELSE c_name END AS name
       FROM customer ORDER BY c_custkey"""))((s, dir) => {
-      val path = fixDir(dir, "a2_customer")
+      val path = Fixtures.scratchDir("a2_customer")
       t(s, dir, "customer")
         .select(col("c_custkey"),
           when(col("c_custkey") % 97 === 0, lit("NaN"))
@@ -75,7 +69,7 @@ object SourceQueries {
     RQ("a7_flat_records", Some("""
       SELECT n_name, CAST(n_nationkey AS BIGINT) AS key
       FROM nation ORDER BY n_name"""))((s, dir) => {
-      val path = fixDir(dir, "a7_records")
+      val path = Fixtures.scratchDir("a7_records")
       t(s, dir, "nation")
         .select(concat(lit("ID  "), col("n_name"), lit("\nKEY  "),
           col("n_nationkey")).as("value"))
@@ -91,7 +85,7 @@ object SourceQueries {
     RQ("a4_mmcif_scan", Some("""
       SELECT CAST(r_regionkey AS BIGINT) AS key, r_name AS name
       FROM region ORDER BY key"""))((s, dir) => {
-      val path = fixDir(dir, "a4_fixture.cif")
+      val path = Fixtures.scratchDir("a4_cif")
       val rows = t(s, dir, "region").select("r_regionkey", "r_name")
         .orderBy("r_regionkey").collect()
       val body = rows.map(r => s"${r.get(0)} '${r.getString(1)}'")
@@ -106,7 +100,7 @@ object SourceQueries {
     RQ("a5_xml_scan", Some("""
       SELECT s_suppkey, s_name, CAST(s_nationkey AS BIGINT) AS nation
       FROM supplier ORDER BY s_suppkey"""))((s, dir) => {
-      val path = fixDir(dir, "a5_fixture.xml")
+      val path = Fixtures.scratchDir("a5_xml")
       val rows = t(s, dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
         .orderBy("s_suppkey").collect()
       val esc = (v: String) => v.replace("&", "&amp;").replace("<", "&lt;")
@@ -127,7 +121,7 @@ object SourceQueries {
     RQ("a7b_dsv2_records", Some("""
       SELECT n_name, CAST(n_nationkey AS BIGINT) AS key
       FROM nation ORDER BY n_name"""))((s, dir) => {
-      val path = fixDir(dir, "a7b_records")
+      val path = Fixtures.scratchDir("a7b_records")
       t(s, dir, "nation")
         .select(concat(lit("ID  "), col("n_name"), lit("\nKEY  "),
           col("n_nationkey")).as("value"))
@@ -148,7 +142,7 @@ object SourceQueries {
                AS segments
       FROM nation JOIN customer ON c_nationkey = n_nationkey
       GROUP BY 1, 2 ORDER BY key"""))((s, dir) => {
-      val path = fixDir(dir, "a10_nodes")
+      val path = Fixtures.scratchDir("a10_nodes")
       val nodes = t(s, dir, "nation")
         .join(t(s, dir, "customer"), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_nationkey").cast("long").as("key"), col("n_name").as("name"))

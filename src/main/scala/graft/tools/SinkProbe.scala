@@ -46,14 +46,15 @@ object SinkProbe {
       joined.select(line.as("value")).write.format("noop")
         .mode("overwrite").save()
     }
+    val out = graft.queries.Fixtures.scratchDir("sink_probe")
     time("text_gz") {
       joined.select(line.as("value")).write.mode("overwrite")
         .option("compression", graft.sources.FastGzipCodec.name)
-        .text("/tmp/graft_probe/text_gz")
+        .text(s"$out/text_gz")
     }
     time("text_plain") {
       joined.select(line.as("value")).write.mode("overwrite")
-        .text("/tmp/graft_probe/text_plain")
+        .text(s"$out/text_plain")
     }
     // pure-JVM parallel deflate floor on representative line bytes:
     // separates "Spark's gzip write path is slow" from "this host's

@@ -14,19 +14,34 @@ import org.scalatest.funspec.AnyFunSpec
 class GraphEngineSpec extends AnyFunSpec {
 
   describe("src/main") {
-    it("has no org.apache.spark.graphx reference") {
+    lazy val sources = {
       val root = Paths.get("src/main")
       assert(Files.isDirectory(root),
         s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
-      val sources = Files.walk(root).iterator().asScala
+      val all = Files.walk(root).iterator().asScala
         .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
-      assert(sources.nonEmpty)
+      assert(all.nonEmpty)
+      all
+    }
+
+    it("has no org.apache.spark.graphx reference") {
       val hits = for {
         p <- sources
         (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
         if line.contains("org.apache.spark.graphx")
       } yield s"$p:${i + 1}: ${line.trim}"
       assert(hits.isEmpty, hits.mkString("GraphX is referenced from src/main:\n", "\n", ""))
+    }
+
+    it("names no /tmp path outside queries/Fixtures") {
+      val hits = for {
+        p <- sources
+        if p.getFileName.toString != "Fixtures.scala"
+        (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+        if line.contains("\"/tmp")
+      } yield s"$p:${i + 1}: ${line.trim}"
+      assert(hits.isEmpty,
+        hits.mkString("a /tmp literal outside Fixtures:\n", "\n", ""))
     }
   }
 }

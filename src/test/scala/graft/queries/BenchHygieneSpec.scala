@@ -208,20 +208,42 @@ class BenchHygieneSpec extends SparkSpec {
 
     it("gives every call its own dir, sweeps dead owners' siblings and keeps a live owner's") {
       val prefix = s"scratchspec_${System.nanoTime()}"
-      val root = "/tmp/graft_fixtures"
+      val base = "/tmp/graft_fixtures"
+      val pid = ProcessHandle.current.pid
       val child = new ProcessBuilder("true").start()
       child.waitFor()
-      val dead = new java.io.File(root, s"${prefix}_${child.pid}_1")
-      val own = new java.io.File(root,
-        s"${prefix}_${ProcessHandle.current.pid}_2")
+      val dead = new java.io.File(base, s"run_${child.pid}_1")
+      val own = new java.io.File(base, s"run_${pid}_2")
       dead.mkdirs(); own.mkdirs()
       val a = Fixtures.scratchDir(prefix)
       val b = Fixtures.scratchDir(prefix)
-      assert(a !== b, "two calls share a dir — concurrent writers collide")
-      assert(a.startsWith(s"$root/${prefix}_${ProcessHandle.current.pid}_"))
-      assert(!dead.exists(), "a dead process's sibling was not swept")
-      assert(own.exists(), "a live process's dir was swept from under it")
+      assert(a !== b, "two calls share a path — concurrent writers collide")
+      assert(Fixtures.root.startsWith(s"$base/run_${pid}_"))
+      assert(a.startsWith(s"${Fixtures.root}/${prefix}_"))
+      // the root (and its sweep) was made once, maybe before dead/own
+      Fixtures.sweepDeadRoots()
+      assert(!dead.exists(), "a dead process's root was not swept")
+      assert(own.exists(), "a live process's root was swept from under it")
       Fixtures.rm(own)
+    }
+  }
+
+  describe("CacheHygiene.sweep and Fixtures") {
+
+    it("deletes the scratch paths made before the sweep, keeps the process root and its whole-process files") {
+      val baseline = CacheHygiene.snapshot(spark.sparkContext)
+      val dirPath = Fixtures.scratchDir("sweepspec_dir")
+      spark.range(10).write.parquet(dirPath)
+      val filePath = Fixtures.scratchDir("sweepspec_file")
+      java.nio.file.Files.writeString(java.nio.file.Path.of(filePath), "x")
+      val lasting = new java.io.File(Fixtures.root, s"sweepspec_s5_${System.nanoTime()}")
+      lasting.mkdirs()
+      CacheHygiene.sweep(spark, baseline, blocking = true)
+      assert(!new java.io.File(dirPath).exists(), "a scratch dir outlived the sweep")
+      assert(!new java.io.File(filePath).exists(), "a scratch file outlived the sweep")
+      assert(new java.io.File(Fixtures.root).isDirectory, "the sweep deleted the process root")
+      assert(lasting.exists(), "the sweep deleted a whole-process file (s5's bucketed tables)")
+      Fixtures.rm(lasting)
     }
   }
 
