@@ -9,8 +9,7 @@ object Verify {
     // iteration on a few queries (the driver always runs the full set)
     val keep: String => Boolean =
       if (args.length > 2) args(2).split(",").toSet else (_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // warm the graph registry BEFORE the cache-hygiene baseline so the

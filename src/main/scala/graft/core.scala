@@ -24,6 +24,12 @@ final case class RQ(name: String, oracle: Option[String])(
   */
 object GraftSession {
 
+  /** Local task threads for every main: `SPARK_GRAFT_CPUS` when set,
+    * else the host's available processors.
+    */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
   /** A `local[cpus]` session builder with the confs every caller shares:
     * shuffle parallelism = cpus, input splits sized for test-scale
     * parquet, UTC, JVM case mapping ([[IcuCaseMappingsKey]]), the

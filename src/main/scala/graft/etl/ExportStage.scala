@@ -551,8 +551,7 @@ object FlatFileExport {
 object Pipeline {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = graft.GraftSession
-      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // cached(): the sink writes are separate actions over shared lineages
     // (boundEntities feeds several sinks) — persist once, not rebuild

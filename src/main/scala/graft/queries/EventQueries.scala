@@ -168,7 +168,7 @@ object EventQueries {
       import s.implicits._
       val data = evMicros(s, dir).select("user_id", "us")
         .orderBy("us").as[(Long, Long)].collect()
-      Replay.chunked(s, data.toSeq, 4, statePartitions = Some(8))(ds =>
+      Replay.chunked(s, data.toSeq, 4)(ds =>
         graft.streaming.StreamingOps.sessionizeByGap(ds)
           .toDF().writeStream.format("memory").queryName("j1_sessions")
           .outputMode("update").start())
@@ -328,7 +328,7 @@ object EventQueries {
           col("event_type"))
         .orderBy("us", "event_id")
         .as[(Long, Long, Long, String)].collect()
-      Replay.chunked(s, data.toSeq, 4, statePartitions = Some(8))(ds =>
+      Replay.chunked(s, data.toSeq, 4)(ds =>
         graft.streaming.StreamingOps.scd2Intervals(ds)
           .toDF().writeStream.format("memory").queryName("j11_scd2")
           .outputMode("update").start())
@@ -415,7 +415,7 @@ object EventQueries {
         .select(col("ts"), col("event_type"), col("value"))
         .orderBy("ts", "event_type")
         .as[(java.sql.Timestamp, String, Double)].collect()
-      Replay.chunked(s, data.toSeq, 3, statePartitions = Some(8))(ds =>
+      Replay.chunked(s, data.toSeq, 3)(ds =>
         graft.streaming.StreamingOps
           .hourlyCounts(ds.toDF("ts", "event_type", "value"))
           .writeStream.format("memory").queryName("j2_hourly")
@@ -445,7 +445,7 @@ object EventQueries {
           .select(col("user_id"), col("n_name")))
       val data = ev(s, dir).select(col("user_id"), col("value"))
         .as[(Long, Double)].collect()
-      Replay.chunked(s, data.toSeq, 3, statePartitions = Some(8))(ds =>
+      Replay.chunked(s, data.toSeq, 3)(ds =>
         ds.toDF("user_id", "value")
           .join(dim, Seq("user_id"))
           .groupBy("n_name")
@@ -484,8 +484,7 @@ object EventQueries {
         .select(col("event_id"), col("user_id"), col("ts"))
         .orderBy("ts", "event_id")
         .as[(Long, Long, java.sql.Timestamp)].collect()
-      Replay.chunked2(s, clicks.toSeq, errors.toSeq, 3,
-        statePartitions = Some(8)) { (c, e) =>
+      Replay.chunked2(s, clicks.toSeq, errors.toSeq, 3) { (c, e) =>
         val cd = c.toDF("event_id", "user_id", "cts")
           .withWatermark("cts", "2 hours")
         val ed = e.toDF("err_id", "euser", "ets")
@@ -538,8 +537,7 @@ object EventQueries {
         .getTimestamp(0).getTime + 5L * 3600 * 1000
       val clicks = side(col("event_type").isin("click", "view"), -1L, flushMs)
       val errors = side(col("event_type") === "error", -2L, flushMs)
-      Replay.chunked2(s, clicks.toSeq, errors.toSeq, 3,
-        statePartitions = Some(8)) { (c, e) =>
+      Replay.chunked2(s, clicks.toSeq, errors.toSeq, 3) { (c, e) =>
         val cd = c.toDF("event_id", "user_id", "cts")
           .withWatermark("cts", "2 hours")
         val ed = e.toDF("err_id", "euser", "ets")
@@ -584,7 +582,7 @@ object EventQueries {
       // seed an empty cache so the first batch's anti-join has a schema
       Seq.empty[(Long, Long, String)].toDF("suppkey", "pk", "pair_key")
         .write.mode("overwrite").parquet(cacheDir)
-      Replay.chunked(s, data.toSeq, 3, statePartitions = Some(8))(ds =>
+      Replay.chunked(s, data.toSeq, 3)(ds =>
         ds.toDF("suppkey", "pk", "pair_key")
           .writeStream.foreachBatch {
             (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],

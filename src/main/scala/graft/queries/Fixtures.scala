@@ -1,21 +1,23 @@
 package graft.queries
 
-/** The one place a query names a `/tmp` path. Two rules:
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+
+/** The one place a query names a `/tmp` path. Every file a query writes
+  * lies under this process's own root `/tmp/graft_fixtures/run_<pid>_<nanos>`,
+  * so two processes on the same data never share a file. Two lifetimes:
   *
-  *  - `installDir`: content-keyed and shared across processes
-  *    (`/tmp/graft_fixtures/<safe>/<name>_<fp>`), for a fixture that is
-  *    expensive and identical for every reader of the same data (s4's
-  *    partitioned orders, etl1's contacts file).
-  *  - `scratchDir(prefix)`: a new path on every call, under this
-  *    process's own root `/tmp/graft_fixtures/run_<pid>_<nanos>`, so two
-  *    processes on the same data never write into each other's files.
+  *  - `once(name, dir, t)`: a fixture identical for every query of the
+  *    process (s4's partitioned orders, etl1's contacts file), written at
+  *    most once per process and kept until it exits. s5's bucketed
+  *    catalog tables also live directly in `root`, keyed by `fingerprint`.
+  *  - `scratchDir(prefix)`: a new path on every call, released by
+  *    `release()`, which `graft.CacheHygiene.sweep` calls between query
+  *    families — the one point where Bench and Verify have consumed every
+  *    earlier result.
   *
   * The root is created on first use; that first use also removes the
-  * roots of dead processes. A file that must outlive every sweep (s5's
-  * bucketed catalog tables) lives directly in `root`. Scratch paths are
-  * released by `release()`, which `graft.CacheHygiene.sweep` calls between
-  * query families — the one point where Bench and Verify have consumed
-  * every earlier result.
+  * roots of dead processes, the only cleanup there is.
   */
 private[graft] object Fixtures {
 
@@ -27,25 +29,20 @@ private[graft] object Fixtures {
     f.delete()
   }
 
-  /** True when a fixture owned by `pid` is safe to sweep: ONLY when
-    * the owning process is gone. No age-based escape hatch — a long-lived
-    * JVM legitimately owns day-old fixtures (its catalog still points at
-    * them), and deleting them under it trades a bounded leak for a live
-    * FileNotFoundException. The cost: OS pid reuse can keep one dead
-    * process's fixture alive until the impostor pid also exits — bounded
-    * by /tmp's own lifecycle, accepted.
-    */
-  private def sweepable(pid: Long): Boolean =
-    !java.lang.ProcessHandle.of(pid).isPresent
-
   private val runRoot = "run_(\\d+)_\\d+".r
 
-  /** Removes every process root whose owner has exited. */
+  /** Removes every process root whose owner has exited — ONLY then. No
+    * age-based escape hatch: a long-lived JVM legitimately owns day-old
+    * fixtures (its catalog still points at them), and deleting them under
+    * it trades a bounded leak for a live FileNotFoundException. The cost:
+    * OS pid reuse can keep one dead process's root alive until the
+    * impostor pid also exits — bounded by /tmp's own lifecycle, accepted.
+    */
   def sweepDeadRoots(): Unit =
     Option(base.listFiles).getOrElse(Array.empty).foreach { f =>
       f.getName match {
-        case runRoot(pid) if sweepable(pid.toLong) => rm(f)
-        case _                                      =>
+        case runRoot(pid) if !ProcessHandle.of(pid.toLong).isPresent => rm(f)
+        case _ =>
       }
     }
 
@@ -58,7 +55,7 @@ private[graft] object Fixtures {
     r.getPath
   }
 
-  private val seq = new java.util.concurrent.atomic.AtomicLong
+  private val seq = new AtomicLong
   private var made = List.empty[String]
 
   /** A new path `<root>/<prefix>_<n>` for a fixture a query rebuilds on
@@ -78,73 +75,30 @@ private[graft] object Fixtures {
     done.foreach(p => rm(new java.io.File(p)))
   }
 
-  /** Resolved install paths, memoized per JVM: a fixture resolved once
-    * (installed final, or this process's own temp after losing a race to
-    * a young wreck) is returned as-is for the rest of the process. This
-    * is what makes "Bench pre-generates during untimed warmup" airtight:
-    * without it, a young no-`_SUCCESS` wreck left by a crashed installer
-    * makes the warmup call fall back to its temp while the MEASURED call
-    * re-enters the write path and pays the full fixture write inside the
-    * timed region. Safe to memoize: a final keyed by our fingerprint is
-    * never swept by other processes (same fingerprint → same path, not
-    * stale), and our temp is pid-owned and liveness-guarded.
+  /** The key of a fixture derived from table `t` of data dir `dir`: the
+    * dir's alphanumeric tag plus `<t>.parquet`'s length and mtime, so a
+    * copy of different data, or a rewritten source, gets a new key. Safe
+    * as a catalog table name (s5).
     */
-  private val resolved =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  def fingerprint(dir: String, t: String): String = {
+    val src = new java.io.File(s"$dir/$t.parquet")
+    s"${dir.replaceAll("[^A-Za-z0-9]", "").toLowerCase}_${src.length}_${src.lastModified}"
+  }
 
-  /** Install-once fixture directory: the ONE copy of the
-    * fingerprint → temp-write → atomic-rename-install → heal → sweep
-    * policy (s4 and etl1).
-    *
-    *  - `safe`/`name`/`fp`: fixture dir is
-    *    /tmp/graft_fixtures/<safe>/<name>_<fp>; key the fingerprint to
-    *    the source file's (length, mtime) so a copy of different data is
-    *    never reused.
-    *  - `write` builds the fixture at the given temp path; exactly one
-    *    concurrent installer's rename wins, so readers never see a
-    *    half-built final. Losing to a completed winner drops our temp;
-    *    a COLD (>10 min) no-`_SUCCESS` final is a wreck and is healed;
-    *    a YOUNG one might be a concurrent healer's just-finished install
-    *    mid-visibility, so we read our own temp instead of rm-ing it.
-    *  - sweep: stale-fingerprint finals once cold (>1 h — a live JVM may
-    *    still execute plans over the previous testdata generation's
-    *    copy); orphaned temps by owner-pid liveness.
+  private val written = new ConcurrentHashMap[String, AtomicBoolean]()
+
+  /** A fixture identical for every query of this process that reads table
+    * `t` of `dir` (s4's partitioned orders, etl1's contacts file):
+    * `<root>/<name>_<fingerprint>`, written by `write` at most once per
+    * process. A concurrent caller waits for the first write; a write that
+    * throws marks nothing, so the next call writes again.
     */
-  def installDir(safe: String, name: String, fp: String)
-                (write: String => Unit): String = {
-    val rootPath = s"$base/$safe"
-    val path = s"$rootPath/${name}_$fp"
-    resolved.computeIfAbsent(path, { _ =>
-      var readPath = path
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        val pid = ProcessHandle.current.pid
-        val tmp = new java.io.File(s"$rootPath/.${name}_tmp_${pid}_$fp")
-        write(tmp.getPath)
-        val dst = new java.io.File(path)
-        if (!tmp.renameTo(dst)) {
-          if (new java.io.File(s"$path/_SUCCESS").exists()) rm(tmp)
-          else if (System.currentTimeMillis - dst.lastModified > 600000L) {
-            rm(dst)
-            if (!tmp.renameTo(dst)) readPath = tmp.getPath
-          } else readPath = tmp.getPath
-        }
-        val tmpRe =
-          ("\\." + java.util.regex.Pattern.quote(name) + "_tmp_(\\d+)_.*").r
-        Option(new java.io.File(rootPath).listFiles)
-          .getOrElse(Array.empty)
-          .filter { f =>
-            val n = f.getName
-            (n.startsWith(name + "_") &&
-              f.getPath != path && f.getPath != readPath &&
-              System.currentTimeMillis - f.lastModified > 3600000L) ||
-              (n match {
-                case tmpRe(p) => f.getPath != readPath && sweepable(p.toLong)
-                case _        => false
-              })
-          }
-          .foreach(rm)
-      }
-      readPath
-    })
+  def once(name: String, dir: String, t: String)(write: String => Unit): String = {
+    val path = s"$root/${name}_${fingerprint(dir, t)}"
+    val done = written.computeIfAbsent(path, _ => new AtomicBoolean)
+    done.synchronized {
+      if (!done.get) { write(path); done.set(true) }
+    }
+    path
   }
 }

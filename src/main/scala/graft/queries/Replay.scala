@@ -12,13 +12,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 private[graft] object Replay {
 
-  /** Shuffle-partition override while a streaming query plans and runs.
+  /** Shuffle partitions while a streaming query plans and runs.
     * A keyed-state stream allocates one state-store instance per shuffle
     * partition PER MICRO-BATCH; with ~20 distinct keys (sources/users)
-    * the session's fact-sized 32 is pure overhead — sizing state
-    * partitions to key cardinality is the usual dimension-vs-fact
-    * decision. The session's setting is restored
-    * after the replay.
+    * the session's fact-sized count (one per core) is pure overhead —
+    * sizing state partitions to key cardinality is the usual
+    * dimension-vs-fact decision. Every replay uses it; the session's
+    * setting is restored after the replay.
     *
     * The override is SESSION-GLOBAL while it holds: a query planned
     * concurrently on the same session would silently pick up the
@@ -27,6 +27,8 @@ private[graft] object Replay {
     * added, scope the override per query (e.g. a cloned session via
     * `s.newSession()` sharing the context but not the conf).
     */
+  private val StatePartitions = 8
+
   /** Checkpoint I/O for the replays goes through the FileSystem-based
     * manager, not the default FileContext-based one (r13): on a `file://`
     * checkpoint dir — every replay here uses a temp dir — Hadoop's
@@ -60,13 +62,11 @@ private[graft] object Replay {
   private val CheckpointChecksumKey =
     "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 
-  private def withStateConf(s: SparkSession, statePartitions: Option[Int])(
-      run: => Unit): Unit = {
+  private def withStateConf(s: SparkSession)(run: => Unit): Unit = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val prevCkpt = s.conf.getOption(CheckpointManagerKey)
     val prevSum = s.conf.getOption(CheckpointChecksumKey)
-    statePartitions.foreach(n =>
-      s.conf.set("spark.sql.shuffle.partitions", n.toString))
+    s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     s.conf.set(CheckpointManagerKey, FsCheckpointManager)
     s.conf.set(CheckpointChecksumKey, "false")
     try run
@@ -94,10 +94,9 @@ private[graft] object Replay {
       }
     } finally q.stop()
 
-  def chunked[A: Encoder](s: SparkSession, data: Seq[A], chunks: Int,
-                          statePartitions: Option[Int] = None)(
+  def chunked[A: Encoder](s: SparkSession, data: Seq[A], chunks: Int)(
       mkQuery: Dataset[A] => StreamingQuery): Unit =
-    withStateConf(s, statePartitions) {
+    withStateConf(s) {
       implicit val sqlCtx = s.sqlContext
       val mem = MemoryStream[A]
       drain(mkQuery(mem.toDS()),
@@ -111,10 +110,9 @@ private[graft] object Replay {
     * until the global watermark proves them unmatchable.
     */
   def chunked2[A: Encoder, B: Encoder](s: SparkSession, a: Seq[A], b: Seq[B],
-                                       chunks: Int,
-                                       statePartitions: Option[Int] = None)(
+                                       chunks: Int)(
       mkQuery: (Dataset[A], Dataset[B]) => StreamingQuery): Unit =
-    withStateConf(s, statePartitions) {
+    withStateConf(s) {
       implicit val sqlCtx = s.sqlContext
       val memA = MemoryStream[A]
       val memB = MemoryStream[B]

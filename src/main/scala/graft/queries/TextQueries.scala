@@ -1202,7 +1202,7 @@ object TextQueries {
           md5(concat_ws(" ", slice(split(col("text"), " "), 1, 5))
             .cast("binary")).as("fp"))
         .orderBy("doc_id").as[(Long, String, String)].collect()
-      Replay.chunked(s, data.toSeq, 4, statePartitions = Some(8))(ds =>
+      Replay.chunked(s, data.toSeq, 4)(ds =>
         ds.toDF("doc_id", "source", "fp")
           .groupBy("fp")
           .agg(min(struct(col("doc_id"), col("source"))).as("m"))
@@ -1244,7 +1244,7 @@ object TextQueries {
       val idx = new graft.streaming.IncrementalMinHashIndex(s, root)
       val data = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)].collect()
-      Replay.chunked(s, data.toSeq, 3, statePartitions = Some(8))(ds =>
+      Replay.chunked(s, data.toSeq, 3)(ds =>
         ds.toDF("doc_id", "text")
           .writeStream.foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
@@ -1294,7 +1294,7 @@ object TextQueries {
       // order to be id order (the oracle's min-doc-id rule)
       val data = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)].collect().sortBy(_._1)
-      Replay.chunked(s, data.toSeq, 3, statePartitions = Some(8))(ds =>
+      Replay.chunked(s, data.toSeq, 3)(ds =>
         ds.toDF("doc_id", "text")
           .writeStream.foreachBatch {
             (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
@@ -1430,7 +1430,7 @@ object TextQueries {
       import s.implicits._
       val data = docs(s, dir).select(col("doc_id"), col("text"))
         .orderBy("doc_id").as[(Long, String)].collect()
-      Replay.chunked(s, data.toSeq, 4, statePartitions = Some(8))(ds =>
+      Replay.chunked(s, data.toSeq, 4)(ds =>
         graft.streaming.StreamingOps.countMinCells(
           ds.toDF("doc_id", "text")
             .select(explode(split(col("text"), " ")).as("tok"))
@@ -1559,7 +1559,7 @@ object TextQueries {
       import s.implicits._
       val data = docs(s, dir).select(col("doc_id"), col("source"))
         .orderBy("doc_id").as[(Long, String)].collect()
-      Replay.chunked(s, data.toSeq, 4, statePartitions = Some(8))(ds =>
+      Replay.chunked(s, data.toSeq, 4)(ds =>
         graft.streaming.StreamingOps.quotaAdmit(ds, cap = 15)
           .writeStream.format("memory").queryName("j7_quota")
           .outputMode("append").start())

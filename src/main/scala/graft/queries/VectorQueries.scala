@@ -975,7 +975,7 @@ object VectorQueries {
       // vectors permanently missing from the index (mark-first made any
       // post-mark failure a silent hole)
       var lastBatchId = -1L
-      Replay.chunked(s, data.toSeq, 3, statePartitions = Some(8))(ds =>
+      Replay.chunked(s, data.toSeq, 3)(ds =>
         ds.toDF("vec_id", "embedding")
           .writeStream.foreachBatch {
             (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],

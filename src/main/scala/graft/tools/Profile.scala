@@ -14,8 +14,7 @@ object Profile {
     val runs = args(1).toInt
     val explain = args.contains("--explain")
     val names = args.drop(2).filterNot(_ == "--explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(cpus.toInt).getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").queryExecution.toRdd.count()
     // bare-operator probes for SCALING.md rows (x11 is now registered

@@ -40,7 +40,7 @@ object ScaleUp {
     // its own builder, not GraftSession.builder: the shared input-split
     // confs change how many parquet files each copied table is written as
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${graft.GraftSession.cpus}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config(graft.GraftSession.IcuCaseMappingsKey, "false") // JVM case mapping; see GraftSession scaladoc

@@ -19,8 +19,7 @@ final class FastGzipCodecProbeNull extends java.io.OutputStream {
 object SinkProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(cpus.toInt).getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val g = graft.graph.GraphTables.cached(spark, sfDir)
     // materialize the inputs untimed (the bench warms these)

@@ -9,39 +9,54 @@ import org.scalatest.funspec.AnyFunSpec
 /** One graph engine: every iterative graph kernel runs on
   * `graph.DenseGraph` (x6's DataFrame star contraction aside), so no
   * source under `src/main` may import GraphX. A sweep over the whole
-  * source tree, like PlanAuditSpec's sweep over the whole registry.
+  * source tree, like PlanAuditSpec's sweep over the whole registry; the
+  * same sweep keeps every `/tmp` path of `src/main` in `queries/Fixtures`
+  * and every spec's files under `Fixtures.scratchDir`, so a test run
+  * leaves nothing outside its process root.
   */
 class GraphEngineSpec extends AnyFunSpec {
 
+  private def scalaSources(dir: String) = {
+    val root = Paths.get(dir)
+    assert(Files.isDirectory(root),
+      s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    val all = Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+    assert(all.nonEmpty)
+    all
+  }
+
+  /** `file:line: text` of every line of `sources` that contains one of
+    * `needles`. */
+  private def hitsOf(sources: Seq[java.nio.file.Path], needles: String*): Seq[String] =
+    for {
+      p <- sources
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if needles.exists(line.contains)
+    } yield s"$p:${i + 1}: ${line.trim}"
+
   describe("src/main") {
-    lazy val sources = {
-      val root = Paths.get("src/main")
-      assert(Files.isDirectory(root),
-        s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
-      val all = Files.walk(root).iterator().asScala
-        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
-      assert(all.nonEmpty)
-      all
-    }
+    lazy val sources = scalaSources("src/main")
 
     it("has no org.apache.spark.graphx reference") {
-      val hits = for {
-        p <- sources
-        (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-        if line.contains("org.apache.spark.graphx")
-      } yield s"$p:${i + 1}: ${line.trim}"
+      val hits = hitsOf(sources, "org.apache.spark.graphx")
       assert(hits.isEmpty, hits.mkString("GraphX is referenced from src/main:\n", "\n", ""))
     }
 
     it("names no /tmp path outside queries/Fixtures") {
-      val hits = for {
-        p <- sources
-        if p.getFileName.toString != "Fixtures.scala"
-        (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-        if line.contains("\"/tmp")
-      } yield s"$p:${i + 1}: ${line.trim}"
+      val hits = hitsOf(sources.filter(_.getFileName.toString != "Fixtures.scala"), "\"/tmp")
       assert(hits.isEmpty,
         hits.mkString("a /tmp literal outside Fixtures:\n", "\n", ""))
+    }
+  }
+
+  describe("src/test") {
+    it("makes its files through Fixtures.scratchDir, never a JDK temp path or a fixed fixture path") {
+      val hits = hitsOf(
+        scalaSources("src/test").filter(_.getFileName.toString != "GraphEngineSpec.scala"),
+        "createTempDirectory", "createTempFile", "\"/tmp/graft_fixtures")
+      assert(hits.isEmpty,
+        hits.mkString("a spec file outside Fixtures.scratchDir:\n", "\n", ""))
     }
   }
 }

@@ -6,6 +6,7 @@ import java.util.zip.GZIPInputStream
 
 import graft.SparkSpec
 import graft.graph.GraphTables
+import graft.queries.Fixtures
 import graft.sources.Sinks
 
 /** Golden test of the Neo4j bulk-import header contract
@@ -29,7 +30,7 @@ class ExportStageSpec extends SparkSpec {
     try r.readLine() finally r.close()
   }
 
-  private lazy val out = Files.createTempDirectory("neo4j_export").toString
+  private lazy val out = Fixtures.scratchDir("neo4j_export")
   private lazy val written: Map[String, String] = {
     val g = GraphTables.build(spark, "/root/testdata/sf0.001")
     ExportStage.run(g, out).toMap
@@ -175,11 +176,9 @@ class ExportStageSpec extends SparkSpec {
       // than return a "written" list for files that don't exist — and
       // must return promptly, not leave the suite hanging on pool threads
       val g = GraphTables.build(spark, "/root/testdata/sf0.001")
-      val blocker = Files.createTempFile("export_blocker", ".txt")
-      try
-        assertThrows[Exception](
-          ExportStage.run(g, blocker.toString + "/nested"))
-      finally Files.delete(blocker)
+      val blocker = Fixtures.scratchDir("export_blocker")
+      Files.writeString(java.nio.file.Paths.get(blocker), "")
+      assertThrows[Exception](ExportStage.run(g, blocker + "/nested"))
     }
 
     it("fails a dimension table's TSV domain violation with no sink job or export persist left behind") {
@@ -204,7 +203,7 @@ class ExportStageSpec extends SparkSpec {
       val before = GraftCacheBridge.entries(spark).map(_._1)
       try {
         val ex = intercept[Exception](ExportStage.run(g,
-          Files.createTempDirectory("neo4j_export_bad").toString))
+          Fixtures.scratchDir("neo4j_export_bad")))
         val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
           .takeWhile(_ != null).take(6)
           .flatMap(t => Option(t.getMessage)).mkString(" | ")

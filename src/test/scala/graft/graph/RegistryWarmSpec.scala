@@ -12,6 +12,7 @@ import org.apache.spark.storage.RDDBlockId
 import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSpec
+import graft.queries.Fixtures
 
 /** `GraphTables.warm`, the one registry warm-up Bench, Verify and
   * ExportStage share: it counts exactly the persisted tables that are not
@@ -26,7 +27,7 @@ class RegistryWarmSpec extends SparkSpec with BeforeAndAfterAll {
   // suite's registry over the shared sf0.001 files would match (and
   // already have warmed) these plans.
   private lazy val dir = {
-    val d = Files.createTempDirectory("registry_warm")
+    val d = Files.createDirectories(Paths.get(Fixtures.scratchDir("registry_warm")))
     Seq("orders", "lineitem", "supplier", "part").foreach(t => Files.copy(
       Paths.get(s"/root/testdata/sf0.001/$t.parquet"), d.resolve(s"$t.parquet")))
     d.toString
@@ -35,11 +36,7 @@ class RegistryWarmSpec extends SparkSpec with BeforeAndAfterAll {
   private lazy val g = GraphTables.cached(session, dir)
   private def tables = g.registryTablePhasesNamed.flatten
 
-  override def afterAll(): Unit = {
-    tables.foreach(_._2.unpersist(blocking = true))
-    Option(new java.io.File(dir).listFiles()).foreach(_.foreach(_.delete()))
-    new java.io.File(dir).delete()
-  }
+  override def afterAll(): Unit = tables.foreach(_._2.unpersist(blocking = true))
 
   /** Runs `body` and returns its result with the job group of every job
     * started meanwhile ("" for a job outside any group).

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.Fixtures
 
 /** Checkpoints.truncate: the `spark.graft.checkpoint.dir` conf must
   * switch the iterative loops from localCheckpoint to RELIABLE
@@ -34,7 +35,7 @@ class CheckpointsSpec extends SparkSpec {
     }
 
     it("writes reliable checkpoints when the conf is set, same result") {
-      val dir = Files.createTempDirectory("graft_ckpt_").toString
+      val dir = Fixtures.scratchDir("graft_ckpt")
       spark.conf.set(Checkpoints.DirConf, dir)
       try {
         assert(ccResult() == expected)

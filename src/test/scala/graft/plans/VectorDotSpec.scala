@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.VectorFunctions
+import graft.queries.Fixtures
 
 class VectorDotSpec extends SparkSpec {
 
@@ -44,7 +45,7 @@ class VectorDotSpec extends SparkSpec {
       // ConvertToLocalRelation, and HOF-built arrays (transform) are
       // CodegenFallback and would drag the whole Project out of codegen —
       // neither says anything about vec_dot itself
-      val path = "/tmp/graft_fixtures/vecdot_codegen"
+      val path = Fixtures.scratchDir("vecdot_codegen")
       vecs.write.mode("overwrite").parquet(path)
       val plan = spark.read.parquet(path)
         .select(VectorFunctions.dot(col("a"), col("b")).as("d"))

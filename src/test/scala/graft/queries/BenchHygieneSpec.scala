@@ -9,7 +9,7 @@ import graft.{CacheHygiene, SparkSpec, StorageTelemetry}
   * analysis leans entirely on these three pieces — the block-update
   * telemetry (what the artifact reports), the between-family sweeps
   * (what keeps a 161-query session from accumulating state), and the
-  * install-once fixture policy (what keeps fixture writes out of timed
+  * per-process fixture rule (what keeps fixture writes out of timed
   * regions). Each has a failure mode that silently corrupts attribution
   * rather than failing a query, so they get direct specs.
   */
@@ -129,78 +129,78 @@ class BenchHygieneSpec extends SparkSpec {
     }
   }
 
-  describe("Fixtures.installDir") {
+  describe("Fixtures.once") {
 
-    // unique namespace per run so per-JVM memoization can't leak state
-    // between test executions of the same suite
-    val ns = s"benchhygiene_${System.nanoTime()}"
-
-    def install(name: String, fp: String,
-                writes: java.util.concurrent.atomic.AtomicInteger): String =
-      Fixtures.installDir(ns, name, fp) { tmp =>
-        val d = new java.io.File(tmp)
-        d.mkdirs()
-        java.nio.file.Files.writeString(
-          java.nio.file.Path.of(tmp, "_SUCCESS"), "")
-        writes.incrementAndGet(): Unit
+    it("keeps s4's and etl1's fixtures in the process root, writes each once per process, and rekeys them when the source's mtime changes") {
+      // a copy of the tables the two fixtures read, so no earlier suite's
+      // fixture over the shared sf0.001 files answers for them
+      val dir = Fixtures.scratchDir("oncespec_src")
+      java.nio.file.Files.createDirectories(java.nio.file.Path.of(dir))
+      Seq("orders", "lineitem", "nation").foreach(t => java.nio.file.Files.copy(
+        java.nio.file.Path.of(s"/root/testdata/sf0.001/$t.parquet"),
+        java.nio.file.Path.of(s"$dir/$t.parquet")))
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
       }
-
-    it("writes once, installs atomically, and memoizes the resolved path for the JVM") {
-      val writes = new java.util.concurrent.atomic.AtomicInteger(0)
-      val p1 = install("fxa", "fp1", writes)
-      val p2 = install("fxa", "fp1", writes)
-      assert(p1 === p2)
-      assert(writes.get() === 1,
-        "second call re-paid the fixture write — in Bench that write " +
-          "lands inside the measured region")
-      assert(new java.io.File(s"$p1/_SUCCESS").exists())
+      // the jobs started by `body`, with its result
+      def counted[A](body: => A): (A, Int) = {
+        drain(); jobs.set(0)
+        val a = body
+        drain(); (a, jobs.get)
+      }
+      def both(): Seq[String] = Seq(
+        ScaleQueries.partitionedOrdersFixture(spark, dir),
+        EtlQueries.contactsFixture(spark, dir))
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val (first, firstJobs) = counted(both())
+        first.foreach { p =>
+          assert(p.startsWith(s"${Fixtures.root}/"), s"$p is outside the process root")
+          assert(new java.io.File(s"$p/_SUCCESS").exists(), s"$p was not written")
+        }
+        assert(firstJobs > 0)
+        val (second, secondJobs) = counted(both())
+        assert(second === first)
+        assert(secondJobs === 0, "a second call re-wrote a fixture")
+        // a rewritten source gets a new path; two threads asking for it
+        // at once run one write between them
+        val orders = new java.io.File(s"$dir/orders.parquet")
+        orders.setLastModified(orders.lastModified - 60000L)
+        val (once, onceJobs) = counted(ScaleQueries.partitionedOrdersFixture(spark, dir))
+        assert(once !== first.head, "a changed source kept its old fixture path")
+        orders.setLastModified(orders.lastModified - 60000L)
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+        try {
+          val (paths, pairJobs) = counted {
+            val fs = Seq.fill(2)(pool.submit(() =>
+              ScaleQueries.partitionedOrdersFixture(spark, dir)))
+            fs.map(_.get)
+          }
+          assert(paths.distinct.size === 1)
+          assert(paths.head !== once)
+          assert(pairJobs === onceJobs,
+            s"two concurrent calls ran $pairJobs jobs, one write runs $onceJobs")
+        } finally pool.shutdown()
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
 
-    it("heals a cold no-_SUCCESS wreck instead of reading it") {
-      val root = new java.io.File(s"/tmp/graft_fixtures/$ns")
-      val wreck = new java.io.File(root, "fxb_fp2")
-      wreck.mkdirs() // no _SUCCESS: simulated crashed installer
-      // a real wreck has partial part files — and must for this test:
-      // rename(2) silently replaces an EMPTY destination directory
-      java.nio.file.Files.writeString(
-        java.nio.file.Path.of(wreck.getPath, "part-00000"), "partial")
-      wreck.setLastModified(System.currentTimeMillis - 3600000L)
-      val writes = new java.util.concurrent.atomic.AtomicInteger(0)
-      val p = install("fxb", "fp2", writes)
-      assert(p === wreck.getPath, "cold wreck not healed in place")
-      assert(new java.io.File(s"$p/_SUCCESS").exists())
-      assert(writes.get() === 1)
-    }
-
-    it("falls back to its own temp on a YOUNG wreck and keeps that resolution on later calls") {
-      val root = new java.io.File(s"/tmp/graft_fixtures/$ns")
-      val wreck = new java.io.File(root, "fxc_fp3")
-      wreck.mkdirs() // young: mtime now — might be a healer mid-install
-      java.nio.file.Files.writeString( // non-empty, so rename can't replace it
-        java.nio.file.Path.of(wreck.getPath, "part-00000"), "partial")
-      val writes = new java.util.concurrent.atomic.AtomicInteger(0)
-      val p1 = install("fxc", "fp3", writes)
-      assert(p1 !== wreck.getPath, "young wreck was read (or rm-ed) instead of temp fallback")
-      assert(new java.io.File(s"$p1/_SUCCESS").exists())
-      val p2 = install("fxc", "fp3", writes)
-      assert(p2 === p1 && writes.get() === 1,
-        "young-wreck fallback not memoized — the measured call re-writes")
-    }
-
-    it("sweeps stale-fingerprint finals once cold, never the live one") {
-      val root = new java.io.File(s"/tmp/graft_fixtures/$ns")
-      val stale = new java.io.File(root, "fxd_oldfp")
-      stale.mkdirs()
-      java.nio.file.Files.writeString(
-        java.nio.file.Path.of(stale.getPath, "_SUCCESS"), "")
-      stale.setLastModified(System.currentTimeMillis - 7200000L)
-      val young = new java.io.File(root, "fxd_youngfp")
-      young.mkdirs()
-      val writes = new java.util.concurrent.atomic.AtomicInteger(0)
-      val p = install("fxd", "fp4", writes)
-      assert(!stale.exists(), "cold stale-fingerprint fixture not swept")
-      assert(young.exists(), "young sibling swept — could be a live JVM's copy")
-      assert(new java.io.File(s"$p/_SUCCESS").exists())
+    it("memoizes nothing for a write that throws, so the next call writes again") {
+      val dir = Fixtures.scratchDir("oncespec_fail")
+      java.nio.file.Files.createDirectories(java.nio.file.Path.of(dir))
+      java.nio.file.Files.writeString(java.nio.file.Path.of(s"$dir/t.parquet"), "x")
+      var writes = 0
+      def attempt(fail: Boolean): String = Fixtures.once("oncespec", dir, "t") { _ =>
+        writes += 1
+        if (fail) throw new java.io.IOException("disk full")
+      }
+      assertThrows[java.io.IOException](attempt(fail = true))
+      val p = attempt(fail = false)
+      assert(writes === 2, "the failed write was memoized")
+      attempt(fail = false)
+      assert(writes === 2, "a written fixture was written again")
+      assert(p.startsWith(s"${Fixtures.root}/oncespec_"))
     }
   }
 
@@ -208,7 +208,7 @@ class BenchHygieneSpec extends SparkSpec {
 
     it("gives every call its own dir, sweeps dead owners' siblings and keeps a live owner's") {
       val prefix = s"scratchspec_${System.nanoTime()}"
-      val base = "/tmp/graft_fixtures"
+      val base = new java.io.File(Fixtures.root).getParent
       val pid = ProcessHandle.current.pid
       val child = new ProcessBuilder("true").start()
       child.waitFor()

@@ -7,6 +7,7 @@ import java.util.zip.GZIPInputStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.Fixtures
 
 /** FastGzipCodec must (1) produce standard gzip the read path and
   * neo4j-admin can consume, and (2) actually apply BEST_SPEED on the
@@ -28,7 +29,7 @@ class FastGzipCodecSpec extends SparkSpec {
   describe("FastGzipCodec") {
 
     it("writes standard .gz parts Spark reads back losslessly") {
-      val out = Files.createTempDirectory("fastgz").toString
+      val out = Fixtures.scratchDir("fastgz")
       val df = spark.range(500)
         .select(col("id"), concat(lit("row-"), col("id")).as("s"))
       df.coalesce(1).write.mode("overwrite")
@@ -83,7 +84,7 @@ class FastGzipCodecSpec extends SparkSpec {
     }
 
     it("keeps the neo4jTsv roundtrip intact (a10's write path)") {
-      val out = Files.createTempDirectory("fastgz_neo").toString
+      val out = Fixtures.scratchDir("fastgz_neo")
       import spark.implicits._
       val df = Seq((1L, "a", Seq("x", "y")), (2L, "b", Seq("z")))
         .toDF("key", "name", "tags")

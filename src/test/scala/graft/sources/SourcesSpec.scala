@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.Fixtures
 
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
@@ -28,7 +29,7 @@ class SourcesSpec extends SparkSpec {
 
   describe("Neo4j sink (A10)") {
     it("writes typed headers, gzip, and |-serialized arrays") {
-      val dir = Files.createTempDirectory("neo4j_sink").toString
+      val dir = Fixtures.scratchDir("neo4j_sink")
       val df = Seq((1L, "x", Seq("a", "b"), 0.5))
         .toDF("id", "name", "tags", "score")
       Sinks.neo4jTsv(df, dir, Map("id" -> "id:ID(test)"))
@@ -53,7 +54,7 @@ class SourcesSpec extends SparkSpec {
       // with '|', sep '\t', emptyValue "") across the sink value-type
       // domain incl. the formatting-sensitive doubles (x.0, thirds,
       // scientific notation) and null/empty strings and arrays.
-      val dir = Files.createTempDirectory("neo4j_bytes").toString
+      val dir = Fixtures.scratchDir("neo4j_bytes")
       val df = Seq(
         (1L, "plain name", Seq("a", "b"), 0.97),
         (2L, null.asInstanceOf[String], Seq.empty[String], 1.0),
@@ -93,7 +94,7 @@ class SourcesSpec extends SparkSpec {
       // the one deliberate divergence: edge whitespace is written
       // VERBATIM (the old univocity path trimmed it — a silent mutation
       // of the value; no real sink column carries edge whitespace)
-      val dir2 = Files.createTempDirectory("neo4j_edgews").toString
+      val dir2 = Fixtures.scratchDir("neo4j_edgews")
       Sinks.neo4jTsv(Seq((1L, "pad ")).toDF("id", "v"), dir2)
       assert(lines(s"$dir2/data") === Seq("1\tpad "))
     }
@@ -114,10 +115,10 @@ class SourcesSpec extends SparkSpec {
         assert(msgs.contains("TSV domain violation"), s"wrong failure: $msgs")
       }
       Seq("bad\tvalue", "bad\nvalue", "bad\rvalue").foreach { v =>
-        val dir = Files.createTempDirectory("neo4j_guard").toString
+        val dir = Fixtures.scratchDir("neo4j_guard")
         violates(Sinks.neo4jTsv(Seq((1L, v)).toDF("id", "v"), dir))
       }
-      val dirA = Files.createTempDirectory("neo4j_guard_arr").toString
+      val dirA = Fixtures.scratchDir("neo4j_guard_arr")
       violates(Sinks.neo4jTsv(Seq((1L, Seq("ok", "bad\telem")))
         .toDF("id", "tags"), dirA))
     }
@@ -129,7 +130,7 @@ class SourcesSpec extends SparkSpec {
           .takeWhile(_ != null).take(6)
           .flatMap(t => Option(t.getMessage)).mkString(" | ")
       }
-      val dir = Files.createTempDirectory("neo4j_guard_pipe").toString
+      val dir = Fixtures.scratchDir("neo4j_guard_pipe")
       val msgs = violation(Sinks.neo4jTsv(Seq((1L, Seq("a|b")))
         .toDF("id", "tags"), dir))
       assert(msgs.contains("TSV domain violation"), s"wrong failure: $msgs")
@@ -144,7 +145,7 @@ class SourcesSpec extends SparkSpec {
     it("one part file per table, read back, byte-deterministic, empty tables materialized, tabs rejected") {
       // neo4jTsvDimension writes a dimension-bounded table's sorted lines
       // from the driver as exactly one data part next to its header
-      val root = Files.createTempDirectory("neo4j_dim").toString
+      val root = Fixtures.scratchDir("neo4j_dim")
       val tbls = Seq(
         ("t_a", Seq((2L, "y"), (1L, "x")).toDF("id", "v"),
           Map("id" -> "id:ID(a)")),
@@ -191,7 +192,8 @@ class SourcesSpec extends SparkSpec {
 
   describe("mmCIF multi-file scan") {
     it("re-keys each file by its own declared field order") {
-      val dir = Files.createTempDirectory("mmcif_multi").toString
+      val dir = Files.createDirectories(
+        java.nio.file.Paths.get(Fixtures.scratchDir("mmcif_multi"))).toString
       // same category, fields declared in DIFFERENT order per file
       Files.writeString(java.nio.file.Paths.get(dir, "a.cif"),
         "data_a\nloop_\n_t.key\n_t.name\n1 one\n2 two\n#\n")

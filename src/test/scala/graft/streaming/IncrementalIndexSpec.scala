@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.MinHashDedup
+import graft.queries.Fixtures
 
 /** IncrementalMinHashIndex: batching-invariance (the incremental index
   * finds exactly the pairs the batch operator finds, including pairs
@@ -22,9 +23,7 @@ class IncrementalIndexSpec extends SparkSpec {
     6L -> "another singleton document with its own vocabulary entirely")
 
   it("matches the batch operator across batches and stays compacted") {
-    val root = s"/tmp/graft_fixtures/idxspec_" +
-      s"${ProcessHandle.current.pid}_${System.nanoTime}"
-    try {
+    val root = Fixtures.scratchDir("idxspec")
     val idx = new IncrementalMinHashIndex(spark, root, compactEvery = 2)
     Seq(docs.take(2), docs.slice(2, 3), docs.slice(3, 4), docs.drop(4))
       .zipWithIndex.foreach { case (chunk, i) =>
@@ -53,14 +52,5 @@ class IncrementalIndexSpec extends SparkSpec {
     val (nb, ns, nd) = idx.fileCounts
     assert(nb <= 1 && ns <= 1 && nd <= 1,
       s"stores not compacted: bands=$nb shingles=$ns dups=$nd part files")
-    } finally {
-      // unlike the registered queries' self-sweeping fixtures, nothing
-      // sweeps the idxspec_ prefix — delete the tree or /tmp grows per run
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(root)
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
-    }
   }
 }

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.Fixtures
 
 /** Batch/stream parity: the same plan-builder over a MemoryStream must
   * produce the batch answer once all data is ingested (SURVEY.md §2.J —
@@ -25,15 +26,13 @@ class StreamingSpec extends SparkSpec {
 
   describe("parquetSnapshot") {
     it("a snapshot taken before an append to its own directory keeps its rows") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_snapshot").resolve("store").toString
-      try {
-        (1L to 5L).toDF("k").write.parquet(dir)
-        val snap = StreamingOps.parquetSnapshot(spark, dir)
-        (6L to 8L).toDF("k").write.mode("append").parquet(dir)
-        assert(snap.count() === 5L)
-        assert(snap.agg(max("k")).head().getLong(0) === 5L)
-        assert(spark.read.parquet(dir).count() === 8L)
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir).getParentFile)
+      val dir = Fixtures.scratchDir("snapshot_store")
+      (1L to 5L).toDF("k").write.parquet(dir)
+      val snap = StreamingOps.parquetSnapshot(spark, dir)
+      (6L to 8L).toDF("k").write.mode("append").parquet(dir)
+      assert(snap.count() === 5L)
+      assert(snap.agg(max("k")).head().getLong(0) === 5L)
+      assert(spark.read.parquet(dir).count() === 8L)
     }
   }
 
