@@ -15,9 +15,8 @@ import graft.sources.FastGzipCodec
   * driver-recorded 492.5 s had a 4-12× spike cluster no artifact field
   * could explain): warmup success/duration as FIELDS (not stderr),
   * per-family sweep durations, storage-memory high-water + eviction
-  * counts from a block-update listener, and the count of untimed
-  * registry refreshes triggered when the graph registry's cached blocks
-  * lost memory residency mid-run.
+  * counts from a block-update listener, and the registry tables the
+  * canary and the family-boundary sweeps found below full residency.
   */
 /** One measured query's record: wall, success, eviction + task-metric
   * deltas, the driver-side build/plan split, and the query's own gzip
@@ -25,21 +24,22 @@ import graft.sources.FastGzipCodec
   * VERDICT r10 item 1: run-global counters couldn't decompose etl3).
   */
 private[graft] final case class QRes(name: String, sec: Double, ok: Boolean,
-    ev: Long, bev: Long, tm: TaskMetricsSnapshot,
+    ev: Long, tm: TaskMetricsSnapshot,
     buildMs: Long, planMs: Long, gzipMb: Double, gzipStreams: Long,
     host: HostStat.Delta)
 
 /** What one bench run measured besides [[StorageTelemetry]]'s counters:
   * the input of [[Bench.record]]. `warmupSteps` are wall seconds per
-  * warmup step; `residencyLow` the registry tables the canary found below
-  * full residency; `sweeps` the sweep seconds per query family;
+  * warmup step; `rewarmed` the registry tables the canary (`start`) and
+  * each family's closing sweep refilled, with the residency they had;
+  * `sweeps` the sweep seconds per query family;
   * `speedProbes` the fixed-work probe ms per family boundary.
   */
 private[graft] final case class BenchRun(sfDir: String, results: Seq[QRes],
     warmupSec: Double, warmupFailed: Seq[String],
     warmupSteps: Map[String, Double], graphOk: Boolean,
-    residencyLow: Seq[(String, Double)], rewarmed: Seq[String],
-    sweeps: Seq[(String, Double)], refreshSec: Double, refreshes: Int,
+    rewarmed: Seq[(String, graft.graph.GraphTables.Warmed)],
+    sweeps: Seq[(String, Double)],
     speedProbes: Seq[(String, Double)], deflateMbps: Double,
     nativeZlib: Boolean, icu: String,
     chemClass: String, chemPure: Boolean, chemPath: String)
@@ -149,12 +149,11 @@ object Bench {
   private val TailNodes = Seq("/value", "/n", "/failed_n", "/failed_head",
     "/build_sec", "/plan_sec", "/telemetry/warmup_sec",
     "/telemetry/warmup_ok", "/telemetry/graph_warmup_ok",
-    "/telemetry/evicted_blocks", "/telemetry/baseline_evicted_blocks",
-    "/telemetry/refreshes", "/telemetry/rewarmed_n",
+    "/telemetry/evicted_blocks", "/telemetry/rewarmed_n",
     "/telemetry/deflate_mbps", "/telemetry/chem_path", "/telemetry/jvm",
     "/telemetry/icu", "/telemetry/heap_gb", "/telemetry/procs",
     "/telemetry/probe_max_ms", "/warmup_run", "/etl3_sinks", "/build",
-    "/plan", "/evictions", "/baseline_evictions", "/registry_residency",
+    "/plan", "/evictions", "/registry_residency",
     "/speed_probe_ms", "/warmup_failed", "/failed")
 
   /** Bench's stdout, exactly three lines:
@@ -230,11 +229,9 @@ object Bench {
         "warmup_ok" -> (r.warmupFailed.isEmpty && r.graphOk),
         "graph_warmup_ok" -> r.graphOk,
         "sweep_sec" -> r.sweeps.map(_._2).sum,
-        "refresh_sec" -> r.refreshSec, "refreshes" -> r.refreshes,
         "storage_hw_mb" -> t.highWaterBytes / mb,
         "storage_final_mb" -> t.currentBytes / mb,
         "evicted_blocks" -> t.evicted,
-        "baseline_evicted_blocks" -> t.baselineEvicted,
         // false: the zlib.compress.level conf key is a no-op and gzip sinks
         // go through FastGzipCodec's JDK-Deflater BEST_SPEED branch
         "native_zlib" -> r.nativeZlib,
@@ -254,6 +251,7 @@ object Bench {
         "chem_class" -> r.chemClass, "chem_pure" -> r.chemPure,
         "chem_path" -> r.chemPath,
         // > 0: the registry was NOT fully resident when warmup finished
+        // or at a family boundary
         "rewarmed_n" -> r.rewarmed.size,
         // worst family-boundary probe: > ~2x the "start" value means the
         // host itself degraded mid-run
@@ -268,15 +266,15 @@ object Bench {
       // "which table to attack" reads directly
       "warmup_run" -> obj(t.warmGroupStats.toSeq.sortBy(-_._2.runMs).take(5)
         .map { case (k, s) => k -> stats(s) }: _*),
-      "registry_residency" -> obj(r.residencyLow: _*),
-      "rewarmed" -> r.rewarmed,
+      // "<start or family>:<table>" -> the residency the refill found
+      "registry_residency" -> obj(r.rewarmed.map { case (at, w) =>
+        s"$at:${w.table}" -> w.residency }: _*),
+      "rewarmed" -> r.rewarmed.map { case (at, w) => s"$at:${w.table}" },
       "sweeps" -> obj(r.sweeps: _*),
       // per-query memory-residency losses, nonzero only: which query was
       // running while blocks were evicted (sweeps run outside these deltas)
       "evictions" -> obj(r.results.collect {
         case q if q.ev > 0 => q.name -> q.ev }: _*),
-      "baseline_evictions" -> obj(r.results.collect {
-        case q if q.bev > 0 => q.name -> q.bev }: _*),
       "build" -> obj(ok.map(q => q.name -> q.buildMs).sortBy(-_._2).take(8): _*),
       "plan" -> obj(ok.map(q => q.name -> q.planMs).sortBy(-_._2).take(8): _*),
       "exec" -> obj(ok.sortBy(-_.sec).take(12).map(q => q.name -> exec(q)): _*),
@@ -470,14 +468,14 @@ object Bench {
       None
     }
     val graphOpt = canary.map(_._1)
-    val rewarmed = canary.toSeq.flatMap(_._2)
+    val rewarmed = scala.collection.mutable.ArrayBuffer(
+      canary.toSeq.flatMap(_._2).map("start" -> _): _*)
     GraftCacheBridge.drainListenerBus(spark)
     val warmupSec = (System.nanoTime() - tWarm0) / 1e9
     // keep-set for the between-family sweeps: everything persisted so far
     // (graph registry, warmup caches) survives the whole run, exactly as
     // the reference's Neo4j database outlives every dashboard query
-    var baseline = CacheHygiene.snapshot(spark.sparkContext)
-    telemetry.setBaseline(baseline)
+    val baseline = CacheHygiene.snapshot(spark.sparkContext)
 
     // ---- measured run ---------------------------------------------------
     // a failed query appears ONLY in "failed" — never in the "queries"
@@ -486,13 +484,11 @@ object Bench {
     // Between query families the session is swept (untimed but RECORDED):
     // operator persists whose consuming action
     // has run, their CacheManager entries, and GC-gated shuffle cleanup
-    // must not accumulate across 161 queries (the round-6 late-run
-    // regressions). If the sweep's checkpoint finds the REGISTRY lost
-    // memory residency (LRU pressure from a heavy family under a small
-    // driver heap — the r7 p-family-spike hypothesis), the registry is
-    // re-persisted and re-materialized untimed, so a dashboard query is
-    // never charged for re-loading the database it queries — and the
-    // refresh count/duration land in the telemetry fields.
+    // must not accumulate across 230 queries (the round-6 late-run
+    // regressions). The same sweep re-warms the registry: a partition
+    // lost during the finished family is refilled untimed under its RDD
+    // id, so a dashboard query is never charged for re-loading the
+    // database it queries, and the refill lands in `rewarmed`.
     // SPARK_GRAFT_ONLY=name1,name2 — iterate on a single query's timing
     // without the full run; unset (the driver's mode) = run all
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -504,57 +500,29 @@ object Bench {
     // the family it hit (VERDICT r13 item 3)
     val speedProbes = scala.collection.mutable.LinkedHashMap[String, Double]()
     speedProbes("start") = HostStat.speedProbeMs()
-    var refreshSec = 0.0
-    var refreshes = 0
-    var baselineEvictMark = 0L
-    def maybeRefreshRegistry(): Unit =
-      if (telemetry.baselineEvicted > baselineEvictMark) {
-        graphOpt.foreach { g =>
-          val t0 = System.nanoTime()
-          g.registryTablePhasesNamed.flatten.foreach { case (_, df) =>
-            df.unpersist(blocking = true)
-            df.persist()
-          }
-          g.warm()
-          refreshSec += (System.nanoTime() - t0) / 1e9
-          refreshes += 1
-          // re-persist assigns new RDD ids — re-snapshot the keep-set
-          baseline = CacheHygiene.snapshot(spark.sparkContext)
-          telemetry.setBaseline(baseline)
-        }
-        // drain before re-sampling the mark: the refresh's unpersists
-        // post no events (BenchHygieneSpec pins this), but any GENUINE
-        // residency-loss events still in flight from the pressure that
-        // triggered this refresh must land before the mark is read —
-        // otherwise they arrive after and re-trigger a full rebuild at
-        // the next boundary with no new pressure
-        GraftCacheBridge.drainListenerBus(spark)
-        baselineEvictMark = telemetry.baselineEvicted
-      }
     val results = CacheHygiene.familyContiguous(SparkEntry.all)(_.name)
       .filter(rq => only.forall(_.contains(rq.name)))
       .map { rq =>
       val fam = CacheHygiene.family(rq.name)
       if (prevFamily.nonEmpty && fam != prevFamily) {
         val t0 = System.nanoTime()
-        // blocking sweep + bus drain before the next query's ev0/bev0
-        // sample. Unpersist itself posts NO block-update events (pinned
+        // sweep + bus drain before the next query's ev0 sample.
+        // Unpersist itself posts NO block-update events (pinned
         // by BenchHygieneSpec — only genuine storage transitions do:
         // LRU drops, disk demotions), so the deltas never see the
-        // sweep's own removals; the blocking+drain pair closes the
+        // sweep's own removals; the sweep+drain pair closes the
         // remaining window where a REAL transition triggered during the
         // previous family is still in flight on the async bus and would
         // be charged to the next query
-        CacheHygiene.sweep(spark, baseline, blocking = true)
+        rewarmed ++= CacheHygiene.sweep(spark, baseline, graphOpt)
+          .map(prevFamily -> _)
         GraftCacheBridge.drainListenerBus(spark)
         sweepSecs(prevFamily) = sweepSecs.getOrElse(prevFamily, 0.0) +
           (System.nanoTime() - t0) / 1e9
-        maybeRefreshRegistry()
         speedProbes(fam) = HostStat.speedProbeMs()
       }
       prevFamily = fam
       val ev0 = telemetry.evicted
-      val bev0 = telemetry.baselineEvicted
       val tm0 = telemetry.taskSnapshot
       // gzip-codec counters snapshotted PER QUERY (VERDICT r10 item 2:
       // the run-global totals could not split etl3's wall into its own
@@ -600,7 +568,7 @@ object Bench {
       // into the next query's delta
       GraftCacheBridge.drainListenerBus(spark)
       QRes(rq.name, sec, ok, telemetry.evicted - ev0,
-        telemetry.baselineEvicted - bev0, telemetry.taskSnapshot - tm0,
+        telemetry.taskSnapshot - tm0,
         buildMs, planMs,
         (FastGzipCodec.jdkRawBytes.get - gz0raw) / (1024.0 * 1024.0),
         FastGzipCodec.jdkStreams.get + FastGzipCodec.nativeStreams.get - gz0n,
@@ -612,9 +580,7 @@ object Bench {
     import scala.jdk.CollectionConverters._
     val rec = record(BenchRun(sfDir, results, warmupSec,
       warmupFailed.asScala.toSeq, warmupSteps.asScala.toMap, graphOpt.nonEmpty,
-      rewarmed.map(w => w.table -> w.residency), rewarmed.map(_.table),
-      sweepSecs.toSeq, refreshSec,
-      refreshes, speedProbes.toSeq, deflateMbps,
+      rewarmed.toSeq, sweepSecs.toSeq, speedProbes.toSeq, deflateMbps,
       nativeZlib = org.apache.hadoop.io.compress.zlib.ZlibFactory
         .isNativeZlibLoaded(spark.sparkContext.hadoopConfiguration),
       icu = spark.conf.getOption(GraftSession.IcuCaseMappingsKey)

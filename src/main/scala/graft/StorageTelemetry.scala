@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.storage.{BlockId, RDDBlockId}
+import org.apache.spark.storage.BlockId
 
 /** Monotonic task-metric totals sampled before/after a measured region;
   * subtract two snapshots for that region's executor-side profile. The
@@ -44,12 +44,10 @@ final case class GroupStats(runMs: Long, cpuMs: Long, gcMs: Long,
   *    sizes — cached columnar buffers, persisted RDDs, broadcasts),
   *  - memory-residency losses ("evictions"): blocks that previously held
   *    memory and now hold none, which covers both LRU drops and
-  *    MEMORY_AND_DISK demotions to disk (a demoted block is never
-  *    promoted back — every later read pays disk),
-  *  - the same count restricted to a caller-designated BASELINE RDD id
-  *    set (the graph registry): `baselineEvicted > 0` between two
-  *    checkpoints is the "registry lost memory residency" signal the
-  *    round-7 artifact could not provide for the p2 = 64 s spike.
+  *    MEMORY_AND_DISK demotions to disk. A demoted block is promoted back
+  *    when a later read finds memory for it (`BlockManager.getLocalValues`
+  *    → `maybeCacheDiskValuesInMemory`). That read pays disk once; the
+  *    promotion posts no block update, so these counters do not see it.
   *
   * Listener events are posted asynchronously; counters are monotonic
   * atomics sampled before/after a measured region, so a handful of
@@ -62,22 +60,15 @@ final class StorageTelemetry extends SparkListener {
   // pieces, 2x-replicated RDD blocks — are stored per executor under the
   // SAME BlockId; keying on BlockId alone would collapse the replicas
   // into one entry (under-counting bytes) and count one executor's drop
-  // as a residency loss while another still holds the block in memory
-  // (a false baseline-eviction signal). Single-JVM local mode has one
-  // block manager, so the bench's numbers are unchanged — the key is for
-  // the multi-executor deployment this class must survive.
+  // as a residency loss while another still holds the block in memory.
+  // Single-JVM local mode has one block manager, so the bench's numbers
+  // are unchanged — the key is for the multi-executor deployment this
+  // class must survive.
   private val memBytes =
     new ConcurrentHashMap[(String, BlockId), java.lang.Long]()
   private val current = new AtomicLong(0L)
   private val high = new AtomicLong(0L)
   private val evictedCnt = new AtomicLong(0L)
-  private val baselineEvictedCnt = new AtomicLong(0L)
-  @volatile private var baselineRdds: Set[Int] = Set.empty
-
-  /** Designate the registry's RDD ids (call after warmup, and again after
-    * any refresh that re-persists them under new ids).
-    */
-  def setBaseline(rddIds: Set[Int]): Unit = baselineRdds = rddIds
 
   override def onBlockUpdated(u: SparkListenerBlockUpdated): Unit = {
     val info = u.blockUpdatedInfo
@@ -92,20 +83,12 @@ final class StorageTelemetry extends SparkListener {
       var h = high.get()
       while (c > h && !high.compareAndSet(h, c)) h = high.get()
     }
-    if (prev > 0L && newMem == 0L) {
-      evictedCnt.incrementAndGet()
-      info.blockId match {
-        case RDDBlockId(rddId, _) if baselineRdds.contains(rddId) =>
-          baselineEvictedCnt.incrementAndGet()
-        case _ =>
-      }
-    }
+    if (prev > 0L && newMem == 0L) evictedCnt.incrementAndGet()
   }
 
   def currentBytes: Long = current.get()
   def highWaterBytes: Long = high.get()
   def evicted: Long = evictedCnt.get()
-  def baselineEvicted: Long = baselineEvictedCnt.get()
 
   // ---- per-query executor metrics (VERDICT r8 item 2) -------------------
   // Accumulated across ALL task ends; the bench samples a snapshot before

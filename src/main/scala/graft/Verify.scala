@@ -18,9 +18,12 @@ object Verify {
     // Skipped for filtered dev runs: iterating on one non-graph query
     // must not pay the full registry build — a kept query that does need
     // it builds it lazily through GraphTables.cached
-    if (args.length <= 2) try graft.graph.GraphTables.cached(spark, sfDir).warm()
-    catch { case scala.util.control.NonFatal(e) =>
+    val registry = if (args.length > 2) None else try {
+      val g = graft.graph.GraphTables.cached(spark, sfDir)
+      g.warm(); Some(g)
+    } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[verify] graph warmup failed: ${e.getMessage}")
+      None
     }
     val baseline = CacheHygiene.snapshot(spark.sparkContext)
     // family-contiguous order (registration alone interleaves j-queries
@@ -37,7 +40,7 @@ object Verify {
       .filter(rq => keep(rq.name)).foreach { rq =>
       val fam = CacheHygiene.family(rq.name)
       if (sweeping && prevFamily.nonEmpty && fam != prevFamily)
-        CacheHygiene.sweep(spark, baseline, blocking = false)
+        CacheHygiene.sweep(spark, baseline, registry)
       prevFamily = fam
       try rq.build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/${rq.name}")

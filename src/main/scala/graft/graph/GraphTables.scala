@@ -289,9 +289,9 @@ final case class GraphTables(
       } yield (name, df, frac)
       val walls = graft.ActionPool.run(entries.sparkSession) { pool =>
         // through a fresh plan: `df`'s own QueryExecution is fixed at
-        // first use, so after an unpersist + persist (Bench's registry
-        // refresh) it would still scan the dropped entry and never fill
-        // the new one
+        // first use, so after any caller's unpersist + persist of the
+        // table it would still scan the dropped entry and never fill the
+        // new one
         found.foreach { case (name, df, _) =>
           pool.submit(s"warm:$name")(df.select("*").queryExecution.toRdd.count())
         }

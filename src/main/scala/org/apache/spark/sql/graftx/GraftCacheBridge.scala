@@ -92,11 +92,11 @@ object GraftCacheBridge {
     * bridge package). The bench samples its block-telemetry counters
     * around measured regions; without a drain, block-removal events from
     * an immediately-preceding sweep are still in flight and get charged
-    * to the NEXT query's eviction delta. Returns false on timeout (bus
-    * still busy) — callers sample anyway; attribution degrades to the
-    * undrained behavior rather than failing the run.
+    * to the NEXT query's eviction delta. Returns false after 10 s with
+    * the bus still busy — callers sample anyway; attribution degrades to
+    * the undrained behavior rather than failing the run.
     */
-  def drainListenerBus(s: SparkSession, timeoutMs: Long = 10000L): Boolean =
-    try { s.sparkContext.listenerBus.waitUntilEmpty(timeoutMs); true }
+  def drainListenerBus(s: SparkSession): Boolean =
+    try { s.sparkContext.listenerBus.waitUntilEmpty(10000L); true }
     catch { case _: java.util.concurrent.TimeoutException => false }
 }

@@ -104,7 +104,7 @@ class RegistryWarmSpec extends SparkSpec with BeforeAndAfterAll {
       assert(rddId(df) === Some(id))
     }
 
-    it("fills the new entry of a table re-persisted after its first use (Bench's registry refresh)") {
+    it("fills the new entry of a table re-persisted after its first use") {
       val (name, df) = tables.find(_._1 == "interactPairs").get
       df.unpersist(blocking = true)
       df.persist()

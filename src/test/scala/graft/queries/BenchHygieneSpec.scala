@@ -8,7 +8,7 @@ import graft.{CacheHygiene, SparkSpec, StorageTelemetry}
 /** The bench-attribution machinery under test: the round-8 spike-cause
   * analysis leans entirely on these three pieces — the block-update
   * telemetry (what the artifact reports), the between-family sweeps
-  * (what keeps a 161-query session from accumulating state), and the
+  * (what keeps a 230-query session from accumulating state), and the
   * per-process fixture rule (what keeps fixture writes out of timed
   * regions). Each has a failure mode that silently corrupts attribution
   * rather than failing a query, so they get direct specs.
@@ -33,13 +33,12 @@ class BenchHygieneSpec extends SparkSpec {
       } finally spark.sparkContext.removeSparkListener(t)
     }
 
-    it("counts memory-residency loss (LRU drop / disk demotion), restricted to the designated baseline — via synthetic block events") {
+    it("counts memory-residency loss (LRU drop / disk demotion) via synthetic block events") {
       // NOTE (empirically pinned by the integration test above +
       // removal behavior): plain unpersist does NOT arrive as a
       // block-update, only real storage transitions do (LRU drop,
-      // MEMORY_AND_DISK demotion) — which is exactly the "registry lost
-      // memory residency" signal the bench wants; sweeps' unpersists
-      // never pollute the per-query deltas. Synthetic events let the
+      // MEMORY_AND_DISK demotion) — so sweeps' unpersists never pollute
+      // the per-query deltas. Synthetic events let the
       // eviction-transition logic be tested deterministically, since a
       // genuine LRU drop needs real memory pressure.
       import org.apache.spark.sql.graftx.BlockEvents
@@ -47,20 +46,17 @@ class BenchHygieneSpec extends SparkSpec {
       val t = new StorageTelemetry
       def ev(rddId: Int, part: Int, level: StorageLevel, mem: Long) =
         t.onBlockUpdated(BlockEvents.updated(rddId, part, level, mem))
-      t.setBaseline(Set(7))
       ev(7, 0, StorageLevel.MEMORY_AND_DISK, 1000L) // registry block
       ev(9, 0, StorageLevel.MEMORY_AND_DISK, 500L)  // operator cache
       assert(t.currentBytes === 1500L && t.highWaterBytes === 1500L)
       ev(9, 0, StorageLevel.DISK_ONLY, 0L) // demotion: memory lost
-      assert(t.evicted === 1L && t.baselineEvicted === 0L,
-        "non-baseline demotion charged to the baseline counter")
+      assert(t.evicted === 1L, "a demotion to disk was not counted")
       assert(t.currentBytes === 1000L)
       ev(7, 0, StorageLevel.NONE, 0L) // LRU drop of the registry block
-      assert(t.evicted === 2L && t.baselineEvicted === 1L,
-        "registry block's residency loss not counted against the baseline")
+      assert(t.evicted === 2L, "an LRU drop was not counted")
       assert(t.currentBytes === 0L && t.highWaterBytes === 1500L)
-      // re-persist after a refresh: same block id regains memory —
-      // counted as bytes again, not as another eviction
+      // a refill of the same block id regains memory — counted as bytes
+      // again, not as another eviction
       ev(7, 0, StorageLevel.MEMORY_AND_DISK, 1000L)
       assert(t.evicted === 2L && t.currentBytes === 1000L)
     }
@@ -107,7 +103,7 @@ class BenchHygieneSpec extends SparkSpec {
       val drop = spark.range(50000).select((col("id") * 3).as("w")).persist()
       drop.queryExecution.toRdd.count()
       val entriesBefore = GraftCacheBridge.entries(spark).size
-      CacheHygiene.sweep(spark, baseline, blocking = true)
+      CacheHygiene.sweep(spark, baseline, None)
       drain()
       val persistedAfter = spark.sparkContext.getPersistentRDDs.keySet
       assert(baseline.subsetOf(persistedAfter),
@@ -117,6 +113,42 @@ class BenchHygieneSpec extends SparkSpec {
           "matching plans would silently recompute through a dead " +
           "InMemoryRelation without re-caching")
       keep.unpersist(blocking = true)
+    }
+
+    it("sweep re-warms the registry: refills exactly the table that lost a block under its baseline RDD id, and drops post-baseline entries") {
+      import org.apache.spark.SparkEnv
+      import org.apache.spark.storage.RDDBlockId
+      import graft.graph.GraphTables
+      // the star-schema inputs, copied to a directory of this case's own,
+      // so no other suite's registry over the shared sf0.001 files matches
+      // these plans
+      val dir = Fixtures.scratchDir("sweepspec_registry")
+      java.nio.file.Files.createDirectories(java.nio.file.Path.of(dir))
+      Seq("orders", "lineitem", "supplier", "part").foreach(t => java.nio.file.Files.copy(
+        java.nio.file.Path.of(s"/root/testdata/sf0.001/$t.parquet"),
+        java.nio.file.Path.of(s"$dir/$t.parquet")))
+      val g = GraphTables.cached(spark, dir)
+      val tables = g.registryTablePhasesNamed.flatten
+      try {
+        g.warm()
+        val baseline = CacheHygiene.snapshot(spark.sparkContext)
+        val post = spark.range(50000).select((col("id") * 5).as("u")).persist()
+        post.queryExecution.toRdd.count()
+        val interacts = g.interacts
+        def rddId = GraftCacheBridge.entries(spark).collectFirst {
+          case (plan, id) if plan.sameResult(interacts.queryExecution.analyzed) => id
+        }.flatten
+        val id = rddId.get
+        SparkEnv.get.blockManager.removeBlock(RDDBlockId(id, 0))
+        assert(GraftCacheBridge.residency(spark, interacts).exists(_ < 1.0))
+        val warmed = CacheHygiene.sweep(spark, baseline, Some(g))
+        assert(warmed.map(_.table) === Seq("interacts"))
+        assert(GraftCacheBridge.residency(spark, interacts) === Some(1.0))
+        assert(rddId === Some(id) && baseline.contains(id),
+          "the refill left the baseline's RDD id")
+        assert(GraftCacheBridge.residency(spark, post) === None,
+          "the sweep kept a post-baseline CacheManager entry")
+      } finally tables.foreach(_._2.unpersist(blocking = true))
     }
 
     it("family groups by letter prefix; familyContiguous regroups without reordering within a family") {
@@ -238,7 +270,7 @@ class BenchHygieneSpec extends SparkSpec {
       java.nio.file.Files.writeString(java.nio.file.Path.of(filePath), "x")
       val lasting = new java.io.File(Fixtures.root, s"sweepspec_s5_${System.nanoTime()}")
       lasting.mkdirs()
-      CacheHygiene.sweep(spark, baseline, blocking = true)
+      CacheHygiene.sweep(spark, baseline, None)
       assert(!new java.io.File(dirPath).exists(), "a scratch dir outlived the sweep")
       assert(!new java.io.File(filePath).exists(), "a scratch file outlived the sweep")
       assert(new java.io.File(Fixtures.root).isDirectory, "the sweep deleted the process root")
@@ -253,7 +285,7 @@ class BenchHygieneSpec extends SparkSpec {
       import graft.{Bench, BenchRun, HostStat, QRes, TaskMetricsSnapshot}
       val results = (1 to 230).map { i =>
         QRes(f"q$i%03d_synthetic_query_name_pad", i * 0.125,
-          ok = i != 7 && i != 100, ev = i % 3, bev = 0L,
+          ok = i != 7 && i != 100, ev = i % 3,
           TaskMetricsSnapshot(i * 10L, i * 8L, 1L, 2048L, 2048L, 0L,
             1 << 20, 1000L, 8L),
           buildMs = i, planMs = i / 2, gzipMb = 0.0, gzipStreams = 0L,
@@ -263,9 +295,9 @@ class BenchHygieneSpec extends SparkSpec {
       val run = BenchRun(sf, results, warmupSec = 12.5,
         warmupFailed = Seq("lineitem"),
         warmupSteps = Map("graph_registry" -> 9.0, "nation" -> 0.2),
-        graphOk = true, residencyLow = Seq("entries" -> 0.5),
-        rewarmed = Seq("entries"), sweeps = Seq("a" -> 0.25),
-        refreshSec = 0.0, refreshes = 0,
+        graphOk = true,
+        rewarmed = Seq("start" -> graft.graph.GraphTables.Warmed("entries", 0.5, 1.0)),
+        sweeps = Seq("a" -> 0.25),
         speedProbes = Seq("start" -> 10.0, "end" -> 11.5), deflateMbps = 80.0,
         nativeZlib = false, icu = "false", chemClass = "Chem\"Kit\\",
         chemPure = true, chemPath = "factorized")
@@ -289,8 +321,8 @@ class BenchHygieneSpec extends SparkSpec {
       assert(rec.get("n").asInt === 228 && rec.get("failed_n").asInt === 2)
       assert(rec.get("queries").size === 228)
       for (p <- Seq("/warmup_run", "/telemetry/icu", "/telemetry/procs",
-             "/telemetry/probe_max_ms", "/failed_head", "/build_sec",
-             "/plan_sec"))
+             "/telemetry/probe_max_ms", "/telemetry/rewarmed_n",
+             "/failed_head", "/build_sec", "/plan_sec"))
         assert(!rec.at(p).isMissingNode, s"record lacks $p")
       assert(rec.at("/telemetry/chem_class").asText === "Chem\"Kit\\")
       assert(rec.at("/failed_head/1").asText === "q100_synthetic_query_name_pad")
