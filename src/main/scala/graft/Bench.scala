@@ -19,13 +19,15 @@ import graft.sources.FastGzipCodec
   * canary and the family-boundary sweeps found below full residency.
   */
 /** One measured query's record: wall, success, eviction + task-metric
-  * deltas, the driver-side build/plan split, and the query's own gzip
-  * sink byte/stream deltas (snapshotted around the measured region —
-  * VERDICT r10 item 1: run-global counters couldn't decompose etl3).
+  * deltas, the driver-side build/plan split, the jobs the build started,
+  * and the query's own gzip sink byte/stream deltas (snapshotted around
+  * the measured region — VERDICT r10 item 1: run-global counters
+  * couldn't decompose etl3).
   */
 private[graft] final case class QRes(name: String, sec: Double, ok: Boolean,
     ev: Long, tm: TaskMetricsSnapshot,
-    buildMs: Long, planMs: Long, gzipMb: Double, gzipStreams: Long,
+    buildMs: Long, buildJobs: Long, planMs: Long, gzipMb: Double,
+    gzipStreams: Long,
     host: HostStat.Delta)
 
 /** What one bench run measured besides [[StorageTelemetry]]'s counters:
@@ -147,7 +149,7 @@ object Bench {
     * and residency flags, the host class, then the attribution maps.
     */
   private val TailNodes = Seq("/value", "/n", "/failed_n", "/failed_head",
-    "/build_sec", "/plan_sec", "/telemetry/warmup_sec",
+    "/build_sec", "/build_jobs", "/plan_sec", "/telemetry/warmup_sec",
     "/telemetry/warmup_ok", "/telemetry/graph_warmup_ok",
     "/telemetry/evicted_blocks", "/telemetry/rewarmed_n",
     "/telemetry/deflate_mbps", "/telemetry/chem_path", "/telemetry/jvm",
@@ -202,7 +204,8 @@ object Bench {
     // per sink query; host_* is the whole host during the query
     // (host_busy ≫ cpu_ms = foreign load; steal > 0 = hypervisor).
     def exec(q: QRes) = obj("run_ms" -> q.tm.runMs, "cpu_ms" -> q.tm.cpuMs,
-      "gc_ms" -> q.tm.gcMs, "build_ms" -> q.buildMs, "plan_ms" -> q.planMs,
+      "gc_ms" -> q.tm.gcMs, "build_ms" -> q.buildMs,
+      "build_jobs" -> q.buildJobs, "plan_ms" -> q.planMs,
       "in_mb" -> q.tm.inputBytes / mb, "in_rows" -> q.tm.inputRecords,
       "tasks" -> q.tm.tasks, "shuf_rd_mb" -> q.tm.shufReadBytes / mb,
       "shuf_wr_mb" -> q.tm.shufWriteBytes / mb,
@@ -220,6 +223,8 @@ object Bench {
       // inside build by design; plan = Catalyst optimization + physical
       // planning of the final QueryExecution only
       "build_sec" -> ok.map(_.buildMs).sum / 1e3,
+      // Spark jobs started inside the rq.build calls (exec's build_jobs)
+      "build_jobs" -> ok.map(_.buildJobs).sum,
       "plan_sec" -> ok.map(_.planMs).sum / 1e3,
       // a failed query appears ONLY in "failed", never in "queries"
       "queries" -> obj(ok.map(q => q.name -> q.sec): _*),
@@ -410,8 +415,7 @@ object Bench {
       // table is one warmup_failed entry, as before.
       Tables.names.foreach { t =>
         step(t) {
-          spark.read.parquet(s"$sfDir/$t.parquet")
-            .queryExecution.toRdd.count()
+          Tables(spark, sfDir, t).queryExecution.toRdd.count()
         }
       }
       // the etl1 JSON-lines fixture, pre-generated so the measured etl1
@@ -523,6 +527,7 @@ object Bench {
       }
       prevFamily = fam
       val ev0 = telemetry.evicted
+      val bj0 = telemetry.buildJobs
       val tm0 = telemetry.taskSnapshot
       // gzip-codec counters snapshotted PER QUERY (VERDICT r10 item 2:
       // the run-global totals could not split etl3's wall into its own
@@ -544,11 +549,18 @@ object Bench {
       //     tracker phases (analysis already happened inside build).
       // wall − build_ms − plan_ms − run_ms/cores ≈ scheduling + result
       // handling — the residual the r9 driver host showed 4–5 s of.
+      // build_jobs counts the jobs build_ms contains: every job started
+      // under the query's StorageTelemetry.BuildKey property.
       var buildMs = 0L
       var planMs = 0L
+      val sc = spark.sparkContext
       val ok =
         try {
-          val df = rq.build(spark, sfDir)
+          val df =
+            try {
+              sc.setLocalProperty(StorageTelemetry.BuildKey, rq.name)
+              rq.build(spark, sfDir)
+            } finally sc.setLocalProperty(StorageTelemetry.BuildKey, null)
           buildMs = (System.nanoTime() - t0) / 1000000L
           val qe = df.queryExecution
           qe.toRdd.count()
@@ -569,7 +581,7 @@ object Bench {
       GraftCacheBridge.drainListenerBus(spark)
       QRes(rq.name, sec, ok, telemetry.evicted - ev0,
         telemetry.taskSnapshot - tm0,
-        buildMs, planMs,
+        buildMs, telemetry.buildJobs - bj0, planMs,
         (FastGzipCodec.jdkRawBytes.get - gz0raw) / (1024.0 * 1024.0),
         FastGzipCodec.jdkStreams.get + FastGzipCodec.nativeStreams.get - gz0n,
         HostStat.delta(hs0, HostStat.read()))

@@ -60,7 +60,7 @@ object CacheHygiene {
             registry: Option[GraphTables]): Seq[GraphTables.Warmed] = {
     GraftCacheBridge.entries(spark).foreach { case (plan, rddId) =>
       if (!rddId.exists(baseline.contains))
-        GraftCacheBridge.uncache(spark, plan, blocking = true)
+        GraftCacheBridge.uncache(spark, plan)
     }
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!baseline.contains(id)) rdd.unpersist(blocking = true)

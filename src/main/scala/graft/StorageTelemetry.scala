@@ -164,12 +164,22 @@ final class StorageTelemetry extends SparkListener {
       inB.get(), inR.get(), n.get())
   }
 
-  override def onJobStart(j: SparkListenerJobStart): Unit = {
-    val g =
-      if (j.properties == null) null
-      else j.properties.getProperty("spark.jobGroup.id")
-    if (g != null) j.stageIds.foreach(sid => stageGroup.put(sid, g))
-  }
+  override def onJobStart(j: SparkListenerJobStart): Unit =
+    if (j.properties != null) {
+      val g = j.properties.getProperty("spark.jobGroup.id")
+      if (g != null) j.stageIds.foreach(sid => stageGroup.put(sid, g))
+      if (j.properties.getProperty(StorageTelemetry.BuildKey) != null)
+        buildJobsCnt.incrementAndGet()
+    }
+
+  // ---- build-phase jobs ------------------------------------------------
+  // Jobs started while the caller's thread carries `StorageTelemetry.BuildKey`
+  // (Bench sets it around each rq.build, ActionPool tasks inherit it):
+  // superstep rounds, sink writes, replays, schema inference. Monotonic,
+  // sampled before/after a query like the other counters.
+  private val buildJobsCnt = new AtomicLong(0L)
+
+  def buildJobs: Long = buildJobsCnt.get()
 
   private def groupStats(prefix: String): Map[String, GroupStats] = {
     import scala.jdk.CollectionConverters._
@@ -183,4 +193,11 @@ final class StorageTelemetry extends SparkListener {
 
   /** Full executor stats per `sink:` group (ExportStage writes). */
   def sinkGroupStats: Map[String, GroupStats] = groupStats("sink:")
+}
+
+object StorageTelemetry {
+
+  /** The local property that marks a job as started inside a query's
+    * build; its value names the query. */
+  val BuildKey = "graft.build"
 }

@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** A query registered with the driver's correctness harness.
   *
@@ -87,15 +93,75 @@ object GraftSession {
   val IcuCaseMappingsKey = "spark.sql.icu.caseMappings.enabled"
 }
 
-/** Loaders for the driver-generated test tables (TESTDATA.md). */
+/** Loaders for the driver-generated test tables (TESTDATA.md), the one
+  * way the engine reads an input table.
+  *
+  * A plain `read.parquet` infers the schema with a one-task Spark job on
+  * every call. `Tables` resolves each table's schema once per process
+  * instead and reads with `.schema(...)`, which starts no job: the memo
+  * is keyed by the qualified path plus the session's explicitly set confs
+  * that change Parquet inference ([[schemaConf]]), and each entry holds
+  * the schema with a fingerprint of the files it was inferred from (one
+  * `listStatus`: name, length, mtime). Every call lists the path again; a
+  * changed fingerprint infers again, so a stale schema is never served.
+  * An inference job is described `schema:<table>`. A path that cannot be
+  * listed falls through to the plain read, so a missing table fails with
+  * Spark's own `AnalysisException`. Two first readers may both infer;
+  * either result is valid. The memo holds one entry per input table and
+  * schema conf, so it is never evicted.
+  *
+  * Reads of files a query writes itself (scratch dirs, fixtures, index
+  * stores) do not go through here: those change by design.
+  */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  private final case class Resolved(files: Seq[(String, Long, Long)], schema: StructType)
+
+  private val resolved =
+    new ConcurrentHashMap[(String, Seq[(String, String)]), Resolved]()
+
   def apply(s: SparkSession, dir: String, name: String): DataFrame = {
     require(names.contains(name),
       s"unknown table '$name' — expected one of: ${names.mkString(", ")}")
-    s.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    listing(s, path).fold(s.read.parquet(path)) { case (qualified, files) =>
+      val key = (qualified, schemaConf(s))
+      Option(resolved.get(key)).filter(_.files == files) match {
+        case Some(r) => s.read.schema(r.schema).parquet(path)
+        case None =>
+          val sc = s.sparkContext
+          val caller = sc.getLocalProperty("spark.job.description")
+          val df = try {
+            sc.setJobDescription(s"schema:$name")
+            s.read.parquet(path)
+          } finally sc.setJobDescription(caller)
+          resolved.put(key, Resolved(files, df.schema))
+          df
+      }
+    }
   }
+
+  /** The qualified path and its sorted (name, length, mtime) listing, or
+    * None when the path cannot be listed. */
+  private def listing(s: SparkSession, path: String)
+      : Option[(String, Seq[(String, Long, Long)])] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val q = fs.makeQualified(p)
+      Some(q.toString -> fs.listStatus(q).toSeq
+        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted)
+    } catch { case NonFatal(_) => None }
+
+  /** The session's explicitly set confs that change what Parquet
+    * inference returns (`spark.sql.legacy.parquet.nanosAsLong` turns a
+    * nanosecond timestamp into a long, for one). */
+  private def schemaConf(s: SparkSession): Seq[(String, String)] =
+    s.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") || k == "spark.sql.caseSensitive"
+    }.sorted
 }

@@ -51,7 +51,7 @@ object ScaleUp {
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-    def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def rd(t: String): DataFrame = graft.Tables(spark, src, t)
     def stride(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head().getLong(0) + 1L
 

@@ -48,14 +48,14 @@ object GraftCacheBridge {
       }
   }
 
-  /** Drop one entry (blocks + catalog entry, non-cascading): the public
-    * uncache path `Dataset.unpersist` itself uses.
+  /** Drop one entry (blocks + catalog entry, non-cascading) and wait for
+    * its blocks to go: the public uncache path `Dataset.unpersist` itself
+    * uses.
     */
-  def uncache(s: SparkSession, plan: LogicalPlan,
-              blocking: Boolean = false): Unit = {
+  def uncache(s: SparkSession, plan: LogicalPlan): Unit = {
     val cs = s.asInstanceOf[classic.SparkSession]
     cs.sharedState.cacheManager
-      .uncacheQuery(cs, plan, cascade = false, blocking = blocking)
+      .uncacheQuery(cs, plan, cascade = false, blocking = true)
   }
 
   /** Storage residency of a persisted DataFrame, the one test

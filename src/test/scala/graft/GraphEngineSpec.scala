@@ -48,6 +48,20 @@ class GraphEngineSpec extends AnyFunSpec {
       assert(hits.isEmpty,
         hits.mkString("a /tmp literal outside Fixtures:\n", "\n", ""))
     }
+
+    it("reads an input table only through graft.Tables") {
+      // `read.parquet` (or `read.schema(...).parquet`) of `<dir>/<table>.parquet`,
+      // the table named literally or by an interpolated variable
+      val inputRead = ("""read(\.schema\([^)]*\))?\.parquet\(s?"[^"]*/(\$\{?\w+\}?|""" +
+        Tables.names.mkString("|") + """)\.parquet"""").r
+      val hits = for {
+        p <- sources if p.getFileName.toString != "core.scala"
+        (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+        if inputRead.findFirstIn(line).nonEmpty
+      } yield s"$p:${i + 1}: ${line.trim}"
+      assert(hits.isEmpty, hits.mkString(
+        "an input table read around graft.Tables' schema memo:\n", "\n", ""))
+    }
   }
 
   describe("src/test") {

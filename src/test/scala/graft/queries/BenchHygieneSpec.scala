@@ -288,7 +288,8 @@ class BenchHygieneSpec extends SparkSpec {
           ok = i != 7 && i != 100, ev = i % 3,
           TaskMetricsSnapshot(i * 10L, i * 8L, 1L, 2048L, 2048L, 0L,
             1 << 20, 1000L, 8L),
-          buildMs = i, planMs = i / 2, gzipMb = 0.0, gzipStreams = 0L,
+          buildMs = i, buildJobs = i % 4, planMs = i / 2, gzipMb = 0.0,
+          gzipStreams = 0L,
           HostStat.Delta(i * 20L, 5L, 0L, 0L))
       }
       val sf = "/data/sf \"quoted\" \\back\\slash"
@@ -322,7 +323,8 @@ class BenchHygieneSpec extends SparkSpec {
       assert(rec.get("queries").size === 228)
       for (p <- Seq("/warmup_run", "/telemetry/icu", "/telemetry/procs",
              "/telemetry/probe_max_ms", "/telemetry/rewarmed_n",
-             "/failed_head", "/build_sec", "/plan_sec"))
+             "/failed_head", "/build_sec", "/build_jobs", "/plan_sec",
+             "/exec/q230_synthetic_query_name_pad/build_jobs"))
         assert(!rec.at(p).isMissingNode, s"record lacks $p")
       assert(rec.at("/telemetry/chem_class").asText === "Chem\"Kit\\")
       assert(rec.at("/failed_head/1").asText === "q100_synthetic_query_name_pad")
