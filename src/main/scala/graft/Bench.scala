@@ -35,7 +35,9 @@ private[graft] final case class QRes(name: String, sec: Double, ok: Boolean,
   * warmup step; `rewarmed` the registry tables the canary (`start`) and
   * each family's closing sweep refilled, with the residency they had;
   * `sweeps` the sweep seconds per query family;
-  * `speedProbes` the fixed-work probe ms per family boundary.
+  * `speedProbes` the fixed-work probe ms per family boundary;
+  * `storageFinalBytes` the storage memory in use when the run ended
+  * ([[StorageTelemetry.usedBytes]]).
   */
 private[graft] final case class BenchRun(sfDir: String, results: Seq[QRes],
     warmupSec: Double, warmupFailed: Seq[String],
@@ -44,7 +46,8 @@ private[graft] final case class BenchRun(sfDir: String, results: Seq[QRes],
     sweeps: Seq[(String, Double)],
     speedProbes: Seq[(String, Double)], deflateMbps: Double,
     nativeZlib: Boolean, icu: String,
-    chemClass: String, chemPure: Boolean, chemPath: String)
+    chemClass: String, chemPure: Boolean, chemPath: String,
+    storageFinalBytes: Long)
 
 /** Host-window attribution (VERDICT r13 item 3: a 10-30× CPU inflation
   * on identical inputs roamed from p2 to domainCognate/p15/p6/t41 across
@@ -234,8 +237,10 @@ object Bench {
         "warmup_ok" -> (r.warmupFailed.isEmpty && r.graphOk),
         "graph_warmup_ok" -> r.graphOk,
         "sweep_sec" -> r.sweeps.map(_._2).sum,
+        // a lower bound: the peak the listener's block events show
         "storage_hw_mb" -> t.highWaterBytes / mb,
-        "storage_final_mb" -> t.currentBytes / mb,
+        // the block manager master's figure when the run ended
+        "storage_final_mb" -> r.storageFinalBytes / mb,
         "evicted_blocks" -> t.evicted,
         // false: the zlib.compress.level conf key is a no-op and gzip sinks
         // go through FastGzipCodec's JDK-Deflater BEST_SPEED branch
@@ -599,7 +604,8 @@ object Bench {
         .getOrElse("default"),
       chemClass = graphOpt.map(_.chem.getClass.getSimpleName).getOrElse("none"),
       chemPure = graphOpt.exists(_.chem.columnPure),
-      chemPath = graphOpt.map(_.domainCognatePath).getOrElse("none")),
+      chemPath = graphOpt.map(_.domainCognatePath).getOrElse("none"),
+      storageFinalBytes = StorageTelemetry.usedBytes(spark.sparkContext)),
       telemetry)
     // the record as a FILE too, so a tail-bounded consumer can follow the
     // pointer the canonical line carries. CWD-relative (sfDir-independent),

@@ -40,8 +40,14 @@ final case class GroupStats(runMs: Long, cpuMs: Long, gcMs: Long,
 /** Storage-memory telemetry for the bench (VERDICT r7 "the bench cannot
   * explain its own number"): a SparkListener over block updates tracking
   *
-  *  - current / high-water storage-memory bytes (sum of in-memory block
-  *    sizes — cached columnar buffers, persisted RDDs, broadcasts),
+  *  - high-water storage-memory bytes: the peak of the running sum of
+  *    in-memory block sizes (cached columnar buffers, persisted RDDs,
+  *    broadcast pieces) that the update events this listener receives
+  *    report. A lower bound: a block stored before the listener was
+  *    added, a block stored without telling the master (a broadcast's
+  *    local value) and a re-promoted block (below) post no event it
+  *    sees. The bytes in use at one moment come from the block manager
+  *    master instead ([[StorageTelemetry.usedBytes]]),
   *  - memory-residency losses ("evictions"): blocks that previously held
   *    memory and now hold none, which covers both LRU drops and
   *    MEMORY_AND_DISK demotions to disk. A demoted block is promoted back
@@ -86,7 +92,6 @@ final class StorageTelemetry extends SparkListener {
     if (prev > 0L && newMem == 0L) evictedCnt.incrementAndGet()
   }
 
-  def currentBytes: Long = current.get()
   def highWaterBytes: Long = high.get()
   def evicted: Long = evictedCnt.get()
 
@@ -196,6 +201,17 @@ final class StorageTelemetry extends SparkListener {
 }
 
 object StorageTelemetry {
+
+  /** Storage memory in use now, summed over every block manager: max
+    * minus remaining, as the block manager master accounts it from the
+    * blocks reported to it. Synchronous (the source
+    * `GraftCacheBridge.residency` reads), so it depends on no listener
+    * having seen every event. A block that `maybeCacheDiskValuesInMemory`
+    * re-promotes from disk is not reported to the master either, so it
+    * is missing here too.
+    */
+  def usedBytes(sc: org.apache.spark.SparkContext): Long =
+    sc.getExecutorMemoryStatus.values.map { case (max, remaining) => max - remaining }.sum
 
   /** The local property that marks a job as started inside a query's
     * build; its value names the query. */

@@ -91,6 +91,16 @@ object GraftSession {
     * class init then lands UNTIMED, like JIT warmup.
     */
   val IcuCaseMappingsKey = "spark.sql.icu.caseMappings.enabled"
+
+  /** Runs `body` with every job it starts described `description` (the
+    * name a job listener or the event log attributes it by), then
+    * restores the caller's description. */
+  def described[T](s: SparkSession, description: String)(body: => T): T = {
+    val sc = s.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try body finally sc.setJobDescription(caller)
+  }
 }
 
 /** Loaders for the driver-generated test tables (TESTDATA.md), the one
@@ -132,12 +142,7 @@ object Tables {
       Option(resolved.get(key)).filter(_.files == files) match {
         case Some(r) => s.read.schema(r.schema).parquet(path)
         case None =>
-          val sc = s.sparkContext
-          val caller = sc.getLocalProperty("spark.job.description")
-          val df = try {
-            sc.setJobDescription(s"schema:$name")
-            s.read.parquet(path)
-          } finally sc.setJobDescription(caller)
+          val df = GraftSession.described(s, s"schema:$name")(s.read.parquet(path))
           resolved.put(key, Resolved(files, df.schema))
           df
       }

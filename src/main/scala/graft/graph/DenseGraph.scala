@@ -92,18 +92,16 @@ private[graft] final class DenseGraph private (spark: SparkSession,
   def run[S <: AnyRef, M: ClassTag, P: ClassTag](kernel: String, init: S, rounds: Int)(
       send: S => M)(fold: (M, EdgeBlock) => P)(
       update: (Int, S, Array[P]) => S): S = {
-    val sc = spark.sparkContext
-    val caller = sc.getLocalProperty("spark.job.description")
     @tailrec def loop(st: S, r: Int): S = if (r > rounds) st else {
-      val msg = sc.broadcast(send(st))
+      val msg = spark.sparkContext.broadcast(send(st))
       val parts = try {
-        sc.setJobDescription(s"superstep:$kernel $r/$rounds")
-        edges.map(fold(msg.value, _)).collect()
+        graft.GraftSession.described(spark, s"superstep:$kernel $r/$rounds")(
+          edges.map(fold(msg.value, _)).collect())
       } finally msg.destroy()
       val next = update(r, st, parts)
       if (next eq st) st else loop(next, r + 1)
     }
-    try loop(init, 1) finally sc.setJobDescription(caller)
+    loop(init, 1)
   }
 
   /** Connected components in one [[run]] round: each task builds a
@@ -142,8 +140,9 @@ private[graft] object DenseGraph {
 
   /** Each vertex's label after linking `links` in a union-find over `n`
     * vertices: the minimum index in its set (the smaller root always wins).
+    * x6's per-partition contraction (DataFrameCC) runs the same rule.
     */
-  private def minRoots(n: Int, links: Iterator[(Int, Int)]): Array[Int] = {
+  private[graft] def minRoots(n: Int, links: Iterator[(Int, Int)]): Array[Int] = {
     val p = Array.range(0, n)
     def find(v0: Int): Int = {
       var v = v0

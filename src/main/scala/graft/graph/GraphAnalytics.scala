@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -79,6 +78,9 @@ private[graft] object DistVec {
   * propagation, x8 k-core peel, x10 closeness and x11 HyperBall. x2's
   * degrees are one grouped count, and x6 is DataFrameCC's star
   * contraction loop, the path for edges that do not fit the driver.
+  * Every kernel but x2 takes its graph from the registry, built once per
+  * `GraphTables`: the vertex set (`suppliers`), the co-binding pairs
+  * (`coBindCounts`) and the kNN edges (`knnEdges`).
   */
 object GraphAnalytics {
 
@@ -101,35 +103,27 @@ object GraphAnalytics {
     */
   val Knn = 3
 
-  /** Distinct (part, supplier) incidence pairs — the single definition of
-    * the co-binding relation for VERTEX sets and degree queries (x2).
-    * Pair generation goes through `cappedIncidence` instead.
+  /** Distinct (part, supplier) incidence pairs — the x2 degree query's
+    * input and the one read of `lineitem` in this file: every other
+    * kernel starts from the registry's [[GraphTables.suppliers]],
+    * [[GraphTables.coBindCounts]] or [[GraphTables.knnEdges]].
     */
   private def coBindingPairs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "lineitem")
       .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
       .distinct()
 
-  /** The supplier vertex set `(sk)` of every co-binding graph kernel. */
-  private def suppliers(s: SparkSession, dir: String): DataFrame =
-    coBindingPairs(s, dir).select(col("sk")).distinct()
-
   /** Incidence capped to each part's top-`CoBindCap` contributors by
     * summed quantity (contact strength), ties by suppkey — the bounded
-    * input to every pair self-join below. floor().cast matches the
-    * oracle's CAST(floor(..) AS BIGINT) truncation exactly.
+    * input to the pairing below, as the registry builds it.
     */
   private[graft] def cappedIncidence(s: SparkSession, dir: String): DataFrame =
-    cappedIncidenceFrom(Tables(s, dir, "lineitem")
-      .groupBy(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
-      .agg(sum(floor(col("l_quantity")).cast("long")).as("q")))
+    GraphTables.cached(s, dir).cappedIncidence
 
-  /** The cap window over ANY (pk, sk, q) incidence frame — one definition
-    * whether strength comes from raw lineitem (the spec path above) or
-    * from the registry's already-aggregated interaction table
-    * (GraphTables.coBindCounts sums contactCount over entries — the same
-    * totals, since contactCount is the per-entry slice of this sum and
-    * the quantities are positive so cast/floor agree).
+  /** The cap over ANY (pk, sk, q) incidence frame. The registry's strength
+    * sums `contactCount` over entries — the oracle's lineitem totals,
+    * since contactCount is the per-entry slice of that sum and the
+    * quantities are positive so cast/floor agree.
     */
   private[graft] def cappedIncidenceFrom(inc: DataFrame): DataFrame =
     // native TopKPerGroup, not a row_number window: the window SHUFFLES
@@ -149,12 +143,21 @@ object GraphAnalytics {
     * similarity graph (what the reference's Neo4j import writes as
     * edges). Every x-family graph query derives its edge set from this
     * one table (via GraphTables.coBindCounts, built once per registry):
-    * x1/x6 take the distinct canonical pairs, x3/x4/x5/x7 take the
-    * top-k window — none of them re-pays the pair self-join.
+    * x1/x6 take the distinct canonical pairs, the kNN kernels take
+    * GraphTables.knnEdges — none of them re-pays the pairing.
+    *
+    * The pairs come from each part's contributor list, one plan over one
+    * capped frame. A self-join of `capped` computes the incidence
+    * aggregate and the cap twice: over a cached table (the registry's
+    * `interacts`) each join side gets its own table-cache stage, and the
+    * exchanges above them are not reused (8 jobs where this takes 5).
+    * The cap's output is already partitioned by part, so the list needs
+    * no exchange of its own.
     */
   private[graft] def coBindCountsFrom(capped: DataFrame): DataFrame =
-    capped.select(col("pk"), col("sk").as("s1"))
-      .join(capped.select(col("pk"), col("sk").as("s2")), "pk")
+    capped.groupBy("pk").agg(collect_list(col("sk")).as("ss"))
+      .select(explode(col("ss")).as("s1"), col("ss"))
+      .select(col("s1"), explode(col("ss")).as("s2"))
       .filter(col("s1") =!= col("s2"))
       .groupBy("s1", "s2").agg(count(lit(1)).as("n"))
 
@@ -192,14 +195,18 @@ object GraphAnalytics {
     * of a driver-indexed union-find — the fact-sized-edge-list path (see
     * DataFrameCC's scaladoc for when each applies). Identical output by
     * construction: both label with the component's minimum id, so x1's
-    * recursive-CTE oracle checks this one too.
+    * recursive-CTE oracle checks this one too. The edges stay
+    * distributed; the labels, one per vertex of the registry's local
+    * vertex set, are held as a local frame like every DenseGraph
+    * kernel's result.
     */
   def coBindingComponentsDF(s: SparkSession, dir: String): DataFrame = {
     val edges = coBindingPartners(s, dir).filter(col("s1") < col("s2"))
       .select(col("s1").as("a"), col("s2").as("b"))
-    val vertices = coBindingPairs(s, dir).select(col("sk").as("id")).distinct()
-    graft.operators.DataFrameCC.components(s, vertices, edges)
+    val vertices = suppliers(s, dir).select(col("sk").as("id"))
+    val labels = graft.operators.DataFrameCC.components(s, vertices, edges)
       .withColumnRenamed("node", "suppkey")
+    s.createDataFrame(java.util.Arrays.asList(labels.collect(): _*), labels.schema)
       .orderBy("suppkey")
   }
 
@@ -220,22 +227,14 @@ object GraphAnalytics {
       .withColumnRenamed("id", "suppkey")
       .orderBy("suppkey")
 
-  /** Canonical (`ea < eb`, distinct) edge list of the top-k co-binding
-    * similarity graph — each supplier keeps its k strongest partners
-    * (most shared parts, ties by id). Shared by x3 (triangles) and x4
-    * (BFS): both run on the kNN sparsification, never the near-complete
-    * raw co-occurrence graph.
-    */
+  /** The registry's supplier vertex set (a local frame). */
+  private def suppliers(s: SparkSession, dir: String): DataFrame =
+    GraphTables.cached(s, dir).suppliers
+
+  /** The registry's canonical top-k edge list (a local frame). */
   private[graft] def topKCanonEdges(s: SparkSession, dir: String,
-                             k: Int): DataFrame = {
-    val shared = GraphTables.cached(s, dir).coBindCounts
-    val w = Window.partitionBy("s1").orderBy(col("n").desc, col("s2"))
-    shared.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(least(col("s1"), col("s2")).as("ea"),
-        greatest(col("s1"), col("s2")).as("eb"))
-      .distinct()
-  }
+                                    k: Int): DataFrame =
+    GraphTables.cached(s, dir).knnEdges(k)
 
   /** BFS hop distance from the minimum supplier id over the top-k
     * co-binding graph (min-plus message passing, the canonical Pregel
@@ -681,12 +680,10 @@ object GraphAnalytics {
     */
   def neighborhoodJaccard(s: SparkSession, dir: String,
                           knn: Int = Knn): DataFrame = {
-    val e = topKCanonEdges(s, dir, knn)
     // the directed edge table feeds FOUR plan branches (both wedge-join
-    // sides + both degree joins); un-materialized, each branch re-runs
-    // the top-k window + distinct — measured 4× the query's real work.
-    // Dimension-sized, so the truncate is cheap.
-    val ed = graft.operators.Checkpoints.truncate(directedEdges(e))
+    // sides + both degree joins); the registry's kNN edges are a local
+    // frame, so each branch reads driver-held rows, not a recomputation
+    val ed = directedEdges(topKCanonEdges(s, dir, knn))
     val deg = ed.groupBy("a").agg(count(lit(1)).as("n"))
     val wedge = ed.as("e1")
       .join(ed.as("e2"),

@@ -1,19 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.Dataset
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** Lineage truncation for iterative DataFrame loops (DataFrameCC's x6
-  * star contraction) and multi-branch graph plans (x9's directed edge
-  * table) — the deployment
+  * star contraction) — the deployment
   * switch the r9 scaladoc comments promised, as a conf (VERDICT r9
   * item 5).
   *
-  * Default (conf unset): `localCheckpoint(eager = true)` — blocks on the
+  * Default (conf unset): an eager local checkpoint — blocks on the
   * executors, no lineage, fastest, and exactly right for local[N] where
   * "executor loss" is process death anyway.
   *
-  * With `spark.graft.checkpoint.dir` set: RELIABLE `checkpoint(eager =
-  * true)` to that directory (HDFS/S3 on a cluster) — a lost executor
+  * With `spark.graft.checkpoint.dir` set: an eager RELIABLE checkpoint
+  * to that directory (HDFS/S3 on a cluster) — a lost executor
   * recomputes from the checkpoint files instead of failing the job,
   * which is the contract a 1000-executor iterative job needs: without
   * it, one preempted container after round k of a 30-round loop kills
@@ -34,10 +36,20 @@ object Checkpoints {
     */
   val DirConf = "spark.graft.checkpoint.dir"
 
-  /** Eagerly materialize `ds` with truncated lineage, per the conf. */
-  def truncate[T](ds: Dataset[T]): Dataset[T] = {
-    val spark = ds.sparkSession
-    spark.conf.getOption(DirConf).filter(_.nonEmpty) match {
+  /** Eagerly materialize `df` with truncated lineage, per the conf. */
+  def truncate(df: DataFrame): DataFrame = truncateFolding(df)(_ => ())._1
+
+  /** [[truncate]], folding each partition's rows with `fold` in the job
+    * that materializes them: one job gives the truncated frame and one
+    * `fold` result per partition, where a truncate and then an aggregate
+    * over it would run two (DataFrameCC's per-round fixpoint checksum).
+    * With the conf set, the reliable checkpoint writes its files in one
+    * more job after that, as `Dataset.checkpoint` does.
+    */
+  def truncateFolding[P: ClassTag](df: DataFrame)(
+      fold: Iterator[InternalRow] => P): (DataFrame, Array[P]) = {
+    val spark = df.sparkSession
+    val t = spark.conf.getOption(DirConf).filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = spark.sparkContext
         // setCheckpointDir appends a context-unique UUID subdir AND
@@ -57,8 +69,12 @@ object Checkpoints {
           parent != null && parent.toString == qualified
         }
         if (!already) sc.setCheckpointDir(dir)
-        ds.checkpoint(eager = true)
-      case None => ds.localCheckpoint(eager = true)
+        df.checkpoint(eager = false)
+      case None => df.localCheckpoint(eager = false)
     }
+    // the first job over the marked rows materializes them, and checkpoints
+    // them when it ends
+    val parts = t.queryExecution.toRdd.mapPartitions(it => Iterator.single(fold(it))).collect()
+    (t, parts)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Connected components as pure DataFrame joins — the alternating
@@ -50,23 +51,28 @@ object DataFrameCC {
     *                 duplicates/self-loops tolerated)
     * @return (node: long, component: long), component = min reachable id
     *
-    * Each round is two shuffle stages (large-star: groupBy-u + join-back;
-    * small-star: groupBy-u + join-back) over an edge set that only
-    * shrinks toward one row per non-root node. Lineage is truncated
-    * between rounds via [[Checkpoints.truncate]]: localCheckpoint by
-    * default, reliable checkpointing when `spark.graft.checkpoint.dir`
-    * is set (the cluster deployment mode).
+    * First each edge partition is contracted to a star forest by a
+    * per-task union-find ([[contract]]), then the star rounds run on that
+    * far smaller edge set, which is often already the fixpoint. Each
+    * round is three shuffles over an edge set that only shrinks toward
+    * one row per non-root node: the min per `u` of each star is a window
+    * over partitions already hashed by `u` (large-star: its neighbour
+    * table; small-star: large-star's output, deduplicated in the same
+    * exchange), and small-star's output is deduplicated. Lineage is truncated
+    * after the contraction and after every round via
+    * [[Checkpoints.truncateFolding]] (localCheckpoint by default, reliable
+    * checkpointing when `spark.graft.checkpoint.dir` is set), and the
+    * job that materializes an edge set also folds its fixpoint checksum.
     */
   def components(spark: SparkSession, vertices: DataFrame,
                  edges: DataFrame): DataFrame = {
     // canonical parent-pointer orientation (u > v); self-loops carry no
     // connectivity
-    var e = edges
+    val canon = edges
       .select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-    e = Checkpoints.truncate(e)
+    var (e, prev) = materialize(contract(canon).distinct())
 
     // Superseded rounds' checkpoint blocks are reclaimed by the
     // ContextCleaner once the old Dataset is unreferenced (and by the
@@ -77,10 +83,8 @@ object DataFrameCC {
     // deletes each round's directory explicitly instead.
     var converged = false
     var rounds = 0
-    var prev = checksum(e)
     while (!converged && rounds < MaxRounds) {
-      val next = Checkpoints.truncate(smallStar(largeStar(e)))
-      val sum = checksum(next)
+      val (next, sum) = materialize(smallStar(largeStar(e)))
       converged = sum == prev
       prev = sum
       e = next
@@ -99,50 +103,84 @@ object DataFrameCC {
       .select(col("node"), coalesce(col("comp"), col("node")).as("component"))
   }
 
+  /** Contracts each partition of parent-pointer edges `(u, v)` to a star
+    * forest with the same connectivity: a union-find over the
+    * partition's vertices (DenseGraph's min-root rule) and one edge
+    * `(x, root)` per non-root vertex `x`, so `u > v` still holds. A
+    * partition of m edges over k vertices yields at most k − 1 edges, and
+    * the union over partitions connects exactly what the input did.
+    */
+  private def contract(e: DataFrame): DataFrame = {
+    val pair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    e.select(col("u"), col("v")).as(pair).mapPartitions { it =>
+      val (us, vs) = (Array.newBuilder[Long], Array.newBuilder[Long])
+      it.foreach { case (u, v) => us += u; vs += v }
+      val (ua, va) = (us.result(), vs.result())
+      val all = ua ++ va
+      java.util.Arrays.sort(all)
+      val ids = all.indices.filter(i => i == 0 || all(i) != all(i - 1)).map(all).toArray
+      def idx(id: Long) = java.util.Arrays.binarySearch(ids, id)
+      val root = graft.graph.DenseGraph.minRoots(ids.length,
+        ua.indices.iterator.map(i => (idx(ua(i)), idx(va(i)))))
+      ids.indices.iterator.filter(i => root(i) != i).map(i => (ids(i), ids(root(i))))
+    }(pair).toDF("u", "v")
+  }
+
   /** Large-star: for each node u (both edge orientations), m = min of its
     * neighborhood including itself; connect every STRICTLY LARGER
     * neighbor to m. Output keeps the (bigger, smaller) invariant: v > u
-    * ≥ m.
+    * ≥ m, and is hash-partitioned by its `u`.
     */
-  private[operators] def largeStar(e: DataFrame): DataFrame = {
-    val nbr = e.select(col("u"), col("v"))
-      .unionAll(e.select(col("v").as("u"), col("u").as("v")))
-    val mins = nbr.groupBy("u").agg(min("v").as("mv"))
-      .select(col("u"), least(col("u"), col("mv")).as("m"))
-    nbr.join(mins, "u")
+  private[operators] def largeStar(e: DataFrame): DataFrame =
+    edgesOf(e, struct(col("u"), col("v")), struct(col("v").as("u"), col("u").as("v")))
+      .repartition(col("u"))
+      .withColumn("m", least(col("u"), min("v").over(Window.partitionBy("u"))))
       .filter(col("v") > col("u"))
       .select(col("v").as("u"), col("m").as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-  }
+      .repartition(col("u")).distinct()
 
   /** Small-star: edges already point bigger→smaller; for each u, m = min
     * of its smaller neighbors; connect u and every other smaller neighbor
     * to m. Output invariant preserved: u > m and v > m (v = m filtered).
+    * On large-star's output, which is partitioned by `u`, the min per `u`
+    * needs no exchange.
     */
   private[operators] def smallStar(e: DataFrame): DataFrame = {
-    val mins = e.groupBy("u").agg(min("v").as("m"))
-    val moved = e.join(mins, "u")
-      .filter(col("v") =!= col("m"))
-      .select(col("v").as("u"), col("m").as("v"))
-    val own = mins.select(col("u"), col("m").as("v"))
-    moved.unionAll(own).distinct()
+    val withMin = e.withColumn("m", min("v").over(Window.partitionBy("u")))
+    edgesOf(withMin, struct(col("u"), col("m").as("v")),
+        when(col("v") =!= col("m"), struct(col("v").as("u"), col("m").as("v"))))
+      .distinct()
   }
 
-  /** Order-independent fixpoint checksum of the edge SET: count plus two
-    * independently-seeded xxhash64 XOR-folds. XOR is commutative,
-    * associative, and can never overflow (ANSI-safe — a SUM of full-range
-    * 64-bit hashes throws ARITHMETIC_OVERFLOW under Spark 4's default
-    * ANSI mode), and the loop's edges are `.distinct()` so set semantics
-    * are exact. A collision would need two DISTINCT edge sets agreeing on
-    * all three 64-bit aggregates within one run — and the oracle gate
-    * would still catch a wrong answer.
+  /** The `(u, v)` edges the struct columns `edges` build from each row of
+    * `df`, null ones dropped: several edges per row in one pass over it,
+    * where a union would plan one scan per edge.
     */
-  private def checksum(e: DataFrame): Seq[Long] = {
-    val r = e.agg(
-      count(lit(1)),
-      expr("bit_xor(xxhash64(u, v))"),
-      expr("bit_xor(xxhash64(v, u))")).head()
-    (0 until 3).map(i => if (r.isNullAt(i)) 0L else r.getLong(i))
+  private def edgesOf(df: DataFrame, edges: Column*): DataFrame =
+    df.select(explode(array(edges: _*)).as("e")).filter(col("e").isNotNull).select("e.*")
+
+  /** Truncates the edge set `e` and folds its order-independent
+    * fixpoint checksum in the same job: count plus two independently
+    * mixed XOR-folds of the edges. XOR is commutative and associative,
+    * and every edge set the loop materializes is `.distinct()`, so set
+    * semantics are exact. A collision would need two DISTINCT edge sets
+    * agreeing on all three 64-bit figures within one run — and the
+    * oracle gate would still catch a wrong answer.
+    */
+  private def materialize(e: DataFrame): (DataFrame, Seq[Long]) = {
+    import graft.graph.GraphAnalytics.HyperBall.splitmix64
+    val (t, parts) = Checkpoints.truncateFolding(e) { rows =>
+      val sum = Array(0L, 0L, 0L)
+      rows.foreach { r =>
+        val (u, v) = (r.getLong(0), r.getLong(1))
+        sum(0) += 1
+        sum(1) ^= splitmix64(splitmix64(u) ^ v)
+        sum(2) ^= splitmix64(splitmix64(v) ^ u)
+      }
+      sum
+    }
+    (t, parts.foldLeft(Seq(0L, 0L, 0L))((a, p) =>
+      Seq(a(0) + p(0), a(1) ^ p(1), a(2) ^ p(2))))
   }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions.call_function
 /** Session extension wiring (`spark.sql.extensions=graft.plans.
   * GraftExtensions` or programmatic `withExtensions`): registers the
   * engine's native expressions so they are usable from SQL
-  * (`residue_key(col)`) as well as the typed API below.
+  * (`residue_key(col)`) as well as the typed API below, and its optimizer
+  * rules and planner strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -20,6 +21,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.mightContainDescriptor)
     ext.injectOptimizerRule(_ =>
       AutoBroadcastDims(GraftExtensions.defaultDims))
+    ext.injectOptimizerRule(_ => FoldLocalSort)
     ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
   }
 }

@@ -12,7 +12,7 @@ object GraphQueryDefs {
 
   /** DuckDB mirror of GraphAnalytics.cappedIncidence: each part keeps its
     * top-CoBindCap contributors by summed (floor-truncated) quantity,
-    * ties by suppkey — the bounded input to every pair self-join. The cap
+    * ties by suppkey — the bounded input to every pairing. The cap
     * constant is interpolated from GraphAnalytics.CoBindCap so the two
     * engines cannot silently diverge.
     */
@@ -25,9 +25,9 @@ object GraphQueryDefs {
                FROM lineitem GROUP BY 1, 2)
              WHERE rn <= ${GraphAnalytics.CoBindCap})"""
 
-  /** DuckDB mirror of GraphAnalytics.topKCanonEdges (k = Knn): CTE chain
+  /** DuckDB mirror of GraphTables.knnEdges (k = Knn): CTE chain
     * inc → sh → top3 → e(a, b) + the vertex set — ONE definition shared
-    * by the x3/x4/x5 oracles, exactly as topKCanonEdges is the one Spark
+    * by the x3/x4/x5 oracles, exactly as knnEdges is the one Spark
     * edge definition (a k, cap, or tie-break change cannot diverge them).
     * The vertex set stays UNCAPPED — a supplier capped out of every
     * part's contributor list is still a (isolated) vertex.
@@ -104,7 +104,7 @@ object GraphQueryDefs {
       GraphAnalytics.topCoBindingTriangles(s, dir)),
 
     // X4 — BFS hop distance from the minimum supplier over the SAME
-    // top-3 kNN graph as x3 (GraphAnalytics.topKCanonEdges is the single
+    // top-3 kNN graph as x3 (GraphTables.knnEdges is the single
     // edge definition), via min-plus supersteps on graph.DenseGraph.
     // Oracle: recursive CTE enumerating (node, depth) pairs to the same
     // 40-hop cap — both engines report beyond-cap/unreachable as -1, so
@@ -230,7 +230,7 @@ object GraphQueryDefs {
 
     // X9 — neighborhood Jaccard (link prediction / structural near-dup):
     // for every supplier pair with ≥1 common neighbor on the SAME top-3
-    // co-binding graph as x3/x4/x8 (topKCanonEdges is the single edge
+    // co-binding graph as x3/x4/x8 (GraphTables.knnEdges is the single edge
     // definition), the Jaccard of their open neighbor sets. Candidates
     // from the wedge join on the shared neighbor — Σ deg² on the
     // kNN-sparsified graph, never node×node (GraphAnalytics

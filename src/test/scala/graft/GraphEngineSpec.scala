@@ -12,7 +12,9 @@ import org.scalatest.funspec.AnyFunSpec
   * source tree, like PlanAuditSpec's sweep over the whole registry; the
   * same sweep keeps every `/tmp` path of `src/main` in `queries/Fixtures`
   * and every spec's files under `Fixtures.scratchDir`, so a test run
-  * leaves nothing outside its process root.
+  * leaves nothing outside its process root. The graph kernels take their
+  * vertex set and edges from the registry (`GraphTables`), never from an
+  * input table or a window of their own.
   */
 class GraphEngineSpec extends AnyFunSpec {
 
@@ -61,6 +63,28 @@ class GraphEngineSpec extends AnyFunSpec {
       } yield s"$p:${i + 1}: ${line.trim}"
       assert(hits.isEmpty, hits.mkString(
         "an input table read around graft.Tables' schema memo:\n", "\n", ""))
+    }
+  }
+
+  describe("graph/GraphAnalytics.scala") {
+    lazy val lines = Files.readAllLines(
+      Paths.get("src/main/scala/graft/graph/GraphAnalytics.scala")).asScala.toSeq
+    val defName = """\bdef (\w+)""".r
+
+    it("reads lineitem only in x2's incidence: every other kernel starts from the registry") {
+      // the def each `Tables(` call sits in
+      val readers = lines.zipWithIndex.filter(_._1.contains("Tables(")).map { case (_, i) =>
+        lines.take(i + 1).reverse.flatMap(defName.findFirstMatchIn(_)).head.group(1)
+      }
+      assert(readers === Seq("coBindingPairs"),
+        s"input tables read outside coBindingPairs, in: ${readers.mkString(", ")}")
+    }
+
+    it("builds no top-k window: the kNN edges have one definition, GraphTables.knnEdges") {
+      val hits = lines.zipWithIndex.collect {
+        case (l, i) if l.contains("row_number(") || l.contains("Window.") => s"${i + 1}: ${l.trim}"
+      }
+      assert(hits.isEmpty, hits.mkString("a window in GraphAnalytics:\n", "\n", ""))
     }
   }
 

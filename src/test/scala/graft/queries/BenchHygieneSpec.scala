@@ -27,10 +27,39 @@ class BenchHygieneSpec extends SparkSpec {
           (col("id") % 97).as("k")).persist()
         df.queryExecution.toRdd.count()
         drain()
-        assert(t.currentBytes > 0, "materialized caches report no storage bytes")
-        assert(t.highWaterBytes >= t.currentBytes)
+        assert(t.highWaterBytes > 0, "materialized caches report no storage bytes")
         df.unpersist(blocking = true)
       } finally spark.sparkContext.removeSparkListener(t)
+    }
+
+    it("takes storage_final_mb from the block manager master, which sees blocks stored before any listener") {
+      val mb = 1024.0 * 1024.0
+      val sc = spark.sparkContext
+      val frame = sc.parallelize(1 to 200000, 4).map(i => (i, i % 89)).persist()
+      frame.count()
+      drain()
+      // a listener added after the blocks were stored never hears of them
+      val late = new StorageTelemetry
+      sc.addSparkListener(late)
+      try {
+        val used = StorageTelemetry.usedBytes(sc)
+        assert(used === sc.getExecutorMemoryStatus.values
+          .map { case (max, remaining) => max - remaining }.sum)
+        val frameBytes = sc.getRDDStorageInfo.find(_.id == frame.id).map(_.memSize).getOrElse(0L)
+        assert(frameBytes > 0L && used >= frameBytes,
+          s"master figure $used misses the $frameBytes-byte frame")
+        val run = graft.BenchRun("sf", Nil, warmupSec = 0.0, warmupFailed = Nil,
+          warmupSteps = Map.empty, graphOk = true, rewarmed = Nil, sweeps = Nil,
+          speedProbes = Seq("start" -> 1.0), deflateMbps = 0.0, nativeZlib = false,
+          icu = "false", chemClass = "none", chemPure = false, chemPath = "none",
+          storageFinalBytes = used)
+        assert(graft.Bench.record(run, late).at("/telemetry/storage_final_mb").decimalValue ===
+          graft.Json.num(used / mb).decimalValue)
+        assert(late.highWaterBytes < frameBytes, "the late listener saw the frame's blocks")
+      } finally {
+        sc.removeSparkListener(late)
+        frame.unpersist(blocking = true)
+      }
     }
 
     it("counts memory-residency loss (LRU drop / disk demotion) via synthetic block events") {
@@ -48,17 +77,19 @@ class BenchHygieneSpec extends SparkSpec {
         t.onBlockUpdated(BlockEvents.updated(rddId, part, level, mem))
       ev(7, 0, StorageLevel.MEMORY_AND_DISK, 1000L) // registry block
       ev(9, 0, StorageLevel.MEMORY_AND_DISK, 500L)  // operator cache
-      assert(t.currentBytes === 1500L && t.highWaterBytes === 1500L)
+      assert(t.highWaterBytes === 1500L)
       ev(9, 0, StorageLevel.DISK_ONLY, 0L) // demotion: memory lost
       assert(t.evicted === 1L, "a demotion to disk was not counted")
-      assert(t.currentBytes === 1000L)
       ev(7, 0, StorageLevel.NONE, 0L) // LRU drop of the registry block
       assert(t.evicted === 2L, "an LRU drop was not counted")
-      assert(t.currentBytes === 0L && t.highWaterBytes === 1500L)
+      assert(t.highWaterBytes === 1500L)
       // a refill of the same block id regains memory — counted as bytes
-      // again, not as another eviction
+      // again, not as another eviction; the running sum is back to 1000,
+      // so one more 600-byte block sets a new high-water mark of 1600
       ev(7, 0, StorageLevel.MEMORY_AND_DISK, 1000L)
-      assert(t.evicted === 2L && t.currentBytes === 1000L)
+      assert(t.evicted === 2L && t.highWaterBytes === 1500L)
+      ev(11, 0, StorageLevel.MEMORY_AND_DISK, 600L)
+      assert(t.highWaterBytes === 1600L)
     }
 
     it("attributes executor run-time per warm: job group (the warmup_run map)") {
@@ -301,7 +332,7 @@ class BenchHygieneSpec extends SparkSpec {
         sweeps = Seq("a" -> 0.25),
         speedProbes = Seq("start" -> 10.0, "end" -> 11.5), deflateMbps = 80.0,
         nativeZlib = false, icu = "false", chemClass = "Chem\"Kit\\",
-        chemPure = true, chemPath = "factorized")
+        chemPure = true, chemPath = "factorized", storageFinalBytes = 3L << 20)
       val out = Bench.lines(Bench.record(run, new StorageTelemetry),
         "/tmp/bench_out_c4.json")
       assert(out.size === 3)
